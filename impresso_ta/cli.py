@@ -13,9 +13,14 @@ backed:
         --output-dir OUT [--fmt solr|passim] [--languages fr,de] \
         [--default-language LG] [--ts TS]
 
-Both run as ONE Spark job each (no per-year driver loops, no manual
-memory management — SURVEY §3 lifecycle collapsed into declarative
-pipelines).
+Neither has per-year driver loops (SURVEY §3 lifecycle collapsed into
+declarative pipelines), but each writes several outputs, so each runs
+several Spark jobs. An import parses every issue once: its one parse
+frame is cached, and the issues, pages, records, errors and manifest
+writes and the console echo all read it. A rebuild assembles every
+issue once: its assembly output is cached, and the rebuilt write, the
+error write and the printed count all read it. Both caches are released
+when the command returns or fails.
 """
 
 from __future__ import annotations
@@ -217,6 +222,7 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def cmd_import(args, spark) -> int:
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from impresso_ta.importers import import_issues
@@ -256,7 +262,14 @@ def cmd_import(args, spark) -> int:
         )
     if args.incremental:
         try:
-            done = read_issues(spark, f"{args.output_dir}/issues").select(
+            store = read_issues(spark, f"{args.output_dir}/issues")
+        except AnalysisException as exc:
+            # only a missing store counts as empty; any other read failure
+            # raises instead of silently re-importing every issue
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+        else:
+            done = store.select(
                 F.split("id", "-")[0].alias("alias"),
                 F.to_date(
                     F.concat_ws(
@@ -269,8 +282,6 @@ def cmd_import(args, spark) -> int:
                 F.element_at(F.split("id", "-"), -1).alias("edition"),
             )
             disc = incremental_filter(disc, done)
-        except Exception:  # noqa: BLE001 — empty store → nothing to skip
-            pass
 
     res = import_issues(disc, ts=args.ts)
     issues_df, pages_df, records_df, errors_df = (
@@ -301,19 +312,31 @@ def cmd_import(args, spark) -> int:
             .unionByName(page_errs)
             .unionByName(record_errs)
         )
-    write_issues(issues_df, f"{args.output_dir}/issues", fmt=args.store_format)
-    write_pages(pages_df, f"{args.output_dir}/pages", fmt=args.store_format)
-    if records_df.take(1):
-        write_pages(
-            records_df, f"{args.output_dir}/records", fmt=args.store_format
+    # Every write, the manifest and the echo below derive from the one
+    # parse frame. Cached, each issue is parsed once per import instead of
+    # once per action; the cache is released even when a write fails.
+    res.combined.persist()
+    try:
+        write_issues(
+            issues_df, f"{args.output_dir}/issues", fmt=args.store_format
         )
-    write_errors(errors_df, f"{args.output_dir}/errors")
-    # manifest goes through the sink (distributed write) — at scale the
-    # (alias, year) grid is big enough that a full driver collect is a
-    # bottleneck; the console only echoes a bounded sample.
-    stats_df = manifest_stats(issues_df)
-    stats_df.write.mode("overwrite").json(f"{args.output_dir}/manifest")
-    echo = stats_df.orderBy("alias", "year").limit(20).collect()
+        write_pages(
+            pages_df, f"{args.output_dir}/pages", fmt=args.store_format
+        )
+        if records_df.take(1):
+            write_pages(
+                records_df, f"{args.output_dir}/records",
+                fmt=args.store_format,
+            )
+        write_errors(errors_df, f"{args.output_dir}/errors")
+        # manifest goes through the sink (distributed write) — at scale the
+        # (alias, year) grid is big enough that a full driver collect is a
+        # bottleneck; the console only echoes a bounded sample.
+        stats_df = manifest_stats(issues_df)
+        stats_df.write.mode("overwrite").json(f"{args.output_dir}/manifest")
+        echo = stats_df.orderBy("alias", "year").limit(20).collect()
+    finally:
+        res.combined.unpersist()
     for row in echo:
         print(
             f"{row['alias']}-{row['year']}: {row['n_issues']} issues, "
@@ -352,20 +375,21 @@ def cmd_rebuild(args, spark) -> int:
         out = rebuild_issues_solr(
             issues, supports, ts=args.ts, default_language=args.default_language
         )
-        ok, errors = split_errors(out)
     else:
         out = rebuild_issues_passim(issues, supports)
-        ok = out.filter(~F.col("has_problem")).drop("has_problem", "error")
-        errors = out.filter(F.col("has_problem")).select(
-            F.col("id").alias("canonical_path"),
-            F.lit("rebuild").alias("stage"),
-            F.coalesce(F.col("error"), F.lit("unknown")).alias("error"),
-        )
+    ok, errors = split_errors(out)
     if args.languages:
         ok = ok.filter(F.col("lg").isin(args.languages.split(",")))
-    write_rebuilt(ok, f"{args.output_dir}/rebuilt", fmt=args.store_format)
-    write_errors(errors, f"{args.output_dir}/errors")
-    print(f"rebuilt {ok.count()} content items")
+    # the ok write, the error write and the count all read the one
+    # assembly: cached, the read, shuffle and Python assembly run once
+    out.persist()
+    try:
+        write_rebuilt(ok, f"{args.output_dir}/rebuilt", fmt=args.store_format)
+        write_errors(errors, f"{args.output_dir}/errors")
+        n_ok = ok.count()
+    finally:
+        out.unpersist()
+    print(f"rebuilt {n_ok} content items")
     return 0
 
 

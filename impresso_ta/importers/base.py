@@ -174,7 +174,7 @@ def _split_combined(combined: DataFrame) -> "ImportResult":
         F.lit("import").alias("stage"),
         "error",
     )
-    return ImportResult(issues_df, pages_df, records_df, errors_df)
+    return ImportResult(issues_df, pages_df, records_df, errors_df, combined)
 
 
 def _import_files_udtf(ts: Optional[str]):
@@ -342,13 +342,18 @@ def import_issues_distributed(
 class ImportResult:
     """Named result: .issues, .pages, .records, .errors. Also unpacks as
     ``issues, pages, errors = import_issues(...)`` for print-only corpora
-    (audio corpora use the named ``.records``)."""
+    (audio corpora use the named ``.records``).
 
-    def __init__(self, issues, pages, records, errors):
+    ``.combined`` is the one parse frame all four outputs derive from. It
+    stays lazy here; a caller that runs several actions over the outputs
+    persists it so each issue is parsed once."""
+
+    def __init__(self, issues, pages, records, errors, combined):
         self.issues = issues
         self.pages = pages
         self.records = records
         self.errors = errors
+        self.combined = combined
 
     def __iter__(self):
         return iter((self.issues, self.pages, self.errors))

@@ -151,12 +151,13 @@ def minhash_signatures_arrow(
                 # list offsets are int32 by Arrow's ListArray contract:
                 # a batch whose TOTAL shingle count exceeds 2^31 would
                 # silently wrap — fail loudly instead (unreachable at
-                # default maxRecordsPerBatch; guard per ADVICE r12)
-                assert offsets[-1] < (1 << 31), (
-                    "shingle count per Arrow batch exceeds int32 list "
-                    "offsets; lower spark.sql.execution.arrow."
-                    "maxRecordsPerBatch"
-                )
+                # default maxRecordsPerBatch)
+                if offsets[-1] >= (1 << 31):
+                    raise ValueError(
+                        "shingle count per Arrow batch exceeds int32 list "
+                        "offsets; lower spark.sql.execution.arrow."
+                        "maxRecordsPerBatch"
+                    )
                 arrays.append(
                     pa.ListArray.from_arrays(
                         pa.array(offsets.astype(np.int32)), pa.array(h[order])

@@ -3,8 +3,14 @@ the reference's impresso-txt-importer / impresso-rebuilder surface."""
 
 import subprocess
 import sys
+import time
+from pathlib import Path
+
+import pytest
 
 from tests.test_importer_mets_alto import ALTO_PAGE, METS
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def _make_corpus(base):
@@ -20,7 +26,7 @@ def _run(*argv):
         [sys.executable, "-m", "impresso_ta.cli", *argv],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=300,
     )
 
@@ -91,3 +97,122 @@ def test_rebuild_config_filter_batches(spark):
         "GDL-1900-01-02-a",
         "IMP-1900-01-02-a",
     }
+
+
+# the second issue's only page has a token at a negative x origin, so
+# --validate rejects that page and the rebuild finds its CIs' page missing
+BAD_ALTO_PAGE = ALTO_PAGE.replace(
+    'HPOS="10" VPOS="12" WIDTH="90"', 'HPOS="-7" VPOS="12" WIDTH="90"'
+)
+N_CIS = 4  # two issues of two content items each
+
+
+def _make_tree_with_rejected_page(base):
+    for d, alto in (("02", ALTO_PAGE), ("03", BAD_ALTO_PAGE)):
+        issue_dir = base / "GAZ" / "1900" / "01" / d / "a"
+        (issue_dir / "text").mkdir(parents=True)
+        (issue_dir / "issue-mets.xml").write_text(METS)
+        (issue_dir / "text" / "0001.xml").write_text(alto)
+
+
+def _cached(spark):
+    return spark._jsc.getPersistentRDDs().size()
+
+
+def _call(spark, command, argv):
+    """Run one CLI command in-process; return the Spark jobs it ran."""
+    from impresso_ta import cli
+
+    sc = spark.sparkContext
+    group = f"cli-{command}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(cli, command)(cli._build_parser().parse_args(argv), spark)
+    finally:
+        sc.setJobGroup(None, None)
+        # the status tracker is fed by the asynchronous listener bus
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _lines(spark, path):
+    return spark.read.text(str(path)).count()
+
+
+def test_cli_jobs_cache_once_and_release(spark, tmp_path, monkeypatch):
+    corpus = tmp_path / "corpus"
+    _make_tree_with_rejected_page(corpus)
+    store = tmp_path / "store"
+    ts = ["--ts", "2024-01-01T00:00:00Z"]
+
+    before = _cached(spark)
+    _call(spark, "cmd_import", [
+        "import", "--input-dir", str(corpus), "--format", "mets_alto",
+        "--output-dir", str(store), "--validate", *ts,
+    ])
+    assert _cached(spark) == before
+    assert _lines(spark, store / "issues") == 2
+    assert _lines(spark, store / "pages") == 1
+
+    for fmt in ("solr", "passim"):
+        out = tmp_path / fmt
+        jobs = _call(spark, "cmd_rebuild", [
+            "rebuild", "--issues", str(store / "issues"),
+            "--supports", str(store / "pages"), "--output-dir", str(out),
+            "--fmt", fmt, *ts,
+        ])
+        assert _cached(spark) == before
+        # 10 jobs per format before the assembly was cached, when the
+        # read, shuffle and Python assembly re-ran for the ok write, the
+        # error write and the count
+        assert jobs <= 7, f"{fmt}: {jobs} Spark jobs for one rebuild"
+        n_ok = _lines(spark, out / "rebuilt")
+        n_err = _lines(spark, out / "errors")
+        assert n_ok > 0 and n_err > 0
+        assert n_ok + n_err == N_CIS
+
+    # a command that fails after its caches were filled still releases
+    # them: the error write is the last write of both commands
+    import impresso_ta.sources as sources
+
+    def fail(*_a, **_k):
+        raise RuntimeError("error sink unavailable")
+
+    monkeypatch.setattr(sources, "write_errors", fail)
+    with pytest.raises(RuntimeError, match="error sink unavailable"):
+        _call(spark, "cmd_import", [
+            "import", "--input-dir", str(corpus), "--format", "mets_alto",
+            "--output-dir", str(tmp_path / "store2"), "--validate", *ts,
+        ])
+    assert _cached(spark) == before
+    with pytest.raises(RuntimeError, match="error sink unavailable"):
+        _call(spark, "cmd_rebuild", [
+            "rebuild", "--issues", str(store / "issues"),
+            "--supports", str(store / "pages"),
+            "--output-dir", str(tmp_path / "failed"), *ts,
+        ])
+    assert _cached(spark) == before
+
+
+def test_cli_incremental_store_errors(spark, tmp_path, monkeypatch):
+    corpus = tmp_path / "corpus"
+    _make_corpus(corpus)
+    store = tmp_path / "store"
+    argv = [
+        "import", "--input-dir", str(corpus), "--format", "mets_alto",
+        "--output-dir", str(store), "--incremental",
+    ]
+    # a missing store is an empty one: every issue is imported
+    _call(spark, "cmd_import", argv)
+    assert _lines(spark, store / "issues") == 2
+
+    # any other failure to read the store raises, instead of silently
+    # re-importing everything
+    import impresso_ta.sources as sources
+
+    def fail(*_a, **_k):
+        raise RuntimeError("store unreadable")
+
+    monkeypatch.setattr(sources, "incremental_filter", fail)
+    with pytest.raises(RuntimeError, match="store unreadable"):
+        _call(spark, "cmd_import", argv)

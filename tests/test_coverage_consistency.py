@@ -4,10 +4,13 @@ accounted for in the coverage map (no silent doc rot in either
 direction)."""
 
 import re
+from pathlib import Path
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def _coverage_text():
-    with open("/root/repo/COVERAGE.md") as f:
+    with open(REPO_ROOT / "COVERAGE.md") as f:
         return f.read()
 
 

@@ -3,12 +3,14 @@ line-dedup text rewrite, decontamination, determinism, CLI surface."""
 
 import subprocess
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from impresso_ta.operators.pipeline import prepare_corpus
 
 SF = "/root/testdata/sf0.001"
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def _docs(spark):
@@ -265,7 +267,7 @@ def test_cli_corpus_command(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -296,7 +298,7 @@ def test_cli_corpus_with_benchmark_and_temperature(tmp_path, spark):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -323,7 +325,7 @@ def test_cli_corpus_split_column(tmp_path, spark):
             "--split", "train=0.8,val=0.1,test=0.1",
             "--domain-cap", "10", "--domain-col", "source",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     prepared = spark.read.parquet(str(out / "corpus"))
@@ -362,7 +364,7 @@ def test_cli_corpus_dedup_against(tmp_path, spark):
             "--dedup-against", str(existing_path),
             "--jaccard-threshold", "0.9",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=REPO_ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "incremental_dedup:" in r.stdout

@@ -11,6 +11,7 @@ validation at write time) ported as column expressions:
 import os
 import shutil
 from datetime import date
+from pathlib import Path
 
 import pytest
 
@@ -30,6 +31,7 @@ from impresso_ta.schemas import (
 from tests.fixtures import content_item, issue, line, page, para, region, token
 
 REF_SAMPLES = "/root/reference/text_preparation/data/sample_data"
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 def _assert_all_valid(validated_df, what):
@@ -314,7 +316,7 @@ def test_cli_import_with_validate_flag(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
