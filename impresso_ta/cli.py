@@ -469,22 +469,25 @@ def cmd_corpus(args, spark) -> int:
         domain_col=args.domain_col,
         collect_stats=args.stats,
     )
-    out_docs = res.docs
-    if args.split:
-        from impresso_ta.operators.corpus import deterministic_split
-
-        fractions = {}
-        for part in args.split.split(","):
-            name, frac = part.split("=")
-            fractions[name] = float(frac)
-        out_docs = deterministic_split(
-            out_docs, fractions, id_col=args.id_col
-        )
-    out_docs.write.mode("overwrite").parquet(f"{args.output_dir}/corpus")
     # the parquet sink is the last consumer of the pipeline's persist
     # boundaries; release executor storage before the (re-read) shard
-    # pass so a long-lived session doesn't accumulate cached frames
-    res.unpersist()
+    # pass, and also when the write fails, so a long-lived session
+    # doesn't accumulate cached frames
+    try:
+        out_docs = res.docs
+        if args.split:
+            from impresso_ta.operators.corpus import deterministic_split
+
+            fractions = {}
+            for part in args.split.split(","):
+                name, frac = part.split("=")
+                fractions[name] = float(frac)
+            out_docs = deterministic_split(
+                out_docs, fractions, id_col=args.id_col
+            )
+        out_docs.write.mode("overwrite").parquet(f"{args.output_dir}/corpus")
+    finally:
+        res.unpersist()
     for stage, n_in, n_out in res.stats:
         print(f"{stage}: {n_in} -> {n_out}")
     if args.shards:

@@ -191,7 +191,7 @@ def _import_files_udtf(ts: Optional[str]):
 
         # ONE scratch parent per task, a subdir per issue, ONE rmtree at
         # the end: the per-issue mkdtemp+rmtree variant measured 2x the
-        # materialization cost (tools/scale_import_results.json)
+        # materialization cost at the import scale probe
         parent = tempfile.mkdtemp(prefix="impresso_import_")
         try:
             seq = 0

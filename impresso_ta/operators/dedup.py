@@ -197,8 +197,12 @@ def jaccard_pairs(
             .select("h")
         )
         sh = sh.join(rare, "h")
-    # O(|docs|) rows, joined twice downstream — persist beats recompute
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles")).persist()
+    # O(|docs|) rows, joined twice downstream: both joins read the one
+    # aggregate exchange (exchange reuse). Not persisted: a persist here
+    # would outlive the returned lazy frame with no handle to release
+    # it; a caller that reads the pairs more than once persists them
+    # (prepare_corpus does)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
 
     a = sh.alias("a")
     b = sh.alias("b")
@@ -395,9 +399,9 @@ def minhash_lsh_pairs(
 
     ``guard_bucket_size`` is the RUNTIME tripwire for calling this raw
     form on a clone-heavy corpus (the 100×-scale probe's recorded
-    failure mode, tools/scale_docs_results.json: a near-dup clique of
-    m docs puts m rows in the same band bucket → m²/2 candidates per
-    band — quadratic before any verify). A per-bucket count rides the
+    failure mode: a near-dup clique of m docs puts m rows in the same
+    band bucket → m²/2 candidates per band — quadratic before any
+    verify). A per-bucket count rides the
     band table as a window over (band, bh) — the SAME key the candidate
     self-join shuffles on, so the exchange is shared and no extra job
     runs — and an embedded ``assert_true`` fails the job LOUDLY the
@@ -1114,7 +1118,7 @@ def exact_substring_dedup(
     )
     # (doc_id, p, h) for every k-token window, 1-based positions.
     # r12 note: three "obvious" rewrites were measured SLOWER at sf1 and
-    # rejected (tools/r12_variants_exact_substring.py, min-of-2 noop):
+    # rejected (min-of-2 noop):
     # building the window strings with the zip_with gram chain + a
     # post-explode codegen md5 was 2× slower than this lambda (8.4 s vs
     # 4.4 s for the window frame alone — k-1 zip_with passes allocate

@@ -97,7 +97,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 60,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of the undirected graph in ``edges``.
 
@@ -121,14 +120,10 @@ def connected_components(
     therefore never return a half-converged labeling; it just loops
     once more. ``max_rounds`` is a bug tripwire, not a tuning knob:
     hitting it raises rather than returning a half-converged labeling.
-    Pass ``stats={}`` to receive the executed round count (scale-probe
-    instrumentation).
     """
     cur = _norm_edges(edges, src, dst).localCheckpoint()
     prev_sig: tuple[int, int] | None = None
-    rounds = 0
     for _ in range(max_rounds):
-        rounds += 1
         # r13 (job-floor batching): LAZY localCheckpoint — the signature
         # aggregate right below is a full-partition action, so it both
         # computes the round AND materializes the checkpoint blocks in
@@ -155,8 +150,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds"
         )
-    if stats is not None:
-        stats["rounds"] = rounds
     # Stable state is a star forest oriented high→low: (node, root).
     # Defensive min-reduce in case a node carries duplicate star edges,
     # then add the roots themselves (they appear only as dst).

@@ -82,7 +82,6 @@ def prepare_corpus(
     temperature_target: int = 0,
     domain_col: str = "lang",
     collect_stats: bool = False,
-    spread: str = "after_filters",
 ) -> PipelineResult:
     """Run the corpus-preparation pipeline; returns the surviving
     documents (text rewritten by line dedup) plus optional per-stage
@@ -176,20 +175,7 @@ def prepare_corpus(
     )
     # (domain_cap is window-shaped — single consumption, no persist needed)
 
-    # ``spread`` placement (A/B'd in one session, tools/ab_pipeline.py,
-    # results in PLANS.md §7): "input" repartitions the raw scan before
-    # the filters (r3 form — unlocks N-way filter compute when the file
-    # has fewer row groups than cores, but ships every raw text byte
-    # through a shuffle and blocks scan fusion), "after_filters" runs the
-    # row-local filter folds fused onto the scan and widens only the
-    # survivors (filter first, then spread — the shuffle carries the
-    # smaller post-filter corpus, and downstream explodes still get full
-    # parallelism), "none" trusts the scan's own split count (the 100 TB
-    # posture, where the scan already has ~10⁶ splits and
-    # spread_small_input is a no-op anyway).
-    cur = step(
-        "input", docs, spread_small_input(docs) if spread == "input" else docs
-    )
+    cur = step("input", docs, docs)
     # r12 (guide §4.2): the filter stack runs as ONE Arrow batch pass —
     # the r11 stage decomposition pinned the whole pipeline cost on this
     # scan's INTERPRETED HOF lambdas (13.0 s of 12.8 s sf1); the Arrow
@@ -216,8 +202,14 @@ def prepare_corpus(
                 cur,
                 filter_keep_arrow(cur, text_col=text_col, c4=False, gopher=True),
             )
-    if spread == "after_filters":
-        cur = spread_small_input(cur)
+    # Spread after the filters, so the downstream explodes get full
+    # parallelism. A/B'd in one session against spreading the raw scan
+    # and against no spread at all, when the filters were JVM folds
+    # (PLANS.md §8: noise-level at sf0.1/sf1, and a no-op whenever the
+    # scan already has as many splits as cores). The Arrow filter
+    # spreads its own input first, so after it this adds no exchange;
+    # with both filters off it widens the raw scan.
+    cur = spread_small_input(cur)
     if multi_use_downstream:
         # Every later stage self-joins the current corpus (line dedup
         # rewrites text, doc dedup anti-joins survivors, decontamination
@@ -399,6 +391,9 @@ def prepare_corpus(
             reps = _dedup.collapse_exact_reps(
                 cur, id_col=id_col, text_col=text_col
             )
+            # the components pass reads the pairs in both edge
+            # directions; persisted here, where the pipeline can
+            # release it
             pairs = _dedup.jaccard_pairs(
                 reps,
                 id_col=id_col,
@@ -406,7 +401,8 @@ def prepare_corpus(
                 threshold=(
                     0.7 if jaccard_threshold is None else jaccard_threshold
                 ),
-            )
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            cached.append(pairs)
             cur = step(
                 "doc_dedup",
                 cur,

@@ -572,11 +572,10 @@ def hard_negatives_lsh(
     from multi-probe hyperplane-LSH buckets instead of Voronoi cells —
     bucket assignment is ROW-LOCAL in n·bits·dims (no Θ(n·nlist)
     centroid scoring), which is the documented router boundary past
-    ``IVF_MAX_VECTORS`` (`tools/scale_docs_results.json` measured the
-    Voronoi assignment 34-43× superlinear with corpus-sized nlist;
-    `scale_mining_results.json` shows the IVF mining curve dominated by
-    exactly that assignment at 100×). Same plan shape as
-    ``multiprobe_lsh_topk`` with the mining predicates fused into the
+    ``IVF_MAX_VECTORS`` (the 100× scale probe measured the Voronoi
+    assignment 34-43× superlinear with corpus-sized nlist, and the IVF
+    mining curve dominated by exactly that assignment at 100×). Same
+    plan shape as ``multiprobe_lsh_topk`` with the mining predicates fused into the
     bucket joins: different-label only, self-pairs excluded, recall
     compounds as 1-Π(1-rᵢ) per added plane table while the corpus is
     scanned once (all probe tables hang off the same scan).
@@ -683,8 +682,7 @@ def training_triplets_lsh(
     candidates for BOTH the positive and negative carve come from
     multi-probe hyperplane-LSH buckets, whose assignment is ROW-LOCAL
     in n·bits·dims — no Θ(n·nlist) Voronoi scoring, the term the
-    committed mining curve (tools/scale_mining_results.json) shows
-    dominating ``training_triplets_ivf`` at the 100× tier exactly as
+    measured mining curve shows dominating ``training_triplets_ivf`` at the 100× tier exactly as
     it dominated ``hard_negatives_ivf`` before ``hard_negatives_lsh``
     routed around it.
 
@@ -1895,9 +1893,8 @@ def ivf_topk_indexed(
     heuristic-fragile exactly where it matters: with the
     relation-routed codebook (nlist > LITERAL_MAX_NLIST) the probe
     subtree carries a nested broadcast and Spark declines to reuse it
-    as a DPP filter — measured at the 10x/100x scale probe
-    (tools/scale_mining_results.json): `dynamicpruning` present in the
-    plan TEXT, yet numFiles/numOutputRows showed the scan reading
+    as a DPP filter — measured at the 10x/100x scale probe:
+    `dynamicpruning` present in the plan TEXT, yet numFiles/numOutputRows showed the scan reading
     EVERY file and row. Pass ``static_prune=False`` only for
     corpus-sized query sets (where the probes cover all cells and
     pruning is moot); the DPP plan remains for that path. When the
@@ -1998,11 +1995,11 @@ def multiprobe_lsh_topk(
     )
 
 
-# The measured Voronoi-assignment ceiling (tools/scale_docs_results.json:
-# Θ(n·nlist) cell assignment went 34-43× superlinear at the 10×→100× step
-# with corpus-sized nlist) — beyond this many vectors the auto router
-# switches from IVF to hyperplane-LSH, whose bucket assignment is
-# row-local in n·bits·dims.
+# The measured Voronoi-assignment ceiling (Θ(n·nlist) cell assignment
+# went 34-43× superlinear at the 10×→100× step with corpus-sized
+# nlist) — beyond this many vectors the auto router switches from IVF
+# to hyperplane-LSH, whose bucket assignment is row-local in
+# n·bits·dims.
 IVF_MAX_VECTORS = 10_000_000
 
 

@@ -102,7 +102,7 @@ def topn_per_key_salted(
     a tie-break, e.g. ``["_draw", "doc_id"]``). The full order key also
     seeds the salt, so placement is replayable on task retry.
 
-    When to use (measured, tools/ab_topn.py + PLANS.md §10): Spark
+    When to use (measured, PLANS.md §10): Spark
     3.5's WindowGroupLimit pushdown already group-limits the PLAIN
     single-window form per map partition before its shuffle, bounding
     the hot key's reducer at ~n x map_partitions rows — locally that

@@ -74,9 +74,9 @@ def stream_ivf_ingest(
     staging store to PQ CODES: each micro-batch is assigned AND encoded
     in the same zero-shuffle scan-project (``ivf_pq_index_frame``), so
     the continuously-ingested store carries the measured ~40× bytes
-    lever (tools/pq_bytes_results.json) from the first trigger — serve
-    it with ``ivf_pq_topk_indexed`` using the same frozen
-    centroids + codebook (parity-tested).
+    lever from the first trigger — serve it with
+    ``ivf_pq_topk_indexed`` using the same frozen centroids + codebook
+    (parity-tested).
     """
     from impresso_ta.operators.pq import ivf_pq_index_frame
     from impresso_ta.operators.similarity import ivf_assign

@@ -14,7 +14,7 @@ time), streaming to a StreamingSymmetricHashJoin whose per-key state is
 bounded by ``watermark + max_lag``: rows older than the watermark minus
 the lag window are evicted from the state store every trigger, so state
 size tracks the event RATE, not the stream's lifetime. MEASURED
-(tools/probe_stream_state.py, PLANS.md §11): 10x rate -> 10.0x peak
+(PLANS.md §11): 10x rate -> 10.0x peak
 state rows; 4x stream length at fixed rate -> identical peak and final
 state.
 """

@@ -116,7 +116,11 @@ def _make_tree_with_rejected_page(base):
 
 
 def _cached(spark):
-    return spark._jsc.getPersistentRDDs().size()
+    """Persisted RDDs, bar local checkpoints: Spark's context cleaner
+    drops those once they are unreachable, while a persisted frame stays
+    cached until someone releases it."""
+    rdds = spark._jsc.getPersistentRDDs().values()
+    return sum(not r.rdd().isLocallyCheckpointed() for r in rdds)
 
 
 def _call(spark, command, argv):
@@ -139,7 +143,7 @@ def _lines(spark, path):
     return spark.read.text(str(path)).count()
 
 
-def test_cli_jobs_cache_once_and_release(spark, tmp_path, monkeypatch):
+def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
     corpus = tmp_path / "corpus"
     _make_tree_with_rejected_page(corpus)
     store = tmp_path / "store"
@@ -170,6 +174,22 @@ def test_cli_jobs_cache_once_and_release(spark, tmp_path, monkeypatch):
         n_err = _lines(spark, out / "errors")
         assert n_ok > 0 and n_err > 0
         assert n_ok + n_err == N_CIS
+
+    docs = f"{sf_dir}/documents.parquet"
+    _call(spark, "cmd_corpus", [
+        "corpus", "--input", docs, "--output-dir", str(tmp_path / "prepared"),
+    ])
+    assert _cached(spark) == before
+    assert spark.read.parquet(str(tmp_path / "prepared" / "corpus")).count()
+    # the pipeline fills its caches before the corpus write, which fails
+    # here because the output directory lies below a regular file
+    blocker = tmp_path / "blocker"
+    blocker.write_text("")
+    with pytest.raises(Exception):
+        _call(spark, "cmd_corpus", [
+            "corpus", "--input", docs, "--output-dir", str(blocker / "out"),
+        ])
+    assert _cached(spark) == before
 
     # a command that fails after its caches were filled still releases
     # them: the error write is the last write of both commands

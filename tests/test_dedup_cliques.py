@@ -13,7 +13,7 @@ from impresso_ta.operators import dedup
 
 def _clone_corpus(spark, n_base=6, clones=20):
     """n_base distinct long texts, each duplicated `clones` times with a
-    distinct two-word prefix (same shape as tools/gen_bigsf documents)."""
+    distinct two-word prefix (the shape of the sf1 generator's documents)."""
     rows = []
     for b in range(n_base):
         words = " ".join(f"w{b}x{i}" for i in range(60))

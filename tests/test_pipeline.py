@@ -248,6 +248,39 @@ def test_pipeline_stats_single_action_matches_counted_form(spark):
     assert res.stats == expected
 
 
+def test_pipeline_spreads_single_row_group_input_once(spark):
+    """A scan with fewer partitions than cores is widened exactly once.
+    With the filters on, the round-robin exchange sits below the Arrow
+    filter, which spreads its own input, and the post-filter spread adds
+    nothing. With both filters off, that spread widens the raw scan."""
+    import pyarrow.parquet as pq
+
+    path = f"{SF}/documents.parquet"
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
+    kw = dict(line_spans=None, doc_dedup=False)
+    exchange = f"Exchange RoundRobinPartitioning({n})"
+
+    def final_plan(res):
+        res.docs.collect()
+        plan = res.docs._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    filtered = final_plan(prepare_corpus(spark.read.parquet(path), **kw))
+    assert filtered.count("RoundRobinPartitioning") == 1
+    assert "MapInArrow" in filtered
+    assert filtered.index("MapInArrow") < filtered.index(exchange)
+    assert filtered.index(exchange) < filtered.index("FileScan parquet")
+
+    raw = final_plan(
+        prepare_corpus(spark.read.parquet(path), c4=False, gopher=False, **kw)
+    )
+    assert raw.count("RoundRobinPartitioning") == 1
+    assert "MapInArrow" not in raw
+    assert raw.index(exchange) < raw.index("FileScan parquet")
+
+
 def test_pipeline_deterministic(spark):
     d = _docs(spark)
     a = sorted(r["doc_id"] for r in prepare_corpus(d).docs.collect())

@@ -302,7 +302,7 @@ def test_ivf_topk_indexed_parity_and_partition_pruning(spark, tmp_path):
     # the pruning claim as a METRIC, not a plan string: the store scan
     # must read only the probed cells' files (static cell pruning —
     # the DPP fallback reads everything at nlist > LITERAL_MAX_NLIST,
-    # see ivf_topk_indexed's docstring and scale_mining_results.json)
+    # see ivf_topk_indexed's docstring)
     probed = ivf_topk_indexed(index, qs, seeds, nprobe=2, k=3)
     probed.collect()
     jplan = probed._jdf.queryExecution().executedPlan()

@@ -36,8 +36,7 @@ def static_gate() -> list[str]:
     """The no-Spark consistency core of the fast gate (<5 s): every
     registry query has a COVERAGE.md row, every coverage-named oracle
     exists, and queries()/oracle_sql() cover the same keys.  Pure
-    imports + text matching — cheap enough for a pre-commit hook and
-    for bench.py to refuse to bench against a drifted catalog."""
+    imports + text matching — cheap enough for a pre-commit hook."""
     problems: list[str] = []
     try:
         from impresso_ta.queries import REGISTRY
@@ -133,7 +132,7 @@ def main() -> int:
         return 0
 
     if "--static" in sys.argv:
-        # hook / bench mode: no Spark, no subprocesses, seconds not minutes
+        # hook mode: no Spark, no subprocesses, seconds not minutes
         problems = static_gate()
         for p in problems:
             print(f"PREFLIGHT STATIC FAIL: {p}")
