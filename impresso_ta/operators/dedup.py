@@ -604,15 +604,15 @@ def minhash_dedup_survivors(
     preparation doesn't need the pairs — it needs the SURVIVORS. Here
     every band bucket contributes ``|bucket| - 1`` edges to its min-id
     member (star, not clique), so edge volume is ≤ n·bands at ANY
-    duplicate distribution, and min-label propagation
-    (:func:`connected_components`, O(diameter) rounds — buckets make
-    cliques diameter ≤ 2) yields the same components the full pair set
-    would. Trade-off vs the verified form: bucket coincidence is taken
-    as duplication without an exact-Jaccard check, i.e. the standard
-    MinHash-dedup operating point (false-positive rate per dissimilar
-    pair ≈ bands·j^rows) — accepted by the large dedup pipelines this
-    mirrors (C4, SlimPajama, text-dedup) because a verify pass would
-    re-introduce the clique-quadratic cost.
+    duplicate distribution, and the driver-side union-find of
+    :func:`dedup_clusters` (one edge collect, no Spark rounds) yields
+    the same components the full pair set would. Trade-off vs the
+    verified form: bucket coincidence is taken as duplication without
+    an exact-Jaccard check, i.e. the standard MinHash-dedup operating
+    point (false-positive rate per dissimilar pair ≈ bands·j^rows) —
+    accepted by the large dedup pipelines this mirrors (C4, SlimPajama,
+    text-dedup) because a verify pass would re-introduce the
+    clique-quadratic cost.
     """
     _, _, banded = _minhash_parts(
         docs, id_col, text_col, k, num_perm, bands, engine=engine
@@ -901,84 +901,90 @@ def simhash16(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Connected components over a pair list via iterative min-label
-    propagation — the dedup-cluster builder (each component = one group
-    of mutually-near-duplicate documents).
+#: The most edges :func:`connected_components` collects to the driver.
+#: Both doc-dedup routes stay far below it: the jaccard route runs below
+#: 25k documents, and the minhash route emits at most ``n·bands`` star
+#: edges (8M for 1M documents at 8 bands). 10M edges are 160 MB of int64
+#: pairs, inside Spark's default 1 GB ``spark.driver.maxResultSize``.
+MAX_COMPONENT_EDGES = 10_000_000
 
-    Algorithm: every node starts labeled with its own id; each round every
-    node adopts the minimum label among itself and its neighbors, until a
-    round changes nothing. Converges in O(component diameter) rounds —
-    near-dup clusters are dense (diameter 1-2), so 2-3 rounds in practice.
 
-    Scale shape: the symmetrized edge list is shuffled ONCE (repartition
-    on the join key) and persisted; each round then shuffles only the
-    label frame (one long per node) for the join + min-groupBy. Lineage
-    is truncated every round with an eager localCheckpoint so the plan
-    doesn't grow with iterations (on a cluster with dynamic allocation
-    prefer ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``,
-    which survives executor loss). Driver never sees node data — the only
-    per-round action is a changed-row count.
+def _components(edges: DataFrame, src: str, dst: str):
+    """Collect the edge list and cluster it on the driver.
 
-    This is the equi-join formulation of the map-reduce CC algorithms
-    (cf. Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    min-label propagation rather than large-star/small-star, which is the
-    right tradeoff when components are small and dense (dedup clusters)
-    — fewer rounds, no edge-list rewriting.
+    Returns ``(nodes, root)``: the sorted distinct endpoint ids and, per
+    node, the index into ``nodes`` of its component's smallest member.
+    Self-loops and edges with a null endpoint are dropped before the
+    collect, so a node that only has such edges is absent.
     """
-    e = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition("b")
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iters):
-        neigh = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("b_node"), F.col("label")
-                ),
-                sym["b"] == F.col("b_node"),
-            )
-            .groupBy("a")
-            .agg(F.min("label").alias("neigh_label"))
+    import numpy as np
+
+    pairs = (
+        edges.select(
+            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
         )
-        updated = (
-            labels.join(neigh.withColumnRenamed("a", "node"), "node", "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce("neigh_label", F.col("label"))
-                ).alias("label"),
-            )
-            # r13: LAZY — the changed-row count right below is the
-            # round's action; it computes the round AND materializes
-            # the checkpoint blocks in one job (the eager form paid a
-            # separate materialization job per round). Logical-plan
-            # truncation is identical (LogicalRDD boundary either way).
-            .localCheckpoint(eager=False)
+        .where(F.col("a") != F.col("b"))
+        .limit(MAX_COMPONENT_EDGES + 1)
+        .toArrow()
+    )
+    if pairs.num_rows > MAX_COMPONENT_EDGES:
+        raise ValueError(
+            f"connected_components: more than {MAX_COMPONENT_EDGES} edges "
+            "(dedup.MAX_COMPONENT_EDGES); the edge list is clustered on "
+            "the driver"
         )
-        changed = updated.filter(F.col("label") < F.col("old_label")).count()
-        labels = updated.select("node", "label")
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+    a = pairs.column("a").to_numpy()
+    b = pairs.column("b").to_numpy()
+    # dense int64 indices in id order, so the smallest index of a
+    # component is also its smallest id
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = idx[: len(a)], idx[len(a) :]
+    root = np.arange(len(nodes))
+    while len(u):
+        # hook: each root points at the smallest smaller root it shares
+        # an open edge with; pointers only go to smaller ids, so no cycle
+        np.minimum.at(root, np.maximum(u, v), np.minimum(u, v))
+        # pointer jumping until every node points at a root
+        while True:
+            up = root[root]
+            if np.array_equal(up, root):
+                break
+            root = up
+        u, v = root[u], root[v]
+        open_ = u != v
+        u, v = u[open_], v[open_]
+    return nodes, root
+
+
+def connected_components(
+    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b"
+) -> DataFrame:
+    """Connected components of the undirected graph in ``edges``, as
+    ``(node, label)`` longs where ``label`` is the smallest node id in
+    the node's component — each component is one group of mutually
+    near-duplicate documents.
+
+    The node universe is the edge endpoints: self-loops and edges with
+    a null endpoint are dropped, so isolated nodes are absent. Callers
+    join singletons back when they need them.
+
+    One Spark job collects the edge list through Arrow; the driver then
+    runs a numpy union-find over int64 indices (hook each root to the
+    smallest smaller root it shares an edge with, then pointer-jump
+    every node to its root, until no edge joins two roots). Memory is
+    linear in the edge count and no Spark round depends on the component
+    diameter. Distributed CC only pays on graphs far larger than a
+    driver holds (cf. Kiveris et al., "Connected Components in MapReduce
+    and Beyond"); the doc-dedup edge lists are small by construction.
+    Above ``MAX_COMPONENT_EDGES`` edges this raises ``ValueError``; the
+    collect stops one edge past the ceiling.
+    """
+    import pyarrow as pa
+
+    nodes, root = _components(edges, src, dst)
+    return edges.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "label": nodes[root]})
+    )
 
 
 def dedup_clusters(
@@ -988,20 +994,25 @@ def dedup_clusters(
     + cluster size + canonical-representative flag (min doc id — the one
     a dedup pass would KEEP; the rest are droppable).
 
-    One extra shuffle over ``connected_components`` (the size window);
-    cluster size is attached with a window rather than a self-join so the
-    component frame is shuffled once, not twice.
+    Built from the same driver-side arrays as
+    :func:`connected_components`: the size is a ``bincount`` over the
+    component roots and the representative is the node that is its own
+    root, so no shuffle runs after the edge collect.
     """
-    from pyspark.sql.window import Window
+    import numpy as np
+    import pyarrow as pa
 
-    comp = connected_components(pairs, src=left, dst=right)
-    size_w = Window.partitionBy("label")
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("component"),
-        F.count("*").over(size_w).cast("long").alias("cluster_size"),
-        (F.col("node") == F.col("label")).alias("is_rep"),
-    ).select("doc_id", "component", "cluster_size", "is_rep")
+    nodes, root = _components(pairs, left, right)
+    return pairs.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "doc_id": nodes,
+                "component": nodes[root],
+                "cluster_size": np.bincount(root, minlength=len(nodes))[root],
+                "is_rep": root == np.arange(len(nodes)),
+            }
+        )
+    )
 
 
 def duplicated_shingle_fraction(
@@ -1058,11 +1069,10 @@ def dedup_survivors(
     cluster survives; inside a cluster only the canonical representative
     (min id) does. Returns the surviving subset of ``docs`` unchanged.
 
-    The drop list (cluster members minus representatives) is tiny
-    relative to the corpus, so the left-anti join is the right shape;
-    join strategy is left to AQE — with a skew-free id key the corpus
-    side shuffles at most once, and a small drop list downgrades to a
-    broadcast anti-join at runtime.
+    The pair list is collected once and clustered on the driver
+    (:func:`dedup_clusters`). The drop list (cluster members minus
+    representatives) is tiny relative to the corpus, so the left-anti
+    join is the right shape; join strategy is left to AQE.
     """
     drops = (
         dedup_clusters(pairs, left=left, right=right)

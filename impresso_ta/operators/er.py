@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from impresso_ta.operators.fuzzy import fuzzy_blocked_join
-from impresso_ta.operators.graph import connected_components
+from impresso_ta.operators.dedup import connected_components
 
 
 def resolve_entities(
@@ -138,7 +138,9 @@ def resolve_entities(
         .filter(F.col("_ka") < F.col("_kb"))
         .select(F.col("_ka").alias("src"), F.col("_kb").alias("dst"))
     )
-    comp = connected_components(edges)  # (node, component)
+    comp = connected_components(edges, src="src", dst="dst").select(
+        "node", F.col("label").alias("component")
+    )
     labeled = (
         vals.join(comp, vals["_rep"] == comp["node"], "left")
         .where((F.col("_cnt") >= 2) | F.col("component").isNotNull())

@@ -1,20 +1,9 @@
-"""Distributed graph operators: connected components and PageRank.
+"""Distributed graph operators: PageRank, triangle counts and BFS.
 
-The reference has no graph engine, but its entity-resolution shape —
-cluster documents/records that share evidence (the union-find inside
-``dedup.minhash_dedup_survivors``) — IS connected components over an
-edge table. This module generalizes that to any edge DataFrame with the
-two algorithms that actually survive 100 TB:
-
-* ``connected_components`` — alternating Large-Star / Small-Star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14). Each round is two window-aggregate shuffles over the edge
-  set; convergence in O(log n) rounds regardless of component diameter
-  — unlike naive hash-min label propagation, whose round count is the
-  graph DIAMETER (a 1M-hop chain takes 1M rounds of full-edge
-  shuffles). No ``collect()``, no driver-side union-find: the edge set
-  never leaves the cluster, so it scales past the driver-memory
-  ceiling that bounds ``minhash_dedup_survivors``'s collected edges.
+Connected components live in ``dedup.connected_components``, the one
+CC in the package: a driver-side union-find over a collected edge list
+(the entity-resolution composition in ``er.resolve_entities`` calls it
+on its contracted graph).
 
 * ``pagerank`` — fixed-iteration power method kept in EXACT BIGINT
   arithmetic (ranks scaled by 1e12; per-edge contribution is integer
@@ -26,18 +15,20 @@ two algorithms that actually survive 100 TB:
   possible. Each iteration: one shuffle join (edges ⋈ ranks on src,
   AQE-sized) + one map-side-combined groupBy(dst).
 
+* ``triangle_counts`` — degree orientation + wedge closure.
+
+* ``bfs_distances`` — level-synchronous frontier expansion.
+
 Scale posture: per-round state is O(|edges|); intermediate lineage is
 truncated each round via ``localCheckpoint`` (a production cluster with
 executor churn would set a checkpoint dir and use ``checkpoint``; local
-checkpoint avoids an HDFS dependency here). Convergence checks cost one
-count-shaped action per round on the already-persisted round output.
+checkpoint avoids an HDFS dependency here).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 #: rank fixed-point scale: 1e12 keeps 12 decimal digits of rank mass in
 #: BIGINT with no overflow headroom issues (total mass ≤ 1e12 + n·1e2).
@@ -55,114 +46,6 @@ def _norm_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
     )
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-Star round: every node u connects its strictly-larger
-    neighbors to m = min(Γ(u) ∪ {u}).
-
-    One window shuffle (partitionBy u) — the min is computed with a
-    window aggregate, never a collected neighbor list, so a hot node
-    with 10^7 neighbors costs a wide partition, not driver memory."""
-    bidir = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    w = Window.partitionBy("u")
-    m = F.least(F.col("u"), F.min("v").over(w))
-    return (
-        bidir.select(F.col("v").alias("nbr"), m.alias("m"), "u")
-        .where(F.col("nbr") > F.col("u"))
-        .select(F.col("nbr").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-Star round: orient edges high→low, connect every low
-    neighbor (and u itself) to the minimum neighbor."""
-    oriented = edges.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    w = Window.partitionBy("u")
-    m = F.min("v").over(w)  # all v < u, so m < u: no self-edges below
-    with_m = oriented.select("u", "v", m.alias("m"))
-    to_min = with_m.where(F.col("v") != F.col("m")).select(
-        F.col("v").alias("u"), F.col("m").alias("v")
-    )
-    self_link = with_m.select("u", F.col("m").alias("v"))
-    return to_min.union(self_link).distinct()
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 60,
-) -> DataFrame:
-    """Connected components of the undirected graph in ``edges``.
-
-    Returns (node BIGINT, component BIGINT) where component is the
-    MINIMUM node id in the node's component — the same canonical-label
-    contract as ``dedup.minhash_dedup_survivors``'s union-find, engine-
-    portable by construction (an oracle computes the same min over a
-    recursive transitive closure).
-
-    Node universe = edge endpoints. Isolated nodes (no surviving edge
-    after self-loop removal) don't appear; callers union them back with
-    component = node if needed.
-
-    Convergence: alternate Large-Star / Small-Star until the edge set's
-    (count, xxhash64-sum) checksum is stable across a full round —
-    Kiveris et al. prove the stable state is a star forest (every node
-    points at its component min) in O(log n) rounds. A matching
-    checksum is CONFIRMED with one exact set comparison (both rounds
-    are distinct sets of equal count, so ``nxt.exceptAll(cur)`` empty
-    iff equal) — a hash collision on a still-changing edge set can
-    therefore never return a half-converged labeling; it just loops
-    once more. ``max_rounds`` is a bug tripwire, not a tuning knob:
-    hitting it raises rather than returning a half-converged labeling.
-    """
-    cur = _norm_edges(edges, src, dst).localCheckpoint()
-    prev_sig: tuple[int, int] | None = None
-    for _ in range(max_rounds):
-        # r13 (job-floor batching): LAZY localCheckpoint — the signature
-        # aggregate right below is a full-partition action, so it both
-        # computes the round AND materializes the checkpoint blocks in
-        # ONE job; the eager form paid a separate materialization job
-        # per round (2 jobs/round -> 1 on a driver-floor-bound graph).
-        # The logical-plan truncation (the reason the checkpoint exists)
-        # is identical — LogicalRDD wraps the marked RDD either way.
-        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        # (count, xor-of-hashes): order-immune set signature that cannot
-        # overflow (bit_xor, unlike sum, is closed over BIGINT).
-        sig_row = nxt.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["c"], sig_row["h"])
-        # exact confirmation only when the cheap signature says "stable":
-        # one extra action at convergence, zero on every other round
-        if sig == prev_sig and nxt.exceptAll(cur).isEmpty():
-            cur = nxt
-            break
-        cur = nxt
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
-    # Stable state is a star forest oriented high→low: (node, root).
-    # Defensive min-reduce in case a node carries duplicate star edges,
-    # then add the roots themselves (they appear only as dst).
-    stars = cur.groupBy(F.col("u").alias("node")).agg(
-        F.min("v").alias("component")
-    )
-    roots = (
-        cur.select(F.col("v").alias("node"))
-        .distinct()
-        .join(stars, "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    return stars.union(roots)
 
 
 def pagerank(

@@ -202,14 +202,13 @@ def prepare_corpus(
                 cur,
                 filter_keep_arrow(cur, text_col=text_col, c4=False, gopher=True),
             )
-    # Spread after the filters, so the downstream explodes get full
-    # parallelism. A/B'd in one session against spreading the raw scan
-    # and against no spread at all, when the filters were JVM folds
-    # (PLANS.md §8: noise-level at sf0.1/sf1, and a no-op whenever the
-    # scan already has as many splits as cores). The Arrow filter
-    # spreads its own input first, so after it this adds no exchange;
-    # with both filters off it widens the raw scan.
-    cur = spread_small_input(cur)
+    if not (c4 or gopher):
+        # Widen a raw scan with fewer splits than cores, so the
+        # downstream explodes get full parallelism (PLANS.md §8). The
+        # Arrow filter spreads its own input with an explicit
+        # repartition, so after it a spread adds no exchange, and its
+        # partition-count check would still run a shuffle-stage job.
+        cur = spread_small_input(cur)
     if multi_use_downstream:
         # Every later stage self-joins the current corpus (line dedup
         # rewrites text, doc dedup anti-joins survivors, decontamination
@@ -391,9 +390,6 @@ def prepare_corpus(
             reps = _dedup.collapse_exact_reps(
                 cur, id_col=id_col, text_col=text_col
             )
-            # the components pass reads the pairs in both edge
-            # directions; persisted here, where the pipeline can
-            # release it
             pairs = _dedup.jaccard_pairs(
                 reps,
                 id_col=id_col,
@@ -401,8 +397,7 @@ def prepare_corpus(
                 threshold=(
                     0.7 if jaccard_threshold is None else jaccard_threshold
                 ),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            cached.append(pairs)
+            )
             cur = step(
                 "doc_dedup",
                 cur,

@@ -3520,9 +3520,9 @@ _CLUSTERS_ORACLE = (
 @q(
     "dedup_clusters",
     _CLUSTERS_ORACLE,
-    "Near-dup clusters: connected components (iterative min-label "
-    "propagation, O(diameter) rounds, one persisted edge shuffle) over "
-    "the 3-gram Jaccard pair list; canonical representative = min id. "
+    "Near-dup clusters: connected components (one Arrow collect of "
+    "the edge list, numpy union-find on the driver, size by bincount) "
+    "over the 3-gram Jaccard pair list; canonical representative = min id. "
     "Oracle: DuckDB recursive CTE over the same pair SQL.",
 )
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7469,19 +7469,17 @@ _GRAPH_CC_EDGES_SQL = """
     SELECT node, least(node, min(r)) AS component
     FROM reach GROUP BY node
     """,
-    "Connected components via alternating Large-Star/Small-Star "
-    "(Kiveris et al. SoCC'14): O(log n) window-aggregate rounds "
-    "regardless of component diameter, edge set never collected — the "
-    "distributed generalization of the union-find inside "
-    "minhash_dedup_survivors (which collects its edges driver-side). "
-    "Labels = min node id per component, engine-portable by contract; "
-    "the oracle computes the same min over a recursive transitive "
-    "closure (fine at sf0.01, quadratic-in-component — exactly why the "
-    "Spark side does NOT use closure). Graph: users↔items from thinned "
-    "click events (item nodes offset by 100000).",
+    "Connected components via dedup.connected_components, the "
+    "package's one CC: one Arrow collect of the edge list and a numpy "
+    "union-find on the driver, no Spark rounds whatever the component "
+    "diameter. Self-loops dropped, isolated nodes absent, labels = min "
+    "node id per component, engine-portable by contract; the oracle "
+    "computes the same min over a recursive transitive closure (fine "
+    "at sf0.01, quadratic-in-component). Graph: users↔items from "
+    "thinned click events (item nodes offset by 100000).",
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.graph import connected_components
+    from impresso_ta.operators.dedup import connected_components
 
     ev = t(spark, sf_dir, "events")
     edges = ev.filter(
@@ -7490,7 +7488,9 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("long").alias("src"),
         (100000 + F.get_json_object("props", "$.k").cast("long")).alias("dst"),
     )
-    return connected_components(edges)
+    return connected_components(edges, src="src", dst="dst").select(
+        "node", F.col("label").alias("component")
+    )
 
 
 def _pagerank_oracle_sql(k: int) -> str:
@@ -8225,7 +8225,7 @@ def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     "200k rows share 64 names), fuzzy_blocked_join (Christen blocking "
     "+ lossless length prefilter + exact Levenshtein<=1 verify, NO "
     "all-pairs stage) emits match edges over DISTINCT values, "
-    "connected_components (Large-Star/Small-Star, O(log n) rounds) "
+    "connected_components (driver-side union-find) "
     "collapses the contracted graph, and one value equi-join expands "
     "labels back to rows — provably identical output to CC over the "
     "raw edges (see er.py). The oracle replays the RAW edges through "

@@ -116,11 +116,11 @@ def _make_tree_with_rejected_page(base):
 
 
 def _cached(spark):
-    """Persisted RDDs, bar local checkpoints: Spark's context cleaner
-    drops those once they are unreachable, while a persisted frame stays
-    cached until someone releases it."""
-    rdds = spark._jsc.getPersistentRDDs().values()
-    return sum(not r.rdd().isLocallyCheckpointed() for r in rdds)
+    """Ids of the persisted RDDs, local checkpoints included: no CLI path
+    checkpoints, so any id a command adds is a cache it left behind.
+    Compared as a subset, because the context cleaner may drop an
+    earlier test's unreachable checkpoints at any time."""
+    return set(spark._jsc.getPersistentRDDs().keys())
 
 
 def _call(spark, command, argv):
@@ -154,7 +154,7 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
         "import", "--input-dir", str(corpus), "--format", "mets_alto",
         "--output-dir", str(store), "--validate", *ts,
     ])
-    assert _cached(spark) == before
+    assert _cached(spark) <= before
     assert _lines(spark, store / "issues") == 2
     assert _lines(spark, store / "pages") == 1
 
@@ -165,7 +165,7 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
             "--supports", str(store / "pages"), "--output-dir", str(out),
             "--fmt", fmt, *ts,
         ])
-        assert _cached(spark) == before
+        assert _cached(spark) <= before
         # 10 jobs per format before the assembly was cached, when the
         # read, shuffle and Python assembly re-ran for the ok write, the
         # error write and the count
@@ -176,10 +176,13 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
         assert n_ok + n_err == N_CIS
 
     docs = f"{sf_dir}/documents.parquet"
-    _call(spark, "cmd_corpus", [
+    jobs = _call(spark, "cmd_corpus", [
         "corpus", "--input", docs, "--output-dir", str(tmp_path / "prepared"),
     ])
-    assert _cached(spark) == before
+    assert _cached(spark) <= before
+    # 50 jobs while doc dedup ran its components as Spark rounds, each a
+    # checkpoint and a count, and the post-filter spread ran a shuffle job
+    assert jobs <= 31, f"{jobs} Spark jobs for one corpus run"
     assert spark.read.parquet(str(tmp_path / "prepared" / "corpus")).count()
     # the pipeline fills its caches before the corpus write, which fails
     # here because the output directory lies below a regular file
@@ -189,7 +192,7 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
         _call(spark, "cmd_corpus", [
             "corpus", "--input", docs, "--output-dir", str(blocker / "out"),
         ])
-    assert _cached(spark) == before
+    assert _cached(spark) <= before
 
     # a command that fails after its caches were filled still releases
     # them: the error write is the last write of both commands
@@ -204,14 +207,14 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
             "import", "--input-dir", str(corpus), "--format", "mets_alto",
             "--output-dir", str(tmp_path / "store2"), "--validate", *ts,
         ])
-    assert _cached(spark) == before
+    assert _cached(spark) <= before
     with pytest.raises(RuntimeError, match="error sink unavailable"):
         _call(spark, "cmd_rebuild", [
             "rebuild", "--issues", str(store / "issues"),
             "--supports", str(store / "pages"),
             "--output-dir", str(tmp_path / "failed"), *ts,
         ])
-    assert _cached(spark) == before
+    assert _cached(spark) <= before
 
 
 def test_cli_incremental_store_errors(spark, tmp_path, monkeypatch):

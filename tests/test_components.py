@@ -1,9 +1,13 @@
 """Connected-components dedup clustering (operators/dedup.py).
 
-The min-label propagation must converge beyond one round: a chain
-a-b-c-d needs ~diameter rounds for the min label to reach the far end.
+Every node must carry its component's minimum id, whatever the
+component's diameter: a chain a-b-c-d is the case a round-bounded label
+propagation gets wrong.
 """
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from impresso_ta.operators import dedup
@@ -52,3 +56,75 @@ def test_dedup_survivors_keeps_reps_and_singletons(spark):
         r["doc_id"] for r in dedup_survivors(docs, pairs).collect()
     )
     assert kept == [1, 4, 5, 7]
+
+
+def test_long_chain_gets_one_label(spark):
+    # a 150-node path whose min id sits at one end: the label must travel
+    # 149 hops, far more than any fixed round budget of a propagation
+    pairs = _pairs(spark, [(i + 1, i) for i in reversed(range(149))])
+    comp = dedup.connected_components(pairs).collect()
+    assert len(comp) == 150
+    assert {r["label"] for r in comp} == {0}
+
+
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _random_graph(rng):
+    """Isolated pairs, stars, cliques and chains over shuffled ids, a few
+    bridges between them, then duplicated and reversed edges."""
+    ids = rng.sample(range(1, 10**12), 80)
+    edges, groups = [], []
+    while len(ids) >= 2:
+        part = [ids.pop() for _ in range(min(rng.randint(2, 9), len(ids)))]
+        kind = rng.choice(["pair", "star", "clique", "chain"])
+        if kind == "pair" or len(part) == 2:
+            edges.append((part[0], part[1]))
+        elif kind == "star":
+            edges += [(part[0], x) for x in part[1:]]
+        elif kind == "clique":
+            edges += [(x, y) for i, x in enumerate(part) for y in part[i + 1 :]]
+        else:
+            edges += list(zip(part, part[1:]))
+        groups.append(part)
+    for _ in range(rng.randint(0, 3)):
+        g, h = rng.sample(groups, 2)
+        edges.append((rng.choice(g), rng.choice(h)))
+    edges += rng.sample(edges, len(edges) // 4)
+    edges = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in edges]
+    rng.shuffle(edges)
+    return edges
+
+
+def test_components_match_python_union_find(spark):
+    for seed in range(30):
+        edges = _random_graph(random.Random(seed))
+        got = {
+            r["node"]: r["label"]
+            for r in dedup.connected_components(_pairs(spark, edges)).collect()
+        }
+        assert got == _union_find(edges), f"seed {seed}"
+
+
+def test_edge_ceiling_raises(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "MAX_COMPONENT_EDGES", 4)
+    at_ceiling = _pairs(spark, [(1, 2), (2, 3), (3, 4), (5, 6)])
+    assert len(dedup.connected_components(at_ceiling).collect()) == 6
+    over = _pairs(spark, [(1, 2), (2, 3), (3, 4), (5, 6), (7, 8)])
+    with pytest.raises(ValueError, match="more than 4 edges"):
+        dedup.connected_components(over)
+    with pytest.raises(ValueError, match="more than 4 edges"):
+        dedup.dedup_clusters(over)

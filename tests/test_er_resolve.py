@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from impresso_ta.operators.er import resolve_entities
 from impresso_ta.operators.fuzzy import fuzzy_blocked_join
-from impresso_ta.operators.graph import connected_components
+from impresso_ta.operators.dedup import connected_components
 
 
 ROWS = [
@@ -44,8 +44,8 @@ def _raw_cc(spark, df):
         .select(F.col("a_key").alias("src"), F.col("b_key").alias("dst"))
     )
     return {
-        (r["node"], r["component"])
-        for r in connected_components(edges).collect()
+        (r["node"], r["label"])
+        for r in connected_components(edges, src="src", dst="dst").collect()
     }
 
 

@@ -1,5 +1,6 @@
-"""Graph operators: connected components (Large-Star/Small-Star) and
-integer-exact PageRank (operators/graph.py)."""
+"""Graph operators (operators/graph.py): integer-exact PageRank,
+triangle counts and BFS, plus the graph-family contract of the one
+connected-components implementation, dedup.connected_components."""
 
 import collections
 
@@ -7,31 +8,19 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from impresso_ta.operators.graph import (
-    PAGERANK_SCALE,
-    connected_components,
-    pagerank,
-)
+from impresso_ta.operators.dedup import connected_components
+from impresso_ta.operators.graph import PAGERANK_SCALE, pagerank
 
 
-def _cc(spark, pairs, **kw):
+def _cc(spark, pairs):
     edges = spark.createDataFrame(pairs, "src long, dst long")
-    rows = connected_components(edges, **kw).collect()
-    return {r.node: r.component for r in rows}
+    rows = connected_components(edges, src="src", dst="dst").collect()
+    return {r.node: r.label for r in rows}
 
 
 def test_components_basic(spark):
     got = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 1), (10, 11)])
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-
-def test_components_long_chain_converges_in_log_rounds(spark):
-    # A 300-hop chain has diameter 300; hash-min propagation would need
-    # ~300 rounds. Large-Star/Small-Star must finish far inside
-    # max_rounds=25 (~2·log2(n) + slack), proving the O(log n) claim.
-    got = _cc(spark, [(i, i + 1) for i in range(300)], max_rounds=25)
-    assert len(got) == 301
-    assert set(got.values()) == {0}
 
 
 def test_components_self_loops_and_duplicates_ignored(spark):
@@ -47,14 +36,6 @@ def test_components_merges_via_shared_node(spark):
     got = _cc(spark, star_a + star_b)
     assert set(got.values()) == {1}
     assert got[100] == got[200] == 1
-
-
-def test_components_max_rounds_tripwire(spark):
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(50)], "src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_rounds=1)
 
 
 def _pagerank_mirror(edge_list, iterations, scale=PAGERANK_SCALE):
