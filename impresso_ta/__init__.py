@@ -4,7 +4,8 @@ A from-scratch re-expression of the capability surface of
 impresso/impresso-text-acquisition (an OCR/ASR ETL pipeline built on Dask
 bags) as an idiomatic Spark DataFrame engine, plus the LLM-data-pipeline
 operators (dedup, similarity search, text analysis, multimodal columns)
-required for large-scale corpus preparation.
+required for large-scale corpus preparation. ``cli`` runs the three batch jobs:
+``import``, ``rebuild`` and ``corpus``.
 
 Layout
 ------
@@ -16,6 +17,8 @@ Layout
 - ``functions``  scalar column functions (ids, coords, iiif, whitespace)
 - ``rebuild``    canonical → rebuilt ("solr") / passim document assembly
 - ``importers``  format plugins (bytes → canonical rows) as mapInPandas UDTFs
+- ``cli``        the ``import`` / ``rebuild`` / ``corpus`` commands
+- ``queries``    the oracle-checked query catalogue behind ``__spark_entry__``
 """
 
 __version__ = "0.1.0"

@@ -26,7 +26,55 @@ when the command returns or fails.
 from __future__ import annotations
 
 import argparse
+import datetime
+import math
+import re
 import sys
+
+_ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
+
+
+def _date_ranges(spec: str) -> dict[str, tuple[str, str]]:
+    """``ALIAS=start:end[,ALIAS=start:end]`` → ``{alias: (start, end)}``
+    with ISO ``YYYY-MM-DD`` dates, so a bad spec fails at argument
+    parsing instead of inside the job."""
+    ranges = {}
+    for part in spec.split(","):
+        alias, eq, rng = part.partition("=")
+        start, colon, end = rng.partition(":")
+        if not (alias and eq and colon):
+            raise argparse.ArgumentTypeError(
+                f"{part!r} is not ALIAS=start:end"
+            )
+        for day in (start, end):
+            try:
+                if not _ISO_DATE.fullmatch(day):
+                    raise ValueError(day)
+                datetime.date.fromisoformat(day)
+            except ValueError:
+                raise argparse.ArgumentTypeError(
+                    f"{day!r} in {part!r} is not a YYYY-MM-DD date"
+                ) from None
+        if start > end:
+            raise argparse.ArgumentTypeError(f"{part!r} ends before it starts")
+        ranges[alias] = (start, end)
+    return ranges
+
+
+def _split_fractions(spec: str) -> dict[str, float]:
+    """``NAME=fraction[,NAME=fraction]`` → ``{name: fraction}``; the
+    sum-to-one check stays in ``deterministic_split``."""
+    fractions = {}
+    for part in spec.split(","):
+        name, eq, frac = part.partition("=")
+        try:
+            value = float(frac)
+        except ValueError:
+            value = math.nan
+        if not (name and eq and math.isfinite(value)):
+            raise argparse.ArgumentTypeError(f"{part!r} is not NAME=fraction")
+        fractions[name] = value
+    return fractions
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -41,6 +89,7 @@ def _build_parser() -> argparse.ArgumentParser:
     imp.add_argument("--exclude", action="store_true", help="invert --aliases")
     imp.add_argument(
         "--date-ranges",
+        type=_date_ranges,
         help="ALIAS=start:end[,ALIAS=start:end] per-title date filter (F2)",
     )
     imp.add_argument(
@@ -215,6 +264,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     cor.add_argument(
         "--split",
+        type=_split_fractions,
         help="add a deterministic split column, e.g. train=0.98,val=0.01,test=0.01",
     )
     cor.add_argument("--stats", action="store_true", help="print per-stage counts")
@@ -242,12 +292,7 @@ def cmd_import(args, spark) -> int:
     if args.aliases:
         disc = alias_filter(disc, args.aliases.split(","), exclude=args.exclude)
     if args.date_ranges:
-        ranges = {}
-        for spec in args.date_ranges.split(","):
-            alias, rng = spec.split("=")
-            start, end = rng.split(":")
-            ranges[alias] = (start, end)
-        disc = date_filter(disc, ranges)
+        disc = date_filter(disc, args.date_ranges)
     if getattr(args, "image_dirs", None):
         # Olive X7 coordinate conversion: the importer reads the sidecar
         # location from a path suffix so the discovery schema stays flat
@@ -478,12 +523,8 @@ def cmd_corpus(args, spark) -> int:
         if args.split:
             from impresso_ta.operators.corpus import deterministic_split
 
-            fractions = {}
-            for part in args.split.split(","):
-                name, frac = part.split("=")
-                fractions[name] = float(frac)
             out_docs = deterministic_split(
-                out_docs, fractions, id_col=args.id_col
+                out_docs, args.split, id_col=args.id_col
             )
         out_docs.write.mode("overwrite").parquet(f"{args.output_dir}/corpus")
     finally:
@@ -507,8 +548,10 @@ def cmd_corpus(args, spark) -> int:
 def main(argv: list[str] | None = None) -> int:
     parser = _build_parser()
     args = parser.parse_args(argv)
-    # cross-flag contracts fail HERE, before any Spark session spins up —
-    # not as a ValueError deep inside prepare_corpus (and never silently)
+    # malformed specs (--date-ranges, --split) already failed in
+    # parse_args; cross-flag contracts fail HERE, before any Spark session
+    # spins up — not as a ValueError deep inside prepare_corpus (and never
+    # silently)
     if args.command == "corpus":
         if args.dsir_target and not args.dsir_n:
             parser.error("--dsir-target requires --dsir-n > 0")

@@ -3,7 +3,7 @@ history from an append-only change log.
 
 The reference's incremental story is file-level (F3 skips already-
 imported issues); a 100 TB lake also needs ROW-level incrementality:
-an upsert/delete log lands continuously (the streaming ingest path),
+an upsert/delete log lands continuously,
 and consumers want either the current snapshot (latest version of every
 key, deletes applied) or the full slowly-changing-dimension history
 (every version with its validity interval) — Delta/Iceberg's MERGE and

@@ -297,10 +297,7 @@ def _minhash_parts(
     exchange disappear from the plan entirely; only the band-join
     shuffles remain. The returned shingle frame is the unchanged lazy
     expression form — consumers that never evaluate it (all arrow-mode
-    callers) pay nothing for it. The streaming gate and
-    ``minhash_band_state`` keep ``engine="expr"``: their parts triple is
-    shared/persisted by contract and the expression form is the
-    streaming-safe reference.
+    callers) pay nothing for it.
 
     ``cache_shingles`` only affects ``engine="expr"``: the arrow path
     never evaluates the returned shingle frame, so the flag is a no-op
@@ -367,17 +364,10 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     cache_shingles: bool = False,
     max_bucket_size: int | None = None,
-    parts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     guard_bucket_size: int | None = 50_000,
     engine: str = "arrow",
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, verified with exact Jaccard.
-
-    ``parts`` optionally supplies a precomputed
-    :func:`_minhash_parts` triple for ``docs`` so a caller composing
-    several minhash consumers over the same frame (the streaming gate:
-    within-batch pairs + cross-batch probe + band-state write) runs the
-    shingle/signature pass ONCE per batch instead of once per consumer.
 
     bands=8 × rows=3 over 24 permutations: P(candidate | j) = 1-(1-j³)⁸ —
     ≥ 0.999 at j=0.85, ~0.02 at j=0.15, so candidate volume stays linear
@@ -412,8 +402,7 @@ def minhash_lsh_pairs(
     the guard protects direct callers. Never fires below the bound, so
     the oracle-pinned semantics are unchanged.
     """
-    external_parts = parts is not None
-    sh, sigs, banded = parts if external_parts else _minhash_parts(
+    sh, sigs, banded = _minhash_parts(
         docs,
         id_col,
         text_col,
@@ -435,12 +424,7 @@ def minhash_lsh_pairs(
     # from their OWN groupBy over the (recomputed) shingle frame, NOT
     # from extra aggregates in the signature groupBy (measured ~2x on
     # the sf0.1 signature pass — see _minhash_parts docstring).
-    # External ``parts`` (the streaming gate's shared triple) keep the
-    # r11 join verify: their shingle frame is already persisted/shared,
-    # so re-exploding for arrays would not be free.
-    if external_parts:
-        sets = None
-    elif engine == "arrow":
+    if engine == "arrow":
         sets = sigs  # hs + n_shingles emitted in the signature pass
     else:
         sets = (
@@ -502,71 +486,36 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    if sets is not None:
-        # Row-local verify (r12): join each candidate pair to its two
-        # persisted sorted shingle-hash arrays and intersect in place —
-        # two |candidates|-row joins against the persisted sets frame,
-        # instead of re-exploding the corpus twice and shuffling the
-        # full (doc, h) frame through two equi-joins (guide §2.2:
-        # shuffle candidate-proportional bytes, not
-        # corpus-proportional). Same jaccard per pair: the shingles of
-        # one document are DISTINCT strings, so the hash multiset and
-        # the join-counted matches agree except under 48-bit collisions
-        # (see shingle_hash48 — already accepted by every consumer).
-        sides = sets.select("doc_id", "hs", "n_shingles")
-        return (
-            candidates.join(
-                sides.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("hs").alias("hs_a"),
-                    F.col("n_shingles").alias("n_a"),
-                ),
-                "doc_a",
-            )
-            .join(
-                sides.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("hs").alias("hs_b"),
-                    F.col("n_shingles").alias("n_b"),
-                ),
-                "doc_b",
-            )
-            .withColumn(
-                "n_common", F.size(F.array_intersect("hs_a", "hs_b"))
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(
-                    F.col("n_common")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                    4,
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    # external ``parts`` without hs arrays (the streaming gate's shared
-    # triple): verify over the shared shingle frame as before
-    sizes = sigs.select("doc_id", "n_shingles")
-    # count common shingles per candidate pair only (join-pruned)
-    common = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .join(
-            sh.withColumnRenamed("doc_id", "doc_b").alias("s2"),
-            ["doc_b", "h"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
+    # Row-local verify (r12): join each candidate pair to its two
+    # persisted sorted shingle-hash arrays and intersect in place —
+    # two |candidates|-row joins against the persisted sets frame,
+    # instead of re-exploding the corpus twice and shuffling the
+    # full (doc, h) frame through two equi-joins (guide §2.2:
+    # shuffle candidate-proportional bytes, not
+    # corpus-proportional). Same jaccard per pair: the shingles of
+    # one document are DISTINCT strings, so the hash multiset and
+    # the join-counted matches agree except under 48-bit collisions
+    # (see shingle_hash48 — already accepted by every consumer).
+    sides = sets.select("doc_id", "hs", "n_shingles")
     return (
-        common.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("n_shingles", "n_a")
+        candidates.join(
+            sides.select(
+                F.col("doc_id").alias("doc_a"),
+                F.col("hs").alias("hs_a"),
+                F.col("n_shingles").alias("n_a"),
+            ),
+            "doc_a",
+        )
         .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "n_shingles", "n_b"
+            sides.select(
+                F.col("doc_id").alias("doc_b"),
+                F.col("hs").alias("hs_b"),
+                F.col("n_shingles").alias("n_b"),
             ),
             "doc_b",
+        )
+        .withColumn(
+            "n_common", F.size(F.array_intersect("hs_a", "hs_b"))
         )
         .select(
             "doc_a",
@@ -659,13 +608,8 @@ def incremental_minhash_dedup(
     Scale shape: candidates are new-band ⋈ existing-band on
     (band, band-hash) — work proportional to the BATCH, not the corpus.
     Both sides ride :func:`_minhash_parts` with identical hash
-    parameters, so the existing side's band/size tables can be computed
-    once and persisted; the production form that does exactly that is
-    :func:`minhash_band_state` + :func:`incremental_minhash_dedup_banded`
-    (identical output, no per-trigger re-banding of the store — the
-    streaming gates use it). This self-contained form re-derives the ex
-    side from text each call: use it for one-shot batch-vs-corpus
-    checks where no state store exists. Extends the reference's
+    parameters, so their band tables are join-compatible; the existing
+    side is re-derived from text on each call. Extends the reference's
     incremental import anti-join (F3/J1, ref
     generic_importer.py:240-249) from exact-id skip to near-dup skip.
     """
@@ -742,118 +686,6 @@ def incremental_minhash_dedup(
         )
         .join(
             sigs_e.select(
-                F.col("doc_id").alias("ex_id"),
-                F.col("n_shingles").alias("n_e"),
-            ),
-            "ex_id",
-        )
-        .filter(
-            F.round(
-                F.col("n_common")
-                / (F.col("n_n") + F.col("n_e") - F.col("n_common")),
-                4,
-            )
-            >= threshold
-        )
-        .select(F.col("new_id").alias(id_col))
-        .distinct()
-    )
-    return new_docs.join(dups, id_col, "left_anti")
-
-
-def minhash_band_state(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_perm: int = 24,
-    bands: int = 8,
-) -> tuple[DataFrame, DataFrame]:
-    """The persistable dedup state of a document set: its band table
-    (doc_id, band, bh) and shingle-size table (doc_id, n_shingles).
-
-    A continuous-ingest deployment writes these once per accepted batch
-    and probes them on every later trigger via
-    :func:`incremental_minhash_dedup_banded` — the store's TEXT is never
-    re-shingled or re-banded. Hash parameters are a pure function of the
-    permutation index (:func:`_minhash_parts`), so state written by any
-    batch is join-compatible with bands computed by any other.
-    """
-    _, sigs, banded = _minhash_parts(docs, id_col, text_col, k, num_perm, bands)
-    return banded, sigs.select("doc_id", "n_shingles")
-
-
-def incremental_minhash_dedup_banded(
-    new_docs: DataFrame,
-    state_bands: DataFrame,
-    state_sizes: DataFrame,
-    existing_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_perm: int = 24,
-    bands: int = 8,
-    threshold: float = 0.8,
-    parts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """:func:`incremental_minhash_dedup` probing PERSISTED state instead
-    of re-deriving the ex side from text — identical output
-    (parity-tested), batch-proportional per-trigger cost:
-
-    - the accepted store contributes a narrow columnar scan of its band
-      table (doc_id, band, bh) — no shingle explode, no md5 re-banding
-      of the corpus on any trigger;
-    - the batch's band table is broadcast into the candidate join, so
-      the state side is never shuffled by key;
-    - accepted TEXT is consulted only for the exact-Jaccard verify,
-      left-semi-pruned to the colliding candidate docs.
-
-    ``state_bands`` / ``state_sizes`` come from
-    :func:`minhash_band_state` runs over previously accepted batches
-    (must share k/num_perm/bands with this call). ``parts`` optionally
-    supplies the NEW side's precomputed :func:`_minhash_parts` triple
-    (see :func:`minhash_lsh_pairs`).
-    """
-    sh_n, sigs_n, band_n = parts if parts is not None else _minhash_parts(
-        new_docs, id_col, text_col, k, num_perm, bands
-    )
-    candidates = (
-        state_bands.select(F.col("doc_id").alias("ex_id"), "band", "bh")
-        .join(
-            F.broadcast(
-                band_n.select(F.col("doc_id").alias("new_id"), "band", "bh")
-            ),
-            ["band", "bh"],
-        )
-        .select("new_id", "ex_id")
-        .distinct()
-    )
-    # verify shingles only for colliding ex docs: the text store is
-    # scanned once, pruned by a (small) semi-join before the explode
-    ex_hit = existing_docs.join(
-        candidates.select(F.col("ex_id").alias(id_col)).distinct(),
-        id_col,
-        "left_semi",
-    )
-    sh_e = _explode_shingle_hashes(ex_hit, id_col, text_col, k)
-    common = (
-        candidates.join(
-            sh_n.select(F.col("doc_id").alias("new_id"), "h"), "new_id"
-        )
-        .join(sh_e.select(F.col("doc_id").alias("ex_id"), "h"), ["ex_id", "h"])
-        .groupBy("new_id", "ex_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    dups = (
-        common.join(
-            sigs_n.select(
-                F.col("doc_id").alias("new_id"),
-                F.col("n_shingles").alias("n_n"),
-            ),
-            "new_id",
-        )
-        .join(
-            state_sizes.select(
                 F.col("doc_id").alias("ex_id"),
                 F.col("n_shingles").alias("n_e"),
             ),

@@ -670,7 +670,7 @@ def _fake_phash(content: bytes, hash_size: int) -> int:
 def _phash_udtf(media_df: DataFrame, one) -> DataFrame:
     """Shared Arrow-batched wrapper for the per-payload hash functions
     (``one(content) -> (phash, decoded)``) — image and audio emit the
-    same PHASH_SCHEMA so the Hamming join and the streaming gate treat
+    same PHASH_SCHEMA so the Hamming join and the banded probe treat
     them uniformly."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -743,7 +743,7 @@ def image_phash(
             # _png_read raises ValueError on malformed structure but
             # zlib.error / struct.error / ZeroDivisionError on corrupt
             # payloads — ANY decode failure must fall back (one bad
-            # image must not kill the batch job or streaming query)
+            # image must not kill the job)
             return _fake_phash(content, hash_size), False
 
     return _phash_udtf(media_df, one)
@@ -985,7 +985,7 @@ def audio_fingerprint(
 ) -> DataFrame:
     """Robust audio hash per payload (media_id, phash, decoded) — the
     audio twin of :func:`image_phash`, sharing its output schema so
-    :func:`phash_dedup_pairs` and the streaming gate work unchanged.
+    :func:`phash_dedup_pairs` and :func:`phash_probe_pairs` work unchanged.
     WAV payloads get the REAL spectral hash; other codecs fall back to
     the deterministic byte-hash fake flagged ``decoded=false``
     (``strict=True`` raises — mp3/ogg need an external decoder)."""

@@ -184,7 +184,7 @@ def prepare_corpus(
     # tests/test_text_arrow.py). With collect_stats the stages stay
     # separate so each Observation boundary still reports its own count;
     # the JVM expression forms remain in text_analysis (c4_signals /
-    # repetition_signals — the streaming gates still compose them).
+    # repetition_signals).
     from impresso_ta.operators.text_arrow import filter_keep_arrow
 
     if c4 and gopher and not collect_stats:

@@ -1718,40 +1718,6 @@ def compact_ivf_index(
     return flagged
 
 
-def publish_ivf_store(
-    spark, staging_path: str, serving_path: str
-) -> None:
-    """Snapshot-publish a streaming ``batch=N/cell=K`` staging store
-    (:func:`impresso_ta.streaming.ann.stream_ivf_ingest`) into the
-    canonical flat one-file-per-cell serving layout.
-
-    The staging store is directly servable (``ivf_topk_indexed`` prunes
-    on the ``cell`` partition column through the ``batch`` level —
-    metric-tested), but its per-cell file count grows by up to one per
-    micro-batch; this pass collapses that back to one file per cell.
-    It is a FULL rewrite with ``mode="overwrite"`` — idempotent and
-    crash-safe via the parquet commit protocol (a failed publish leaves
-    the previous serving snapshot intact when ``serving_path`` differs
-    from ``staging_path``; publishing in place is rejected because a
-    full overwrite would be reading its own output). With raw parquet
-    this snapshot publish is the honest crash-atomic form; SELECTIVE
-    cross-batch merge (rewrite only fragmented cells, delete their
-    superseded batch files) needs a transaction log — a table format's
-    job, not this engine's. Periodic cadence at scale: publish when
-    accumulated batch count (files per probed cell) starts to dominate
-    probe open cost; ``compact_ivf_index`` then maintains the published
-    store under further BATCH appends.
-    """
-    if staging_path.rstrip("/") == serving_path.rstrip("/"):
-        raise ValueError(
-            "publish_ivf_store requires serving_path != staging_path "
-            "(a full overwrite cannot read its own output)"
-        )
-    write_ivf_index(
-        spark.read.parquet(staging_path).drop("batch"), serving_path
-    )
-
-
 def _ivf_probe_rank(
     assigned: DataFrame,
     queries: DataFrame,
@@ -1878,9 +1844,7 @@ def ivf_topk_indexed(
 
     Incremental crawls compose for free: assigning a NEW batch is
     ``ivf_assign(new_batch, centroids)`` with the same FROZEN centroids
-    (append to the store) — the exact pattern
-    ``incremental_minhash_dedup_banded`` uses for its persisted band
-    state. ``centroids`` must be the ones the index was built with
+    (append to the store). ``centroids`` must be the ones the index was built with
     (same seeds, same refine history); results are then bit-identical
     to ``ivf_topk`` over the original corpus (parity-tested).
 

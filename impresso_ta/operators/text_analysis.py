@@ -77,7 +77,7 @@ def quality_features(
     char sums, regex counts) runs at C speed instead of through
     Catalyst's interpreted HOF lambdas (guide §4.2); bit-parity pinned
     by tests/test_text_arrow.py. ``engine="expr"`` keeps the pure
-    column-expression form (streaming-safe reference)."""
+    column-expression form."""
     if engine == "arrow":
         from impresso_ta.operators.text_arrow import quality_features_arrow
 
@@ -371,10 +371,8 @@ def c4_signals(
     min_alpha_frac: float = 0.8,
 ) -> dict[str, Column]:
     """The C4 signal columns and conjoined ``keep`` predicate as column
-    expressions — the single source of truth shared by the batch
-    ``c4_filters`` stage and the streaming corpus-quality gate, so the
-    thresholds (including the upper word-count bound) can never drift
-    between the two paths.
+    expressions — the single source of truth for the ``c4_filters``
+    stage's thresholds (including the upper word-count bound).
     """
     toks = tokens(text)
     n_words = F.size(toks)
@@ -466,8 +464,7 @@ def c4_filters(
     batch pass — C-speed tokenize + counts instead of the interpreted
     HOF fold (guide §4.2; parity in tests/test_text_arrow.py).
     ``engine="expr"``: the pure column-expression form (one codegen'd
-    scan, zero shuffle — the streaming-safe reference; its per-token
-    fold runs interpreted).
+    scan, zero shuffle; its per-token fold runs interpreted).
     """
     if engine == "arrow":
         from impresso_ta.operators.text_arrow import c4_filters_arrow
@@ -793,7 +790,7 @@ def repetition_features(
     mapInArrow pass — the three gram histograms are Counter loops at C
     speed instead of three interpreted sort+fold passes (guide §4.2;
     parity in tests/test_text_arrow.py). ``engine="expr"`` keeps the
-    column-expression form (streaming-safe reference).
+    column-expression form.
     """
     if engine == "arrow":
         from impresso_ta.operators.text_arrow import (

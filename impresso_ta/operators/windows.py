@@ -51,9 +51,8 @@ def debounce(
 
     This is the lag-based form — each row is judged against its
     immediate predecessor, not against the last KEPT row (that chained
-    suppression is a running state, i.e. ``streaming/ingest.py``'s
-    sessionize gap logic; the lag form is the stateless one-window
-    batch primitive, and the two agree whenever bursts are shorter
+    suppression is a running state; the lag form is the stateless
+    one-window batch primitive, and the two agree whenever bursts are shorter
     than the gap). ONE window shuffle; ``tie_cols`` (default: nothing)
     break equal-timestamp ordering deterministically — pass the log
     sequence column when timestamps can collide.

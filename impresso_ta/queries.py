@@ -811,10 +811,8 @@ def events_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contributes to window/slide = 4 overlapping windows — the rate/"
     "trend shape tumbling windows can't express. Spark's window() "
     "expands rows 4x BEFORE the aggregate (a row-local generator, no "
-    "join), then one map-side-combined groupBy; in streaming the same "
-    "expression multiplies state rows by the overlap factor while "
-    "watermark eviction is unchanged (stream_windowed_event_counts "
-    "slide=...). The oracle replays the expansion as an explicit "
+    "join), then one map-side-combined groupBy. The oracle replays "
+    "the expansion as an explicit "
     "4-window unnest off the 15-minute grid.",
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1071,7 +1069,6 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.hard_negatives(
         corpus=emb, queries=emb.filter(F.col("vec_id") % 100 == 0), k=3
     )
-
 
 
 @q(
@@ -2117,9 +2114,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DYNAMIC PARTITION PRUNING (plan-tested in "
     "test_ivf_topk_indexed_parity_and_partition_pruning), so only "
     "nprobe/nlist of the bytes are READ. Incremental crawls append "
-    "new batches assigned with the same frozen centroids — the "
-    "persisted-band-state pattern of incremental_minhash_dedup_banded "
-    "applied to ANN. Same oracle as similarity_ivf_topk: identical "
+    "new batches assigned with the same frozen centroids. Same oracle as similarity_ivf_topk: identical "
     "centroids and probes give bit-identical results by construction.",
 )
 def similarity_ivf_indexed_topk(
@@ -7070,41 +7065,6 @@ def corpus_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "dsir_logw")
 
 
-@q(
-    "events_attribution_join",
-    """
-    SELECT v.user_id,
-           v.event_id AS cause_id,
-           c.event_id AS effect_id,
-           v.ts AS cause_ts,
-           c.ts AS effect_ts,
-           epoch_us(c.ts) - epoch_us(v.ts) AS lag_us
-    FROM events v JOIN events c
-      ON v.user_id = c.user_id
-     AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 2 HOUR
-    WHERE v.event_type = 'view' AND c.event_type = 'purchase'
-    """,
-    "Event-time interval attribution join (batch twin of the "
-    "stream-stream join streaming/joins.py attribution_join — SAME "
-    "function, watermark=None): every purchase joined to the same "
-    "user's views at most 2h earlier. Equi-join on the user key with "
-    "the time bound as residual (hash/sort-merge, never a BNLJ over "
-    "time); in streaming the identical call with a watermark compiles "
-    "to StreamingSymmetricHashJoin with state bounded by "
-    "watermark+lag. Exact integer microsecond lag — no float time "
-    "arithmetic to drift across engines.",
-)
-def events_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.streaming.joins import attribution_join
-
-    e = t(spark, sf_dir, "events")
-    return attribution_join(
-        e.filter(F.col("event_type") == "view"),
-        e.filter(F.col("event_type") == "purchase"),
-        max_lag="2 hours",
-    )
-
-
 _DSIR_PIPE_RAW = f"""SELECT doc_id, text FROM (
         SELECT doc_id, text,
                regexp_split_to_array(trim(text), '\\s+') AS w
@@ -7265,9 +7225,8 @@ _LR_QUALITY_LABEL_SQL = (
     "unrolled oracle as text_lr_classifier: the ≤dim-row model folds "
     "into a one-row map broadcast and the margin is computed per row "
     "with array expressions (bucket, count-in-array, map lookup) — the "
-    "form the streaming quality gate and the pipeline stage use, "
-    "because the batch scorer's explode→groupBy margin is a streaming "
-    "aggregation and two extra batch exchanges. Identical rounded "
+    "form the pipeline stage uses, because the batch scorer's "
+    "explode→groupBy margin costs two extra exchanges. Identical rounded "
     "probabilities required by construction; this oracle pins it at "
     "the hash level.",
 )
@@ -7396,44 +7355,6 @@ def corpus_dsir_threshold_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= F.greatest(0.02 * F.col("n_pool"), F.lit(1.0))
             ).alias("within_2pct"),
         )
-    )
-
-
-@q(
-    "events_attribution_funnel",
-    """
-    SELECT v.user_id,
-           v.event_id AS cause_id,
-           c.event_id AS effect_id,
-           v.ts AS cause_ts,
-           c.ts AS effect_ts,
-           epoch_us(c.ts) - epoch_us(v.ts) AS lag_us
-    FROM (SELECT * FROM events WHERE event_type = 'view') v
-    LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') c
-      ON v.user_id = c.user_id
-     AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 2 HOUR
-    """,
-    "Funnel-loss variant of the attribution join (attribution_join "
-    "how='left_outer', SAME function as the streaming query): every "
-    "view kept, converted ones with their purchase and exact µs lag, "
-    "unconverted ones with nulls. In streaming the unmatched rows emit "
-    "on JOIN-STATE EXPIRY once the global watermark (MIN across both "
-    "sides' event-time columns) passes cause_ts+lag; availableNow's "
-    "final no-data batch re-runs eviction so the null rows flush within "
-    "the draining trigger (checkpoint-recovery-tested across three "
-    "availableNow restarts in tests/test_stream_join.py); in batch it "
-    "is one key-equi LEFT join with the time bound residual in the ON "
-    "clause.",
-)
-def events_attribution_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.streaming.joins import attribution_join
-
-    e = t(spark, sf_dir, "events")
-    return attribution_join(
-        e.filter(F.col("event_type") == "view"),
-        e.filter(F.col("event_type") == "purchase"),
-        max_lag="2 hours",
-        how="left_outer",
     )
 
 
@@ -7711,278 +7632,6 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Product quantization ANN (operators/pq.py)
-# =====================================================================
-
-_PQ_D2 = (
-    "(CAST({v}.embedding[i] AS DOUBLE) - CAST({s}.embedding[i] AS DOUBLE))"
-    " * (CAST({v}.embedding[i] AS DOUBLE) - CAST({s}.embedding[i] AS DOUBLE))"
-)
-
-
-def _pq_d_sql(v: str, s: str, j: str) -> str:
-    """Rounded squared-L2 in subspace j (16 dims) — same fixed-order
-    double arithmetic as operators/pq._sub_sq_l2."""
-    return (
-        f"round(list_sum(list_transform(range({j}*16 + 1, {j}*16 + 17), "
-        f"i -> {_PQ_D2.format(v=v, s=s)})), 4)"
-    )
-
-
-_PQ_CTES = f"""
-    seeds AS (SELECT vec_id AS code, embedding FROM embeddings
-              WHERE vec_id < 8),
-    jj AS (SELECT unnest([0, 1, 2, 3]) AS j),
-    enc AS (
-        SELECT vec_id, j, code FROM (
-            SELECT e.vec_id, jj.j, s.code,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id, jj.j
-                       ORDER BY {_pq_d_sql('e', 's', 'jj.j')} ASC, s.code ASC
-                   ) AS rk
-            FROM embeddings e CROSS JOIN jj CROSS JOIN seeds s
-        ) WHERE rk = 1
-    ),
-    pairs AS (
-        SELECT q.vec_id AS query_id, enc.vec_id AS neighbor_id,
-               round(sum(CAST(round({_pq_d_sql('q', 's', 'enc.j')} * 10000)
-                              AS BIGINT)) / 10000.0, 4) AS approx_dist
-        FROM (SELECT * FROM embeddings WHERE vec_id % 97 = 0) q
-        CROSS JOIN enc JOIN seeds s ON s.code = enc.code
-        GROUP BY 1, 2
-    )"""
-
-
-@q(
-    "similarity_pq_topk",
-    f"""
-    WITH
-    {_PQ_CTES.lstrip()}
-    SELECT query_id, neighbor_id, approx_dist, CAST(rk AS INT) AS rnk FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY approx_dist ASC, neighbor_id ASC
-        ) AS rk FROM pairs
-    ) WHERE rk <= 3
-    """,
-    "Product-quantization ANN (ADC): 64-dim float32 vectors compressed "
-    "to m=4 subspace codes (64× smaller — at 100 TB the linear scan is "
-    "memory-bandwidth-bound, so the compressed scan is ~64× cheaper "
-    "and composes with ivf_assign into FAISS-style IVF-PQ); encode is "
-    "zero-shuffle literal argmin per subspace, queries broadcast their "
-    "m×ksub distance tables as 1e4-scaled BIGINTs so the ADC sum is "
-    "order-immune (the DSIR/PMI integer discipline), per-query top-k "
-    "via window. Codebook = sub-vectors of the 8 smallest-id corpus "
-    "rows (the IVF seeding convention).",
-)
-def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.pq import pq_topk
-
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    return pq_topk(e, qs, m=4, ksub=8, k=3)
-
-
-@q(
-    "similarity_pq_recall",
-    f"""
-    WITH
-    {_PQ_CTES.lstrip()},
-    truth AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_sum(list_transform(range(1, 65),
-                                    i -> {_PQ_D2.format(v='q', s='c')})), 4)
-                                    ASC,
-                                c.vec_id ASC
-                   ) AS rk
-            FROM embeddings q CROSS JOIN embeddings c
-            WHERE q.vec_id % 97 = 0
-        ) WHERE rk <= 3
-    ),
-    approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY approx_dist ASC, neighbor_id ASC
-            ) AS rk FROM pairs
-        ) WHERE rk <= 3
-    )
-    SELECT n_truth, n_hits, round(n_hits::DOUBLE / n_truth, 4) AS recall
-    FROM (
-        SELECT (SELECT count(*) FROM truth)::BIGINT AS n_truth,
-               count(t.query_id)::BIGINT AS n_hits
-        FROM approx a LEFT JOIN truth t USING (query_id, neighbor_id)
-    )
-    """,
-    "Measured recall@3 of the PQ compressed scan vs exact squared-L2 "
-    "ground truth — the accuracy price of the 64× compression, as an "
-    "oracled number (quantization with a seed codebook is lossy; the "
-    "recall row makes the trade explicit the same way the IVF/LSH "
-    "recall oracles do).",
-)
-def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.pq import pq_topk
-
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    exact_d = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("q.embedding"),
-                F.col("c.embedding"),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        4,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("neighbor_id").asc()
-    )
-    truth = (
-        qs.alias("q")
-        .crossJoin(e.alias("c"))
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            exact_d.alias("d"),
-        )
-        .select("*", F.row_number().over(w).alias("rk"))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    approx = pq_topk(e, qs, m=4, ksub=8, k=3).select(
-        "query_id", "neighbor_id"
-    )
-    truth_n = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    hits = approx.join(truth, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count("*").cast("long").alias("n_hits")
-    )
-    return hits.crossJoin(F.broadcast(truth_n)).select(
-        "n_truth",
-        "n_hits",
-        F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-    )
-
-
-_IVFPQ_SQL = f"""
-    WITH
-    cseeds AS (SELECT vec_id AS cell, embedding AS sv FROM embeddings
-               WHERE vec_id < 8),
-    seeds AS (SELECT vec_id AS code, embedding FROM embeddings
-              WHERE vec_id < 8),
-    jj AS (SELECT unnest([0, 1, 2, 3]) AS j),
-    enc AS (
-        SELECT vec_id, j, code FROM (
-            SELECT e.vec_id, jj.j, s.code,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id, jj.j
-                       ORDER BY {_pq_d_sql('e', 's', 'jj.j')} ASC, s.code ASC
-                   ) AS rk
-            FROM embeddings e CROSS JOIN jj CROSS JOIN seeds s
-        ) WHERE rk = 1
-    ),
-    assigned AS (
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_cos_sql('e.embedding', 's.sv')} DESC,
-                                s.cell ASC
-                   ) AS rk
-            FROM embeddings e CROSS JOIN cseeds s
-        ) WHERE rk = 1
-    ),
-    probes AS (
-        SELECT query_id, embedding, cell FROM (
-            SELECT q.vec_id AS query_id, q.embedding, s.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_cos_sql('q.embedding', 's.sv')} DESC,
-                                s.cell ASC
-                   ) AS rk
-            FROM embeddings q CROSS JOIN cseeds s WHERE q.vec_id % 97 = 0
-        ) WHERE rk <= 2
-    ),
-    pairs AS (
-        SELECT p.query_id, a.vec_id AS neighbor_id,
-               round(sum(CAST(round({_pq_d_sql('p', 's', 'enc.j')} * 10000)
-                              AS BIGINT)) / 10000.0, 4) AS approx_dist
-        FROM probes p JOIN assigned a USING (cell)
-        JOIN enc ON enc.vec_id = a.vec_id
-        JOIN seeds s ON s.code = enc.code
-        GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, approx_dist, CAST(rk AS INT) AS rnk FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY approx_dist ASC, neighbor_id ASC
-        ) AS rk FROM pairs
-    ) WHERE rk <= 3
-    """
-
-
-@q(
-    "similarity_ivfpq_topk",
-    _IVFPQ_SQL,
-    "IVF-PQ (the FAISS architecture composed from the repo's two "
-    "halves): coarse Voronoi cells (nlist=8, nprobe=2 — candidate "
-    "volume ~corpus·nprobe/nlist) prune WHICH rows each query scores, "
-    "PQ codes (m=4, 64× smaller) bound the BYTES per surviving row. "
-    "Assignment + encode are zero-shuffle map passes; queries carry "
-    "probe cells AND scaled-BIGINT ADC tables row-locally and "
-    "broadcast; the only corpus-sized operation is the equi-join on "
-    "cell. At 100 TB both levers matter: rows touched AND bytes per "
-    "row.",
-)
-def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.pq import ivf_pq_topk
-
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    return ivf_pq_topk(e, qs, nlist=8, nprobe=2, m=4, ksub=8, k=3)
-
-
-@q(
-    "similarity_ivfpq_indexed_topk",
-    _IVFPQ_SQL,
-    "ivf_pq_topk over a PERSISTED code store (r11) — the FAISS on-disk "
-    "shape completed: ivf_pq_index_frame builds (id, codes, cell) in "
-    "ONE zero-shuffle scan (cell rides pq_encode's extra_cols, no join "
-    "back on id), write_ivf_index lays it out one file per cell, and "
-    "serving touches neither raw vectors (codes are ~16x fewer bytes) "
-    "nor unprobed cells (static cell pruning — collected probe set as "
-    "a plan-time partition filter, metric-asserted in "
-    "test_ivf_pq_indexed_parity_pruning_and_size because the DPP "
-    "heuristic measurably reads every file at nlist > 64). Frozen "
-    "centroids + codebook make incremental appends compose; results "
-    "bit-identical to inline ivf_pq_topk, so the inline oracle IS this "
-    "oracle.",
-)
-def similarity_ivfpq_indexed_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from impresso_ta.operators.pq import (
-        ivf_pq_index_frame,
-        ivf_pq_topk_indexed,
-        pq_codebook,
-    )
-
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    seeds = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.orderBy("vec_id").limit(8).collect()
-    ]
-    book = pq_codebook(e, m=4, ksub=8)
-    index = ivf_pq_index_frame(e, seeds, book)
-    return ivf_pq_topk_indexed(index, qs, seeds, book, nprobe=2, k=3)
-
-
-# =====================================================================
 # CDC materialization (operators/cdc.py): latest-wins snapshot + SCD2
 # =====================================================================
 
@@ -8173,8 +7822,8 @@ def cdc_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Debounce (drop rapid-fire repeats): keep a row only if it arrives "
     "more than the gap after its immediate predecessor per (user, "
     "type) — the stateless one-window batch primitive (chained "
-    "suppression against the last KEPT row is running state = the "
-    "streaming sessionize gap). Ties broken by event_id; epoch_us "
+    "suppression against the last KEPT row is running state). Ties "
+    "broken by event_id; epoch_us "
     "ordering contract as in the CDC ops.",
 )
 def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,127 +1,11 @@
-"""Banded-state incremental dedup: the persisted-state probes must be
-output-identical to the self-contained forms, and their plans must not
-re-band or re-shingle the accepted store — per-trigger compute stays
-flat as the store grows (the production contract the streaming gates
-now run on)."""
+"""Banded-state perceptual-hash probe: probing a persisted band table
+must match a brute-force cross comparison, and its plan must band only
+the new side — the accepted store enters as a plain scan."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from impresso_ta.operators.dedup import (
-    incremental_minhash_dedup,
-    incremental_minhash_dedup_banded,
-    minhash_band_state,
-)
 from impresso_ta.operators.multimodal import (
     phash_bands,
     phash_probe_pairs,
 )
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(
-        [(i, t) for i, t in rows], "doc_id long, text string"
-    )
-
-
-BASE = "the quick brown fox jumps over the lazy dog again and again today"
-
-
-@pytest.fixture(scope="module")
-def corpus(spark):
-    existing = _docs(
-        spark,
-        [(i, f"{BASE} variant {i} " + "filler words " * (i % 3)) for i in range(20)],
-    )
-    new = _docs(
-        spark,
-        # 100/101 near-duplicate existing docs 0/1; 102+ are fresh
-        [(100, f"{BASE} variant 0 "), (101, f"{BASE} variant 1 ")]
-        + [(102 + i, f"completely different text number {i} " * 3) for i in range(5)],
-    )
-    return existing, new
-
-
-def test_banded_probe_output_identical(spark, corpus):
-    existing, new = corpus
-    bands_df, sizes_df = minhash_band_state(existing)
-    direct = incremental_minhash_dedup(new, existing, threshold=0.8)
-    banded = incremental_minhash_dedup_banded(
-        new, bands_df, sizes_df, existing, threshold=0.8
-    )
-    d = sorted(r["doc_id"] for r in direct.collect())
-    b = sorted(r["doc_id"] for r in banded.collect())
-    assert b == d
-    assert 102 in b  # fresh docs survive
-    assert len(b) < new.count()  # near-dups of the store were dropped
-
-
-def test_banded_probe_roundtrips_through_parquet_state(spark, corpus, tmp_path):
-    """State written by one session/batch and read back cold must gate
-    identically (the streaming layout: write bands/sizes per batch,
-    probe them on later triggers)."""
-    existing, new = corpus
-    bands_df, sizes_df = minhash_band_state(existing)
-    bands_df.write.parquet(str(tmp_path / "bands"))
-    sizes_df.write.parquet(str(tmp_path / "sizes"))
-    banded = incremental_minhash_dedup_banded(
-        new,
-        spark.read.parquet(str(tmp_path / "bands")),
-        spark.read.parquet(str(tmp_path / "sizes")),
-        existing,
-        threshold=0.8,
-    )
-    direct = incremental_minhash_dedup(new, existing, threshold=0.8)
-    assert sorted(r["doc_id"] for r in banded.collect()) == sorted(
-        r["doc_id"] for r in direct.collect()
-    )
-
-
-def test_banded_probe_plan_does_not_reband_store(spark, corpus, tmp_path):
-    """The store side must enter the plan as a narrow columnar scan:
-    growing the persisted state adds ZERO plan nodes (no re-shingle, no
-    re-band of accepted data on a trigger) — the flat-per-trigger-cost
-    contract."""
-    existing, new = corpus
-    bands_df, sizes_df = minhash_band_state(existing)
-    bands_df.write.parquet(str(tmp_path / "b1"))
-    sizes_df.write.parquet(str(tmp_path / "s1"))
-    # a 10x-bigger store: same schema, shifted ids
-    big_bands = bands_df
-    big_sizes = sizes_df
-    for i in range(1, 10):
-        big_bands = big_bands.unionByName(
-            bands_df.withColumn("doc_id", F.col("doc_id") + F.lit(1000 * i))
-        )
-        big_sizes = big_sizes.unionByName(
-            sizes_df.withColumn("doc_id", F.col("doc_id") + F.lit(1000 * i))
-        )
-    big_bands.write.parquet(str(tmp_path / "b10"))
-    big_sizes.write.parquet(str(tmp_path / "s10"))
-
-    def plan_of(bdir, sdir):
-        df = incremental_minhash_dedup_banded(
-            new,
-            spark.read.parquet(str(tmp_path / bdir)),
-            spark.read.parquet(str(tmp_path / sdir)),
-            existing,
-            threshold=0.8,
-        )
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    small = plan_of("b1", "s1")
-    big = plan_of("b10", "s10")
-    # store growth must not add operators (same plan shape, only the
-    # scanned files differ) — every Generate (explode) in the plan is
-    # batch-side work; a 10x store contributes not one more node
-    assert small.count("Generate") == big.count("Generate")
-    assert small.count("Project") == big.count("Project")
-    # the state tables enter as narrow parquet relations (no text
-    # column rides the store scan)
-    assert "n_shingles" in small
-    for line in small.splitlines():
-        if "Relation" in line and "parquet" in line:
-            assert "text" not in line, line
 
 
 def test_phash_probe_matches_brute_force_cross(spark):

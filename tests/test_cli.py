@@ -239,3 +239,54 @@ def test_cli_incremental_store_errors(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sources, "incremental_filter", fail)
     with pytest.raises(RuntimeError, match="store unreadable"):
         _call(spark, "cmd_import", argv)
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["import", "--date-ranges", "GDL=1900-01-01"],
+        ["import", "--date-ranges", "GDL=1900-13-01:1950-12-31"],
+        ["import", "--date-ranges", "GDL=19000101:19501231"],
+        ["import", "--date-ranges", "=1900-01-01:1950-12-31"],
+        ["import", "--date-ranges", "GDL=1950-12-31:1900-01-01"],
+        ["corpus", "--split", "train=0.9,val"],
+        ["corpus", "--split", "train=0.9,val=ten"],
+        ["corpus", "--split", "train=nan,val=0.1"],
+        ["corpus", "--split", "=1.0"],
+    ],
+)
+def test_malformed_specs_fail_before_any_session(argv, monkeypatch, capsys):
+    from impresso_ta import cli, session
+
+    def no_session(*a, **k):
+        raise AssertionError("a malformed spec reached get_spark")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    required = {
+        "import": ["--input-dir", "in", "--format", "mets_alto",
+                   "--output-dir", "out"],
+        "corpus": ["--input", "in", "--output-dir", "out"],
+    }[argv[0]]
+    with pytest.raises(SystemExit) as exc:
+        cli.main(argv[:1] + required + argv[1:])
+    assert exc.value.code == 2
+    assert f"argument {argv[1]}" in capsys.readouterr().err
+
+
+def test_specs_parse_to_dicts():
+    from impresso_ta import cli
+
+    args = cli._build_parser().parse_args([
+        "import", "--input-dir", "in", "--format", "mets_alto",
+        "--output-dir", "out",
+        "--date-ranges", "GDL=1900-01-01:1950-12-31,IMP=1901-02-03:1901-02-03",
+    ])
+    assert args.date_ranges == {
+        "GDL": ("1900-01-01", "1950-12-31"),
+        "IMP": ("1901-02-03", "1901-02-03"),
+    }
+    args = cli._build_parser().parse_args([
+        "corpus", "--input", "in", "--output-dir", "out",
+        "--split", "train=0.98,val=0.01,test=0.01",
+    ])
+    assert args.split == {"train": 0.98, "val": 0.01, "test": 0.01}

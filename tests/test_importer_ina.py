@@ -89,69 +89,212 @@ def test_audio_record_utterances(audio_import):
     assert utts[0]["ss"][0]["t"][0] == {"tc": [1.0, 0.5], "tx": "bonjour"}
 
 
-REFERENCE_INA = "/root/reference/text_preparation/data/sample_data/INA"
+def _asr_xml(segments):
+    """ASR XML for ``[(speaker, lang, [word, ...]), ...]``: one second
+    per word, each word spoken for half of it."""
+    speakers = sorted({(spk, lang) for spk, lang, _ in segments})
+    t = 0.0
+    body = []
+    for spk, lang, words in segments:
+        ws = "".join(
+            f'<Word stime="{t + i:.1f}" dur="0.5">{w}</Word>'
+            for i, w in enumerate(words)
+        )
+        body.append(
+            f'<SpeechSegment spkid="{spk}" lang="{lang}" stime="{t:.1f}" '
+            f'etime="{t + len(words):.1f}">{ws}</SpeechSegment>'
+        )
+        t += len(words)
+    spk_list = "".join(
+        f'<Speaker spkid="{spk}" lang="{lang}"/>' for spk, lang in speakers
+    )
+    return (
+        '<?xml version="1.0" encoding="UTF-8"?><AudioDoc name="x">'
+        f"<SpeakerList>{spk_list}</SpeakerList>"
+        f"<SegmentList>{''.join(body)}</SegmentList></AudioDoc>"
+    )
+
+
+def _manifest_row(alias, day, **fields):
+    row = {"Alias Collection": alias, "Date d'enregistrement": day}
+    row.update(fields)
+    return row
+
+
+# An INA delivery in the reference layout (ref: ina/detect.py:46-117):
+# one directory per broadcast, named by notice key, next to an
+# ``ina_metadata.json`` manifest keyed by those names, with French
+# archive fields and dd/mm/yyyy dates. Broadcast -> (manifest row, ASR
+# segments); ``None`` means that side is missing.
+INA_TREE = {
+    "PH000000001_DB00001": (
+        _manifest_row(
+            "CFCE", "08/09/1996",
+            **{
+                "Titre propre": "Magazine du dimanche",
+                "Titre collection": "Le magazine",
+                "Canal de diffusion": "France Culture",
+                "Société de programmes": "Radio France",
+                "Durée": "00:55:00",
+                "Résumé": "Revue de la semaine.",
+                "Identifiant de la notice": "PH000000001",
+                "Noms fichers": "DB00001.mp3",
+            },
+        ),
+        [
+            ("S1", "fre", ["bonjour", "à", "tous"]),
+            ("S1", "fre", ["voici", "la", "revue"]),
+            ("S2", "fre", ["merci"]),
+        ],
+    ),
+    "PH000000002_DB00002": (
+        # the archive summary overrides the French ASR language vote;
+        # the date cell carries stray spaces, which discovery strips
+        _manifest_row(
+            "CFCE", " 15/09/1996 ",
+            **{"Résumé": "En anglais : entretien.", "Durée": "00:10:00"},
+        ),
+        [("S1", "fre", ["good", "evening"])],
+    ),
+    "PH000000003_DB00003": (
+        _manifest_row(
+            "RDN", "12/01/1950",
+            **{
+                "Titre propre": "Accords économiques internationaux",
+                "Titre collection": "La ronde des nations",
+                "Canal de diffusion": "Chaîne Parisienne",
+                "Société de programmes": "RTF",
+                "Durée": "00:17:13",
+            },
+        ),
+        [
+            ("S1", "fre", ["les", "accords"]),
+            ("S2", "fre", ["sont", "signés"]),
+            ("S1", "fre", ["à", "Genève"]),
+        ],
+    ),
+    # manifest row whose directory was never delivered: ignored
+    "PH000000004_DB00004": (_manifest_row("RDN", "01/02/1951"), None),
+    # directory the manifest does not list: ignored
+    "PH000000005_DB00005": (None, [("S1", "fre", ["orphelin"])]),
+}
 
 
 @pytest.fixture(scope="module")
-def reference_audio_import(spark):
+def ina_tree(tmp_path_factory):
+    base = tmp_path_factory.mktemp("ina_manifest")
+    manifest = {}
+    for name, (row, segments) in INA_TREE.items():
+        if row is not None:
+            manifest[name] = row
+        if segments is not None:
+            (base / name).mkdir()
+            (base / name / f"{name.split('_')[1]}.xml").write_text(
+                _asr_xml(segments), encoding="utf-8"
+            )
+    (base / "ina_metadata.json").write_text(
+        json.dumps(manifest, ensure_ascii=False), encoding="utf-8"
+    )
+    return str(base)
+
+
+@pytest.fixture(scope="module")
+def manifest_import(spark, ina_tree):
     from impresso_ta.sources.discovery import detect_issues_ina
 
-    disc = detect_issues_ina(spark, REFERENCE_INA)
+    disc = detect_issues_ina(spark, ina_tree)
     return import_issues(disc, ts="2024-01-01T00:00:00Z")
 
 
-def test_reference_sample_discovery(spark):
+def test_ina_manifest_discovery(spark, ina_tree):
     """Manifest-driven discovery (ref: ina/detect.py:46-117): alias from
     'Alias Collection', date from dd/mm/yyyy 'Date d'enregistrement',
     only dirs present in both manifest and filesystem."""
     from impresso_ta.sources.discovery import detect_issues_ina
 
     rows = sorted(
-        (r["alias"], str(r["date"]), r["edition"])
-        for r in detect_issues_ina(spark, REFERENCE_INA).collect()
+        (r["alias"], str(r["date"]), r["edition"], r["path"].split("/")[-1])
+        for r in detect_issues_ina(spark, ina_tree).collect()
     )
     assert rows == [
-        ("CFCE", "1996-09-08", "a"),
-        ("CFCE", "1996-09-15", "a"),
-        ("RDN", "1950-01-12", "a"),
+        ("CFCE", "1996-09-08", "a", "PH000000001_DB00001"),
+        ("CFCE", "1996-09-15", "a", "PH000000002_DB00002"),
+        ("RDN", "1950-01-12", "a", "PH000000003_DB00003"),
     ]
 
 
-def test_reference_sample_import_metadata(reference_audio_import):
+def test_ina_manifest_import_metadata(manifest_import):
     """French manifest fields map onto issue/CI metadata the way the
     reference's _fetch_broadcast_metadata / _parse_content_item do
     (ref: ina/classes.py:262-289): program = Titre collection, channel =
     Canal (Société), title = Titre propre, dur = manifest Durée."""
-    res = reference_audio_import
+    res = manifest_import
     assert res.errors.count() == 0
     issues = {
         r["id"]: r.asDict(recursive=True) for r in res.issues.collect()
     }
+    assert sorted(issues) == [
+        "CFCE-1996-09-08-a", "CFCE-1996-09-15-a", "RDN-1950-01-12-a",
+    ]
     rdn = issues["RDN-1950-01-12-a"]
     assert rdn["rp"] == "La ronde des nations"
     assert rdn["rc"] == "Chaîne Parisienne (RTF)"
     ci = rdn["i"][0]
     assert ci["m"]["t"] == "Accords économiques internationaux"
     assert ci["m"]["lg"] == "fr"
-    assert ci["m"]["archival_note"]  # Résumé flows through
-    assert "Identifiant de la notice" in ci["l"]["source"]
-    recs = {r["id"]: r for r in res.records.collect()}
-    assert recs["RDN-1950-01-12-a-r0001"]["dur"] == "00:17:13"
-    assert recs["CFCE-1996-09-08-a-r0001"]["dur"] == "00:55:00"
-
-
-def test_reference_sample_rebuild_golden(spark):
-    """The committed golden digest the per-round oracle gates on —
-    fulltext AND ssb/ub/sb offsets hashed per CI (drift in either fails)."""
-    from impresso_ta.queries import (
-        _REFERENCE_AUDIO_GOLDEN,
-        rebuild_reference_audio,
+    assert ci["m"]["archival_note"] is None and ci["l"] is None
+    cfce = issues["CFCE-1996-09-08-a"]
+    assert cfce["rp"] == "Le magazine"
+    assert cfce["rc"] == "France Culture (Radio France)"
+    assert cfce["i"][0]["m"]["archival_note"] == "Revue de la semaine."
+    assert cfce["i"][0]["l"]["source"] == (
+        "Identifiant de la notice (in metadata): PH000000001; "
+        "Noms fichers (in metadata): DB00001.mp3; "
+        "Noms fichers (in practice): DB00001"
     )
+    # "En anglais" in the Résumé short-circuits the ASR language vote
+    assert issues["CFCE-1996-09-15-a"]["i"][0]["m"]["lg"] == "en"
+    durs = {r["id"]: r["dur"] for r in res.records.collect()}
+    assert durs == {
+        "CFCE-1996-09-08-a-r0001": "00:55:00",
+        "CFCE-1996-09-15-a-r0001": "00:10:00",
+        "RDN-1950-01-12-a-r0001": "00:17:13",
+    }
 
-    got = sorted(
-        tuple(r) for r in rebuild_reference_audio(spark, "").collect()
+
+def test_ina_manifest_rebuild_counts(manifest_import):
+    """The rebuilt CIs per alias: count, fulltext and break offsets.
+    Each speech segment ends one ``ssb`` offset; every utterance after
+    the first (consecutive same-speaker segments merge) starts one
+    ``ub``; a single section has no ``sb``."""
+    from impresso_ta.rebuild.solr import split_errors
+
+    res = manifest_import
+    ok, errors = split_errors(
+        rebuild_issues_solr(res.issues, res.records, ts="2024-01-01T00:00:00Z")
     )
-    assert got == sorted(_REFERENCE_AUDIO_GOLDEN)
+    assert errors.count() == 0
+    got = {
+        r["id"]: (r["ft"], list(r["ssb"]), list(r["ub"]), list(r["sb"]))
+        for r in ok.collect()
+    }
+    assert got == {
+        "CFCE-1996-09-08-a-i0001": (
+            "bonjour à tous voici la revue merci ", [14, 29, 35], [30], []
+        ),
+        "CFCE-1996-09-15-a-i0001": ("good evening ", [12], [], []),
+        "RDN-1950-01-12-a-i0001": (
+            "les accords sont signés à Genève ", [11, 23, 32], [12, 24], []
+        ),
+    }
+    per_alias = {}
+    for ci_id, (ft, ssb, ub, sb) in got.items():
+        alias = ci_id.split("-")[0]
+        n, n_text, n_breaks = per_alias.get(alias, (0, 0, 0))
+        per_alias[alias] = (
+            n + 1, n_text + bool(ft), n_breaks + len(ssb) + len(ub) + len(sb)
+        )
+    assert per_alias == {"CFCE": (2, 2, 5), "RDN": (1, 1, 5)}
 
 
 def test_audio_rebuild_from_import(audio_import):

@@ -371,26 +371,6 @@ def test_dsir_bigram_stream_adds_no_exchange(spark):
     assert _shuffles(bi) == _shuffles(uni)
 
 
-def test_pq_encode_zero_shuffle(spark):
-    from impresso_ta.operators.pq import pq_codebook, pq_encode
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    book = pq_codebook(emb, m=4, ksub=4)
-    assert _shuffles(pq_encode(emb, book)) == 0
-
-
-def test_pq_topk_corpus_never_shuffled_before_scoring(spark):
-    from impresso_ta.operators.pq import pq_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") % 29 == 0)
-    plan = _plan(pq_topk(emb, qs, m=4, ksub=4, k=3))
-    # queries+tables broadcast; the only hash exchange is the final
-    # per-query window over scored pairs
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
 def test_compaction_plan_single_aggregate_exchange(spark):
     from impresso_ta.operators.layout import compaction_plan
 

@@ -64,11 +64,12 @@ def static_gate() -> list[str]:
 
 
 def prose_counts(n_registry: int) -> list[str]:
-    """README's stated query / test-function counts vs the live repo —
-    prose can't rot (VERDICT r7 found a stale '371 tests'). Test count
-    is the static ``def test_`` tally (parametrize expands at collect
-    time, so README states FUNCTIONS, a number this gate can verify
-    without importing pyspark)."""
+    """README's and COVERAGE.md's stated query counts and README's
+    test-function count vs the live repo — prose can't rot (VERDICT r7
+    found a stale '371 tests'). Test count is the static ``def test_``
+    tally (parametrize expands at collect time, so README states
+    FUNCTIONS, a number this gate can verify without importing
+    pyspark)."""
     problems: list[str] = []
     with open(os.path.join(REPO, "README.md")) as f:
         readme = f.read()
@@ -77,6 +78,14 @@ def prose_counts(n_registry: int) -> list[str]:
         problems.append(
             f"README query counts {sorted(stated_q)} != live catalog "
             f"{n_registry}"
+        )
+    with open(os.path.join(REPO, "COVERAGE.md")) as f:
+        totals = re.search(r"^\*\*Totals:\*\* (\d+) catalog queries", f.read(), re.M)
+    if totals is None:
+        problems.append("COVERAGE.md states no '**Totals:** N catalog queries'")
+    elif int(totals.group(1)) != n_registry:
+        problems.append(
+            f"COVERAGE.md Totals {totals.group(1)} != live catalog {n_registry}"
         )
     n_tests = 0
     for path in glob.glob(os.path.join(REPO, "tests", "*.py")):
