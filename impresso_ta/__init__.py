@@ -3,8 +3,8 @@
 A from-scratch re-expression of the capability surface of
 impresso/impresso-text-acquisition (an OCR/ASR ETL pipeline built on Dask
 bags) as an idiomatic Spark DataFrame engine, plus the LLM-data-pipeline
-operators (dedup, similarity search, text analysis, multimodal columns)
-required for large-scale corpus preparation. ``cli`` runs the three batch jobs:
+operators (dedup, similarity search, text analysis) required for
+large-scale corpus preparation. ``cli`` runs the three batch jobs:
 ``import``, ``rebuild`` and ``corpus``.
 
 Layout
@@ -13,7 +13,7 @@ Layout
                  (ref: importers/classes.py, rebuilders/helpers.py)
 - ``sources``    discovery (detect) + canonical readers + partitioned sinks
 - ``operators``  joins/filters/aggregations/windows + dedup/similarity/
-                 text_analysis/multimodal extensions
+                 text_analysis extensions
 - ``functions``  scalar column functions (ids, coords, iiif, whitespace)
 - ``rebuild``    canonical → rebuilt ("solr") / passim document assembly
 - ``importers``  format plugins (bytes → canonical rows) as mapInPandas UDTFs

@@ -557,6 +557,12 @@ def main(argv: list[str] | None = None) -> int:
             parser.error("--dsir-target requires --dsir-n > 0")
         if args.dsir_n and not args.dsir_target:
             parser.error("--dsir-n has no effect without --dsir-target")
+        if args.temperature_alpha is not None and args.temperature_target <= 0:
+            parser.error("--temperature-alpha requires --temperature-target > 0")
+        if args.temperature_target and args.temperature_alpha is None:
+            parser.error(
+                "--temperature-target has no effect without --temperature-alpha"
+            )
         if args.quality_model and not (0.0 <= args.quality_threshold <= 1.0):
             parser.error("--quality-threshold must be in [0, 1]")
     from impresso_ta.session import get_spark

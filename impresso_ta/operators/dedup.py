@@ -1828,11 +1828,10 @@ def jaccard_prefix_contracted(
     jaccard 1.0 — so ``sum(n_a*n_b) + sum(m*(m-1)/2)`` over this
     frame equals the expanded row count, and every expanded pair's
     jaccard is readable off its contracted row. Downstream consumers
-    (cluster-then-survive, dedup stats, ER) operate on exactly this
+    (cluster-then-survive, dedup stats) operate on exactly this
     value-level granularity — ``dedup_clusters``/``dedup_survivors``
-    collapse the expansion right back, and ``er.resolve_entities``
-    proves the value-pairs + membership form is sufficient for row
-    labeling.
+    collapse the expansion right back: value pairs plus the clone-group
+    membership are enough to label every row.
 
     Why it exists: the expanded form's output volume is quadratic in
     near-dup-clique size — the sf1 bench corpus (10× exact clones per

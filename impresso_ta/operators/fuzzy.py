@@ -159,22 +159,20 @@ def fuzzy_blocked_join(
     n_right)`` — and never expand back to row pairs. The expansion
     identity the default path implements (every raw row pair (a, b)
     appears iff (value(a), value(b)) verified, with the same distance)
-    means the contracted form carries the SAME information: the
-    expanded result is exactly the contracted pairs fanned out
-    ``n_left × n_right`` ways through two value equi-joins, which the
-    caller can perform lazily IF row granularity is ever needed — and
-    downstream consumers demonstrably don't need it
-    (``er.resolve_entities`` clusters on value-level edges and labels
-    rows through one assignment join; dedup survivors keep one row per
-    value). Cost becomes proportional to DISTINCT verified pairs
+    means the contracted form carries the SAME information: the expanded
+    result is exactly the contracted pairs fanned out ``n_left ×
+    n_right`` ways through two value equi-joins, which the caller can
+    perform lazily IF row granularity is ever needed — and downstream
+    consumers don't need it (clustering can run on value-level edges and
+    label rows through one assignment join; dedup survivors keep one row
+    per value). Cost becomes proportional to DISTINCT verified pairs
     instead of true row pairs: the round-9 sf1 bench corpus (200k rows,
-    64 distinct name templates) emits ~400M expanded pairs in ~380 s
-    but only ~2k distinct value pairs — the 131×-pairs-for-10×-data
-    wall is an artifact of the output CONTRACT, not the join. The
-    per-side counts ride the existing distinct aggregation (groupBy
-    count replaces distinct — same exchange), so contracted mode is
-    strictly cheaper than the default: same blocked verify, no
-    expansion joins.
+    64 distinct name templates) emits ~400M expanded pairs in ~380 s but
+    only ~2k distinct value pairs — the 131×-pairs-for-10×-data wall is
+    an artifact of the output CONTRACT, not the join. The per-side
+    counts ride the existing distinct aggregation (groupBy count
+    replaces distinct — same exchange), so contracted mode is strictly
+    cheaper than the default: same blocked verify, no expansion joins.
 
     ``guard_block_size`` is the runtime tripwire mirroring
     ``minhash_lsh_pairs``'s ``guard_bucket_size``: a per-(block,

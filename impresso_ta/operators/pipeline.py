@@ -138,6 +138,19 @@ def prepare_corpus(
     feeds a sink directly; the returned plan still carries the metric
     nodes, which are free.
     """
+    # argument contracts first, before anything is persisted or counted
+    if dsir_target is not None and (not dsir_n or dsir_n <= 0):
+        raise ValueError("dsir_target requires dsir_n > 0")
+    if doc_dedup and doc_dedup_method not in (
+        "auto", "jaccard", "minhash_survivors"
+    ):
+        raise ValueError(
+            f"unknown doc_dedup_method: {doc_dedup_method!r} "
+            "(expected 'auto', 'jaccard' or 'minhash_survivors')"
+        )
+    if temperature_alpha is not None and temperature_target <= 0:
+        raise ValueError("temperature_alpha requires temperature_target > 0")
+
     stats: list[tuple[str, int, int]] = []
     # (boundary name, Observation) in pipeline order; boundary k's count
     # is stage k's docs_out and stage k+1's docs_in.
@@ -250,8 +263,6 @@ def prepare_corpus(
             cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
             cached.append(cur)
     if dsir_target is not None:
-        if not dsir_n or dsir_n <= 0:
-            raise ValueError("dsir_target requires dsir_n > 0")
         from impresso_ta.operators.corpus import dsir_resample
 
         selected = dsir_resample(
@@ -380,7 +391,7 @@ def prepare_corpus(
             cur = step(
                 "doc_dedup", cur, cur.join(drops, id_col, "left_anti")
             )
-        elif doc_dedup_method == "jaccard":
+        else:  # "jaccard"
             # Collapse byte-identical (whitespace-normalized,
             # case-sensitive) docs to their min-id rep BEFORE the
             # pairwise join: exact cliques contribute k²/2 TRUE pairs
@@ -402,11 +413,6 @@ def prepare_corpus(
                 "doc_dedup",
                 cur,
                 _dedup.dedup_survivors(reps, pairs, id_col=id_col),
-            )
-        else:
-            raise ValueError(
-                f"unknown doc_dedup_method: {doc_dedup_method!r} "
-                "(expected 'auto', 'jaccard' or 'minhash_survivors')"
             )
     if benchmark is not None:
         # GPT-3-style decontamination: drop any training doc sharing a
@@ -449,10 +455,6 @@ def prepare_corpus(
         ).drop("rank")
         cur = step("domain_cap", cur, capped)
     if temperature_alpha is not None:
-        if temperature_target <= 0:
-            raise ValueError(
-                "temperature_alpha requires temperature_target > 0"
-            )
         cur = step(
             "temperature_mix",
             cur,

@@ -373,8 +373,8 @@ def _carve_triplets(
             # materialized scoring RDD (the race measured as ~2x
             # scoring cost in executed-plan stage times); eager
             # materializes it in its own job, so both stages read
-            # blocks. Runs a Spark job at CALL time (the
-            # er.resolve_entities convention).
+            # blocks. Runs a Spark job at CALL time, not at the
+            # caller's first action.
             scored = scored.localCheckpoint(eager=True)
         # THEN an explicit repartition on the anchor key, partition
         # count PINNED to the session's shuffle parallelism. Two

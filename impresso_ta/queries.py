@@ -6122,44 +6122,6 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "dedup_phash_hamming",
-    """
-    WITH h AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(text), 1, 15))::BIGINT AS ph
-        FROM documents)
-    SELECT a.doc_id AS media_a, b.doc_id AS media_b,
-           bit_count(xor(a.ph, b.ph))::INT AS hamming
-    FROM h a JOIN h b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.ph, b.ph)) <= 18
-    """,
-    "Banded Hamming-distance self-join (the perceptual-hash dedup's "
-    "join plumbing, here over md5-derived 64-bit fingerprints so DuckDB "
-    "can replicate): bands > max_hamming makes band-bucket candidate "
-    "recall EXACT by pigeonhole — oracled against DuckDB's brute-force "
-    "all-pairs bit_count scan, which the banded equi-join must match "
-    "pair-for-pair.",
-)
-def dedup_phash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.multimodal import phash_dedup_pairs
-
-    # 60-bit (15 hex chars) fingerprints: always positive, identical
-    # parse on both engines. Threshold 18 on random 60-bit hashes gives
-    # a few hundred true pairs at sf0.01 (E[pairs] = C(500,2)*P(B(60,.5)
-    # <= 18) ~ 170), so the oracle actually exercises the recall claim;
-    # bands=30 x 2-bit width, 30 > 18 pigeonhole
-    hashed = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("phash"),
-    )
-    return phash_dedup_pairs(
-        hashed, max_hamming=18, bands=30, hash_bits=60
-    ).withColumn("hamming", F.col("hamming").cast("int"))
-
-
 # =====================================================================
 # Round 5: prepare_corpus auto-routed doc dedup under the oracle gate
 # =====================================================================
@@ -7359,8 +7321,8 @@ def corpus_dsir_threshold_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Graph operators (operators/graph.py): entity-resolution clustering
-# and link-analysis over edge tables
+# Graph clustering: connected components over an edge table
+# (operators/dedup.py)
 # =====================================================================
 
 # Thinned bipartite user↔item graph from click events: dense enough for
@@ -7412,70 +7374,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(edges, src="src", dst="dst").select(
         "node", F.col("label").alias("component")
     )
-
-
-def _pagerank_oracle_sql(k: int) -> str:
-    """Unrolled k-step integer PageRank recurrence (chained CTEs) —
-    identical BIGINT arithmetic to operators/graph.pagerank, so the
-    match is exact, not tolerance-based."""
-    body = """
-    WITH
-    raw AS (
-        SELECT CAST(user_id AS BIGINT) AS src,
-               100000 + CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events WHERE event_type = 'click'
-        UNION ALL
-        SELECT 100000 + CAST(json_extract_string(props, '$.k') AS BIGINT) AS src,
-               CAST(user_id AS BIGINT) AS dst
-        FROM events WHERE event_type = 'purchase'
-    ),
-    e AS (SELECT DISTINCT src, dst FROM raw
-          WHERE src IS NOT NULL AND dst IS NOT NULL),
-    nodes AS (SELECT DISTINCT n AS node FROM
-              (SELECT src AS n FROM e UNION SELECT dst FROM e)),
-    params AS (SELECT 1000000000000 // count(*) AS base FROM nodes),
-    outdeg AS (SELECT src, count(*) AS d FROM e GROUP BY src),
-    r0 AS (SELECT node, (SELECT base FROM params) AS r FROM nodes)"""
-    for i in range(1, k + 1):
-        body += f""",
-    s{i} AS (SELECT e.dst AS node, sum(r{i - 1}.r // outdeg.d) AS s
-             FROM e JOIN r{i - 1} ON e.src = r{i - 1}.node
-                    JOIN outdeg ON e.src = outdeg.src
-             GROUP BY e.dst),
-    r{i} AS (SELECT nodes.node,
-                    CAST((15 * (SELECT base FROM params)) // 100
-                         + (85 * coalesce(s{i}.s, 0)) // 100 AS BIGINT) AS r
-             FROM nodes LEFT JOIN s{i} ON nodes.node = s{i}.node)"""
-    body += f"\n    SELECT node, r AS rank_scaled FROM r{k}"
-    return body
-
-
-@q(
-    "graph_pagerank",
-    _pagerank_oracle_sql(4),
-    "PageRank (4 power steps, damping 0.85) in EXACT BIGINT fixed-point "
-    "(scale 1e12): per-edge contribution is rank div outdeg, damping is "
-    "(85*s) div 100 — no float anywhere, so the result is independent "
-    "of summation order/partitioning and the oracle (the same "
-    "recurrence unrolled as chained CTEs) matches bit-for-bit, the "
-    "same integer-scaling discipline as the DSIR/PMI oracles. Plan: "
-    "edges⋈outdeg ONCE before the loop; each step = one shuffle join "
-    "on src + one map-side-combined groupBy(dst); rank state is "
-    "node-sized, never collected. Graph: clicks user→item, purchases "
-    "item→user.",
-)
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.graph import pagerank
-
-    ev = t(spark, sf_dir, "events")
-    k_node = 100000 + F.get_json_object("props", "$.k").cast("long")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").cast("long").alias("src"), k_node.alias("dst")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        k_node.alias("src"), F.col("user_id").cast("long").alias("dst")
-    )
-    return pagerank(clicks.unionByName(purchases), iterations=4)
 
 
 # =====================================================================
@@ -7581,54 +7479,6 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "documents"), id_col="doc_id",
         weight_col="n_chars", n=100,
     )
-
-
-@q(
-    "graph_triangle_counts",
-    """
-    WITH
-    raw AS (SELECT user_id, CAST(json_extract_string(props, '$.k') AS BIGINT)
-                   AS k
-            FROM events WHERE event_type = 'click' AND event_id % 5 = 0),
-    e AS (SELECT DISTINCT i.k AS a, j.k AS b
-          FROM raw i JOIN raw j USING (user_id) WHERE i.k < j.k),
-    tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-            FROM e e1 JOIN e e2 ON e1.b = e2.a
-                      JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-    corners AS (SELECT x AS node FROM tri UNION ALL SELECT y FROM tri
-                UNION ALL SELECT z FROM tri)
-    SELECT node, count(*) AS n_triangles FROM corners GROUP BY node
-    """,
-    "Per-node triangle counts via degree orientation + wedge closure: "
-    "orienting edges lower-(deg,id)→higher bounds every out-degree by "
-    "~sqrt(2m), so the wedge self-join enumerates O(m^1.5) candidates "
-    "instead of Σdeg² — a hub's in-edges contribute ZERO wedges. Each "
-    "triangle has exactly ONE pivot (the vertex with out-edges to both "
-    "others), so closure against the normalized undirected edge set "
-    "counts it once — no dedup shuffle. All equi-joins. Oracle: the "
-    "x<y<z three-way self-join (fine at sf0.01; its wedge volume is "
-    "exactly the Σdeg² the Spark side avoids). Graph: item co-click "
-    "(items clicked by the same user), thinned.",
-)
-def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.graph import triangle_counts
-
-    clicks = (
-        t(spark, sf_dir, "events")
-        .filter((F.col("event_type") == "click") & (F.col("event_id") % 5 == 0))
-        .select(
-            "user_id",
-            F.get_json_object("props", "$.k").cast("long").alias("k"),
-        )
-    )
-    i, j = clicks.alias("i"), clicks.alias("j")
-    edges = (
-        i.join(j, "user_id")
-        .where(F.col("i.k") < F.col("j.k"))
-        .select(F.col("i.k").alias("src"), F.col("j.k").alias("dst"))
-        .distinct()
-    )
-    return triangle_counts(edges)
 
 
 # =====================================================================
@@ -7843,95 +7693,3 @@ def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
     )
-
-
-@q(
-    "er_entity_clusters",
-    """
-    WITH RECURSIVE
-    e0 AS (
-        SELECT a.p_partkey AS u, b.p_partkey AS v
-        FROM part a JOIN part b
-          ON lower(regexp_extract(a.p_name, '([A-Za-z0-9]+)', 1))
-             = lower(regexp_extract(b.p_name, '([A-Za-z0-9]+)', 1))
-         AND abs(length(a.p_name) - length(b.p_name)) <= 1
-         AND levenshtein(a.p_name, b.p_name) <= 1
-         AND a.p_partkey < b.p_partkey
-    ),
-    bidir AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
-    reach(node, r) AS (
-        SELECT u, v FROM bidir
-        UNION
-        SELECT reach.node, bidir.v FROM reach JOIN bidir ON reach.r = bidir.u
-    )
-    SELECT node AS part_key, least(node, min(r)) AS cluster
-    FROM reach GROUP BY node
-    """,
-    "Entity resolution end-to-end — the composition the graph family "
-    "exists for: exact-value clones are CONTRACTED to one super-node "
-    "each (er.resolve_entities — the raw pairwise edge set is "
-    "quadratic in clone multiplicity: 313M edges measured at sf1 where "
-    "200k rows share 64 names), fuzzy_blocked_join (Christen blocking "
-    "+ lossless length prefilter + exact Levenshtein<=1 verify, NO "
-    "all-pairs stage) emits match edges over DISTINCT values, "
-    "connected_components (driver-side union-find) "
-    "collapses the contracted graph, and one value equi-join expands "
-    "labels back to rows — provably identical output to CC over the "
-    "raw edges (see er.py). The oracle replays the RAW edges through "
-    "a recursive transitive closure — fine at sf0.01, quadratic-in-"
-    "clone at scale, which is exactly what the Spark side avoids.",
-)
-def er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.er import resolve_entities
-
-    p = t(spark, sf_dir, "part")
-    return resolve_entities(
-        p, key_col="p_partkey", name_col="p_name", max_dist=1
-    ).select(F.col("p_partkey").alias("part_key"), "cluster")
-
-
-@q(
-    "graph_bfs_khop",
-    """
-    WITH RECURSIVE
-    raw AS (
-        SELECT CAST(user_id AS BIGINT) AS u,
-               100000 + CAST(json_extract_string(props, '$.k') AS BIGINT) AS v
-        FROM events WHERE event_type = 'click'
-    ),
-    e0 AS (SELECT DISTINCT u, v FROM raw
-           WHERE u <> v AND u IS NOT NULL AND v IS NOT NULL),
-    bidir AS (SELECT u, v FROM e0 UNION SELECT v AS u, u AS v FROM e0),
-    walk(node, d) AS (
-        SELECT CAST(unnest([100000, 100001, 100002, 100003, 100004])
-                    AS BIGINT), 0
-        UNION
-        SELECT bidir.v, walk.d + 1 FROM walk JOIN bidir ON walk.node = bidir.u
-        WHERE walk.d < 3
-    )
-    SELECT node, CAST(min(d) AS INT) AS dist FROM walk GROUP BY node
-    """,
-    "k-hop BFS distances (bounded multi-source shortest hops — "
-    "neighborhood extraction for graph features / blast-radius "
-    "queries): level-synchronous frontier expansion, each hop ONE "
-    "equi-join of the CURRENT frontier against the edges + one "
-    "anti-join against the settled set — |frontier|-proportional "
-    "per hop, never |graph|-proportional, short-circuits on an empty "
-    "frontier. Exact integer levels, no rounding discipline needed. "
-    "Oracle: bounded recursive CTE, min hop per node (its walk "
-    "enumerates (node, d) PAIRS — fine at sf0.01, frontier-dedup is "
-    "what the Spark side does instead). Sources: item nodes 0-4 over "
-    "the full user↔item click graph.",
-)
-def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.graph import bfs_distances
-
-    ev = t(spark, sf_dir, "events")
-    edges = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").cast("long").alias("src"),
-        (100000 + F.get_json_object("props", "$.k").cast("long")).alias("dst"),
-    )
-    sources = spark.createDataFrame(
-        [(100000 + i,) for i in range(5)], "node long"
-    )
-    return bfs_distances(edges, sources, max_hops=3)

@@ -37,8 +37,8 @@ routed to the S15 error channel BEFORE the anti-join (they carry no id,
 so they are never silently "unskippable").
 
 PDF decoding itself is pluggable: the default extractor uses pymupdf
-when importable (the multimodal.py PIL pattern — real on a normally
-provisioned cluster with no user code) and otherwise raises a loud
+when importable (real on a normally provisioned cluster with no user
+code) and otherwise raises a loud
 ``NotImplementedError`` stating the contract; tests inject a
 deterministic fake, so the Spark-side plumbing (schema, partitioning,
 batch shape, rescale/split logic, incremental skip) is real and tested
@@ -74,9 +74,9 @@ _DEFAULT_RENDER_DPI = 200
 
 
 def _default_page_extractor(content: bytes):
-    """Opportunistically real (the multimodal.py PIL pattern): when
-    pymupdf is importable the default decodes with no user code —
-    ``page.get_text("dict")`` for the text dicts, and the destination
+    """Opportunistically real: when pymupdf is importable the default
+    decodes with no user code — ``page.get_text("dict")`` for the text
+    dicts, and the destination
     image size computed from the page rect at pdf2image's default 200
     dpi (the reference takes the PIL image size from convert_from_path;
     deriving it from the rect avoids rendering every page just to
@@ -182,8 +182,8 @@ def build_ocr_json(
     """One bulletin's OCR JSON, the reference's structure (lines
     293-316). ``jp2_full_paths`` records the canonical image ids the JP2
     conversion would produce — the conversion itself is the importer's
-    out-of-engine image leg (pdf2image + PIL JPEG2000), stubbed like
-    every other multimodal decode in this repo.
+    out-of-engine image leg (pdf2image + PIL JPEG2000), which this
+    engine does not run.
 
     ``canonical`` — a precomputed ``(canonical_path, lang)`` pair —
     lets the distributed path pass the LISTING-derived identity through

@@ -12,7 +12,7 @@ from tests.fixtures import simple_issue_and_pages
 
 
 @pytest.fixture()
-def warehouse_spark(spark, tmp_path):
+def warehouse_spark(spark):
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
     )

@@ -123,20 +123,28 @@ def _cached(spark):
     return set(spark._jsc.getPersistentRDDs().keys())
 
 
-def _call(spark, command, argv):
-    """Run one CLI command in-process; return the Spark jobs it ran."""
-    from impresso_ta import cli
-
+def _jobs(spark, run):
+    """Call ``run()``; return the Spark jobs it ran."""
     sc = spark.sparkContext
-    group = f"cli-{command}-{time.monotonic_ns()}"
+    group = f"jobs-{time.monotonic_ns()}"
     sc.setJobGroup(group, group)
     try:
-        getattr(cli, command)(cli._build_parser().parse_args(argv), spark)
+        run()
     finally:
         sc.setJobGroup(None, None)
         # the status tracker is fed by the asynchronous listener bus
         spark._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _call(spark, command, argv):
+    """Run one CLI command in-process; return the Spark jobs it ran."""
+    from impresso_ta import cli
+
+    return _jobs(
+        spark,
+        lambda: getattr(cli, command)(cli._build_parser().parse_args(argv), spark),
+    )
 
 
 def _lines(spark, path):
@@ -271,6 +279,46 @@ def test_malformed_specs_fail_before_any_session(argv, monkeypatch, capsys):
         cli.main(argv[:1] + required + argv[1:])
     assert exc.value.code == 2
     assert f"argument {argv[1]}" in capsys.readouterr().err
+
+
+def test_corpus_contract_fails_before_any_work(spark, sf_dir):
+    """A bad argument combination raises before the filtered corpus is
+    persisted or sized: no Spark job runs and no cache is left behind."""
+    from impresso_ta.operators.pipeline import prepare_corpus
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    before = _cached(spark)
+
+    def run():
+        with pytest.raises(ValueError, match="temperature_target"):
+            prepare_corpus(docs, temperature_alpha=0.5)
+
+    assert _jobs(spark, run) == 0
+    assert _cached(spark) <= before
+
+
+@pytest.mark.parametrize(
+    "flags, message",
+    [
+        (["--temperature-alpha", "0.5"], "requires --temperature-target > 0"),
+        (["--temperature-target", "100"],
+         "no effect without --temperature-alpha"),
+    ],
+    ids=["alpha-only", "target-only"],
+)
+def test_corpus_flag_contracts_fail_before_any_session(
+    flags, message, monkeypatch, capsys
+):
+    from impresso_ta import cli, session
+
+    def no_session(*a, **k):
+        raise AssertionError("a bad flag combination reached get_spark")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["corpus", "--input", "in", "--output-dir", "out", *flags])
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err
 
 
 def test_specs_parse_to_dicts():

@@ -4,6 +4,7 @@ reference's real GDL sample driven by a generated image-info sidecar
 (the reference ships none — its own test points image_dirs at an
 unavailable mount, so conversion is unexercised there)."""
 
+import importlib.util
 import json
 import os
 import struct
@@ -24,8 +25,11 @@ from impresso_ta.schemas import DISCOVERY_SCHEMA
 SAMPLE = "/root/reference/text_preparation/data/sample_data/Olive/GDL/1900/01/02"
 PG1 = os.path.join(SAMPLE, "Document", "1", "Pg001.xml")
 
-pytestmark = pytest.mark.skipif(
+needs_sample = pytest.mark.skipif(
     not os.path.isdir(SAMPLE), reason="reference sample data not available"
+)
+pil_required = pytest.mark.skipif(
+    importlib.util.find_spec("PIL") is None, reason="Pillow not installed"
 )
 
 
@@ -40,6 +44,22 @@ def test_jpeg_x_dim():
     assert jpeg_x_dim(b"not a jpeg") is None
 
 
+@pil_required
+def test_jpeg_x_dim_matches_pil_width():
+    """The SOF header scan (which replaces the reference's cv.imdecode)
+    reads the same width as a real codec, on files a real encoder
+    wrote."""
+    import io
+
+    from PIL import Image
+
+    for i, (w, h) in enumerate([(31, 17), (64, 64), (120, 45)]):
+        buf = io.BytesIO()
+        Image.new("RGB", (w, h), (i * 40 % 256, 100, 50)).save(buf, format="JPEG")
+        assert jpeg_x_dim(buf.getvalue()) == w
+
+
+@needs_sample
 def test_parse_page_meta_real_sample():
     meta = parse_page_meta(open(PG1, "rb").read())
     assert meta["page_no"] == "1"
@@ -48,6 +68,7 @@ def test_parse_page_meta_real_sample():
     assert meta["page_img_xres_dpi"] == "300"
 
 
+@needs_sample
 def test_scale_factor_tif():
     meta = parse_page_meta(open(PG1, "rb").read())
     assert get_scale_factor(meta, "tif", "Img/Pg001.tif") == 300 / 144
@@ -130,6 +151,7 @@ def converted_and_raw(spark, image_dirs):
     return res, raw
 
 
+@needs_sample
 def test_olive_conversion_e2e(converted_and_raw):
     res, raw = converted_and_raw
     assert res.errors.count() == 0
@@ -151,6 +173,7 @@ def test_olive_conversion_e2e(converted_and_raw):
     assert all(p["cc"] is False for p in raw_pages.values())
 
 
+@needs_sample
 def test_olive_conversion_preserves_ids(converted_and_raw):
     res, raw = converted_and_raw
     iss = res.issues.collect()[0].asDict(recursive=True)
@@ -160,6 +183,7 @@ def test_olive_conversion_preserves_ids(converted_and_raw):
     ]
 
 
+@needs_sample
 def test_olive_rebuild_cc_consensus(spark, converted_and_raw):
     res, _ = converted_and_raw
     rb = rebuild_issues_solr(res.issues, res.pages, ts="2024-01-01T00:00:00Z")
