@@ -7,7 +7,8 @@ backed:
 
     python -m impresso_ta.cli import --input-dir DIR --format FMT \
         --output-dir OUT [--aliases A,B] [--exclude] \
-        [--date-ranges GDL=1900-01-01:1950-12-31] [--incremental] [--ts TS]
+        [--date-ranges GDL=1900-01-01:1950-12-31] [--incremental] [--ts TS] \
+        [--validate]
 
     python -m impresso_ta.cli rebuild --issues PATH --supports PATH \
         --output-dir OUT [--fmt solr|passim] [--languages fr,de] \
@@ -17,7 +18,9 @@ Neither has per-year driver loops (SURVEY §3 lifecycle collapsed into
 declarative pipelines), but each writes several outputs, so each runs
 several Spark jobs. An import parses every issue once: its one parse
 frame is cached, and the issues, pages, records, errors and manifest
-writes and the console echo all read it. A rebuild assembles every
+writes and the console echo all read it. With ``--validate`` the value-
+level rules run inside that parse, so rejected rows reach the error
+write without a second pass over the outputs. A rebuild assembles every
 issue once: its assembly output is cached, and the rebuilt write, the
 error write and the printed count all read it. Both caches are released
 when the command returns or fails.
@@ -328,56 +331,29 @@ def cmd_import(args, spark) -> int:
             )
             disc = incremental_filter(disc, done)
 
-    res = import_issues(disc, ts=args.ts)
-    issues_df, pages_df, records_df, errors_df = (
-        res.issues,
-        res.pages,
-        res.records,
-        res.errors,
-    )
-    if args.validate:
-        from impresso_ta.operators.validate import (
-            split_valid,
-            validate_audio_records,
-            validate_issues,
-            validate_pages,
-        )
-
-        issues_df, issue_errs = split_valid(
-            validate_issues(issues_df), "validate-issue"
-        )
-        pages_df, page_errs = split_valid(
-            validate_pages(pages_df), "validate-page"
-        )
-        records_df, record_errs = split_valid(
-            validate_audio_records(records_df), "validate-record"
-        )
-        errors_df = (
-            errors_df.unionByName(issue_errs)
-            .unionByName(page_errs)
-            .unionByName(record_errs)
-        )
-    # Every write, the manifest and the echo below derive from the one
-    # parse frame. Cached, each issue is parsed once per import instead of
-    # once per action; the cache is released even when a write fails.
+    # Every write, the manifest and the echo below are column filters of
+    # the one parse frame, which also applies the --validate rules. Cached,
+    # each issue is parsed once per import instead of once per action; the
+    # cache is released even when a write fails.
+    res = import_issues(disc, ts=args.ts, validate=args.validate)
     res.combined.persist()
     try:
         write_issues(
-            issues_df, f"{args.output_dir}/issues", fmt=args.store_format
+            res.issues, f"{args.output_dir}/issues", fmt=args.store_format
         )
         write_pages(
-            pages_df, f"{args.output_dir}/pages", fmt=args.store_format
+            res.pages, f"{args.output_dir}/pages", fmt=args.store_format
         )
-        if records_df.take(1):
+        if res.records.take(1):
             write_pages(
-                records_df, f"{args.output_dir}/records",
+                res.records, f"{args.output_dir}/records",
                 fmt=args.store_format,
             )
-        write_errors(errors_df, f"{args.output_dir}/errors")
+        write_errors(res.errors, f"{args.output_dir}/errors")
         # manifest goes through the sink (distributed write) — at scale the
         # (alias, year) grid is big enough that a full driver collect is a
         # bottleneck; the console only echoes a bounded sample.
-        stats_df = manifest_stats(issues_df)
+        stats_df = manifest_stats(res.issues)
         stats_df.write.mode("overwrite").json(f"{args.output_dir}/manifest")
         echo = stats_df.orderBy("alias", "year").limit(20).collect()
     finally:

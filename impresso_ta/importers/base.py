@@ -70,8 +70,52 @@ IMPORT_ROW_SCHEMA = StructType(
         StructField("records", ArrayType(AUDIO_RECORD_SCHEMA), True),
         StructField("canonical_path", StringType(), False),
         StructField("error", StringType(), True),
+        # value-rule rejections of this issue's rows (``validate=True``)
+        StructField("rejected", ArrayType(ERROR_SCHEMA), True),
     ]
 )
+IMPORT_COLUMNS = IMPORT_ROW_SCHEMA.fieldNames()
+
+
+def _error_row(canonical_path: str, exc: Exception) -> dict[str, Any]:
+    """The IMPORT_ROW_SCHEMA dict of an issue that failed to import."""
+    row = dict.fromkeys(IMPORT_COLUMNS)
+    row.update(
+        canonical_path=canonical_path, error=f"{type(exc).__name__}: {exc}"
+    )
+    return row
+
+
+def _validated(issue: dict, supports: list, is_audio: bool):
+    """Apply the value-level rules to one parsed issue and its supports.
+
+    Returns ``(issue, supports, rejected)``: a rejected issue becomes
+    None while its valid supports stay, rejected supports are dropped,
+    and ``rejected`` holds one ERROR_SCHEMA dict per rejected row."""
+    from impresso_ta.operators.validate import (
+        issue_violations,
+        page_violations,
+        record_violations,
+        violation_error,
+    )
+
+    rejected = []
+
+    def passes(row, rules, stage) -> bool:
+        violations = rules(row)
+        if violations:
+            rejected.append(violation_error(row.get("id"), stage, violations))
+        return not violations
+
+    support_rules, stage = (
+        (record_violations, "validate-record")
+        if is_audio
+        else (page_violations, "validate-page")
+    )
+    supports = [s for s in supports if passes(s, support_rules, stage)]
+    if not passes(issue, issue_violations, "validate-issue"):
+        issue = None
+    return issue, supports, rejected
 
 
 def _parse_one(
@@ -81,8 +125,11 @@ def _parse_one(
     edition: str,
     path: str,
     ts: Optional[str],
+    validate: bool = False,
 ) -> dict[str, Any]:
-    """One issue dir → one IMPORT_ROW_SCHEMA dict (errors-as-data)."""
+    """One issue dir → one IMPORT_ROW_SCHEMA dict (errors-as-data). With
+    ``validate``, rows that break a value-level rule move to
+    ``rejected``."""
     from impresso_ta.importers import get_plugin as _get
 
     canonical_path = f"{alias}-{date_str}-{edition}"
@@ -97,53 +144,55 @@ def _parse_one(
             for p in supports:
                 p.setdefault("cdt", ts)
                 p.setdefault("ts", ts)
-        return {
-            "issue": issue,
-            "pages": None if is_audio else supports,
-            "records": supports if is_audio else None,
-            "canonical_path": canonical_path,
-            "error": None,
-        }
     except Exception as exc:  # noqa: BLE001 errors-as-data
-        return {
-            "issue": None,
-            "pages": None,
-            "records": None,
-            "canonical_path": canonical_path,
-            "error": f"{type(exc).__name__}: {exc}",
-        }
+        return _error_row(canonical_path, exc)
+    rejected = []
+    if validate:
+        issue, supports, rejected = _validated(issue, supports, is_audio)
+    return {
+        "issue": issue,
+        "pages": None if is_audio else supports,
+        "records": supports if is_audio else None,
+        "canonical_path": canonical_path,
+        "error": None,
+        "rejected": rejected,
+    }
 
 
-def _import_udtf(ts: Optional[str]):
+def _date_str(row) -> str:
+    return (
+        row.date.strftime("%Y-%m-%d")
+        if hasattr(row.date, "strftime")
+        else str(row.date)
+    )
+
+
+def _import_udtf(ts: Optional[str], validate: bool = False):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                date_str = (
-                    row.date.strftime("%Y-%m-%d")
-                    if hasattr(row.date, "strftime")
-                    else str(row.date)
+            out = [
+                _parse_one(
+                    row.format, row.alias, _date_str(row), row.edition,
+                    row.path, ts, validate,
                 )
-                out.append(
-                    _parse_one(
-                        row.format, row.alias, date_str, row.edition,
-                        row.path, ts,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["issue", "pages", "records", "canonical_path", "error"],
-            )
+                for row in pdf.itertuples(index=False)
+            ]
+            yield pd.DataFrame(out, columns=IMPORT_COLUMNS)
 
     return fn
 
 
 def import_issues(
-    discovery_df: DataFrame, ts: Optional[str] = None
+    discovery_df: DataFrame, ts: Optional[str] = None, validate: bool = False
 ) -> "ImportResult":
     """Run the import: discovery rows → ImportResult(issues, pages,
     records, errors). Unpacks as a 3-tuple (issues, supports, errors)
     for print-only corpora.
+
+    With ``validate``, the value-level rules of
+    :mod:`impresso_ta.operators.validate` run inside the parse: a rejected
+    issue, page or record leaves its output for an error row with stage
+    ``validate-issue|page|record`` (a rejected issue's valid pages stay).
 
     One UDTF pass, no shuffle; at 100 TB the discovery frame is
     repartitioned so each task holds a handful of issues (an issue is a
@@ -151,33 +200,40 @@ def import_issues(
     here AQE-sized input splits achieve the same without tuning).
     """
     combined = discovery_df.mapInPandas(
-        _import_udtf(ts), schema=IMPORT_ROW_SCHEMA
+        _import_udtf(ts, validate), schema=IMPORT_ROW_SCHEMA
     )
     return _split_combined(combined)
 
 
 def _split_combined(combined: DataFrame) -> "ImportResult":
-    ok = combined.filter(F.col("error").isNull())
-    issues_df = ok.select("issue.*")
+    # null issue: an import error, or an issue the rules rejected (its
+    # valid pages or records stay)
+    issues_df = combined.filter(F.col("issue").isNotNull()).select("issue.*")
     pages_df = (
-        ok.filter(F.col("pages").isNotNull())
+        combined.filter(F.col("pages").isNotNull())
         .select(F.explode("pages").alias("page"))
         .select("page.*")
     )
     records_df = (
-        ok.filter(F.col("records").isNotNull())
+        combined.filter(F.col("records").isNotNull())
         .select(F.explode("records").alias("record"))
         .select("record.*")
     )
-    errors_df = combined.filter(F.col("error").isNotNull()).select(
-        "canonical_path",
-        F.lit("import").alias("stage"),
-        "error",
+    # one pass over the parse: an import error, else the rule rejections
+    import_error = F.struct(
+        "canonical_path", F.lit("import").alias("stage"), "error"
     )
+    errors_df = combined.select(
+        F.explode(
+            F.when(F.col("error").isNotNull(), F.array(import_error)).otherwise(
+                F.col("rejected")
+            )
+        ).alias("e")
+    ).select("e.*")
     return ImportResult(issues_df, pages_df, records_df, errors_df, combined)
 
 
-def _import_files_udtf(ts: Optional[str]):
+def _import_files_udtf(ts: Optional[str], validate: bool = False):
     """Like :func:`_import_udtf`, but each row carries the issue's file
     BYTES (``files`` = array<struct<relpath,content>>): the task
     materializes them onto executor-local scratch (the same disk Spark
@@ -198,11 +254,7 @@ def _import_files_udtf(ts: Optional[str]):
             for pdf in batches:
                 out = []
                 for row in pdf.itertuples(index=False):
-                    date_str = (
-                        row.date.strftime("%Y-%m-%d")
-                        if hasattr(row.date, "strftime")
-                        else str(row.date)
-                    )
+                    date_str = _date_str(row)
                     seq += 1
                     tmpdir = os.path.join(parent, str(seq))
                     try:
@@ -219,21 +271,16 @@ def _import_files_udtf(ts: Optional[str]):
                                     fh.write(f["content"])
                         except Exception as exc:  # noqa: BLE001
                             out.append(
-                                {
-                                    "issue": None,
-                                    "pages": None,
-                                    "records": None,
-                                    "canonical_path": (
-                                        f"{row.alias}-{date_str}-{row.edition}"
-                                    ),
-                                    "error": f"{type(exc).__name__}: {exc}",
-                                }
+                                _error_row(
+                                    f"{row.alias}-{date_str}-{row.edition}",
+                                    exc,
+                                )
                             )
                             continue
                         out.append(
                             _parse_one(
                                 row.format, row.alias, date_str, row.edition,
-                                tmpdir, ts,
+                                tmpdir, ts, validate,
                             )
                         )
                     finally:
@@ -241,12 +288,7 @@ def _import_files_udtf(ts: Optional[str]):
                         # whole partition: a 100 TB run must never
                         # accumulate its partition's bytes on local disk
                         shutil.rmtree(tmpdir, ignore_errors=True)
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "issue", "pages", "records", "canonical_path", "error"
-                    ],
-                )
+                yield pd.DataFrame(out, columns=IMPORT_COLUMNS)
         finally:
             shutil.rmtree(parent, ignore_errors=True)
 
@@ -259,6 +301,7 @@ def import_issues_distributed(
     fmt: str,
     ts: Optional[str] = None,
     default_edition: str = "a",
+    validate: bool = False,
 ) -> "ImportResult":
     """Object-store twin of discover+:func:`import_issues` in one pass:
     a ``binaryFile`` listing under ``base_uri`` flows each issue's file
@@ -334,7 +377,7 @@ def import_issues_distributed(
         )
     )
     combined = grouped.mapInPandas(
-        _import_files_udtf(ts), schema=IMPORT_ROW_SCHEMA
+        _import_files_udtf(ts, validate), schema=IMPORT_ROW_SCHEMA
     )
     return _split_combined(combined)
 

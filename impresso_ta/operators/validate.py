@@ -1,22 +1,43 @@
-"""Canonical-schema validation as expectation columns (errors-as-data).
+"""Canonical-schema validation as a ``_violations`` list (errors-as-data).
 
 The reference validates every serialized issue/page against external JSON
 Schemas at write time (ref: utils.py:71-89 called from core.py:280-292,
-:618) and can bypass validation for speed (classes.py:78-83). Here
-validation is a DataFrame → DataFrame stage producing a ``_violations``
-array column — structural conformance is already guaranteed by the fixed
-StructTypes (a row cannot exist off-schema), so this stage checks the
-VALUE-level rules the JSON Schemas encode: ID shapes, enum membership,
-required fields, referential consistency between ``i``/``pp``.
+:618) and can bypass validation for speed (classes.py:78-83). Structural
+conformance is already guaranteed here by the fixed StructTypes (a row
+cannot exist off-schema), so the rules below check the VALUE-level
+constraints the JSON Schemas encode: ID shapes, enum membership, required
+fields, referential consistency between ``i``/``pp``.
 
-All checks are column expressions (no UDF, no shuffle); `split_valid`
-routes violating rows to the error channel without failing the job.
+The rules are plain Python over one canonical row as a dict:
+:func:`issue_violations`, :func:`page_violations` and
+:func:`record_violations`. The import applies them inside its parse,
+where it already holds every row as a dict (``import_issues(...,
+validate=True)``), so the CLI's ``--validate`` costs no second pass. The
+DataFrame functions (:func:`validate_issues` and its twins) apply the
+same three functions through one UDF, and :func:`split_valid` routes
+violating rows to the error channel without failing the job.
+
+A rule judges the value the row stores, not the Python object a parser
+built, so it matches what a Spark expression over the stored row would
+say:
+
+- a null field or element is unknown and never fires a rule by itself
+  (three-valued logic);
+- integer fields are compared as Arrow stores them: the pandas→Arrow
+  cast of an ``int`` column truncates a float toward zero, so ``int()``
+  comes first;
+- the regexes match with ``re.ASCII``, because Java's ``\\d`` (Spark's
+  ``rlike``) matches ASCII digits only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import re
+from typing import Callable, Iterable
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType
 
 from impresso_ta.schemas import KNOWN_CI_TYPES, SOURCE_MEDIUMS, SOURCE_TYPES
 
@@ -34,26 +55,44 @@ TIMESTAMP_RE = r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:?\d
 HMS_RE = r"^\d{2,}:\d{2}:\d{2}$"
 LANG_RE = r"^[a-z]{2,3}$"
 
+_ISSUE_ID, _PAGE_ID, _RECORD_ID, _CI_ID, _TIMESTAMP, _HMS, _LANG = (
+    re.compile(p, re.ASCII)
+    for p in (
+        ISSUE_ID_RE, PAGE_ID_RE, RECORD_ID_RE, CI_ID_RE, TIMESTAMP_RE,
+        HMS_RE, LANG_RE,
+    )
+)
 
-def _rule(name: str, ok: Column) -> Column:
-    """A violation entry (null when the rule passes)."""
-    return F.when(~ok, F.lit(name))
-
-
-def _all_cis(col: str = "i") -> Column:
-    return F.coalesce(F.col(col), F.array())
-
-
-def _opt(value: Column, ok: Column) -> Column:
-    """Rule body for an optional field: pass when absent."""
-    return value.isNull() | ok
+def _mismatch(pattern: re.Pattern, value: str | None) -> bool:
+    """A present value that ``pattern`` does not find (``rlike``)."""
+    return value is not None and pattern.search(value) is None
 
 
-def validate_issues(issues_df: DataFrame) -> DataFrame:
-    """Attach ``_violations: array<string>`` to canonical issue rows.
+def _outside(value: str | None, allowed: Iterable[str]) -> bool:
+    return value is not None and value not in allowed
 
-    Value-level rules of the canonical issue schema (ref: utils.py:71-89
-    validate_issue_schema; enum/shape sources cited per rule):
+
+def _int(value) -> int | None:
+    """The integer Arrow stores for ``value``: floats truncate toward
+    zero, and NaN arrives as null."""
+    return None if value is None or value != value else int(value)
+
+
+def _any_int(values: Iterable, bad: Callable[[int], bool]) -> bool:
+    """Some present element is ``bad`` once stored as an integer."""
+    return any(bad(v) for v in map(_int, values) if v is not None)
+
+
+def _each(row: dict, key: str) -> list[dict]:
+    """The struct elements of ``row[key]``; a null array is empty and a
+    null element has every field null."""
+    return [x or {} for x in row.get(key) or ()]
+
+
+def issue_violations(d: dict) -> list[str]:
+    """Names of the value-level rules the canonical issue ``d`` violates,
+    in rule order (ref: utils.py:71-89 validate_issue_schema; enum/shape
+    sources cited per rule):
 
     - ``id_shape``/``ci_ids_prefixed``/``ci_ids_unique`` — canonical ID
       grammar (ref: importers/classes.py canonical_path usage).
@@ -65,198 +104,98 @@ def validate_issues(issues_df: DataFrame) -> DataFrame:
       CONTENTITEM_TYPES + importer type maps).
     - ``ci_lg_shape`` — 2-3 letter lowercase code.
     - ``ci_ro_positive`` — reading order is 1-based.
-    - ``ci_pp_in_range`` — CI page numbers must index into issue.pp
-      (ref: verify_imported_issues checks CI/page consistency).
-    - ``supports_prefixed`` — page/record ids belong to this issue.
+    - ``ci_pp_in_range``/``ci_rr_in_range`` — CI page/record numbers
+      must index into issue.pp/rr (ref: verify_imported_issues checks
+      CI/page consistency).
+    - ``supports_prefixed``/``supports_present`` — the issue has pages
+      or records, and their ids belong to this issue.
     """
-    cis = _all_cis()
-    ci_ids = F.transform(cis, lambda c: c["m"]["id"])
-    pp = F.coalesce(F.col("pp"), F.array())
-    rr = F.coalesce(F.col("rr"), F.array())
-    n_pages = F.size(pp)
-    n_records = F.size(rr)
-    bad_pp_refs = F.size(
-        F.filter(
-            cis,
-            lambda c: F.exists(
-                F.coalesce(c["m"]["pp"], F.array()),
-                lambda p: (p < 1) | (p > n_pages),
-            ),
+    iid, st, sm = d.get("id"), d.get("st"), d.get("sm")
+    metas = [ci.get("m") or {} for ci in _each(d, "i")]
+    ci_ids = [m.get("id") for m in metas]
+    pp, rr = d.get("pp") or [], d.get("rr") or []
+
+    def foreign(ids: Iterable[str | None]) -> bool:
+        return iid is not None and any(
+            x is not None and not x.startswith(iid) for x in ids
         )
-    )
-    bad_rr_refs = F.size(
-        F.filter(
-            cis,
-            lambda c: F.exists(
-                F.coalesce(c["m"]["rr"], F.array()),
-                lambda r: (r < 1) | (r > n_records),
-            ),
+
+    def bad_refs(key: str, n: int) -> bool:
+        return any(
+            _any_int(m.get(key) or (), lambda k: k < 1 or k > n) for m in metas
         )
-    )
-    rules = [
-        _rule("id_shape", F.col("id").rlike(ISSUE_ID_RE)),
-        _rule("st_enum", F.col("st").isin(*SOURCE_TYPES) | F.col("st").isNull()),
-        _rule("sm_enum", F.col("sm").isin(*SOURCE_MEDIUMS) | F.col("sm").isNull()),
-        _rule(
-            "st_sm_consistent",
-            # only the PAIRING, gated on both being valid enum members
-            # (the enum rules fire separately): audio ⇔ not-newspaper
-            # (ref: core.py:185-204 print|typescript→paper, audio→radio)
-            F.col("st").isNull()
-            | F.col("sm").isNull()
-            | ~F.col("st").isin(*SOURCE_TYPES)
-            | ~F.col("sm").isin(*SOURCE_MEDIUMS)
-            | (F.col("sm") != "audio")
-            | (F.col("st") == "radio_broadcast"),
-        ),
-        _rule("cdt_timestamp", _opt(F.col("cdt"), F.col("cdt").rlike(TIMESTAMP_RE))),
-        _rule("ts_timestamp", _opt(F.col("ts"), F.col("ts").rlike(TIMESTAMP_RE))),
-        _rule(
-            "ci_ids_prefixed",
-            F.size(
-                F.filter(ci_ids, lambda cid: ~cid.startswith(F.col("id")))
-            )
-            == 0,
-        ),
-        _rule(
-            "ci_ids_unique",
-            F.size(F.array_distinct(ci_ids)) == F.size(ci_ids),
-        ),
-        _rule(
-            "ci_tp_enum",
-            ~F.exists(
-                cis,
-                lambda c: c["m"]["tp"].isNotNull()
-                & ~c["m"]["tp"].isin(*KNOWN_CI_TYPES),
-            ),
-        ),
-        _rule(
-            "ci_lg_shape",
-            ~F.exists(
-                cis,
-                lambda c: c["m"]["lg"].isNotNull()
-                & ~c["m"]["lg"].rlike(LANG_RE),
-            ),
-        ),
-        _rule(
-            "ci_ro_positive",
-            ~F.exists(
-                cis,
-                lambda c: c["m"]["ro"].isNotNull() & (c["m"]["ro"] < 1),
-            ),
-        ),
-        _rule("ci_pp_in_range", bad_pp_refs == 0),
-        _rule("ci_rr_in_range", bad_rr_refs == 0),
-        _rule(
-            "supports_prefixed",
-            ~F.exists(
-                F.concat(pp, rr), lambda sid: ~sid.startswith(F.col("id"))
-            ),
-        ),
-        _rule(
-            "supports_present",
-            (F.size(pp) > 0) | (F.size(rr) > 0),
-        ),
+
+    rules = {
+        "id_shape": _mismatch(_ISSUE_ID, iid),
+        "st_enum": _outside(st, SOURCE_TYPES),
+        "sm_enum": _outside(sm, SOURCE_MEDIUMS),
+        # only the PAIRING, gated on both being valid enum members (the
+        # enum rules fire separately): audio ⇔ not-newspaper
+        "st_sm_consistent": st in SOURCE_TYPES
+        and sm == "audio"
+        and st != "radio_broadcast",
+        "cdt_timestamp": _mismatch(_TIMESTAMP, d.get("cdt")),
+        "ts_timestamp": _mismatch(_TIMESTAMP, d.get("ts")),
+        "ci_ids_prefixed": foreign(ci_ids),
+        # null ids compare equal here, as in array_distinct
+        "ci_ids_unique": len(set(ci_ids)) != len(ci_ids),
+        "ci_tp_enum": any(_outside(m.get("tp"), KNOWN_CI_TYPES) for m in metas),
+        "ci_lg_shape": any(_mismatch(_LANG, m.get("lg")) for m in metas),
+        "ci_ro_positive": _any_int((m.get("ro") for m in metas), lambda r: r < 1),
+        "ci_pp_in_range": bad_refs("pp", len(pp)),
+        "ci_rr_in_range": bad_refs("rr", len(rr)),
+        "supports_prefixed": foreign([*pp, *rr]),
+        "supports_present": not pp and not rr,
+    }
+    return [name for name, fired in rules.items() if fired]
+
+
+def _origin_negative(c) -> bool:
+    """x or y of ``[x, y, w, h]`` is below 0. Width and height are
+    deliberately unconstrained: the reference's own char-run word boxes
+    keep first-char origin + last-char extent (ref: bcul/helpers.py:
+    150-210), which yields negative extents on non-monotonic OCR runs,
+    and those outputs pass the reference's schema validation. A
+    coordinate that a short array lacks is unknown, not negative, so
+    ``[5]`` and ``[]`` get only their arity violation."""
+    return c is not None and _any_int(c[:2], lambda v: v < 0)
+
+
+def page_violations(d: dict) -> list[str]:
+    """Names of the value-level rules the canonical page ``d`` violates,
+    in rule order: ID shape, coord arity ([x,y,w,h] exactly) and
+    non-negative origin on every region and token, region ``pOf`` shape,
+    timestamps and enums."""
+    regions = _each(d, "r")
+    tokens = [
+        t
+        for r in regions
+        for p in _each(r, "p")
+        for ln in _each(p, "l")
+        for t in _each(ln, "t")
     ]
-    return issues_df.withColumn(
-        "_violations",
-        F.filter(F.array(*rules), lambda v: v.isNotNull()),
-    )
+    region_cs = [r.get("c") for r in regions]
+    token_cs = [t.get("c") for t in tokens]
+    rules = {
+        "id_shape": _mismatch(_PAGE_ID, d.get("id")),
+        "region_coord_arity": any(c is not None and len(c) != 4 for c in region_cs),
+        "token_coord_arity": any(c is not None and len(c) != 4 for c in token_cs),
+        "region_origin_nonneg": any(map(_origin_negative, region_cs)),
+        "token_origin_nonneg": any(map(_origin_negative, token_cs)),
+        "region_pOf_shape": any(_mismatch(_CI_ID, r.get("pOf")) for r in regions),
+        "cdt_timestamp": _mismatch(_TIMESTAMP, d.get("cdt")),
+        "ts_timestamp": _mismatch(_TIMESTAMP, d.get("ts")),
+        "st_enum": _outside(d.get("st"), SOURCE_TYPES),
+        "sm_enum": _outside(d.get("sm"), SOURCE_MEDIUMS),
+    }
+    return [name for name, fired in rules.items() if fired]
 
 
-def validate_pages(pages_df: DataFrame) -> DataFrame:
-    """Attach ``_violations`` to canonical page rows: ID shape, coord
-    arity ([x,y,w,h] exactly) on every region/para/line/token."""
-    bad_coords = F.lit(0)
-    regions = F.coalesce(F.col("r"), F.array())
-    # count coord arrays with arity != 4 across the full nesting
-    region_bad = F.size(
-        F.filter(
-            regions,
-            lambda r: r["c"].isNotNull() & (F.size(r["c"]) != 4),
-        )
-    )
-    token_bad = F.aggregate(
-        regions,
-        F.lit(0),
-        lambda acc, r: acc
-        + F.aggregate(
-            F.coalesce(r["p"], F.array()),
-            F.lit(0),
-            lambda a2, p: a2
-            + F.aggregate(
-                F.coalesce(p["l"], F.array()),
-                F.lit(0),
-                lambda a3, ln: a3
-                + F.size(
-                    F.filter(
-                        F.coalesce(ln["t"], F.array()),
-                        lambda tk: tk["c"].isNotNull() & (F.size(tk["c"]) != 4),
-                    )
-                ),
-            ),
-        ),
-    )
-    # coordinate ORIGINS (x, y) must be non-negative; width/height are
-    # deliberately unconstrained — the reference's own char-run word
-    # boxes keep first-char origin + last-char extent (ref:
-    # bcul/helpers.py:150-210), which yields negative extents on
-    # non-monotonic OCR runs, and those outputs pass the reference's
-    # schema validation, so the canonical schema has no minimum there.
-    def _origin_neg(c: Column) -> Column:
-        return c.isNotNull() & (
-            (F.element_at(c, 1) < 0) | (F.element_at(c, 2) < 0)
-        )
-
-    region_neg = F.size(F.filter(regions, lambda r: _origin_neg(r["c"])))
-    token_neg = F.aggregate(
-        regions,
-        F.lit(0),
-        lambda acc, r: acc
-        + F.aggregate(
-            F.coalesce(r["p"], F.array()),
-            F.lit(0),
-            lambda a2, p: a2
-            + F.aggregate(
-                F.coalesce(p["l"], F.array()),
-                F.lit(0),
-                lambda a3, ln: a3
-                + F.size(
-                    F.filter(
-                        F.coalesce(ln["t"], F.array()),
-                        lambda tk: _origin_neg(tk["c"]),
-                    )
-                ),
-            ),
-        ),
-    )
-    bad_pof = F.size(
-        F.filter(
-            regions,
-            lambda r: r["pOf"].isNotNull() & ~r["pOf"].rlike(CI_ID_RE),
-        )
-    )
-    rules = [
-        _rule("id_shape", F.col("id").rlike(PAGE_ID_RE)),
-        _rule("region_coord_arity", region_bad == bad_coords),
-        _rule("token_coord_arity", token_bad == 0),
-        _rule("region_origin_nonneg", region_neg == 0),
-        _rule("token_origin_nonneg", token_neg == 0),
-        _rule("region_pOf_shape", bad_pof == 0),
-        _rule("cdt_timestamp", _opt(F.col("cdt"), F.col("cdt").rlike(TIMESTAMP_RE))),
-        _rule("ts_timestamp", _opt(F.col("ts"), F.col("ts").rlike(TIMESTAMP_RE))),
-        _rule("st_enum", _opt(F.col("st"), F.col("st").isin(*SOURCE_TYPES))),
-        _rule("sm_enum", _opt(F.col("sm"), F.col("sm").isin(*SOURCE_MEDIUMS))),
-    ]
-    return pages_df.withColumn(
-        "_violations", F.filter(F.array(*rules), lambda v: v.isNotNull())
-    )
-
-
-def validate_audio_records(records_df: DataFrame) -> DataFrame:
-    """Attach ``_violations`` to canonical audio-record rows (the audio
-    twin of :func:`validate_pages` — ref: utils.py validate_audio_schema,
-    shapes from ina/classes.py:52-62,108-124):
+def record_violations(d: dict) -> list[str]:
+    """Names of the value-level rules the canonical audio record ``d``
+    violates, in rule order (the audio twin of :func:`page_violations` —
+    ref: utils.py validate_audio_schema, shapes from ina/classes.py:
+    52-62,108-124):
 
     - ``id_shape`` — ``-r\\d{4}`` record id grammar.
     - ``sm_audio``/``st_enum`` — records are always source medium
@@ -269,61 +208,70 @@ def validate_audio_records(records_df: DataFrame) -> DataFrame:
     - ``section_pOf_shape`` — sections point at a canonical CI id
       (ref: ina/classes.py parse() sections pOf).
     """
-    sections = F.coalesce(F.col("s"), F.array())
+    sections = _each(d, "s")
+    levels = []
+    for s in sections:
+        levels.append(s)
+        for u in _each(s, "u"):
+            levels.append(u)
+            for seg in _each(u, "ss"):
+                levels.append(seg)
+                levels += _each(seg, "t")
+    tcs = [x["tc"] for x in levels if x.get("tc") is not None]
+    sm = d.get("sm")
+    rules = {
+        "id_shape": _mismatch(_RECORD_ID, d.get("id")),
+        "sm_audio": sm is not None and sm != "audio",
+        "st_enum": _outside(d.get("st"), SOURCE_TYPES),
+        "cdt_timestamp": _mismatch(_TIMESTAMP, d.get("cdt")),
+        "ts_timestamp": _mismatch(_TIMESTAMP, d.get("ts")),
+        "stt_shape": _mismatch(_HMS, d.get("stt")),
+        "dur_shape": _mismatch(_HMS, d.get("dur")),
+        "tc_arity": any(len(tc) != 2 for tc in tcs),
+        "tc_nonneg": any(v is not None and v < 0 for tc in tcs for v in tc),
+        "section_pOf_shape": any(_mismatch(_CI_ID, s.get("pOf")) for s in sections),
+    }
+    return [name for name, fired in rules.items() if fired]
 
-    def _tc_bad(tc: Column, pred) -> Column:
-        return F.when(tc.isNotNull() & pred(tc), 1).otherwise(0)
 
-    def _walk(pred) -> Column:
-        # sum of violating tc arrays over section → utterance → speech
-        # segment → token
-        return F.aggregate(
-            sections,
-            F.lit(0),
-            lambda acc, s: acc
-            + _tc_bad(s["tc"], pred)
-            + F.aggregate(
-                F.coalesce(s["u"], F.array()),
-                F.lit(0),
-                lambda a2, u: a2
-                + _tc_bad(u["tc"], pred)
-                + F.aggregate(
-                    F.coalesce(u["ss"], F.array()),
-                    F.lit(0),
-                    lambda a3, seg: a3
-                    + _tc_bad(seg["tc"], pred)
-                    + F.aggregate(
-                        F.coalesce(seg["t"], F.array()),
-                        F.lit(0),
-                        lambda a4, tk: a4 + _tc_bad(tk["tc"], pred),
-                    ),
-                ),
-            ),
-        )
+def violation_error(row_id: str, stage: str, violations: list[str]) -> dict:
+    """The error row :func:`split_valid` emits for a rejected row."""
+    return {
+        "canonical_path": row_id,
+        "stage": stage,
+        "error": "; ".join(f"violated {v}" for v in violations),
+    }
 
-    arity_bad = _walk(lambda tc: F.size(tc) != 2)
-    neg_bad = _walk(lambda tc: F.exists(tc, lambda v: v < 0))
-    bad_pof = F.size(
-        F.filter(
-            sections,
-            lambda s: s["pOf"].isNotNull() & ~s["pOf"].rlike(CI_ID_RE),
-        )
+
+def _with_violations(
+    df: DataFrame, rules: Callable[[dict], list[str]]
+) -> DataFrame:
+    """Attach ``_violations: array<string>``: ``rules`` over each row."""
+    violations = F.udf(
+        lambda row: rules(row.asDict(recursive=True)), ArrayType(StringType())
     )
-    rules = [
-        _rule("id_shape", F.col("id").rlike(RECORD_ID_RE)),
-        _rule("sm_audio", _opt(F.col("sm"), F.col("sm") == "audio")),
-        _rule("st_enum", _opt(F.col("st"), F.col("st").isin(*SOURCE_TYPES))),
-        _rule("cdt_timestamp", _opt(F.col("cdt"), F.col("cdt").rlike(TIMESTAMP_RE))),
-        _rule("ts_timestamp", _opt(F.col("ts"), F.col("ts").rlike(TIMESTAMP_RE))),
-        _rule("stt_shape", _opt(F.col("stt"), F.col("stt").rlike(HMS_RE))),
-        _rule("dur_shape", _opt(F.col("dur"), F.col("dur").rlike(HMS_RE))),
-        _rule("tc_arity", arity_bad == 0),
-        _rule("tc_nonneg", neg_bad == 0),
-        _rule("section_pOf_shape", bad_pof == 0),
-    ]
-    return records_df.withColumn(
-        "_violations", F.filter(F.array(*rules), lambda v: v.isNotNull())
+    return df.withColumn(
+        "_violations", violations(F.struct(*[df[c] for c in df.columns]))
     )
+
+
+def validate_issues(issues_df: DataFrame) -> DataFrame:
+    """Attach ``_violations`` (:func:`issue_violations`) to canonical
+    issue rows."""
+    return _with_violations(issues_df, issue_violations)
+
+
+def validate_pages(pages_df: DataFrame) -> DataFrame:
+    """Attach ``_violations`` (:func:`page_violations`) to canonical page
+    rows."""
+    return _with_violations(pages_df, page_violations)
+
+
+def validate_audio_records(records_df: DataFrame) -> DataFrame:
+    """Attach ``_violations`` (:func:`record_violations`) to canonical
+    audio-record rows."""
+    return _with_violations(records_df, record_violations)
+
 
 
 def split_valid(validated_df: DataFrame, stage: str) -> tuple[DataFrame, DataFrame]:

@@ -158,11 +158,13 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
     ts = ["--ts", "2024-01-01T00:00:00Z"]
 
     before = _cached(spark)
-    _call(spark, "cmd_import", [
+    jobs = _call(spark, "cmd_import", [
         "import", "--input-dir", str(corpus), "--format", "mets_alto",
         "--output-dir", str(store), "--validate", *ts,
     ])
     assert _cached(spark) <= before
+    # 9 jobs when the rules ran as a second pass over the parse frame
+    assert jobs <= 9, f"{jobs} Spark jobs for one validated import"
     assert _lines(spark, store / "issues") == 2
     assert _lines(spark, store / "pages") == 1
 

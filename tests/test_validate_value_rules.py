@@ -1,11 +1,17 @@
 """Value-level canonical-schema rules (ref: utils.py:71-89 JSON-Schema
-validation at write time) ported as column expressions:
+validation at write time), one Python rule set behind both the import's
+in-parse validation and the ``validate_*`` DataFrame functions:
 
 1. the reference's real sample imports (FedGazDe TETML, BCUL/CL ABBYY,
    INA-style ASR) pass every rule — the repo's importers emit
    schema-conformant values end-to-end;
 2. one deliberately-broken fixture per rule is flagged by exactly that
-   rule and routed to the error channel.
+   rule and routed to the error channel;
+3. each rule judges the value a row stores (ASCII digits, three-valued
+   nulls, integers as Arrow stores them);
+4. ``import_issues(validate=True)`` (and its distributed twin) gives the
+   same rows and error lines as ``validate_*`` + ``split_valid`` over an
+   unvalidated import.
 """
 
 import os
@@ -17,6 +23,9 @@ import pytest
 
 from impresso_ta.importers import import_issues
 from impresso_ta.operators.validate import (
+    issue_violations,
+    page_violations,
+    record_violations,
     split_valid,
     validate_audio_records,
     validate_issues,
@@ -340,3 +349,256 @@ def test_broken_rows_route_to_error_channel(spark):
     assert len(err) == 1
     assert err[0]["stage"] == "validate"
     assert "violated st_enum" in err[0]["error"]
+
+
+# ---------------------------------------------------------------------------
+# Rule semantics: a rule judges the value the row stores
+# ---------------------------------------------------------------------------
+
+
+def _page_with(region_c, token_c):
+    r = region([para([line([token("x", token_c)])])], pOf=f"{IID}-i0001")
+    r["c"] = region_c  # region() replaces an empty c with its default
+    return page(f"{IID}-p0001", [r])
+
+
+@pytest.mark.parametrize("c", [[5], []], ids=["one", "empty"])
+def test_short_coord_array_gets_only_its_arity_violation(spark, c):
+    """An origin a short coordinate array lacks is unknown, not an
+    ``element_at`` out of bounds that aborts the whole job."""
+    row = _page_with(c, c)
+    want = ["region_coord_arity", "token_coord_arity"]
+    assert page_violations(row) == want
+    df = validate_pages(spark.createDataFrame([row], PAGE_SCHEMA))
+    assert df.collect()[0]["_violations"] == want
+
+
+def test_id_and_timestamp_digits_are_ascii(spark):
+    """Java's ``\\d`` in ``rlike`` matches ASCII digits only; so must the
+    Python rules (Arabic-Indic digits are ``\\d`` to Python by default)."""
+    arabic = "١٩٠٠"
+    bad_id = f"GDL-{arabic}-01-02-a"
+    bad_issue = _issue_with(
+        id=bad_id, cdt=f"{arabic}-01-01 00:00:00", i=[], pp=[f"{bad_id}-p0001"]
+    )
+    assert issue_violations(bad_issue) == ["id_shape", "cdt_timestamp"]
+    assert _validate_one_issue(spark, bad_issue) == ["id_shape", "cdt_timestamp"]
+    bad_page = _page_with([0, 0, 5, 5], [1, 2, 3, 4])
+    bad_page["id"] = f"{IID}-p{arabic}"
+    assert page_violations(bad_page) == ["id_shape"]
+    assert record_violations(_audio_record(stt=f"{arabic[:2]}:00:00")) == [
+        "stt_shape"
+    ]
+
+
+def test_null_fields_and_elements_fire_no_rule(spark):
+    """Three-valued logic: a null is unknown, and never fires a rule by
+    itself."""
+    ci = content_item(f"{IID}-i0001", pp=[None, 1], ro=None, tp=None, lg=None)
+    nameless = content_item(None, pp=[1], ro=1)
+    row = _issue_with(i=[ci, nameless], st=None, sm=None, cdt=None)
+    # the null CI id is neither foreign nor a duplicate
+    assert issue_violations(row) == []
+    # CI ids are non-nullable in the schema, so the frame gets only the
+    # first CI
+    assert _validate_one_issue(spark, _issue_with(i=[ci], st=None)) == []
+
+    null_origin = _page_with([None, 1, 2, 3], [None, 0, 2, 2])
+    assert page_violations(null_origin) == []
+    df = validate_pages(spark.createDataFrame([null_origin], PAGE_SCHEMA))
+    assert df.collect()[0]["_violations"] == []
+    # a present negative origin still fires next to a null one
+    assert page_violations(_page_with([None, -1, 2, 3], [1, 2, 3, 4])) == [
+        "region_origin_nonneg"
+    ]
+
+    rec = _audio_record()
+    rec["s"][0]["u"][0]["ss"][0]["t"][0]["tc"] = [None, 0.4]
+    assert record_violations(rec) == []
+
+
+def test_integer_fields_are_judged_as_stored(spark):
+    """The pandas→Arrow cast of an int column truncates floats toward
+    zero, so ``[-0.5, 0, 2, 2]`` is stored (and judged) as
+    ``[0, 0, 2, 2]``."""
+    import pandas as pd
+
+    raw = _page_with([1.5, -0.5, 5, 5], [-0.5, 0, 2, 2])
+
+    def emit(batches):
+        for _ in batches:
+            yield pd.DataFrame([raw], columns=PAGE_SCHEMA.fieldNames())
+
+    stored = spark.range(1).mapInPandas(emit, schema=PAGE_SCHEMA)
+    region_row = stored.collect()[0]["r"][0]
+    assert region_row["c"] == [1, 0, 5, 5]
+    assert region_row["p"][0]["l"][0]["t"][0]["c"] == [0, 0, 2, 2]
+    assert page_violations(raw) == []
+    assert validate_pages(stored).collect()[0]["_violations"] == []
+
+    # reading order and page references are integers too
+    ci = content_item(f"{IID}-i0001", pp=[1.9], ro=0.5)
+    assert issue_violations(_issue_with(i=[ci])) == ["ci_ro_positive"]
+
+
+# ---------------------------------------------------------------------------
+# The import's in-parse rules equal the DataFrame functions
+# ---------------------------------------------------------------------------
+
+TS = "2024-01-01T00:00:00Z"
+
+
+def _lines(df):
+    return sorted(df.toJSON().collect())
+
+
+def _two_pass(res):
+    """``validate_*`` + ``split_valid`` over an unvalidated import."""
+    issues, issue_errs = split_valid(validate_issues(res.issues), "validate-issue")
+    pages, page_errs = split_valid(validate_pages(res.pages), "validate-page")
+    records, record_errs = split_valid(
+        validate_audio_records(res.records), "validate-record"
+    )
+    errors = (
+        res.errors.unionByName(issue_errs)
+        .unionByName(page_errs)
+        .unionByName(record_errs)
+    )
+    return [_lines(df) for df in (issues, pages, records, errors)]
+
+
+def _in_parse(res):
+    return [_lines(df) for df in (res.issues, res.pages, res.records, res.errors)]
+
+
+def _assert_parity(disc):
+    want = _two_pass(import_issues(disc, ts=TS))
+    got = _in_parse(import_issues(disc, ts=TS, validate=True))
+    assert got == want
+    return got
+
+
+def _mets_tree(base):
+    """The CLI tests' tree with one rejected page, plus an issue whose
+    alias breaks every id rule (a rejected issue)."""
+    from tests.test_cli import _make_tree_with_rejected_page
+    from tests.test_importer_mets_alto import ALTO_PAGE, METS
+
+    _make_tree_with_rejected_page(base)
+    issue_dir = base / "G.Z" / "1900" / "01" / "02" / "a"
+    (issue_dir / "text").mkdir(parents=True)
+    (issue_dir / "issue-mets.xml").write_text(METS)
+    (issue_dir / "text" / "0001.xml").write_text(ALTO_PAGE)
+
+
+def test_in_parse_validation_matches_dataframe_rules_mets(spark, tmp_path):
+    import json
+
+    from impresso_ta.importers.base import import_issues_distributed
+    from impresso_ta.sources import detect_issues
+
+    corpus = tmp_path / "corpus"
+    _mets_tree(corpus)
+    disc = detect_issues(spark, str(corpus), "mets_alto")
+    issues, pages, records, errors = _assert_parity(disc)
+    assert (len(issues), len(pages), len(records)) == (2, 1, 0)
+    stages = sorted(json.loads(e)["stage"] for e in errors)
+    assert stages == ["validate-issue", "validate-page", "validate-page"]
+
+    dist = import_issues_distributed(
+        spark, str(corpus), "mets_alto", ts=TS, validate=True
+    )
+    assert _in_parse(dist) == [issues, pages, records, errors]
+
+
+INA_XML = """<?xml version="1.0" encoding="UTF-8"?>
+<AudioDoc name="test">
+  <SpeakerList><Speaker spkid="S1" lang="fre"/></SpeakerList>
+  <SegmentList>
+    <SpeechSegment spkid="S1" lang="fre" stime="1.0" etime="4.0">
+      <Word stime="{stime}" dur="0.5">bonjour</Word>
+      <Word stime="1.6" dur="0.4">tous</Word>
+    </SpeechSegment>
+  </SegmentList>
+</AudioDoc>
+"""
+
+
+def test_in_parse_validation_matches_dataframe_rules_audio(spark, tmp_path):
+    """The INA-style fixture, and a twin whose first word starts at a
+    negative offset (a rejected record)."""
+    import json
+
+    from impresso_ta.importers.base import import_issues_distributed
+
+    rows = []
+    for day, stime in (("09", "1.0"), ("10", "-1.0")):
+        issue_dir = tmp_path / "CFCE" / "1945" / "07" / day / "a"
+        issue_dir.mkdir(parents=True)
+        (issue_dir / "broadcast.xml").write_text(INA_XML.format(stime=stime))
+        (issue_dir / "metadata.json").write_text(
+            json.dumps({"title": "Chronique", "duration_sec": 1800})
+        )
+        rows.append(
+            ("CFCE", date(1945, 7, int(day)), "a", str(issue_dir), "ina_asr")
+        )
+    disc = spark.createDataFrame(rows, DISCOVERY_SCHEMA)
+    issues, pages, records, errors = _assert_parity(disc)
+    assert (len(issues), len(pages), len(records)) == (2, 0, 1)
+    assert len(errors) == 1 and "violated tc_nonneg" in errors[0]
+
+    dist = import_issues_distributed(
+        spark, str(tmp_path), "ina_asr", ts=TS, validate=True
+    )
+    assert _in_parse(dist) == [issues, pages, records, errors]
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(f"{REF_SAMPLES}/BCUL/46165"),
+    reason="reference sample data not available",
+)
+def test_in_parse_validation_matches_dataframe_rules_bcul(spark):
+    disc = spark.createDataFrame(
+        [("FAL", date(1762, 12, 7), "a", f"{REF_SAMPLES}/BCUL/46165", "abbyy_bcul")],
+        DISCOVERY_SCHEMA,
+    )
+    _assert_parity(disc)
+
+
+def test_rejected_issue_keeps_its_valid_pages(spark):
+    """A rejected issue leaves ``issues`` but its valid pages stay, as in
+    ``validate_*`` + ``split_valid``; a rejected page leaves ``pages``."""
+    from impresso_ta.importers.base import (
+        IMPORT_ROW_SCHEMA,
+        _split_combined,
+        _validated,
+    )
+
+    good = _page_with([0, 0, 5, 5], [1, 2, 3, 4])
+    bad = _page_with([0, 0, 5, 5], [1, 2, 3])
+    bad["id"] = f"{IID}-p0002"
+    row = _issue_with(st="blog", pp=[good["id"], bad["id"]])
+    issue_row, pages, rejected = _validated(row, [good, bad], is_audio=False)
+    assert issue_row is None and pages == [good]
+    assert rejected == [
+        {
+            "canonical_path": bad["id"],
+            "stage": "validate-page",
+            "error": "violated token_coord_arity",
+        },
+        {
+            "canonical_path": IID,
+            "stage": "validate-issue",
+            "error": "violated st_enum",
+        },
+    ]
+    combined = spark.createDataFrame(
+        [(None, pages, None, IID, None, rejected)], IMPORT_ROW_SCHEMA
+    )
+    res = _split_combined(combined)
+    assert res.issues.count() == 0
+    assert [r["id"] for r in res.pages.collect()] == [good["id"]]
+    assert sorted(r["stage"] for r in res.errors.collect()) == [
+        "validate-issue",
+        "validate-page",
+    ]
