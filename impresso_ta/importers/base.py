@@ -144,11 +144,13 @@ def _parse_one(
             for p in supports:
                 p.setdefault("cdt", ts)
                 p.setdefault("ts", ts)
+        rejected = []
+        if validate:
+            # a rule that raises on a value the parser produced fails
+            # this issue only
+            issue, supports, rejected = _validated(issue, supports, is_audio)
     except Exception as exc:  # noqa: BLE001 errors-as-data
         return _error_row(canonical_path, exc)
-    rejected = []
-    if validate:
-        issue, supports, rejected = _validated(issue, supports, is_audio)
     return {
         "issue": issue,
         "pages": None if is_audio else supports,
@@ -233,7 +235,7 @@ def _split_combined(combined: DataFrame) -> "ImportResult":
     return ImportResult(issues_df, pages_df, records_df, errors_df, combined)
 
 
-def _import_files_udtf(ts: Optional[str], validate: bool = False):
+def _import_files_udtf(ts: Optional[str]):
     """Like :func:`_import_udtf`, but each row carries the issue's file
     BYTES (``files`` = array<struct<relpath,content>>): the task
     materializes them onto executor-local scratch (the same disk Spark
@@ -280,7 +282,7 @@ def _import_files_udtf(ts: Optional[str], validate: bool = False):
                         out.append(
                             _parse_one(
                                 row.format, row.alias, date_str, row.edition,
-                                tmpdir, ts, validate,
+                                tmpdir, ts,
                             )
                         )
                     finally:
@@ -301,7 +303,6 @@ def import_issues_distributed(
     fmt: str,
     ts: Optional[str] = None,
     default_edition: str = "a",
-    validate: bool = False,
 ) -> "ImportResult":
     """Object-store twin of discover+:func:`import_issues` in one pass:
     a ``binaryFile`` listing under ``base_uri`` flows each issue's file
@@ -377,7 +378,7 @@ def import_issues_distributed(
         )
     )
     combined = grouped.mapInPandas(
-        _import_files_udtf(ts, validate), schema=IMPORT_ROW_SCHEMA
+        _import_files_udtf(ts), schema=IMPORT_ROW_SCHEMA
     )
     return _split_combined(combined)
 

@@ -244,34 +244,49 @@ def violation_error(row_id: str, stage: str, violations: list[str]) -> dict:
 
 
 def _with_violations(
-    df: DataFrame, rules: Callable[[dict], list[str]]
+    df: DataFrame, rules: Callable[[dict], list[str]], fields: tuple[str, ...]
 ) -> DataFrame:
-    """Attach ``_violations: array<string>``: ``rules`` over each row."""
+    """Attach ``_violations: array<string>``: ``rules`` over each row.
+
+    Only ``fields``, the columns ``rules`` reads, cross to Python. The UDF
+    is marked nondeterministic so that the optimizer cannot copy it into
+    both a filter on ``_violations`` and a projection of it: a filter and
+    an error message over the same column, as in :func:`split_valid`,
+    would otherwise run the rules twice per row."""
     violations = F.udf(
         lambda row: rules(row.asDict(recursive=True)), ArrayType(StringType())
-    )
+    ).asNondeterministic()
     return df.withColumn(
-        "_violations", violations(F.struct(*[df[c] for c in df.columns]))
+        "_violations", violations(F.struct(*[df[c] for c in fields]))
     )
 
 
 def validate_issues(issues_df: DataFrame) -> DataFrame:
     """Attach ``_violations`` (:func:`issue_violations`) to canonical
     issue rows."""
-    return _with_violations(issues_df, issue_violations)
+    return _with_violations(
+        issues_df,
+        issue_violations,
+        ("id", "st", "sm", "cdt", "ts", "i", "pp", "rr"),
+    )
 
 
 def validate_pages(pages_df: DataFrame) -> DataFrame:
     """Attach ``_violations`` (:func:`page_violations`) to canonical page
     rows."""
-    return _with_violations(pages_df, page_violations)
+    return _with_violations(
+        pages_df, page_violations, ("id", "r", "cdt", "ts", "st", "sm")
+    )
 
 
 def validate_audio_records(records_df: DataFrame) -> DataFrame:
     """Attach ``_violations`` (:func:`record_violations`) to canonical
     audio-record rows."""
-    return _with_violations(records_df, record_violations)
-
+    return _with_violations(
+        records_df,
+        record_violations,
+        ("id", "sm", "st", "cdt", "ts", "stt", "dur", "s"),
+    )
 
 
 def split_valid(validated_df: DataFrame, stage: str) -> tuple[DataFrame, DataFrame]:

@@ -9,9 +9,9 @@ in-parse validation and the ``validate_*`` DataFrame functions:
    rule and routed to the error channel;
 3. each rule judges the value a row stores (ASCII digits, three-valued
    nulls, integers as Arrow stores them);
-4. ``import_issues(validate=True)`` (and its distributed twin) gives the
-   same rows and error lines as ``validate_*`` + ``split_valid`` over an
-   unvalidated import.
+4. ``import_issues(validate=True)`` gives the same rows and error lines
+   as ``validate_*`` + ``split_valid`` over an unvalidated import, and a
+   rule that raises fails one issue, not the task.
 """
 
 import os
@@ -373,6 +373,18 @@ def test_short_coord_array_gets_only_its_arity_violation(spark, c):
     assert df.collect()[0]["_violations"] == want
 
 
+def test_split_valid_runs_the_rules_once_per_row(spark):
+    """The error frame filters on ``_violations`` and formats it; the
+    optimizer must not copy the rules' UDF into both operators."""
+    bad = _page_with([0, 0, 5, 5], [1, 2, 3])
+    _, errors = split_valid(
+        validate_pages(spark.createDataFrame([bad], PAGE_SCHEMA)), "validate-page"
+    )
+    plan = errors._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BatchEvalPython") == 1
+    assert [r["error"] for r in errors.collect()] == ["violated token_coord_arity"]
+
+
 def test_id_and_timestamp_digits_are_ascii(spark):
     """Java's ``\\d`` in ``rlike`` matches ASCII digits only; so must the
     Python rules (Arabic-Indic digits are ``\\d`` to Python by default)."""
@@ -494,7 +506,6 @@ def _mets_tree(base):
 def test_in_parse_validation_matches_dataframe_rules_mets(spark, tmp_path):
     import json
 
-    from impresso_ta.importers.base import import_issues_distributed
     from impresso_ta.sources import detect_issues
 
     corpus = tmp_path / "corpus"
@@ -504,11 +515,6 @@ def test_in_parse_validation_matches_dataframe_rules_mets(spark, tmp_path):
     assert (len(issues), len(pages), len(records)) == (2, 1, 0)
     stages = sorted(json.loads(e)["stage"] for e in errors)
     assert stages == ["validate-issue", "validate-page", "validate-page"]
-
-    dist = import_issues_distributed(
-        spark, str(corpus), "mets_alto", ts=TS, validate=True
-    )
-    assert _in_parse(dist) == [issues, pages, records, errors]
 
 
 INA_XML = """<?xml version="1.0" encoding="UTF-8"?>
@@ -529,8 +535,6 @@ def test_in_parse_validation_matches_dataframe_rules_audio(spark, tmp_path):
     negative offset (a rejected record)."""
     import json
 
-    from impresso_ta.importers.base import import_issues_distributed
-
     rows = []
     for day, stime in (("09", "1.0"), ("10", "-1.0")):
         issue_dir = tmp_path / "CFCE" / "1945" / "07" / day / "a"
@@ -546,11 +550,6 @@ def test_in_parse_validation_matches_dataframe_rules_audio(spark, tmp_path):
     issues, pages, records, errors = _assert_parity(disc)
     assert (len(issues), len(pages), len(records)) == (2, 0, 1)
     assert len(errors) == 1 and "violated tc_nonneg" in errors[0]
-
-    dist = import_issues_distributed(
-        spark, str(tmp_path), "ina_asr", ts=TS, validate=True
-    )
-    assert _in_parse(dist) == [issues, pages, records, errors]
 
 
 @pytest.mark.skipif(
@@ -602,3 +601,26 @@ def test_rejected_issue_keeps_its_valid_pages(spark):
         "validate-issue",
         "validate-page",
     ]
+
+
+def test_raising_rule_fails_one_issue_not_the_task(monkeypatch):
+    """A coordinate of ``inf`` has no integer value (``int()`` raises
+    OverflowError): that issue becomes an import error row, as any other
+    failure inside the parse does."""
+    from impresso_ta.importers import base
+
+    class InfCoords(base.FormatPlugin):
+        name = "inf_coords"
+
+        def parse_issue_dir(self, alias, date, edition, path):
+            row = _issue_with()
+            row["_pages"] = [_page_with([float("inf"), 0, 5, 5], [1, 2, 3, 4])]
+            return row
+
+    monkeypatch.setitem(base._PLUGINS, InfCoords.name, InfCoords())
+    args = ("inf_coords", "GDL", "1900-01-02", "a", "unused", TS)
+    assert base._parse_one(*args)["pages"][0]["id"] == f"{IID}-p0001"
+    row = base._parse_one(*args, validate=True)
+    assert row["issue"] is None and row["pages"] is None
+    assert row["canonical_path"] == IID
+    assert row["error"].startswith("OverflowError: ")
