@@ -18,7 +18,9 @@ Layout
 - ``rebuild``    canonical → rebuilt ("solr") / passim document assembly
 - ``importers``  format plugins (bytes → canonical rows) as mapInPandas UDTFs
 - ``cli``        the ``import`` / ``rebuild`` / ``corpus`` commands
-- ``queries``    the oracle-checked query catalogue behind ``__spark_entry__``
+- ``queries``    the catalogue behind ``__spark_entry__``: package operators
+                 over synthetic tables, each checked against a DuckDB
+                 oracle by ``tools/check.py``
 """
 
 __version__ = "0.1.0"

@@ -80,6 +80,38 @@ def _split_fractions(spec: str) -> dict[str, float]:
     return fractions
 
 
+def _non_negative_int(spec: str) -> int:
+    """A count or width where 0 means "off". A negative one is rejected
+    here, before it reaches the job: a negative ``--domain-cap`` would
+    keep no row, and a negative ``--shards`` would fail only after the
+    corpus is written."""
+    try:
+        value = int(spec)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"{spec!r} is not an integer") from None
+    if value < 0:
+        raise argparse.ArgumentTypeError(f"{value} is negative")
+    return value
+
+
+def _positive_int(spec: str) -> int:
+    value = _non_negative_int(spec)
+    if value == 0:
+        raise argparse.ArgumentTypeError("0 is not positive")
+    return value
+
+
+def _jaccard_threshold(spec: str) -> float:
+    """A Jaccard similarity threshold in (0, 1]."""
+    try:
+        value = float(spec)
+    except ValueError:
+        value = math.nan
+    if not 0 < value <= 1:
+        raise argparse.ArgumentTypeError(f"{spec!r} is not in (0, 1]")
+    return value
+
+
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="impresso_ta")
     sub = p.add_subparsers(dest="command", required=True)
@@ -148,13 +180,13 @@ def _build_parser() -> argparse.ArgumentParser:
     cor.add_argument("--no-gopher", action="store_true")
     cor.add_argument(
         "--line-spans",
-        type=int,
+        type=_non_negative_int,
         default=10,
         help="line-dedup span width in words; 0 disables",
     )
     cor.add_argument(
         "--substring-dedup",
-        type=int,
+        type=_non_negative_int,
         default=0,
         metavar="K",
         help="corpus-wide exact-substring dedup window (tokens); 0 "
@@ -164,7 +196,7 @@ def _build_parser() -> argparse.ArgumentParser:
     cor.add_argument("--no-doc-dedup", action="store_true")
     cor.add_argument(
         "--jaccard-threshold",
-        type=float,
+        type=_jaccard_threshold,
         default=None,
         help="near-dup Jaccard threshold for the 'jaccard' doc-dedup "
         "form (default 0.7). IGNORED when dedup runs through "
@@ -185,7 +217,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     cor.add_argument(
         "--domain-cap",
-        type=int,
+        type=_non_negative_int,
         default=0,
         metavar="N",
         help="keep at most N docs per --domain-col value (RefinedWeb "
@@ -208,7 +240,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     cor.add_argument(
         "--dsir-n",
-        type=int,
+        type=_non_negative_int,
         default=0,
         metavar="N",
         help="number of docs DSIR selection keeps (required with "
@@ -240,7 +272,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     cor.add_argument(
         "--quality-dim",
-        type=int,
+        type=_positive_int,
         default=64,
         metavar="D",
         help="hashed feature dimension the --quality-model was trained "
@@ -263,7 +295,10 @@ def _build_parser() -> argparse.ArgumentParser:
     cor.add_argument("--temperature-target", type=int, default=0)
     cor.add_argument("--domain-col", default="lang")
     cor.add_argument(
-        "--shards", type=int, default=0, help="also export N training shards"
+        "--shards",
+        type=_non_negative_int,
+        default=0,
+        help="also export N training shards",
     )
     cor.add_argument(
         "--split",

@@ -61,8 +61,8 @@ def scd2_history(
     current row, which also gets ``is_current = true``).
 
     One window on the key (lead over version order). Downstream
-    point-in-time joins become ordinary range joins
-    (``operators/rangejoin.py``) on [valid_from, valid_to).
+    point-in-time joins become ordinary range joins on
+    [valid_from, valid_to).
 
     Tie semantics: intervals are built from ``version_cols[0]`` ONLY.
     Versions that tie on the first version column (distinct only in a

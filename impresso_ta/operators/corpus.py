@@ -866,8 +866,8 @@ def dsir_resample_threshold(
     merges n·n_partitions candidate rows on the driver — right for
     eval-scale n, wrong for "keep 2B of 10B docs". Here the cutoff is
     ONE approx-quantile aggregate (Greenwald-Khanna: fixed-size
-    mergeable rank summaries, the sketch_quantile_accuracy scale
-    argument) broadcast back as a one-row relation, then a row-local
+    mergeable rank summaries, combined map-side per
+    partition) broadcast back as a one-row relation, then a row-local
     filter — no global sort, nothing corpus-sized near the driver, and
     the scored pool is persisted so the weight computation runs once
     for both passes. The kept count is approximate within the sketch's

@@ -7,10 +7,13 @@ column is aliased identically on both sides, aggregates over doubles are
 rounded so engine-order-of-summation differences can't flip the value
 hash, and counts are cast to the same width.
 
-The queries run over the driver's synthetic TPC-H-ish tables; each maps a
-reference operator (file:line cited per entry) onto that star schema so
-the semantics are oracle-checkable. Engine-native operators (rebuild,
-importers) are additionally exercised on canonical fixtures in tests/.
+Every entry runs ``impresso_ta`` code: a package operator applied to the
+synthetic tables under ``sf_dir`` (mostly ``documents`` and
+``embeddings``), checked against an independent DuckDB formulation of the
+same semantics. ``tools/preflight.py --static`` rejects an entry that
+calls no package code, since its oracle match would test only Spark.
+Engine-native operators (rebuild, importers) are additionally exercised
+on canonical fixtures in tests/.
 """
 
 from __future__ import annotations
@@ -23,19 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from impresso_ta.operators import dedup, similarity, text_analysis
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,773 +58,6 @@ def q(name: str, oracle: str | None, doc: str = ""):
         return fn
 
     return wrap
-
-
-# =====================================================================
-# Headline relational queries (A2-style stats, multi-join lifecycles)
-# =====================================================================
-
-@q(
-    "q1_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           round(avg(l_quantity), 4) AS avg_qty,
-           round(avg(l_extendedprice), 4) AS avg_price,
-           round(avg(l_discount), 4) AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-    "Yearly-stats-style full-scan aggregation (SURVEY A2; ref core.py:649-653)",
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2001-09-01 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                2,
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-@q(
-    "q3_shipping_priority",
-    """
-    SELECT o_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-           o_orderpriority
-    FROM customer JOIN orders ON c_custkey = o_custkey
-                  JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY o_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, o_orderkey ASC
-    LIMIT 10
-    """,
-    "3-table join + top-k (SURVEY J2/O4)",
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select(
-            "o_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-@q(
-    "q5_local_supplier_volume",
-    """
-    SELECT n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM region JOIN nation ON n_regionkey = r_regionkey
-                JOIN customer ON c_nationkey = n_nationkey
-                JOIN orders ON o_custkey = c_custkey
-                JOIN lineitem ON l_orderkey = o_orderkey
-                JOIN supplier ON l_suppkey = s_suppkey
-                            AND s_nationkey = c_nationkey
-    WHERE r_name = 'EUROPE'
-    GROUP BY n_name
-    """,
-    "5-way join with dimension pruning (SURVEY J9 broadcast dims)",
-)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    n = t(spark, sf_dir, "nation")
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    s = t(spark, sf_dir, "supplier")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, (li.l_suppkey == s.s_suppkey) & (s.s_nationkey == c.c_nationkey))
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-# =====================================================================
-# Filters (SURVEY F1-F11)
-# =====================================================================
-
-@q(
-    "f1_alias_filter",
-    """
-    SELECT c_mktsegment, count(*) AS n_customers,
-           round(sum(c_acctbal), 2) AS total_acctbal
-    FROM customer
-    WHERE c_mktsegment IN ('BUILDING', 'AUTOMOBILE', 'MACHINERY')
-    GROUP BY c_mktsegment
-    """,
-    "Alias include-filter (SURVEY F1; ref detect.py:159-166)",
-)
-def f1_alias_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE", "MACHINERY"))
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-    )
-
-
-@q(
-    "f2_date_filter",
-    """
-    SELECT strftime(o_orderdate, '%Y-%m') AS month, count(*) AS n_orders
-    FROM orders
-    WHERE o_orderdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-                          AND TIMESTAMP '1997-12-31 00:00:00'
-    GROUP BY 1
-    """,
-    "Config-driven date-range predicate (SURVEY F2; ref detect.py:12-66)",
-)
-def f2_date_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderdate").between(
-                F.lit("1996-01-01 00:00:00").cast("timestamp"),
-                F.lit("1997-12-31 00:00:00").cast("timestamp"),
-            )
-        )
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@q(
-    "f3_incremental_antijoin",
-    """
-    SELECT o_orderstatus, count(*) AS n_orders
-    FROM orders
-    WHERE NOT EXISTS (
-        SELECT 1 FROM lineitem
-        WHERE l_orderkey = o_orderkey AND l_linenumber >= 5
-    )
-    GROUP BY o_orderstatus
-    """,
-    "Incremental-skip anti-join (SURVEY F3/J1; ref generic_importer.py:240-249)",
-)
-def f3_incremental_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    done = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_linenumber") >= 5)
-        .select(F.col("l_orderkey").alias("o_orderkey"))
-    )
-    return (
-        o.join(done, "o_orderkey", "left_anti")
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@q(
-    "f6_language_filter",
-    """
-    SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents
-    WHERE lang IN ('fr', 'de')
-    GROUP BY lang
-    """,
-    "Language keep-filter (SURVEY F6; ref rebuilder.py:269-276)",
-)
-def f6_language_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "documents")
-        .filter(F.col("lang").isin("fr", "de"))
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-        )
-    )
-
-
-# =====================================================================
-# Joins (SURVEY J2/J3/J9)
-# =====================================================================
-
-@q(
-    "j2_attach_supports",
-    """
-    SELECT o_orderkey, o.n_items, round(o.sum_qty, 2) AS sum_qty,
-           round(o_totalprice, 2) AS totalprice
-    FROM orders JOIN (
-        SELECT l_orderkey, count(*)::BIGINT AS n_items, sum(l_quantity) AS sum_qty
-        FROM lineitem GROUP BY l_orderkey
-    ) o ON l_orderkey = o_orderkey
-    """,
-    "Issue⋈pages attach (SURVEY J2; ref rebuilders/helpers.py:136-173)",
-)
-def j2_attach_supports(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    li = (
-        t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum("l_quantity").alias("sum_qty"),
-        )
-    )
-    return o.join(li, o.o_orderkey == li.l_orderkey).select(
-        "o_orderkey",
-        "n_items",
-        F.round("sum_qty", 2).alias("sum_qty"),
-        F.round("o_totalprice", 2).alias("totalprice"),
-    )
-
-
-@q(
-    "j3_missing_support_flag",
-    """
-    SELECT has_problem, count(*) AS n_orders
-    FROM (
-        SELECT o_orderkey,
-               (l.l_orderkey IS NULL) AS has_problem
-        FROM orders LEFT JOIN (
-            SELECT DISTINCT l_orderkey FROM lineitem WHERE l_linenumber = 4
-        ) l ON l.l_orderkey = o_orderkey
-    )
-    GROUP BY has_problem
-    """,
-    "Left-outer with problem flag (SURVEY J3; ref paper_rebuilders.py:285-306)",
-)
-def j3_missing_support_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    l4 = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_linenumber") == 4)
-        .select("l_orderkey")
-        .distinct()
-    )
-    return (
-        o.join(l4, o.o_orderkey == l4.l_orderkey, "left")
-        .select(F.col("l_orderkey").isNull().alias("has_problem"))
-        .groupBy("has_problem")
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@q(
-    "j9_broadcast_metadata_lookup",
-    """
-    SELECT p_brand, count(*) AS n_items,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_brand
-    """,
-    "Broadcast dimension lookup (SURVEY J9; ref fedgaz/classes.py:175-241)",
-)
-def j9_broadcast_metadata_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    p = t(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-        )
-    )
-
-
-# =====================================================================
-# Aggregations (SURVEY A2/A5/A6/A7)
-# =====================================================================
-
-@q(
-    "a2_yearly_stats",
-    """
-    SELECT CAST(year(o_orderdate) AS INT) AS year,
-           count(*) AS n_orders,
-           count(DISTINCT o_custkey) AS n_customers,
-           round(sum(o_totalprice), 2) AS total_price
-    FROM orders GROUP BY 1
-    """,
-    "Manifest yearly stats (SURVEY A2; ref core.py:649-653)",
-)
-def a2_yearly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.year("o_orderdate").alias("year"))
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-
-
-@q(
-    "a5_year_chunk",
-    """
-    SELECT CAST(year(o_orderdate) - year(o_orderdate) % 2 AS INT) AS year_chunk,
-           count(*) AS n_orders
-    FROM orders GROUP BY 1
-    """,
-    "Year-window chunk grouping (SURVEY A5; ref core.py:365-383)",
-)
-def a5_year_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    yr = F.year("o_orderdate")
-    return (
-        t(spark, sf_dir, "orders")
-        .groupBy((yr - yr % 2).alias("year_chunk"))
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@q(
-    "a6_majority_vote",
-    """
-    SELECT n_name, o_orderpriority AS top_priority, n AS n_votes
-    FROM (
-        SELECT n_name, o_orderpriority, count(*) AS n,
-               row_number() OVER (
-                   PARTITION BY n_name
-                   ORDER BY count(*) DESC, o_orderpriority ASC
-               ) AS rk
-        FROM orders JOIN customer ON o_custkey = c_custkey
-                    JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name, o_orderpriority
-    ) WHERE rk = 1
-    """,
-    "Majority vote / mode (SURVEY A6; ref ina/classes.py:234-249)",
-)
-def a6_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    n = t(spark, sf_dir, "nation")
-    counts = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name", "o_orderpriority")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("n_name").orderBy(
-        F.desc("n"), F.asc("o_orderpriority")
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "n_name",
-            F.col("o_orderpriority").alias("top_priority"),
-            F.col("n").alias("n_votes"),
-        )
-    )
-
-
-@q(
-    "a7_bounding_box",
-    """
-    SELECT label,
-           round(min(list_min(embedding))::DOUBLE, 4) AS min_val,
-           round(max(list_max(embedding))::DOUBLE, 4) AS max_val,
-           count(*) AS n_vecs
-    FROM embeddings GROUP BY label
-    """,
-    "Enclosing-box aggregation (SURVEY A7; ref swissinfo/helpers.py:118-131)",
-)
-def a7_bounding_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "embeddings")
-        .groupBy("label")
-        .agg(
-            F.round(F.min(F.array_min("embedding")).cast("double"), 4).alias("min_val"),
-            F.round(F.max(F.array_max("embedding")).cast("double"), 4).alias("max_val"),
-            F.count("*").alias("n_vecs"),
-        )
-    )
-
-
-# =====================================================================
-# Windows (SURVEY W1/W3/W4)
-# =====================================================================
-
-@q(
-    "w1_reading_order",
-    """
-    SELECT o_orderkey,
-           o_custkey,
-           CAST(row_number() OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-           ) AS INT) AS reading_order
-    FROM orders
-    """,
-    "Deterministic reading order (SURVEY W1; ref utils.py:139-158)",
-)
-def w1_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        t(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.row_number().over(w).alias("reading_order"),
-        )
-    )
-
-
-@q(
-    "w3_running_offsets",
-    """
-    SELECT l_orderkey, l_linenumber,
-           round(sum(line_qty) OVER (
-               PARTITION BY l_orderkey ORDER BY l_linenumber
-               ROWS UNBOUNDED PRECEDING
-           ), 2) AS running_qty
-    FROM (
-        SELECT l_orderkey, l_linenumber, sum(l_quantity) AS line_qty
-        FROM lineitem GROUP BY 1, 2
-    )
-    """,
-    "Char-offset accumulation (SURVEY W3; ref paper_rebuilders.py:10-97)",
-)
-def w3_running_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (l_orderkey, l_linenumber) is not unique in the synthetic data;
-    # instead of pre-aggregating (a second shuffle on BOTH keys), use the
-    # window's default RANGE frame: with ORDER BY l_linenumber every row
-    # of an equal-linenumber group sees the cumulative sum INCLUDING its
-    # whole group, so any one row per group is the answer — and the
-    # dropDuplicates reuses the window's hash partitioning (clustering by
-    # a subset key satisfies the two-key distribution). ONE exchange
-    # total where the groupBy-then-window form needs two (plan-tested).
-    w = Window.partitionBy("l_orderkey").orderBy("l_linenumber")
-    return (
-        t(spark, sf_dir, "lineitem")
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.round(F.sum("l_quantity").over(w), 2).alias("running_qty"),
-        )
-        .dropDuplicates(["l_orderkey", "l_linenumber"])
-    )
-
-
-@q(
-    "w4_prev_next_context",
-    """
-    SELECT event_id,
-           lag(event_type) OVER w AS prev_type,
-           lead(event_type) OVER w AS next_type
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-    "prev/next token context (SURVEY W4; ref paper_rebuilders.py:76-83)",
-)
-def w4_prev_next_context(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.lag("event_type").over(w).alias("prev_type"),
-            F.lead("event_type").over(w).alias("next_type"),
-        )
-    )
-
-
-# =====================================================================
-# Sort / set ops / scalar functions (SURVEY O2, SET2, X4/X5/X9/X13)
-# =====================================================================
-
-@q(
-    "o2_sort_dedup_pages",
-    """
-    SELECT l_orderkey,
-           array_to_string(list_sort(list_distinct(list(l_partkey))), ',') AS part_list
-    FROM lineitem GROUP BY l_orderkey
-    """,
-    "sorted(set(pp)) page lists (SURVEY O2; ref rebuilders/helpers.py:355-358)",
-)
-def o2_sort_dedup_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_set("l_partkey")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            ).alias("part_list")
-        )
-    )
-
-
-@q(
-    "set2_carveout_union",
-    """
-    WITH with_orders AS (
-        SELECT DISTINCT c_custkey, c_mktsegment FROM customer
-        WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    ),
-    finished AS (
-        SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'
-    )
-    SELECT branch, c_mktsegment, count(*) AS n FROM (
-        SELECT 'active_only' AS branch, c_mktsegment
-        FROM with_orders WHERE c_custkey NOT IN (SELECT o_custkey FROM finished)
-        UNION ALL
-        SELECT 'with_finished' AS branch, c_mktsegment
-        FROM with_orders WHERE c_custkey IN (SELECT o_custkey FROM finished)
-    ) GROUP BY branch, c_mktsegment
-    """,
-    "Semi/anti carve-out + union (SURVEY SET2/SET3; ref lux/helpers.py:120-149)",
-)
-def set2_carveout_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders")
-    with_orders = c.join(
-        o.select(F.col("o_custkey").alias("c_custkey")).distinct(), "c_custkey", "left_semi"
-    ).select("c_custkey", "c_mktsegment")
-    finished = (
-        o.filter(F.col("o_orderstatus") == "F")
-        .select(F.col("o_custkey").alias("c_custkey"))
-        .distinct()
-    )
-    active_only = with_orders.join(finished, "c_custkey", "left_anti").withColumn(
-        "branch", F.lit("active_only")
-    )
-    with_finished = with_orders.join(finished, "c_custkey", "left_semi").withColumn(
-        "branch", F.lit("with_finished")
-    )
-    return (
-        active_only.unionByName(with_finished)
-        .groupBy("branch", "c_mktsegment")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@q(
-    "x4_canonical_ids",
-    """
-    SELECT printf('ORD-%s-%s', strftime(o_orderdate, '%Y-%m-%d'),
-                  chr(97 + CAST(o_orderkey % 3 AS INT))) AS issue_id,
-           o_orderkey,
-           CAST(year(o_orderdate) AS INT) AS parsed_year,
-           chr(97 + CAST(o_orderkey % 3 AS INT)) AS parsed_edition
-    FROM orders WHERE o_orderkey % 50 = 0
-    """,
-    "Canonical ID mint + parse round-trip (SURVEY X4; ref core.py:264-276)",
-)
-def x4_canonical_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 50 == 0)
-    edition = F.char(F.lit(97) + (F.col("o_orderkey") % 3).cast("int"))
-    issue_id = F.concat_ws(
-        "-", F.lit("ORD"), F.date_format("o_orderdate", "yyyy-MM-dd"), edition
-    )
-    parsed = F.split(issue_id, "-")
-    return o.select(
-        issue_id.alias("issue_id"),
-        "o_orderkey",
-        parsed[1].cast("int").alias("parsed_year"),
-        F.element_at(parsed, -1).alias("parsed_edition"),
-    )
-
-
-@q(
-    "x5_date_parts",
-    """
-    SELECT CAST(year(o_orderdate) AS INT) AS y,
-           CAST(quarter(o_orderdate) AS INT) AS q,
-           strftime(o_orderdate, '%Y-%m-%d') AS iso_day,
-           count(*) AS n
-    FROM orders GROUP BY 1, 2, 3
-    """,
-    "Date construction/parts (SURVEY X5; ref detect.py:193, helpers.py:194-219)",
-)
-def x5_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "orders")
-        .groupBy(
-            F.year("o_orderdate").alias("y"),
-            F.quarter("o_orderdate").alias("q"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("iso_day"),
-        )
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@q(
-    "x9_iiif_links",
-    """
-    SELECT p_partkey,
-           'https://iiif.example.org/' || p_partkey || '/' ||
-           p_size || ',0,' || p_size || ',' || p_size ||
-           '/full/0/default.jpg' AS iiif_link
-    FROM part WHERE p_size >= 30
-    """,
-    "IIIF link reconstruction (SURVEY X9; ref rebuilders/helpers.py:441-485)",
-)
-def x9_iiif_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = t(spark, sf_dir, "part").filter(F.col("p_size") >= 30)
-    return p.select(
-        "p_partkey",
-        F.concat(
-            F.lit("https://iiif.example.org/"),
-            F.col("p_partkey").cast("string"),
-            F.lit("/"),
-            F.col("p_size").cast("string"),
-            F.lit(",0,"),
-            F.col("p_size").cast("string"),
-            F.lit(","),
-            F.col("p_size").cast("string"),
-            F.lit("/full/0/default.jpg"),
-        ).alias("iiif_link"),
-    )
-
-
-@q(
-    "x13_json_extract",
-    """
-    SELECT event_type,
-           round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 4) AS avg_k,
-           count(*) AS n
-    FROM events GROUP BY event_type
-    """,
-    "JSON decode (SURVEY X13; ref rebuilder.py:279-286)",
-)
-def x13_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(F.round(F.avg("k"), 4).alias("avg_k"), F.count("*").alias("n"))
-    )
-
-
-# =====================================================================
-# Streaming-style windowed aggregation (batch parity; SURVEY §2.9)
-# =====================================================================
-
-@q(
-    "events_hourly_window",
-    """
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, count(*) AS n, round(avg(value), 4) AS avg_value
-    FROM events GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
-    "Tumbling event-time window (Structured Streaming parity in batch)",
-)
-def events_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.round(F.avg("value"), 4).alias("avg_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "avg_value",
-        )
-    )
-
-
-@q(
-    "events_sliding_window",
-    """
-    WITH g AS (
-        SELECT event_type, value,
-               date_trunc('hour', ts)
-                   + (extract(minute FROM ts)::INT // 15)
-                     * INTERVAL 15 MINUTE AS grid
-        FROM events),
-    w AS (SELECT event_type, value,
-                 grid - k * INTERVAL 15 MINUTE AS ws
-          FROM g, unnest(range(0, 4)) AS t(k))
-    SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, count(*) AS n, round(avg(value), 4) AS avg_value
-    FROM w GROUP BY 1, 2
-    """,
-    "SLIDING event-time window (1 hour / 15 min slide): each event "
-    "contributes to window/slide = 4 overlapping windows — the rate/"
-    "trend shape tumbling windows can't express. Spark's window() "
-    "expands rows 4x BEFORE the aggregate (a row-local generator, no "
-    "join), then one map-side-combined groupBy. The oracle replays "
-    "the expansion as an explicit "
-    "4-window unnest off the 15-minute grid.",
-)
-def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("value"), 4).alias("avg_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "avg_value",
-        )
-    )
 
 
 # =====================================================================
@@ -1559,110 +782,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 # =====================================================================
-# Additional inventory coverage (W2, A8/A9, F8, X6/X7/X10, embedding ops)
+# Additional inventory coverage (X6/X7 coordinates, embedding ops)
 # =====================================================================
-
-@q(
-    "w2_ci_numbering",
-    """
-    SELECT printf('%s-i%04d', printf('C%05d', o_custkey),
-                  CAST(row_number() OVER (
-                      PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                  ) AS INT)) AS ci_id,
-           o_orderkey
-    FROM orders
-    """,
-    "Deterministic CI numbering i0001.. (SURVEY W2; ref lux/classes.py:249-303)",
-)
-def w2_ci_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        t(spark, sf_dir, "orders")
-        .select(
-            F.format_string(
-                "%s-i%04d",
-                F.format_string("C%05d", F.col("o_custkey")),
-                F.row_number().over(w),
-            ).alias("ci_id"),
-            "o_orderkey",
-        )
-    )
-
-
-@q(
-    "a8_avg_group_size",
-    """
-    SELECT o_orderpriority,
-           round(avg(n_items), 4) AS avg_items,
-           count(*) AS n_orders
-    FROM (
-        SELECT o_orderpriority, o_orderkey, count(*)::BIGINT AS n_items
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-    ) GROUP BY o_orderpriority
-    """,
-    "Average group size (SURVEY A8; ref swissinfo/classes.py:76-78)",
-)
-def a8_avg_group_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    per_order = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority", "o_orderkey")
-        .agg(F.count("*").alias("n_items"))
-    )
-    return per_order.groupBy("o_orderpriority").agg(
-        F.round(F.avg("n_items"), 4).alias("avg_items"),
-        F.count("*").alias("n_orders"),
-    )
-
-
-@q(
-    "a9_consensus_flag",
-    """
-    SELECT all_clean, count(*) AS n_orders FROM (
-        SELECT l_orderkey, bool_and(l_returnflag <> 'R') AS all_clean
-        FROM lineitem GROUP BY l_orderkey
-    ) GROUP BY all_clean
-    """,
-    "Convert-coords consensus bool_and (SURVEY A9; ref paper_rebuilders.py:315-319)",
-)
-def a9_consensus_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.bool_and(F.col("l_returnflag") != "R").alias("all_clean"))
-        .groupBy("all_clean")
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-@q(
-    "f8_title_blacklist",
-    """
-    SELECT p_brand,
-           count(*) FILTER (clean_name IS NULL) AS n_blacklisted,
-           count(*) FILTER (clean_name IS NOT NULL) AS n_titled
-    FROM (
-        SELECT p_brand,
-               CASE WHEN lower(p_name) LIKE 'part_0%' THEN NULL
-                    ELSE p_name END AS clean_name
-        FROM part
-    ) GROUP BY p_brand
-    """,
-    "Title blacklist nulling (SURVEY F8; ref olive/helpers.py:217-233)",
-)
-def f8_title_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = t(spark, sf_dir, "part").withColumn(
-        "clean_name",
-        F.when(F.lower(F.col("p_name")).like("part_0%"), None).otherwise(
-            F.col("p_name")
-        ),
-    )
-    return p.groupBy("p_brand").agg(
-        F.count(F.when(F.col("clean_name").isNull(), 1)).alias("n_blacklisted"),
-        F.count("clean_name").alias("n_titled"),
-    )
 
 
 @q(
@@ -1725,27 +846,6 @@ def x7_rescale_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(
             F.transform(rescaled, lambda x: x.cast("string")), ","
         ).alias("rescaled"),
-    )
-
-
-@q(
-    "x10_text_breaks",
-    """
-    SELECT doc_id,
-           substring(text, 1, 40) AS chunk0,
-           substring(text, 41, 40) AS chunk1,
-           length(text)::BIGINT AS n_chars
-    FROM documents
-    """,
-    "Break-offset substring application (SURVEY X10; ref helpers.py:390-414)",
-)
-def x10_text_breaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.substring("text", 1, 40).alias("chunk0"),
-        F.substring("text", 41, 40).alias("chunk1"),
-        F.length("text").cast("long").alias("n_chars"),
     )
 
 
@@ -1839,206 +939,6 @@ def similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vecs"), F.min("vec_id").alias("min_vec"))
-    )
-
-
-# =====================================================================
-# Remaining inventory: F9/F11, SET4, A1, X8/X12, O5
-# =====================================================================
-
-@q(
-    "f9_token_filter",
-    """
-    SELECT doc_id,
-           len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                           w -> len(w) >= 4))::BIGINT AS n_long_tokens,
-           len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_tokens
-    FROM documents
-    """,
-    "Token drop-filter on the exploded/array token frame (SURVEY F9; "
-    "ref tetml/helpers.py:43-73)",
-)
-def f9_token_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    return t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(F.filter(toks, lambda w: F.length(w) >= 4))
-        .cast("long")
-        .alias("n_long_tokens"),
-        F.size(toks).cast("long").alias("n_tokens"),
-    )
-
-
-@q(
-    "f11_medium_dispatch",
-    """
-    SELECT medium, count(*) AS n, round(sum(o_totalprice), 2) AS total
-    FROM (
-        SELECT CASE WHEN o_orderstatus = 'O' THEN 'audio'
-                    WHEN o_orderstatus = 'F' THEN 'print'
-                    ELSE 'typescript' END AS medium,
-               o_totalprice
-        FROM orders
-    ) GROUP BY medium
-    """,
-    "Source-medium dispatch into per-branch pipelines (SURVEY F11; "
-    "ref core.py:182-206)",
-)
-def f11_medium_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").withColumn(
-        "medium",
-        F.when(F.col("o_orderstatus") == "O", "audio")
-        .when(F.col("o_orderstatus") == "F", "print")
-        .otherwise("typescript"),
-    )
-    return o.groupBy("medium").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("o_totalprice"), 2).alias("total"),
-    )
-
-
-@q(
-    "set4_inverted_index",
-    """
-    SELECT w AS token, count(DISTINCT doc_id) AS df, min(doc_id) AS first_doc
-    FROM (
-        SELECT doc_id, unnest(list_distinct(
-            regexp_split_to_array(trim(text), '\\s+'))) AS w
-        FROM documents
-    ) GROUP BY w HAVING count(DISTINCT doc_id) >= 100
-    """,
-    "Inverted index token→docs (SURVEY SET4; ref olive/helpers.py:704-724)",
-)
-def set4_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
-            ).alias("token"),
-        )
-        .groupBy("token")
-        .agg(
-            F.countDistinct("doc_id").alias("df"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        .filter(F.col("df") >= 100)
-    )
-
-
-@q(
-    "a1_package_grouping",
-    """
-    SELECT source, lang, count(*) AS n_docs,
-           min(doc_id) AS first_id, max(doc_id) AS last_id,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents GROUP BY source, lang
-    """,
-    "Package-by-(alias,year) grouping for the sink (SURVEY A1/A3; "
-    "ref core.py:406-414)",
-)
-def a1_package_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "documents")
-        .groupBy("source", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("first_id"),
-            F.max("doc_id").alias("last_id"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-        )
-    )
-
-
-@q(
-    "x8_ark_encoding",
-    """
-    SELECT p_partkey,
-           replace('ark:/12148/item' || p_partkey || '/page/1', '/', '%2f')
-               AS encoded_ark
-    FROM part WHERE p_partkey % 20 = 0
-    """,
-    "ARK percent-encoding (SURVEY X8; ref lux/helpers.py:40-49)",
-)
-def x8_ark_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = t(spark, sf_dir, "part").filter(F.col("p_partkey") % 20 == 0)
-    ark = F.concat(
-        F.lit("ark:/12148/item"),
-        F.col("p_partkey").cast("string"),
-        F.lit("/page/1"),
-    )
-    return p.select(
-        "p_partkey",
-        F.regexp_replace(ark, "/", "%2f").alias("encoded_ark"),
-    )
-
-
-@q(
-    "x12_language_normalization",
-    """
-    SELECT norm_lang, count(*) AS n_docs FROM (
-        SELECT CASE lang WHEN 'fr' THEN 'french' WHEN 'de' THEN 'german'
-                         WHEN 'en' THEN 'english' WHEN 'es' THEN 'spanish'
-                         ELSE lang END AS norm_lang
-        FROM documents
-    ) GROUP BY norm_lang
-    """,
-    "Literal-map language normalization (SURVEY X12; "
-    "ref olive/helpers.py:690-701)",
-)
-def x12_language_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mapping = F.create_map(
-        F.lit("fr"), F.lit("french"),
-        F.lit("de"), F.lit("german"),
-        F.lit("en"), F.lit("english"),
-        F.lit("es"), F.lit("spanish"),
-    )
-    d = t(spark, sf_dir, "documents").select(
-        F.coalesce(mapping[F.col("lang")], F.col("lang")).alias("norm_lang")
-    )
-    return d.groupBy("norm_lang").agg(F.count("*").alias("n_docs"))
-
-
-@q(
-    "events_sessionize",
-    """
-    WITH marked AS (
-        SELECT user_id, ts,
-               CASE WHEN ts - lag(ts) OVER w <= INTERVAL 30 MINUTE
-                    THEN 0 ELSE 1 END AS new_session
-        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    sessions AS (
-        SELECT user_id, ts,
-               sum(new_session) OVER (
-                   PARTITION BY user_id ORDER BY ts
-                   ROWS UNBOUNDED PRECEDING
-               ) AS session_id
-        FROM marked
-    )
-    SELECT user_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           count(*) AS n_events
-    FROM sessions GROUP BY user_id, session_id
-    """,
-    "Session windows (30-min gap) — Structured Streaming session_window "
-    "semantics checked against a gaps-and-islands oracle",
-)
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.session_window("ts", "30 minutes").alias("w"), F.col("user_id")
-        )
-        .agg(F.count("*").alias("n_events"), F.min("ts").alias("first_ts"))
-        .select(
-            "user_id",
-            F.date_format("first_ts", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            "n_events",
-        )
     )
 
 
@@ -2734,158 +1634,6 @@ def corpus_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "a11_percentile_stats",
-    """
-    WITH ranked AS (
-        SELECT l_returnflag, l_extendedprice AS v,
-               row_number() OVER (
-                   PARTITION BY l_returnflag
-                   ORDER BY l_extendedprice, l_orderkey, l_linenumber
-               ) AS rn,
-               count(*) OVER (PARTITION BY l_returnflag) AS n
-        FROM lineitem
-    )
-    SELECT l_returnflag,
-           round(max(CASE WHEN rn = greatest(1, ceil(0.5 * n)) THEN v END), 2) AS p50,
-           round(max(CASE WHEN rn = greatest(1, ceil(0.95 * n)) THEN v END), 2) AS p95,
-           round(avg(v), 2) AS mean
-    FROM ranked GROUP BY l_returnflag
-    """,
-    "Distribution stats for manifest/corpus profiling. DISCRETE (rank-"
-    "selected) percentiles: actual data values, no float interpolation — "
-    "interpolated forms differ between engines by 1 ulp on .xx5 "
-    "boundaries. At 100 TB swap for approx_percentile (t-digest sketch, "
-    "map-side mergeable, no per-group sort)",
-)
-def a11_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_returnflag").orderBy(
-        "l_extendedprice", "l_orderkey", "l_linenumber"
-    )
-    wn = Window.partitionBy("l_returnflag")
-    ranked = li.select(
-        "l_returnflag",
-        F.col("l_extendedprice").alias("v"),
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wn).alias("n"),
-    )
-    def at(p):
-        return F.max(
-            F.when(
-                F.col("rn") == F.greatest(F.lit(1), F.ceil(p * F.col("n"))),
-                F.col("v"),
-            )
-        )
-    return ranked.groupBy("l_returnflag").agg(
-        F.round(at(0.5), 2).alias("p50"),
-        F.round(at(0.95), 2).alias("p95"),
-        F.round(F.avg("v"), 2).alias("mean"),
-    )
-
-
-@q(
-    "j12_asof_join",
-    """
-    SELECT l.event_id, l.user_id,
-           strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-           round(r.value, 2) AS asof_value
-    FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') l
-    ASOF LEFT JOIN (
-        SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-    ) r ON l.user_id = r.user_id AND l.ts >= r.ts
-    """,
-    "Backward as-of join (operator Spark lacks): union + one key-window "
-    "pass vs DuckDB's NATIVE ASOF JOIN — two independent implementations "
-    "agreeing row-for-row",
-)
-def j12_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.asof import asof_join
-
-    ev = t(spark, sf_dir, "events")
-    views = ev.filter(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    out = asof_join(views, purchases, key="user_id", value_col="value")
-    return out.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        F.round("asof_value", 2).alias("asof_value"),
-    )
-
-
-@q(
-    "j15_asof_join_forward",
-    """
-    SELECT l.event_id, l.user_id,
-           strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-           round(r.value, 2) AS next_value
-    FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view') l
-    ASOF LEFT JOIN (
-        SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-    ) r ON l.user_id = r.user_id AND l.ts <= r.ts
-    """,
-    "FORWARD as-of join (next-event / time-to-event direction): the "
-    "mirrored single key-window plan vs DuckDB's native forward ASOF "
-    "JOIN (<=) — two independent implementations agreeing row-for-row.",
-)
-def j15_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.asof import asof_join_forward
-
-    ev = t(spark, sf_dir, "events")
-    views = ev.filter(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    out = asof_join_forward(views, purchases, key="user_id", value_col="value")
-    return out.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        F.round("asof_value", 2).alias("next_value"),
-    )
-
-
-@q(
-    "j13_range_join_binned",
-    """
-    SELECT i.event_id AS interval_id, count(*) AS n_views
-    FROM (SELECT event_id, user_id, ts AS start_ts,
-                 ts + INTERVAL 2 HOUR AS end_ts
-          FROM events WHERE event_type = 'purchase') i
-    JOIN (SELECT user_id, ts FROM events WHERE event_type = 'view') p
-      ON i.user_id = p.user_id
-     AND p.ts >= i.start_ts AND p.ts < i.end_ts
-    GROUP BY 1
-    """,
-    "Point-in-interval range join as a binned EQUI-join (Spark would "
-    "BNLJ the inequality form) vs DuckDB's native IEJoin plan",
-)
-def j13_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.rangejoin import point_in_interval_join
-
-    ev = t(spark, sf_dir, "events")
-    intervals = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id"),
-        "user_id",
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("end_ts"),
-    )
-    points = ev.filter(F.col("event_type") == "view").select("user_id", "ts")
-    joined = point_in_interval_join(
-        intervals, points, key="user_id", bin_seconds=7200
-    )
-    return joined.groupBy(F.col("event_id").alias("interval_id")).agg(
-        F.count("*").alias("n_views")
-    )
-
-
-@q(
     "j16_replicated_skew_join",
     """
     SELECT s_name, count(*) AS n_items,
@@ -2925,50 +1673,6 @@ def j16_replicated_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "j14_interval_overlap_join",
-    """
-    SELECT a.event_id AS purchase_id, count(*) AS n_overlapping_views,
-           min(b.event_id) AS first_view_id
-    FROM (SELECT event_id, user_id, ts AS l_start,
-                 ts + INTERVAL 2 HOUR AS l_end
-          FROM events WHERE event_type = 'purchase') a
-    JOIN (SELECT event_id, user_id, ts AS r_start,
-                 ts + INTERVAL 30 MINUTE AS r_end
-          FROM events WHERE event_type = 'view') b
-      ON a.user_id = b.user_id
-     AND a.l_start < b.r_end AND b.r_start < a.l_end
-    GROUP BY 1
-    """,
-    "Interval×interval overlap join as a binned EQUI-join (first-"
-    "shared-bin keeps each pair exactly once — no result-wide distinct "
-    "shuffle) vs DuckDB's native IEJoin on the raw inequality form.",
-)
-def j14_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.rangejoin import interval_overlap_join
-
-    ev = t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id"),
-        "user_id",
-        F.col("ts").alias("l_start"),
-        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("l_end"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        "user_id",
-        F.col("ts").alias("r_start"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("r_end"),
-    )
-    joined = interval_overlap_join(
-        purchases, views, key="user_id", bin_seconds=7200
-    )
-    return joined.groupBy(F.col("event_id").alias("purchase_id")).agg(
-        F.count("*").alias("n_overlapping_views"),
-        F.min("view_id").alias("first_view_id"),
-    )
-
-
-@q(
     "corpus_stratified_sample",
     f"""
     SELECT doc_id, lang FROM (
@@ -2994,497 +1698,6 @@ def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents").select("doc_id", "lang")
     return stratified_sample(d, "lang", 20)
-
-
-@q(
-    "a12_manifest_rollup",
-    """
-    SELECT source, lang, count(*) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM documents
-    GROUP BY GROUPING SETS ((source, lang), (source), ())
-    """,
-    "Manifest stats at three granularities in ONE pass (rollup — "
-    "partial aggregates reused across levels, vs three separate scans)",
-)
-def a12_manifest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return d.rollup("source", "lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-    )
-
-
-@q(
-    "multimodal_binary_metadata",
-    """
-    SELECT doc_id,
-           octet_length(encode(text)) AS n_bytes,
-           sha256(text) AS sha
-    FROM documents WHERE doc_id % 10 = 0
-    """,
-    "Typed metadata over binary payloads (multimodal column contract): "
-    "byte length + checksum computed JVM-side on the binary column",
-)
-def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    bin_col = F.encode(F.col("text"), "UTF-8")
-    return d.select(
-        "doc_id",
-        F.octet_length(bin_col).cast("long").alias("n_bytes"),
-        F.sha2(bin_col, 256).alias("sha"),
-    )
-
-
-@q(
-    "a13_distinct_counts",
-    """
-    SELECT source, count(DISTINCT lang) AS n_langs,
-           count(DISTINCT doc_id) AS n_docs
-    FROM documents GROUP BY source
-    """,
-    "Exact distinct counts per group (at 100 TB swap for "
-    "approx_count_distinct — HLL++ sketch, map-side mergeable, one pass; "
-    "accuracy property-tested in tests/test_sketches.py)",
-)
-def a13_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy("source").agg(
-        F.countDistinct("lang").alias("n_langs"),
-        F.countDistinct("doc_id").alias("n_docs"),
-    )
-
-
-@q(
-    "q17_small_quantity_revenue",
-    """
-    SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-    FROM lineitem l
-    WHERE l_quantity < (
-        SELECT 0.2 * avg(l_quantity) FROM lineitem WHERE l_partkey = l.l_partkey
-    )
-    """,
-    "Correlated scalar subquery (TPC-H Q17 shape) — Catalyst decorrelates "
-    "into an aggregate + join; no per-row subquery execution",
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    part_avg = li.groupBy("l_partkey").agg(
-        (F.avg("l_quantity") * 0.2).alias("qty_cut")
-    )
-    return (
-        li.join(part_avg, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_cut"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
-    )
-
-
-@q(
-    "q22_customers_without_orders",
-    """
-    SELECT c_nationkey, count(*) AS n_customers,
-           round(sum(c_acctbal), 2) AS total_bal
-    FROM customer c
-    WHERE NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = c.c_custkey
-          AND o.o_orderdate >= DATE '1998-01-01'
-    ) AND c_acctbal > 0
-    GROUP BY c_nationkey
-    """,
-    "Anti-join (TPC-H Q22 shape): customers with no RECENT orders — "
-    "left_anti with the filter pushed into the anti side, never a "
-    "correlated probe",
-)
-def q22_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0)
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1998-01-01"))
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return (
-        c.join(o, "c_custkey", "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-        )
-    )
-
-
-@q(
-    "q9_product_profit",
-    """
-    SELECT n_name AS nation, year(o_orderdate) AS o_year,
-           round(sum((round((l_extendedprice * (1 - l_discount)
-                     - p_retailprice * l_quantity) * 10000))::BIGINT)
-                 / 10000.0, 2) AS profit
-    FROM lineitem
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN part ON l_partkey = p_partkey
-         JOIN orders ON l_orderkey = o_orderkey
-    WHERE p_name LIKE '%a%'
-    GROUP BY n_name, year(o_orderdate)
-    """,
-    "Product-type profit by nation and year (TPC-H Q9 shape, adapted: "
-    "the synthetic schema has no partsupp, so p_retailprice stands in "
-    "for ps_supplycost): a five-table star join grouped on a DERIVED "
-    "key (nation x extracted year). Spark shape: lineitem is the one "
-    "fact scan; supplier/nation/part broadcast (dims), orders "
-    "shuffle-joins on the order key, and the groupBy is "
-    "map-side-combined on the low-cardinality (nation, year) pair. "
-    "Per-row profit is fixed to 1e-4 and summed as exact BIGINTs — "
-    "billions-scale double sums flip round-to-2 edges under Spark's "
-    "nondeterministic partial-aggregate order (the DSIR lesson).",
-)
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    s = t(spark, sf_dir, "supplier")
-    n = t(spark, sf_dir, "nation")
-    p = t(spark, sf_dir, "part").filter(F.col("p_name").like("%a%"))
-    o = t(spark, sf_dir, "orders")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity")
-    profit_i4 = F.round(profit * 10000, 0).cast("long")
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("o_year"),
-        )
-        .agg(F.round(F.sum(profit_i4) / 10000.0, 2).alias("profit"))
-    )
-
-
-@q(
-    "q11_important_parts",
-    """
-    WITH value_by_part AS (
-        SELECT l_partkey,
-               sum((round(l_extendedprice * (1 - l_discount) * 10000))::BIGINT)
-                   AS value_i4
-        FROM lineitem GROUP BY l_partkey),
-    total AS (SELECT sum(value_i4) AS tv, count(*) AS np FROM value_by_part)
-    SELECT l_partkey, round(value_i4 / 10000.0, 2) AS part_value
-    FROM value_by_part, total
-    WHERE value_i4 * np * 10 > 12 * tv
-    """,
-    "Important-stock identification (TPC-H Q11 shape, adapted: no "
-    "partsupp table, so lineitem revenue stands in for stock value): "
-    "per-part aggregate filtered against a SHARE OF THE GLOBAL TOTAL "
-    "(keep parts above 1.2x the MEAN share — scale-free, and "
-    "non-vacuous on the near-uniform synthetic values whose max share "
-    "is 1.79x the mean). Spark shape: one groupBy "
-    "over the fact table with exact BIGINT value sums (order-immune), "
-    "the one-row total re-aggregated from the ≤|parts| grouped frame "
-    "(not a second fact scan) and broadcast back into a row-local "
-    "HAVING filter — the global threshold never forces a driver "
-    "collect or a re-scan; the comparison is pure integer arithmetic.",
-)
-def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    value_i4 = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
-    ).cast("long")
-    by_part = li.groupBy("l_partkey").agg(F.sum(value_i4).alias("value_i4"))
-    total = by_part.agg(
-        F.sum("value_i4").alias("tv"), F.count("*").alias("np")
-    )
-    return (
-        by_part.crossJoin(F.broadcast(total))
-        .filter(F.col("value_i4") * F.col("np") * 10 > 12 * F.col("tv"))
-        .select(
-            "l_partkey",
-            F.round(F.col("value_i4") / 10000.0, 2).alias("part_value"),
-        )
-    )
-
-
-@q(
-    "q12_late_shipment_priority",
-    """
-    SELECT l_linestatus,
-           sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS high_line_count,
-           sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS low_line_count
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
-    GROUP BY l_linestatus
-    """,
-    "Late-shipment priority distribution (TPC-H Q12 shape, adapted: "
-    "no l_shipmode/l_receiptdate columns, so l_linestatus buckets and "
-    "shipdate-vs-orderdate lateness replace them): one fact-fact join "
-    "with a JOIN-DEPENDENT residual predicate (lateness compares "
-    "columns from BOTH sides, so it can't push below the join) and "
-    "dual conditional counts in a single pass — never two scans.",
-)
-def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .filter(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY")
-        )
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@q(
-    "q4_order_priority_semi",
-    """
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
-    WHERE o_orderdate >= DATE '1997-01-01'
-      AND o_orderdate < DATE '1997-07-01'
-      AND EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
-      )
-    GROUP BY o_orderpriority
-    """,
-    "EXISTS semi-join (TPC-H Q4 shape, adapted to the synthetic "
-    "schema): left_semi with the probe-side filter pushed below the "
-    "join — never a correlated per-row subquery.",
-)
-def q4_order_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01"))
-    )
-    li = (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("o_orderkey"))
-    )
-    return (
-        o.join(li, "o_orderkey", "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-@q(
-    "q10_returned_item_topk",
-    """
-    SELECT c.c_custkey, n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM customer c
-    JOIN orders o ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
-    WHERE l.l_returnflag = 'R'
-      AND o.o_orderdate >= DATE '1997-01-01'
-      AND o.o_orderdate < DATE '1998-01-01'
-    GROUP BY 1, 2
-    ORDER BY revenue DESC, c_custkey ASC LIMIT 20
-    """,
-    "Returned-item revenue top-20 (TPC-H Q10 shape): three-way join "
-    "with the nation dimension broadcast, filters pushed to both "
-    "scans, TakeOrdered top-k after the aggregate.",
-)
-def q10_returned_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01"))
-    )
-    li = t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = t(spark, sf_dir, "nation")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-@q(
-    "q14_promo_revenue_ratio",
-    """
-    SELECT round(
-               100.0 * sum(CASE WHEN p.p_type = 'PROMO'
-                                THEN l.l_extendedprice * (1 - l.l_discount)
-                                ELSE 0 END)
-               / sum(l.l_extendedprice * (1 - l.l_discount)), 4
-           ) AS promo_pct
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE l.l_shipdate >= DATE '1997-03-01'
-      AND l.l_shipdate < DATE '1997-04-01'
-    """,
-    "Conditional-aggregate ratio (TPC-H Q14 shape): one join with the "
-    "part dimension, both promo and total revenue in a single pass — "
-    "no second scan, no self-join.",
-)
-def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01"))
-    )
-    p = t(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
-                / F.sum(rev),
-                4,
-            ).alias("promo_pct")
-        )
-    )
-
-
-@q(
-    "w5_moving_avg",
-    """
-    SELECT event_id, user_id,
-           round(avg(value) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW
-           ), 4) AS mavg
-    FROM events WHERE event_type = 'click'
-    """,
-    "Bounded-frame moving average per key (rows frame, deterministic "
-    "(ts, event_id) order)",
-)
-def w5_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "events").filter(F.col("event_type") == "click")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-2, Window.currentRow)
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        F.round(F.avg("value").over(w), 4).alias("mavg"),
-    )
-
-
-@q(
-    "set5_lang_intersection",
-    """
-    SELECT lang FROM documents WHERE source = 'src0'
-    INTERSECT
-    SELECT lang FROM documents WHERE source = 'src1'
-    """,
-    "INTERSECT set op (languages present in both sources)",
-)
-def set5_lang_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return (
-        d.filter(F.col("source") == "src0")
-        .select("lang")
-        .intersect(d.filter(F.col("source") == "src1").select("lang"))
-    )
-
-
-@q(
-    "a14_pivot_chars",
-    """
-    SELECT lang,
-           CAST(coalesce(sum(CASE WHEN source = 'src0' THEN n_chars END), 0) AS BIGINT) AS src0,
-           CAST(coalesce(sum(CASE WHEN source = 'src1' THEN n_chars END), 0) AS BIGINT) AS src1,
-           CAST(coalesce(sum(CASE WHEN source = 'src2' THEN n_chars END), 0) AS BIGINT) AS src2
-    FROM documents WHERE source IN ('src0', 'src1', 'src2')
-    GROUP BY lang
-    """,
-    "Pivot/reshape (lang × source char totals) — one groupBy with "
-    "conditional aggregates, no reshuffle per column",
-)
-def a14_pivot_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents").filter(
-        F.col("source").isin("src0", "src1", "src2")
-    )
-    out = (
-        d.groupBy("lang")
-        .pivot("source", ["src0", "src1", "src2"])
-        .agg(F.sum("n_chars"))
-    )
-    return out.select(
-        "lang",
-        *[
-            F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-            for c in ("src0", "src1", "src2")
-        ],
-    )
-
-
-@q(
-    "a15_pandas_udaf_weighted_mean",
-    """
-    SELECT lang,
-           round(sum(n_chars::DOUBLE * (doc_id % 10 + 1))
-                 / sum((doc_id % 10 + 1)::DOUBLE), 4) AS wmean
-    FROM documents GROUP BY lang
-    """,
-    "Custom aggregate via Arrow-batched Pandas grouped-agg UDF "
-    "(weighted mean doc length) — the §2.10 UDAF surface; prefer the "
-    "built-in sum/sum form (the oracle) in hot paths",
-)
-def a15_pandas_udaf_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.udafs import weighted_mean
-
-    d = t(spark, sf_dir, "documents").select(
-        "lang",
-        F.col("n_chars").cast("double").alias("v"),
-        (F.col("doc_id") % 10 + 1).cast("double").alias("w"),
-    )
-    return d.groupBy("lang").agg(
-        F.round(weighted_mean(F.col("v"), F.col("w")), 4).alias("wmean")
-    )
-
-
-@q(
-    "corpus_chunk_text_udtf",
-    """
-    SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-           CAST(i * 300 AS INT) AS start,
-           substring(text, i * 300 + 1, 300) AS chunk
-    FROM documents,
-         unnest(range(0, CAST(ceil(greatest(len(text), 1) / 300.0) AS BIGINT))) AS t(i)
-    WHERE doc_id % 50 = 0
-    """,
-    "SQL-registered Python UDTF (one row → N chunk rows): fixed-window "
-    "text chunking via LATERAL chunk_text(...) — the §2.10 UDTF API "
-    "surface, lateral-joined in plain spark.sql",
-)
-def corpus_chunk_text_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.udafs import make_chunk_text_udtf
-
-    spark.udtf.register("chunk_text", make_chunk_text_udtf())
-    t(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 50 == 0
-    ).createOrReplaceTempView("_docs_for_chunking")
-    return spark.sql(
-        """
-        SELECT d.doc_id, c.chunk_idx, c.start, c.chunk
-        FROM _docs_for_chunking d,
-             LATERAL chunk_text(d.text, 300) c
-        """
-    )
 
 
 _CLUSTERS_ORACLE = (
@@ -3670,55 +1883,6 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 10).drop("label"),
         k=5,
     )
-
-
-@q(
-    "text_pii_scan",
-    r"""
-    WITH injected AS (
-        SELECT doc_id,
-               text
-               || CASE WHEN doc_id % 3 = 0
-                       THEN ' Reach user' || doc_id::VARCHAR || '@example.com now.'
-                       ELSE '' END
-               || CASE WHEN doc_id % 4 = 0
-                       THEN ' Call +41 21 '
-                            || lpad(((doc_id * 7) % 1000)::VARCHAR, 3, '0') || ' '
-                            || lpad(((doc_id * 13) % 100)::VARCHAR, 2, '0') || ' '
-                            || lpad(((doc_id * 17) % 100)::VARCHAR, 2, '0') || '.'
-                       ELSE '' END
-               || CASE WHEN doc_id % 5 = 0
-                       THEN ' Host 192.168.' || (doc_id % 256)::VARCHAR || '.'
-                            || ((doc_id * 3) % 256)::VARCHAR || ' up.'
-                       ELSE '' END AS text
-        FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_email,
-           len(regexp_extract_all(text,
-               '\+\d{2} \d{2} \d{3} \d{2} \d{2}'))::BIGINT AS n_phone,
-           len(regexp_extract_all(text,
-               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ipv4,
-           (len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-            + len(regexp_extract_all(text, '\+\d{2} \d{2} \d{3} \d{2} \d{2}'))
-            + len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
-            > 0) AS has_pii,
-           md5(regexp_replace(regexp_replace(regexp_replace(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-               '\+\d{2} \d{2} \d{3} \d{2} \d{2}', '[PHONE]', 'g'),
-               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g')) AS redacted_fp
-    FROM injected
-    """,
-    "PII scan: deterministic doc_id-derived injection (emails id%3, "
-    "phones id%4, IPv4 id%5), regex category counts, has_pii flag, and "
-    "md5 of the category-token-redacted text — one codegen'd scan, no "
-    "Python in the hot path.",
-)
-def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.pii import inject_pii, pii_scan
-
-    return pii_scan(inject_pii(t(spark, sf_dir, "documents")))
 
 
 @q(
@@ -4055,60 +2219,6 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     return snapshot_diff(old, new)
-
-
-def _cm_col_sql(word_sql: str, row: int, w: int) -> str:
-    return (
-        f"('0x' || substr(md5('cm{row}:' || {word_sql}), 1, 12))::BIGINT % {w}"
-    )
-
-
-_CM_CELLS = " UNION ALL ".join(
-    f"SELECT {r} AS row, {_cm_col_sql('word', r, 256)} AS col FROM words"
-    for r in range(4)
-)
-
-_CM_PROBE_CELLS = " UNION ALL ".join(
-    f"SELECT word, tf, {r} AS row, {_cm_col_sql('word', r, 256)} AS col "
-    "FROM probes"
-    for r in range(4)
-)
-
-
-@q(
-    "sketch_count_min_heavy_hitters",
-    f"""
-    WITH words AS (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
-        FROM documents
-    ),
-    cells AS ({_CM_CELLS}),
-    sketch AS (SELECT row, col, count(*) AS c FROM cells GROUP BY 1, 2),
-    per AS (SELECT word, doc_id, count(*) AS tfd
-            FROM (SELECT doc_id,
-                         unnest(regexp_split_to_array(trim(text), '\\s+')) AS word
-                  FROM documents) GROUP BY 1, 2),
-    probes AS (SELECT word, sum(tfd)::BIGINT AS tf FROM per GROUP BY word
-               ORDER BY tf DESC, word ASC LIMIT 20),
-    probe_cells AS ({_CM_PROBE_CELLS})
-    SELECT word, tf, min(c)::BIGINT AS cm_estimate
-    FROM probe_cells JOIN sketch USING (row, col)
-    GROUP BY word, tf
-    """,
-    "Count-min sketch heavy hitters (d=4, w=256): fixed-size mergeable "
-    "frequency table (map-side combine collapses any stream to ≤ d·w "
-    "rows per task), probed with the exact top-20 — never "
-    "underestimates, estimate==tf when collision-free. The mergeable-"
-    "sketch companion to the HLL++ distinct path.",
-)
-def sketch_count_min_heavy_hitters(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from impresso_ta.operators.sketches import heavy_hitter_estimates
-
-    return heavy_hitter_estimates(
-        t(spark, sf_dir, "documents"), d=4, w=256, top_k=20
-    )
 
 
 @q(
@@ -4482,71 +2592,6 @@ def retrieval_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "corpus_sliding_chunks",
-    r"""
-    WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-               FROM documents)
-    SELECT doc_id, CAST(i - 1 AS INT) AS chunk_idx,
-           CAST((i - 1) * 48 AS INT) AS start_word,
-           len(w[((i-1)*48+1):least((i-1)*48+64, len(w))]) AS n_words,
-           array_to_string(w[((i-1)*48+1):least((i-1)*48+64, len(w))], ' ')
-               AS chunk
-    FROM w, unnest(range(1,
-        greatest(CAST(ceil((len(w) - 64) / 48.0) AS BIGINT) + 1, 1) + 1)) AS t(i)
-    WHERE len(w[((i-1)*48+1):least((i-1)*48+64, len(w))]) > 0
-    """,
-    "Overlapping fixed-window chunking (64-word windows, 48-word "
-    "stride — the RAG-ingestion standard; 16-word overlap carries "
-    "context across boundaries). Pure column expressions, zero shuffle.",
-)
-def corpus_sliding_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.chunking import sliding_chunks
-
-    return sliding_chunks(
-        t(spark, sf_dir, "documents"), window_words=64, stride_words=48
-    )
-
-
-@q(
-    "corpus_content_defined_chunks",
-    r"""
-    WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-               FROM documents),
-    b AS (SELECT doc_id, w,
-                 [i for i in range(1, len(w) + 1)
-                  if ('0x' || substr(md5(w[i]), 1, 12))::BIGINT % 16 = 0]
-                     AS bpos
-          FROM w),
-    segs AS (
-        SELECT doc_id,
-               [s for s in list_zip([0] || bpos, bpos || [len(w)])
-                if s[2] > s[1]] AS seg_bounds,
-               w
-        FROM b
-    )
-    SELECT doc_id, CAST(i - 1 AS INT) AS chunk_idx,
-           (seg_bounds[i][2] - seg_bounds[i][1]) AS n_words,
-           array_to_string(w[(seg_bounds[i][1]+1):seg_bounds[i][2]], ' ')
-               AS chunk,
-           md5(array_to_string(w[(seg_bounds[i][1]+1):seg_bounds[i][2]], ' '))
-               AS chunk_fp
-    FROM segs, unnest(range(1, len(seg_bounds) + 1)) AS t(i)
-    """,
-    "Content-defined chunking (FastCDC idea at word granularity): "
-    "md5-boundary words end chunks, so chunk edges follow content and "
-    "near-duplicate documents share byte-identical chunks — fixed "
-    "windows mis-align after one insertion. Zero shuffle, boundary "
-    "positions as a filtered index sequence.",
-)
-def corpus_content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.chunking import content_defined_chunks
-
-    return content_defined_chunks(
-        t(spark, sf_dir, "documents"), boundary_mod=16
-    )
-
-
 def _bpe_iter_cte(i: int) -> str:
     prev = f"v{i-1}"
     return f"""
@@ -4859,409 +2904,6 @@ def corpus_prepare_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# =====================================================================
-# Round 3: remaining classic OLAP shapes (TPC-H q2/q7/q8/q16/q18/q19/
-# q20/q21 adapted to the synthetic star schema — no partsupp table, so
-# part↔supplier links come from distinct lineitem pairs). Each exercises
-# a distinct optimizer pattern: scalar-subquery decorrelation, dual-
-# dimension join symmetry, share-of-total conditional agg, NOT IN +
-# distinct agg, HAVING semi-back-join, disjunctive pushdown, aggregated
-# IN-subquery, and double EXISTS/NOT EXISTS.
-# =====================================================================
-
-@q(
-    "q2_best_supplier_per_part",
-    """
-    WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-    best AS (
-        SELECT ps.l_partkey AS pk, max(s.s_acctbal) AS mx
-        FROM ps JOIN supplier s ON s.s_suppkey = ps.l_suppkey
-        GROUP BY 1
-    )
-    SELECT p.p_partkey, s.s_name, round(s.s_acctbal, 2) AS best_bal
-    FROM part p
-    JOIN ps ON ps.l_partkey = p.p_partkey
-    JOIN supplier s ON s.s_suppkey = ps.l_suppkey
-    JOIN best ON best.pk = p.p_partkey AND s.s_acctbal = best.mx
-    WHERE p.p_size < 10 AND p.p_type = 'SMALL'
-    ORDER BY best_bal DESC, p_partkey ASC, s_name ASC LIMIT 25
-    """,
-    "Correlated scalar-subquery shape (TPC-H Q2): best supplier per "
-    "part, decorrelated into a per-part max aggregate joined back on "
-    "equality — the supplier dim (100 rows) broadcasts; the only "
-    "corpus-sized shuffle is the distinct part↔supplier pair build.",
-)
-def q2_best_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ps = (
-        t(spark, sf_dir, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-    s = t(spark, sf_dir, "supplier")
-    pairs = ps.join(
-        F.broadcast(s), ps.l_suppkey == s.s_suppkey
-    ).select("l_partkey", "s_name", "s_acctbal")
-    best = pairs.groupBy("l_partkey").agg(F.max("s_acctbal").alias("mx"))
-    p = t(spark, sf_dir, "part").filter(
-        (F.col("p_size") < 10) & (F.col("p_type") == "SMALL")
-    )
-    return (
-        pairs.join(best, "l_partkey")
-        .filter(F.col("s_acctbal") == F.col("mx"))
-        .join(p, pairs.l_partkey == p.p_partkey)
-        .select(
-            "p_partkey",
-            "s_name",
-            F.round(F.col("s_acctbal"), 2).alias("best_bal"),
-        )
-        .orderBy(F.desc("best_bal"), F.asc("p_partkey"), F.asc("s_name"))
-        .limit(25)
-    )
-
-
-@q(
-    "q7_nation_volume",
-    """
-    SELECT supp_nation, cust_nation, ship_year, round(sum(volume), 2) AS revenue
-    FROM (
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-               year(l.l_shipdate) AS ship_year,
-               l.l_extendedprice * (1 - l.l_discount) AS volume
-        FROM lineitem l
-        JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        JOIN orders o ON o.o_orderkey = l.l_orderkey
-        JOIN customer c ON c.c_custkey = o.o_custkey
-        JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
-        JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
-        WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-            OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-          AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-    )
-    GROUP BY 1, 2, 3
-    """,
-    "Bidirectional two-nation trade volume (TPC-H Q7): both nation "
-    "dims broadcast; the symmetric pair predicate survives as a single "
-    "post-join disjunction, orders⋈lineitem is the one big shuffle.",
-)
-def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    s = t(spark, sf_dir, "supplier")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    n = t(spark, sf_dir, "nation")
-    n1 = F.broadcast(n.select(
-        F.col("n_nationkey").alias("s_nationkey"),
-        F.col("n_name").alias("supp_nation"),
-    ))
-    n2 = F.broadcast(n.select(
-        F.col("n_nationkey").alias("c_nationkey"),
-        F.col("n_name").alias("cust_nation"),
-    ))
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | (
-        (F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1")
-    )
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, "s_nationkey")
-        .join(n2, "c_nationkey")
-        .filter(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("ship_year"),
-        )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-@q(
-    "q8_market_share",
-    """
-    SELECT o_year,
-           round(sum(CASE WHEN supp_nation = 'NATION_2' THEN volume ELSE 0 END)
-                 / sum(volume), 4) AS mkt_share
-    FROM (
-        SELECT year(o.o_orderdate) AS o_year,
-               l.l_extendedprice * (1 - l.l_discount) AS volume,
-               n1.n_name AS supp_nation
-        FROM lineitem l
-        JOIN part p ON p.p_partkey = l.l_partkey
-        JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        JOIN orders o ON o.o_orderkey = l.l_orderkey
-        JOIN customer c ON c.c_custkey = o.o_custkey
-        JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
-        JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
-        JOIN region r ON r.r_regionkey = n2.n_regionkey
-        WHERE r.r_name = 'ASIA' AND p.p_type = 'PROMO'
-    )
-    GROUP BY o_year
-    """,
-    "Share-of-total conditional aggregate (TPC-H Q8): numerator and "
-    "denominator in ONE pass (no self-join); region restriction "
-    "reaches the customer side through two broadcast dims.",
-)
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    p = t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    s = t(spark, sf_dir, "supplier")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    n = t(spark, sf_dir, "nation")
-    r = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n1 = F.broadcast(n.select(
-        F.col("n_nationkey").alias("s_nationkey"),
-        F.col("n_name").alias("supp_nation"),
-    ))
-    # customer-side nations restricted to the ASIA region before the
-    # broadcast — the region filter prunes customers at the dim, not
-    # after the fact join
-    n2 = F.broadcast(
-        n.join(r, n.n_regionkey == r.r_regionkey).select(
-            F.col("n_nationkey").alias("c_nationkey")
-        )
-    )
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(n1, "s_nationkey")
-        .join(n2, "c_nationkey")
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.round(
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_2", volume).otherwise(0.0)
-                )
-                / F.sum(volume),
-                4,
-            ).alias("mkt_share")
-        )
-    )
-
-
-@q(
-    "q16_supplier_count",
-    """
-    SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand <> 'Brand#1'
-      AND p_size IN (1, 5, 10, 15, 20, 25)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY 1, 2, 3
-    ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC LIMIT 30
-    """,
-    "NOT IN + distinct aggregate (TPC-H Q16): the excluded-supplier "
-    "set is a broadcast anti-join (null-free key, so NOT IN ≡ "
-    "left_anti); countDistinct expands to a two-stage partial "
-    "aggregate, never a per-group set collect.",
-)
-def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bad = (
-        t(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select(F.col("s_suppkey").alias("l_suppkey"))
-    )
-    p = t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin(1, 5, 10, 15, 20, 25)
-    )
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.join(F.broadcast(bad), "l_suppkey", "left_anti")
-        .join(p, li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(
-            F.desc("supplier_cnt"),
-            F.asc("p_brand"),
-            F.asc("p_type"),
-            F.asc("p_size"),
-        )
-        .limit(30)
-    )
-
-
-@q(
-    "q18_large_orders",
-    """
-    SELECT c.c_name, o.o_orderkey, round(o.o_totalprice, 2) AS o_totalprice,
-           round(big.sum_qty, 2) AS sum_qty
-    FROM orders o
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN (
-        SELECT l_orderkey, sum(l_quantity) AS sum_qty
-        FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 250
-    ) big ON big.l_orderkey = o.o_orderkey
-    ORDER BY sum_qty DESC, o_orderkey ASC LIMIT 20
-    """,
-    "HAVING + semi-back-join (TPC-H Q18): the aggregate's survivor set "
-    "(p99 threshold → tiny) joins back to orders/customer — AQE "
-    "downgrades both probe joins to broadcasts at runtime.",
-)
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    big = (
-        t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("sum_qty"))
-        .filter(F.col("sum_qty") > 250)
-    )
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.round(F.col("o_totalprice"), 2).alias("o_totalprice"),
-            F.round(F.col("sum_qty"), 2).alias("sum_qty"),
-        )
-        .orderBy(F.desc("sum_qty"), F.asc("o_orderkey"))
-        .limit(20)
-    )
-
-
-@q(
-    "q19_disjunctive_pushdown",
-    """
-    SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 1 AND 20)
-       OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 10 AND 30
-           AND l.l_quantity BETWEEN 10 AND 35)
-       OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 20 AND 50
-           AND l.l_quantity BETWEEN 20 AND 50)
-    """,
-    "OR-of-ANDs join predicate (TPC-H Q19): Catalyst extracts the "
-    "single-side conjuncts (brand IN, quantity range) below the join "
-    "as scan filters; the cross-side disjunction stays as the join's "
-    "residual condition.",
-)
-def q19_disjunctive_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    p = t(spark, sf_dir, "part")
-    joined = li.join(p, li.l_partkey == p.p_partkey)
-    branch = lambda brand, lo_s, hi_s, lo_q, hi_q: (  # noqa: E731
-        (F.col("p_brand") == brand)
-        & F.col("p_size").between(lo_s, hi_s)
-        & F.col("l_quantity").between(lo_q, hi_q)
-    )
-    return joined.filter(
-        branch("Brand#1", 1, 15, 1, 20)
-        | branch("Brand#2", 10, 30, 10, 35)
-        | branch("Brand#3", 20, 50, 20, 50)
-    ).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue")
-    )
-
-
-@q(
-    "q20_promo_shippers",
-    """
-    SELECT s.s_name, round(s.s_acctbal, 2) AS s_acctbal
-    FROM supplier s
-    WHERE s.s_suppkey IN (
-        SELECT l_suppkey FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_type = 'PROMO'
-          AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY l_suppkey HAVING sum(l_quantity) > 400
-    )
-    ORDER BY s_name ASC
-    """,
-    "IN over an aggregated subquery (TPC-H Q20 shape): the HAVING "
-    "aggregate runs once, its (small) key set semi-joins the supplier "
-    "dim — never a per-supplier correlated re-aggregation.",
-)
-def q20_promo_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    p = t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    keys = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("sq"))
-        .filter(F.col("sq") > 400)
-        .select(F.col("l_suppkey").alias("s_suppkey"))
-    )
-    return (
-        t(spark, sf_dir, "supplier")
-        .join(keys, "s_suppkey", "left_semi")
-        .select("s_name", F.round(F.col("s_acctbal"), 2).alias("s_acctbal"))
-        .orderBy(F.asc("s_name"))
-    )
-
-
-@q(
-    "q21_sole_failing_supplier",
-    """
-    WITH stats AS (
-        SELECT l_orderkey,
-               count(DISTINCT l_suppkey) AS n_supp,
-               count(DISTINCT CASE WHEN l_returnflag = 'R'
-                                   THEN l_suppkey END) AS n_fail
-        FROM lineitem GROUP BY 1
-    )
-    SELECT s.s_name, count(*) AS numwait
-    FROM lineitem l1
-    JOIN orders o ON o.o_orderkey = l1.l_orderkey AND o.o_orderstatus = 'F'
-    JOIN stats st ON st.l_orderkey = l1.l_orderkey
-    JOIN supplier s ON s.s_suppkey = l1.l_suppkey
-    WHERE l1.l_returnflag = 'R' AND st.n_supp >= 2 AND st.n_fail = 1
-    GROUP BY s.s_name
-    ORDER BY numwait DESC, s_name ASC LIMIT 20
-    """,
-    "Double EXISTS / NOT EXISTS (TPC-H Q21, returnflag standing in for "
-    "the receipt-delay predicate): both correlated subqueries collapse "
-    "into ONE per-order distinct-count aggregate reused for the EXISTS "
-    "(n_supp >= 2) and the NOT EXISTS (n_fail = 1) — one lineitem "
-    "shuffle instead of two self-joins.",
-)
-def q21_sole_failing_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    stats = li.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct(
-            F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
-        ).alias("n_fail"),
-    )
-    o = t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = t(spark, sf_dir, "supplier")
-    return (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(o.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"))
-        .join(
-            stats.filter((F.col("n_supp") >= 2) & (F.col("n_fail") == 1)),
-            "l_orderkey",
-            "left_semi",
-        )
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(20)
-    )
-
-
 @q(
     "dedup_semantic_lsh",
     f"""
@@ -5329,45 +2971,6 @@ def embedding_gramian(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return gramian(t(spark, sf_dir, "embeddings")).select(
         "i", "j", F.round(F.col("g"), 4).alias("g")
-    )
-
-
-@q(
-    "sketch_hll_distinct",
-    r"""
-    WITH words AS (
-        SELECT lang, unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        FROM documents
-    )
-    SELECT lang, count(DISTINCT w) AS n_exact, true AS within_5pct
-    FROM words GROUP BY lang
-    """,
-    "HyperLogLog++ distinct-count accuracy eval (the langid_accuracy "
-    "pattern for sketches): per-language approx_count_distinct at "
-    "rsd=0.02 vs the exact distinct count, asserting ≤5% relative "
-    "error as an oracled boolean. At 100 TB the exact branch is "
-    "dropped and the sketch's fixed-size registers (map-side merged) "
-    "replace the full distinct shuffle.",
-)
-def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = t(spark, sf_dir, "documents").select(
-        "lang",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-    )
-    return (
-        words.groupBy("lang")
-        .agg(
-            F.countDistinct("w").alias("n_exact"),
-            F.approx_count_distinct("w", rsd=0.02).alias("n_est"),
-        )
-        .select(
-            "lang",
-            "n_exact",
-            (
-                F.abs(F.col("n_est") - F.col("n_exact"))
-                <= 0.05 * F.col("n_exact")
-            ).alias("within_5pct"),
-        )
     )
 
 
@@ -5628,173 +3231,6 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "events_funnel_conversion",
-    """
-    WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-               WHERE event_type = 'view' GROUP BY 1),
-    c AS (SELECT e.user_id, min(e.ts) AS t_click
-          FROM events e JOIN v ON v.user_id = e.user_id AND e.ts > v.t_view
-          WHERE e.event_type = 'click' GROUP BY 1),
-    p AS (SELECT e.user_id, min(e.ts) AS t_buy
-          FROM events e JOIN c ON c.user_id = e.user_id AND e.ts > c.t_click
-          WHERE e.event_type = 'purchase' GROUP BY 1)
-    SELECT (SELECT count(*) FROM v)::BIGINT AS n_view,
-           (SELECT count(*) FROM c)::BIGINT AS n_click,
-           (SELECT count(*) FROM p)::BIGINT AS n_purchase,
-           round((SELECT count(*) FROM p)::DOUBLE
-                 / (SELECT count(*) FROM v), 4) AS conversion
-    """,
-    "Ordered-funnel conversion (view → click-after-view → purchase-"
-    "after-click): sequential pattern matching as staged min-aggregates "
-    "— each stage shuffles only ITS event type's rows on user_id and "
-    "joins the (tiny) prior-stage frame, never a per-user sort of the "
-    "whole stream; the user-journey analytics shape over the events "
-    "table (sessionize's batch cousin).",
-)
-def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_buy"))
-    )
-    nv = v.agg(F.count("*").cast("long").alias("n_view"))
-    nc = c.agg(F.count("*").cast("long").alias("n_click"))
-    np_ = p.agg(F.count("*").cast("long").alias("n_purchase"))
-    return (
-        nv.crossJoin(nc)
-        .crossJoin(np_)
-        .select(
-            "n_view",
-            "n_click",
-            "n_purchase",
-            F.round(F.col("n_purchase") / F.col("n_view"), 4).alias(
-                "conversion"
-            ),
-        )
-    )
-
-
-@q(
-    "q6_forecast_revenue",
-    """
-    SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-    """,
-    "Pure predicate-pushdown aggregate (TPC-H Q6): every conjunct "
-    "reaches the parquet scan as a pushed filter, one map-side-combined "
-    "sum, no join, no wide shuffle.",
-)
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        t(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2
-            ).alias("revenue")
-        )
-    )
-
-
-@q(
-    "q13_customer_distribution",
-    """
-    SELECT c_count, count(*) AS custdist FROM (
-        SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-        FROM customer c LEFT JOIN orders o
-          ON o.o_custkey = c.c_custkey
-         AND o.o_orderpriority <> '1-URGENT'
-        GROUP BY 1
-    ) GROUP BY 1
-    """,
-    "Distribution-of-counts (TPC-H Q13): LEFT OUTER join keeps "
-    "zero-order customers, then a second (tiny, count-keyed) aggregate "
-    "— the join-side filter stays in the JOIN CONDITION (not a WHERE, "
-    "which would turn the outer join inner).",
-)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
-
-
-@q(
-    "q15_top_supplier",
-    """
-    WITH rev AS (
-        SELECT l_suppkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_rev
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-        GROUP BY 1
-    )
-    SELECT s.s_suppkey, s.s_name, r.total_rev
-    FROM supplier s JOIN rev r ON r.l_suppkey = s.s_suppkey
-    WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
-    ORDER BY s_suppkey ASC
-    """,
-    "Max-over-aggregate equality (TPC-H Q15 'view' shape): the revenue "
-    "aggregate computes once, its one-row max broadcasts back as a "
-    "scalar-subquery filter — never a re-aggregation per row; ties all "
-    "surface (no arbitrary LIMIT 1).",
-)
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rev = (
-        t(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("total_rev")
-        )
-    )
-    mx = rev.agg(F.max("total_rev").alias("mx"))
-    s = t(spark, sf_dir, "supplier")
-    return (
-        rev.join(F.broadcast(mx), rev.total_rev == mx.mx)
-        .join(s, rev.l_suppkey == s.s_suppkey)
-        .select("s_suppkey", "s_name", "total_rev")
-        .orderBy(F.asc("s_suppkey"))
-    )
-
-
-@q(
     "dedup_semantic_lsh_recall",
     f"""
     WITH wts AS (
@@ -5943,111 +3379,6 @@ def dedup_semantic_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return row(1, hit1).unionByName(row(2, hit2))
-
-
-@q(
-    "sketch_quantile_accuracy",
-    """
-    WITH ranked AS (
-        SELECT l_returnflag, l_extendedprice AS v,
-               row_number() OVER (
-                   PARTITION BY l_returnflag
-                   ORDER BY l_extendedprice, l_orderkey, l_linenumber
-               ) AS rn,
-               count(*) OVER (PARTITION BY l_returnflag) AS n
-        FROM lineitem
-    )
-    SELECT l_returnflag,
-           round(max(CASE WHEN rn = greatest(1, ceil(0.5 * n)) THEN v END), 2) AS p50_exact,
-           round(max(CASE WHEN rn = greatest(1, ceil(0.95 * n)) THEN v END), 2) AS p95_exact,
-           true AS p50_within_2pct, true AS p95_within_2pct
-    FROM ranked GROUP BY l_returnflag
-    """,
-    "Greenwald-Khanna approximate-quantile accuracy eval (the HLL "
-    "pattern for quantiles): percentile_approx at accuracy=10000 vs "
-    "the exact rank-selected percentile, ≤2% relative error asserted "
-    "as oracled booleans — at 100 TB the sketch's fixed-size mergeable "
-    "summaries replace a11's per-group sort entirely (a11's docstring "
-    "names this as its scale path; this query MEASURES it).",
-)
-def sketch_quantile_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_returnflag").orderBy(
-        "l_extendedprice", "l_orderkey", "l_linenumber"
-    )
-    wn = Window.partitionBy("l_returnflag")
-    ranked = li.select(
-        "l_returnflag",
-        F.col("l_extendedprice").alias("v"),
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wn).alias("n"),
-    )
-    exact = ranked.groupBy("l_returnflag").agg(
-        F.round(
-            F.max(
-                F.when(
-                    F.col("rn")
-                    == F.greatest(F.lit(1), F.ceil(0.5 * F.col("n"))),
-                    F.col("v"),
-                )
-            ),
-            2,
-        ).alias("p50_exact"),
-        F.round(
-            F.max(
-                F.when(
-                    F.col("rn")
-                    == F.greatest(F.lit(1), F.ceil(0.95 * F.col("n"))),
-                    F.col("v"),
-                )
-            ),
-            2,
-        ).alias("p95_exact"),
-    )
-    approx = li.groupBy("l_returnflag").agg(
-        F.percentile_approx("l_extendedprice", 0.5, 10000).alias("p50_est"),
-        F.percentile_approx("l_extendedprice", 0.95, 10000).alias("p95_est"),
-    )
-    return exact.join(approx, "l_returnflag").select(
-        "l_returnflag",
-        "p50_exact",
-        "p95_exact",
-        (
-            F.abs(F.col("p50_est") - F.col("p50_exact"))
-            <= 0.02 * F.abs(F.col("p50_exact"))
-        ).alias("p50_within_2pct"),
-        (
-            F.abs(F.col("p95_est") - F.col("p95_exact"))
-            <= 0.02 * F.abs(F.col("p95_exact"))
-        ).alias("p95_within_2pct"),
-    )
-
-
-@q(
-    "a16_cube_stats",
-    """
-    SELECT source, lang,
-           grouping(source) AS g_source, grouping(lang) AS g_lang,
-           count(*) AS n_docs,
-           round(avg(n_chars), 2) AS avg_chars
-    FROM documents
-    GROUP BY CUBE (source, lang)
-    """,
-    "Full CUBE over (source, lang) with GROUPING() disambiguation of "
-    "real NULLs vs subtotal rows — all 2^k granularities in ONE scan "
-    "via the Expand operator (each input row fans out to its 4 "
-    "grouping-set variants map-side, then one keyed shuffle), vs 4 "
-    "separate aggregation scans; the corpus-profiling complement of "
-    "a12's linear rollup.",
-)
-def a16_cube_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return d.cube("source", "lang").agg(
-        F.grouping("source").cast("int").alias("g_source"),
-        F.grouping("lang").cast("int").alias("g_lang"),
-        F.count("*").alias("n_docs"),
-        F.round(F.avg("n_chars"), 2).alias("avg_chars"),
-    ).select("source", "lang", "g_source", "g_lang", "n_docs", "avg_chars")
 
 
 def _minhash_survivors_oracle() -> str:
@@ -7290,7 +4621,7 @@ def corpus_prepare_lr_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT count(*) AS n_pool, 0.3 AS frac_requested, true AS within_2pct
     FROM raw
     """,
-    "Crawl-scale DSIR selection accuracy eval (the sketch_hll pattern): "
+    "Crawl-scale DSIR selection accuracy eval: "
     "keep ≈30% of the pool by thresholding the Gumbel-perturbed weight "
     "at its approximate (1−frac) quantile — ONE Greenwald-Khanna "
     "aggregate broadcast back, then a row-local filter. Replaces "
@@ -7596,62 +4927,6 @@ def table_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     return profile_columns(docs, ["doc_id", "lang", "source", "n_chars"])
-
-
-@q(
-    "cdc_point_in_time_join",
-    """
-    SELECT p.event_id AS purchase_id, p.user_id,
-           s.event_id AS state_event_id
-    FROM (SELECT event_id, user_id, ts FROM events
-          WHERE event_type = 'purchase') p
-    LEFT JOIN (
-        SELECT user_id, event_id, epoch_us(ts) AS vf,
-               lead(epoch_us(ts)) OVER (
-                   PARTITION BY user_id
-                   ORDER BY epoch_us(ts) ASC, event_id ASC
-               ) AS vt
-        FROM events WHERE event_type = 'click'
-    ) s
-      ON p.user_id = s.user_id
-     AND epoch_us(p.ts) >= s.vf
-     AND (s.vt IS NULL OR epoch_us(p.ts) < s.vt)
-    """,
-    "Point-in-time dimension lookup — the composition the CDC ops "
-    "exist for: each purchase joined to the click-state version VALID "
-    "AT ITS TIMESTAMP. Spark side runs scd2_history (one lead window) "
-    "+ the backward as-of join (union + one window — never an "
-    "inequality BNLJ); the oracle states the same thing as interval "
-    "containment over the SCD2 CTE. Both sides compare epoch_us (the "
-    "nanos-parquet/micros-engine truncation contract). asof_join's "
-    "precondition is a right side UNIQUE per (key, ts), so clicks are "
-    "pre-aggregated to max(event_id) per (user, micros-ts) — exactly "
-    "the row the oracle's lead(... ORDER BY epoch_us(ts), event_id) "
-    "tie-break selects (the lower-id twin gets a zero-width interval "
-    "that matches nothing); micros truncation makes such ties MORE "
-    "likely at scale, so the determinism must not rest on luck. "
-    "Purchases with no prior click keep NULL state.",
-)
-def cdc_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.asof import asof_join
-
-    ev = t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
-    state = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")  # Spark ts is already micros precision
-        .agg(F.max("event_id").alias("state_event_id"))
-    )
-    joined = asof_join(
-        purchases,
-        state,
-        key="user_id",
-        value_col="state_event_id",
-        out_col="state_event_id",
-    )
-    return joined.select("purchase_id", "user_id", "state_event_id")
 
 
 @q(

@@ -13,15 +13,15 @@ def token(tx, c, hy=None, nf=None, gn=None, s=None):
 
 
 def line(tokens, c=None):
-    return {"c": c or [0, 0, 100, 10], "t": tokens}
+    return {"c": [0, 0, 100, 10] if c is None else c, "t": tokens}
 
 
 def para(lines, c=None):
-    return {"c": c or [0, 0, 100, 50], "l": lines}
+    return {"c": [0, 0, 100, 50] if c is None else c, "l": lines}
 
 
 def region(paras, pOf=None, c=None):
-    return {"c": c or [0, 0, 500, 800], "pOf": pOf, "p": paras}
+    return {"c": [0, 0, 500, 800] if c is None else c, "pOf": pOf, "p": paras}
 
 
 def page(page_id, regions, cc=True, iiif="https://iiif.example.org/x/info.json"):

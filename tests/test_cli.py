@@ -263,6 +263,18 @@ def test_cli_incremental_store_errors(spark, tmp_path, monkeypatch):
         ["corpus", "--split", "train=0.9,val=ten"],
         ["corpus", "--split", "train=nan,val=0.1"],
         ["corpus", "--split", "=1.0"],
+        ["corpus", "--line-spans", "-3"],
+        ["corpus", "--substring-dedup", "-1"],
+        ["corpus", "--domain-cap", "-1"],
+        ["corpus", "--shards", "-2"],
+        ["corpus", "--dsir-n", "-5"],
+        ["corpus", "--dsir-n", "ten"],
+        ["corpus", "--quality-dim", "0"],
+        ["corpus", "--quality-dim", "-64"],
+        ["corpus", "--jaccard-threshold", "0"],
+        ["corpus", "--jaccard-threshold", "-0.5"],
+        ["corpus", "--jaccard-threshold", "1.5"],
+        ["corpus", "--jaccard-threshold", "nan"],
     ],
 )
 def test_malformed_specs_fail_before_any_session(argv, monkeypatch, capsys):
@@ -340,3 +352,19 @@ def test_specs_parse_to_dicts():
         "--split", "train=0.98,val=0.01,test=0.01",
     ])
     assert args.split == {"train": 0.98, "val": 0.01, "test": 0.01}
+
+
+def test_numeric_flags_accept_their_bounds():
+    """0 still switches the count flags off, and the closed ends of the
+    accepted ranges parse."""
+    from impresso_ta import cli
+
+    args = cli._build_parser().parse_args([
+        "corpus", "--input", "in", "--output-dir", "out",
+        "--line-spans", "0", "--substring-dedup", "0", "--domain-cap", "0",
+        "--shards", "0", "--dsir-n", "0", "--quality-dim", "1",
+        "--jaccard-threshold", "1",
+    ])
+    assert (args.line_spans, args.substring_dedup, args.domain_cap,
+            args.shards, args.dsir_n) == (0, 0, 0, 0, 0)
+    assert args.quality_dim == 1 and args.jaccard_threshold == 1.0

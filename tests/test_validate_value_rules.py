@@ -357,8 +357,9 @@ def test_broken_rows_route_to_error_channel(spark):
 
 
 def _page_with(region_c, token_c):
-    r = region([para([line([token("x", token_c)])])], pOf=f"{IID}-i0001")
-    r["c"] = region_c  # region() replaces an empty c with its default
+    r = region(
+        [para([line([token("x", token_c)])])], pOf=f"{IID}-i0001", c=region_c
+    )
     return page(f"{IID}-p0001", [r])
 
 

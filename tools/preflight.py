@@ -21,6 +21,7 @@ Exit 0 = safe to snapshot.  Non-zero = fix before committing.
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -35,8 +36,9 @@ sys.path.insert(0, REPO)
 def static_gate() -> list[str]:
     """The no-Spark consistency core of the fast gate (<5 s): every
     registry query has a COVERAGE.md row, every coverage-named oracle
-    exists, and queries()/oracle_sql() cover the same keys.  Pure
-    imports + text matching — cheap enough for a pre-commit hook."""
+    exists, queries()/oracle_sql() cover the same keys, and every entry
+    calls package code.  Pure imports, an ``ast`` walk and text
+    matching — cheap enough for a pre-commit hook."""
     problems: list[str] = []
     try:
         from impresso_ta.queries import REGISTRY
@@ -59,8 +61,64 @@ def static_gate() -> list[str]:
             f"queries()/oracle_sql() key drift: only-queries="
             f"{sorted(qs - oracles)} only-oracles={sorted(oracles - qs)}"
         )
+    spark_only = spark_only_entries()
+    if spark_only:
+        problems.append(
+            f"catalog entries that call no impresso_ta code (their oracle "
+            f"match tests only Spark): {spark_only}"
+        )
     problems += prose_counts(len(REGISTRY))
     return problems
+
+
+def spark_only_entries(
+    path: str = os.path.join(REPO, "impresso_ta", "queries.py"),
+) -> list[str]:
+    """``@q`` entries whose function body references no name bound to
+    an ``impresso_ta`` import — neither a module-level one (``dedup``,
+    ``similarity``, ``text_analysis``) nor a function-local
+    ``from impresso_ta... import``. Such an entry rebuilds its operator
+    from raw ``F.`` expressions, so agreeing with DuckDB says nothing
+    about this package."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+
+    def bound(nodes) -> set[str]:
+        names: set[str] = set()
+        for n in nodes:
+            if isinstance(n, ast.ImportFrom) and (n.module or "").startswith(
+                "impresso_ta"
+            ):
+                names |= {a.asname or a.name for a in n.names}
+            elif isinstance(n, ast.Import):
+                names |= {
+                    (a.asname or a.name).split(".")[0]
+                    for a in n.names
+                    if a.name.startswith("impresso_ta")
+                }
+        return names
+
+    module_names = bound(tree.body)
+    offenders = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        entry = next(
+            (
+                d.args[0].value
+                for d in fn.decorator_list
+                if isinstance(d, ast.Call)
+                and getattr(d.func, "id", None) == "q"
+            ),
+            None,
+        )
+        if entry is None:
+            continue
+        nodes = list(ast.walk(fn))
+        used = {n.id for n in nodes if isinstance(n, ast.Name)}
+        if not used & (module_names | bound(nodes)):
+            offenders.append(entry)
+    return offenders
 
 
 def prose_counts(n_registry: int) -> list[str]:
