@@ -1886,6 +1886,55 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
+    "text_pii_scan",
+    r"""
+    WITH injected AS (
+        SELECT doc_id,
+               text
+               || CASE WHEN doc_id % 3 = 0
+                       THEN ' Reach user' || doc_id::VARCHAR || '@example.com now.'
+                       ELSE '' END
+               || CASE WHEN doc_id % 4 = 0
+                       THEN ' Call +41 21 '
+                            || lpad(((doc_id * 7) % 1000)::VARCHAR, 3, '0') || ' '
+                            || lpad(((doc_id * 13) % 100)::VARCHAR, 2, '0') || ' '
+                            || lpad(((doc_id * 17) % 100)::VARCHAR, 2, '0') || '.'
+                       ELSE '' END
+               || CASE WHEN doc_id % 5 = 0
+                       THEN ' Host 192.168.' || (doc_id % 256)::VARCHAR || '.'
+                            || ((doc_id * 3) % 256)::VARCHAR || ' up.'
+                       ELSE '' END AS text
+        FROM documents
+    )
+    SELECT doc_id,
+           len(regexp_extract_all(text,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_email,
+           len(regexp_extract_all(text,
+               '\+\d{2} \d{2} \d{3} \d{2} \d{2}'))::BIGINT AS n_phone,
+           len(regexp_extract_all(text,
+               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ipv4,
+           (len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+            + len(regexp_extract_all(text, '\+\d{2} \d{2} \d{3} \d{2} \d{2}'))
+            + len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
+            > 0) AS has_pii,
+           md5(regexp_replace(regexp_replace(regexp_replace(text,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
+               '\+\d{2} \d{2} \d{3} \d{2} \d{2}', '[PHONE]', 'g'),
+               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g')) AS redacted_fp
+    FROM injected
+    """,
+    "PII scan: deterministic doc_id-derived injection (emails id%3, "
+    "phones id%4, IPv4 id%5), regex category counts, has_pii flag, and "
+    "md5 of the category-token-redacted text — one codegen'd scan, no "
+    "Python in the hot path.",
+)
+def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from impresso_ta.operators.pii import inject_pii, pii_scan
+
+    return pii_scan(inject_pii(t(spark, sf_dir, "documents")))
+
+
+@q(
     "retrieval_bm25_topk",
     """
     WITH per AS (
