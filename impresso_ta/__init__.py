@@ -12,8 +12,9 @@ Layout
 - ``schemas``    fixed StructTypes for the canonical data model
                  (ref: importers/classes.py, rebuilders/helpers.py)
 - ``sources``    discovery (detect) + canonical readers + partitioned sinks
-- ``operators``  joins/filters/aggregations/windows + dedup/similarity/
-                 text_analysis extensions
+- ``operators``  row validation, dedup, similarity search, text analysis
+                 and corpus preparation (``pipeline.prepare_corpus``, the
+                 ``corpus`` job)
 - ``functions``  scalar column functions (ids, coords, iiif, whitespace)
 - ``rebuild``    canonical → rebuilt ("solr") / passim document assembly
 - ``importers``  format plugins (bytes → canonical rows) as mapInPandas UDTFs

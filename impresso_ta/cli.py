@@ -317,16 +317,27 @@ def cmd_import(args, spark) -> int:
     from impresso_ta.sources import (
         alias_filter,
         date_filter,
-        detect_issues,
         incremental_filter,
         manifest_stats,
+        walk_issues,
         write_errors,
         write_issues,
         write_pages,
     )
+    from impresso_ta.schemas import DISCOVERY_SCHEMA
     from impresso_ta.sources.readers import read_issues
 
-    disc = detect_issues(spark, args.input_dir, args.format)
+    # the walk lists the tree on the driver, so an empty one fails here,
+    # before any Spark job; filters that leave nothing are a valid no-op
+    found = walk_issues(args.input_dir, args.format)
+    if not found:
+        print(
+            f"import: no issue found under --input-dir {args.input_dir} "
+            f"with --format {args.format}",
+            file=sys.stderr,
+        )
+        return 2
+    disc = spark.createDataFrame(found, DISCOVERY_SCHEMA)
     if args.aliases:
         disc = alias_filter(disc, args.aliases.split(","), exclude=args.exclude)
     if args.date_ranges:
@@ -365,6 +376,11 @@ def cmd_import(args, spark) -> int:
                 F.element_at(F.split("id", "-"), -1).alias("edition"),
             )
             disc = incremental_filter(disc, done)
+            # resolve the anti-join now: evaluated lazily, it would read
+            # the store after the first write below had changed it
+            disc = spark.createDataFrame(disc.collect(), disc.schema)
+    # an incremental run adds to the store; any other run replaces it
+    mode = "append" if args.incremental else "overwrite"
 
     # Every write, the manifest and the echo below are column filters of
     # the one parse frame, which also applies the --validate rules. Cached,
@@ -374,21 +390,28 @@ def cmd_import(args, spark) -> int:
     res.combined.persist()
     try:
         write_issues(
-            res.issues, f"{args.output_dir}/issues", fmt=args.store_format
+            res.issues, f"{args.output_dir}/issues",
+            fmt=args.store_format, mode=mode,
         )
         write_pages(
-            res.pages, f"{args.output_dir}/pages", fmt=args.store_format
+            res.pages, f"{args.output_dir}/pages",
+            fmt=args.store_format, mode=mode,
         )
         if res.records.take(1):
             write_pages(
                 res.records, f"{args.output_dir}/records",
-                fmt=args.store_format,
+                fmt=args.store_format, mode=mode,
             )
-        write_errors(res.errors, f"{args.output_dir}/errors")
+        write_errors(res.errors, f"{args.output_dir}/errors", mode=mode)
         # manifest goes through the sink (distributed write) — at scale the
         # (alias, year) grid is big enough that a full driver collect is a
-        # bottleneck; the console only echoes a bounded sample.
-        stats_df = manifest_stats(res.issues)
+        # bottleneck; the console only echoes a bounded sample. It counts
+        # the whole store, earlier incremental runs included.
+        stats_df = manifest_stats(
+            read_issues(spark, f"{args.output_dir}/issues")
+            if args.incremental
+            else res.issues
+        )
         stats_df.write.mode("overwrite").json(f"{args.output_dir}/manifest")
         echo = stats_df.orderBy("alias", "year").limit(20).collect()
     finally:

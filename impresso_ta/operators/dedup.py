@@ -74,8 +74,8 @@ def collapse_exact_reps(
 ) -> DataFrame:
     """The subset of ``docs`` keeping only the min-id representative of
     every exact-duplicate (shingle-preserving-fingerprint) group — the
-    pre-pass that makes pairwise Jaccard dedup clique-safe, with the
-    same output-identity argument as SemDeDup's ``_collapse_exact_dups``:
+    pre-pass that makes pairwise Jaccard dedup clique-safe without
+    changing its output:
 
     equal normalized text ⇒ identical shingle sets ⇒ Jaccard 1.0 to
     each other (≥ any threshold ≤ 1, so an exact group is always one
@@ -1115,409 +1115,6 @@ def line_dedup(
         ["kept_text"] if with_text else []
     )
     return marked.groupBy("doc_id").agg(*agg_cols).select(*out_cols)
-
-
-def semantic_dedup_auto(
-    embeddings: DataFrame,
-    target_cell_size: int = 512,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    strategy: str = "auto",
-    n_probes: int = 1,
-    broadcast_budget_bytes: int = 256 * 1024 * 1024,
-    n: int | None = None,
-    dims: int | None = None,
-) -> DataFrame:
-    """:func:`semantic_dedup` with nlist sized from the corpus: the
-    documented scale contract ("pick nlist so cells fit a task") made
-    executable — nlist = ⌈n / target_cell_size⌉, seeds the nlist
-    smallest-id vectors. Pair volume stays ~n·target_cell_size instead
-    of growing n²/nlist as the corpus outpaces a fixed nlist (measured
-    sf0.1→sf1: 100× pair blowup at fixed nlist=8 — PLANS §6).
-
-    Seed selection is distributed: above
-    ``similarity.LITERAL_MAX_NLIST`` the nlist smallest-id vectors are
-    selected as a DataFrame (orderBy + limit → TakeOrdered, nlist rows)
-    and fed to the centroid argmax as a JVM-side broadcast relation —
-    the seed vectors never materialize in driver Python, removing the
-    driver ceiling of collecting ~n/512 embeddings at corpus scale. At
-    small nlist the collect-to-literal path stays (whole-stage-codegen
-    argmax, fastest); both paths are bit-identical (parity-tested).
-
-    ``strategy``: "auto" (size-based switch), "collect" (literal path),
-    "distributed" (DataFrame-relation path), or "lsh" (hyperplane-cell
-    path: n_bits = ⌈log₂ nlist⌉ sign bits — assignment cost n·bits·dims
-    instead of Voronoi's n·nlist, the pick beyond ~10⁷ vectors; see
-    :func:`semantic_dedup_lsh` for the trade-off).
-
-    "auto" is three-tier: collect-to-literal while nlist fits
-    whole-stage codegen (``LITERAL_MAX_NLIST``), the DataFrame-relation
-    Voronoi path while the centroid relation fits a broadcast
-    (nlist × dims × 8 B ≤ ``broadcast_budget_bytes``), and the LSH-cell
-    path beyond that — at 10⁹ vectors / 512-vector cells the Voronoi
-    centroid relation is ~2M × dims full vectors (multi-GB broadcast →
-    executor OOM, plus an orderBy.limit(nlist) single-task sink to build
-    it), while LSH cell assignment is row-local with zero broadcast.
-    """
-    import math
-
-    from impresso_ta.operators.similarity import LITERAL_MAX_NLIST
-
-    # n/dims hints skip the two sizing actions (count + first) — on an
-    # uncached 100 TB input those are full-scan jobs; pass them when the
-    # caller already knows the corpus shape (parity-tested).
-    if n is None:
-        n = embeddings.count()
-    nlist = max(1, math.ceil(n / target_cell_size))
-    if dims is None and strategy in ("auto", "lsh"):
-        first = embeddings.select(vec_col).first()
-        dims = len(first[0]) if first is not None else 64  # empty corpus
-    if strategy == "auto":
-        if nlist <= LITERAL_MAX_NLIST:
-            strategy = "collect"
-        elif nlist * dims * 8 <= broadcast_budget_bytes:
-            strategy = "distributed"
-        else:
-            strategy = "lsh"
-    if strategy == "lsh":
-        return semantic_dedup_lsh(
-            embeddings,
-            n_bits=max(1, math.ceil(math.log2(nlist))) if nlist > 1 else 1,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            dims=dims,
-            n_probes=n_probes,
-        )
-    if strategy == "distributed":
-        centroids = (
-            embeddings.select(
-                F.col(id_col).cast("int").alias("cell"),
-                F.col(vec_col).alias("cvec"),
-            )
-            .orderBy("cell")
-            .limit(nlist)
-        )
-        return semantic_dedup(
-            embeddings,
-            centroids,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-    seed_rows = (
-        embeddings.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(nlist)
-        .collect()
-    )
-    seeds = [(int(r[id_col]), list(r[vec_col])) for r in seed_rows]
-    return semantic_dedup(
-        embeddings, seeds, threshold=threshold, id_col=id_col, vec_col=vec_col
-    )
-
-
-def semantic_dedup(
-    embeddings: DataFrame,
-    centroids,  # list[(cell, vector)] or DataFrame of (cell, cvec)
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): embedding-space near-dup removal,
-    scoped to clusters so the pairwise comparison is an equi-join on the
-    cluster id, never a corpus cross-product.
-
-    Each vector is assigned to its nearest centroid (zero-shuffle argmax,
-    see :func:`impresso_ta.operators.similarity.ivf_assign`); within a
-    cluster, a vector is dropped when a smaller-id cluster-mate has
-    cosine ≥ ``threshold`` (greedy-by-id, deterministic). Returns
-    (vec_id, cell, keep).
-
-    Scale shape: candidate pair volume is Σ_cell |cell|² — bounded by the
-    clustering granularity (nlist chosen so cells fit a task), the exact
-    posture of the SemDeDup paper. One shuffle on cell for the self-join,
-    one broadcast-able anti-join on the drop list.
-    """
-    from impresso_ta.operators.similarity import ivf_assign
-
-    assigned = ivf_assign(
-        embeddings, centroids, id_col=id_col, vec_col=vec_col
-    ).persist()
-    return _within_cell_dedup(
-        assigned,
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_to=round_to,
-    )
-
-
-def _collapse_exact_dups(
-    assigned: DataFrame, id_col: str, vec_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(representatives, clones): vectors with byte-identical embeddings
-    collapse to the min-id representative per cell before any pairwise
-    join. Provably output-identical to running the pairwise rule on the
-    full frame:
-
-    - every clone IS dropped by the rule (its representative is a
-      smaller-id cell-mate and cosine(v, v) rounds to 1.0 ≥ threshold);
-    - a representative's own decision is unchanged — for any duplicate
-      group g, "some member of g with smaller id collides with me" iff
-      "rep_g has smaller id and collides" (rep_g is g's minimum, and
-      identical vectors share all cells, probe cells and cosines).
-
-    Why it matters at scale: crawl corpora carry large cliques of
-    byte-identical embeddings (re-posts, boilerplate, mirrored pages).
-    Pairwise-within-cell is Σ|cell|², and a k-clique adds k² no matter
-    how the cells are sized — measured 36× superlinear on a synthetic
-    100-way-clone corpus. Collapsing first makes that term Σ|unique|²
-    + one narrow window shuffle, restoring the sizing rule's contract.
-
-    Degenerate vectors are EXEMPT from the collapse: for a NULL or
-    all-zero embedding cosine(v, v) is NULL (0/0), so the pairwise rule
-    never drops its clones — each such row gets a unique collapse key
-    (its own id) and rides the pairwise join as its own representative,
-    where the NULL-cosine comparisons keep it, exactly as before.
-    """
-    from pyspark.sql.window import Window
-
-    identical_dup_droppable = F.col(vec_col).isNotNull() & F.exists(
-        F.col(vec_col), lambda x: x != 0
-    )
-    keyed = assigned.withColumn(
-        "_vk",
-        F.when(
-            identical_dup_droppable, F.md5(F.to_json(F.col(vec_col)))
-        ).otherwise(F.concat(F.lit("row-"), F.col(id_col).cast("string"))),
-    )
-    w = Window.partitionBy("cell", "_vk").orderBy(id_col)
-    marked = keyed.withColumn("_rn", F.row_number().over(w))
-    reps = marked.filter(F.col("_rn") == 1).drop("_rn", "_vk")
-    clones = marked.filter(F.col("_rn") > 1).select(
-        F.col(id_col), F.col("cell"), F.lit(False).alias("keep")
-    )
-    return reps, clones
-
-
-def _within_cell_dedup(
-    assigned: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_to: int,
-) -> DataFrame:
-    """The cell-scoped greedy-by-id drop pass shared by every SemDeDup
-    cell assignment (Voronoi or LSH): self-equi-join on cell, drop any
-    vector whose smaller-id cell-mate is cosine-≥-threshold. Exact
-    duplicates are collapsed first (see :func:`_collapse_exact_dups` —
-    output-identical, clique-proof)."""
-    from impresso_ta.operators.similarity import cosine
-
-    assigned, clones = _collapse_exact_dups(assigned, id_col, vec_col)
-    a = assigned.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "cell"
-    )
-    b = assigned.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "cell"
-    )
-    drops = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.round(cosine(F.col("va"), F.col("vb")), round_to)
-            >= F.lit(threshold)
-        )
-        .select(F.col("id_b").alias("drop_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(
-            drops, assigned[id_col] == drops["drop_id"], "left"
-        )
-        .select(
-            F.col(id_col),
-            "cell",
-            F.col("drop_id").isNull().alias("keep"),
-        )
-        .unionByName(clones)
-    )
-
-
-def hyperplane_cells(
-    vec_col: Column,
-    n_bits: int,
-    dims: int,
-    round_to: int = 4,
-) -> Column:
-    """Deterministic hyperplane-LSH cell id: ``n_bits`` sign bits of
-    dot products with md5-derived pseudo-random hyperplanes, packed
-    into a long. Engine-portable — the weights come from md5 hex
-    digits (identical in Spark, DuckDB and Python's hashlib), and the
-    dot product is rounded before the sign test so float
-    order-of-summation differences can't flip a bit.
-
-    Cost is n·n_bits·dims row-local work, zero shuffle — the cell
-    COUNT (2^n_bits) grows exponentially in bits while assignment cost
-    grows only linearly, which is what makes the LSH-cell SemDeDup
-    near-linear at corpus scale (vs. Voronoi assignment's n·nlist).
-    """
-    import hashlib
-
-    cell = F.lit(0).cast("long")
-    for k in range(n_bits):
-        w = [
-            (int(hashlib.md5(f"{k}_{d}".encode()).hexdigest()[:6], 16) % 2001
-             - 1000) / 1000.0
-            for d in range(dims)
-        ]
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(x) for x in w]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        cell = cell + (F.round(dot, round_to) >= 0).cast("long") * F.lit(
-            1 << k
-        )
-    return cell
-
-
-def hyperplane_dots(
-    vec_col: Column, n_bits: int, dims: int
-) -> Column:
-    """The raw hyperplane dot products behind :func:`hyperplane_cells`,
-    as an array — the per-bit MARGINS multiprobe needs (a small |dot|
-    means the vector sits near that cell boundary)."""
-    import hashlib
-
-    dots = []
-    for k in range(n_bits):
-        w = [
-            (int(hashlib.md5(f"{k}_{d}".encode()).hexdigest()[:6], 16) % 2001
-             - 1000) / 1000.0
-            for d in range(dims)
-        ]
-        dots.append(
-            F.aggregate(
-                F.zip_with(
-                    vec_col,
-                    F.array(*[F.lit(x) for x in w]),
-                    lambda a, b: a.cast("double") * b,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-    return F.array(*dots)
-
-
-def semantic_dedup_lsh(
-    embeddings: DataFrame,
-    n_bits: int = 4,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int = 64,
-    round_to: int = 4,
-    n_probes: int = 1,
-) -> DataFrame:
-    """SemDeDup with hyperplane-LSH cells — the 100 TB assignment path.
-
-    Voronoi assignment (``semantic_dedup``/``semantic_dedup_auto``)
-    costs n·nlist dot products; with nlist sized ~n/cell_size that is
-    O(n²/cell_size) — fine to ~10⁷ vectors, structurally superlinear
-    beyond. Here the cell id is ``n_bits`` hyperplane sign bits
-    (n·n_bits·dims row-local work, no shuffle), so doubling the corpus
-    adds ONE bit, not n/512 centroids: pick
-    ``n_bits = ceil(log2(n / target_cell_size))``. Random-hyperplane
-    buckets also co-locate high-cosine pairs by construction (the same
-    property the ANN ``lsh_bucketed_topk`` relies on), which is exactly
-    what the within-cell drop pass needs. Trade-off vs Voronoi: cells
-    are equi-probable half-space intersections, not data-adaptive —
-    near-dup pairs split across a boundary are missed at a known rate
-    (1 - angle/π per bit) instead of a geometry-dependent one.
-
-    ``n_probes > 1`` shrinks that miss rate the multiprobe-LSH way
-    (Lv et al. 2007, as in ``similarity.multiprobe_lsh_topk``): each
-    vector ALSO probes the ``n_probes - 1`` cells reached by flipping
-    its lowest-|margin| sign bits, so a pair split by one near-boundary
-    hyperplane is re-united. Candidate volume grows ≤ n_probes×; the
-    drop rule (greedy-by-id over distinct colliding pairs) is unchanged
-    and n_probes=1 reproduces the single-probe result exactly.
-    """
-    assigned = embeddings.withColumn(
-        "cell", hyperplane_cells(F.col(vec_col), n_bits, dims, round_to)
-    )
-    if n_probes <= 1:
-        return _within_cell_dedup(
-            assigned,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            round_to=round_to,
-        )
-
-    from impresso_ta.operators.similarity import cosine
-
-    # identical vectors share all cells, margins and probe flips, so the
-    # exact-dup collapse proof holds verbatim under multiprobe
-    assigned, clones = _collapse_exact_dups(assigned, id_col, vec_col)
-
-    # probe cells: flip the (n_probes-1) lowest-|dot| bits one at a time
-    margins = F.array_sort(
-        F.transform(
-            hyperplane_dots(F.col(vec_col), n_bits, dims),
-            lambda d, i: F.struct(
-                F.abs(F.round(d, round_to)).alias("m"), i.alias("j")
-            ),
-        )
-    )
-    flips = F.slice(margins, 1, n_probes - 1)
-    probe_cells = F.array_union(
-        F.array(F.col("cell")),
-        F.transform(
-            flips,
-            lambda s: F.col("cell").bitwiseXOR(
-                (F.lit(2.0) ** s["j"]).cast("long")
-            ),
-        ),
-    )
-    probed = assigned.withColumn("pcell", F.explode(probe_cells)).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        F.col("pcell").alias("jcell"),
-    )
-    primary = assigned.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        F.col("cell").alias("jcell"),
-    )
-    # every (a-probe → b-primary) collision; both orientations arise
-    # because every vector appears on the probe side
-    drops = (
-        probed.join(primary, "jcell")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .filter(
-            F.round(cosine(F.col("va"), F.col("vb")), round_to)
-            >= F.lit(threshold)
-        )
-        .select(F.greatest("id_a", "id_b").alias("drop_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(drops, assigned[id_col] == drops["drop_id"], "left")
-        .select(
-            F.col(id_col),
-            "cell",
-            F.col("drop_id").isNull().alias("keep"),
-        )
-        .unionByName(clones)
-    )
 
 
 def jaccard_prefix_pairs(

@@ -144,7 +144,7 @@ def fuzzy_blocked_join(
     ``edit_dist`` depend only on the two string VALUES, so every raw row
     pair (a, b) appears in the expansion iff (value(a), value(b)) passed
     the verify, with the same distance. This is the join-shaped twin of
-    ``dedup.py _collapse_exact_dups``: a clone-heavy corpus (the round-8
+    ``dedup.collapse_exact_reps``: a clone-heavy corpus (the round-8
     sf1 entity-resolution bench held a 200k-part table whose ~92 blocks
     were built from near-identical name templates) pays Levenshtein on
     |distinct|² per (block, bucket) instead of |rows|², while the

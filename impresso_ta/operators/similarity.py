@@ -835,416 +835,6 @@ def training_triplets(
     return _carve_triplets(scored, k_pos, k_neg, round_to, semi_hard, cache)
 
 
-def semantic_decontamination(
-    train: DataFrame,
-    bench: DataFrame,
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    round_to: int = 4,
-    lsh_bench_threshold: int | None = 25_000,
-    n_bits: int = 4,
-    dims: int = 64,
-    n_probes: int = 2,
-) -> DataFrame:
-    """Drop training rows whose embedding cosine to ANY benchmark
-    vector reaches ``threshold`` — the embedding-space complement of
-    the shingle decontamination screen (``corpus.contamination``):
-    paraphrased or translated benchmark leakage shares no exact
-    n-grams but survives in embedding space (the reason modern data
-    cards report both screens).
-
-    Returns the surviving train rows, schema unchanged.
-
-    Scale shape: the benchmark collapses to ONE broadcast row of
-    (vector, norm) structs; each train row then evaluates a row-local
-    EXISTS over that array with its own norm hoisted out of the loop —
-    no shuffle, no pair materialization, train scanned exactly once at
-    |bench| dot products per row. Real benchmark suites are small
-    (eval sets: 10³–10⁴ rows × 64–1024 dims fits any executor), so
-    that cost is flat; but the row-local work is O(train × bench ×
-    dims) — a "benchmark" that is actually another corpus split makes
-    it a silent quadratic (measured: 1.59 s at sf0.1 → 23.55 s at sf1,
-    ~15× for 10× data, because the synthetic bench grows with sf). So
-    when the benchmark exceeds ``lsh_bench_threshold`` rows (one cheap
-    count of the SMALL side; ``None`` disables routing) the call
-    delegates to :func:`semantic_decontamination_lsh`, which buckets
-    both sides with the shared hyperplane cells so each train row only
-    scores its own cell's benchmark slice.
-    """
-    if lsh_bench_threshold is not None:
-        # bounded probe: the route only needs "is bench >= threshold",
-        # so cap the count's scan at threshold rows instead of counting
-        # the benchmark's full lineage (round-8 review nit)
-        if bench.limit(lsh_bench_threshold).count() >= lsh_bench_threshold:
-            return semantic_decontamination_lsh(
-                train,
-                bench,
-                vec_col=vec_col,
-                threshold=threshold,
-                round_to=round_to,
-                n_bits=n_bits,
-                dims=dims,
-                n_probes=n_probes,
-            )
-    if threshold > 0:
-        # r12 fast path (guide §4.2): the row-local EXISTS evaluates
-        # |bench| interpreted higher-order dot products per train row —
-        # the same screen as one vectorized matrix product. Bit-
-        # identical results, proven three ways: the round(cos, r) >=
-        # threshold predicate is algebraically a plain cos >= cutoff
-        # (arrowkit.ge_round_cutoff — exact Decimal derivation of
-        # Spark's shortest-repr HALF_UP round), any clean pair within
-        # 1e-9 of the cutoff under the fast normalized GEMM (fp error
-        # bound ~1e-14 at these dims) is re-decided with the JVM's
-        # exactly-ordered fold, and every degenerate pair (NaN/inf
-        # values, under/overflowing norms — where Spark's nan-safe
-        # ordering makes a NaN cosine a HIT) is decided by a bit-exact
-        # scalar emulation. Parity is pinned by the boundary-value
-        # test against the retained EXISTS form.
-        return _semantic_decontamination_arrow(
-            train, bench, vec_col, threshold, round_to
-        )
-    return _semantic_decontamination_exists(
-        train, bench, vec_col, threshold, round_to
-    )
-
-
-def _semantic_decontamination_exists(
-    train: DataFrame,
-    bench: DataFrame,
-    vec_col: str,
-    threshold: float,
-    round_to: int,
-) -> DataFrame:
-    """The r11 pure-JVM exact screen (broadcast one-row bench array +
-    row-local EXISTS) — kept as the reference implementation and the
-    fallback for thresholds the cutoff algebra does not cover (<= 0)."""
-    barr = bench.select(
-        F.collect_list(
-            F.struct(
-                F.col(vec_col).alias("v"),
-                norm(F.col(vec_col)).alias("n"),
-            )
-        ).alias("_bench")
-    )
-    hit = F.exists(
-        F.col("_bench"),
-        lambda b: F.round(
-            F.try_divide(
-                dot(F.col(vec_col), b["v"]), F.col("_tnorm") * b["n"]
-            ),
-            round_to,
-        )
-        >= threshold,
-    )
-    return (
-        train.withColumn("_tnorm", norm(F.col(vec_col)))
-        .crossJoin(F.broadcast(barr))
-        .filter(~F.coalesce(hit, F.lit(False)))
-        .drop("_bench", "_tnorm")
-    )
-
-
-def _seq_sq_norms(m):
-    """Euclidean norms with the JVM fold's exact FP order: squares are
-    added left-to-right per dimension (``acc += m[:,d]*m[:,d]``), which
-    performs the identical IEEE addition sequence as
-    ``aggregate(zip_with(v, v, *), 0.0, +)`` for every row at once."""
-    import numpy as np
-
-    acc = np.zeros(m.shape[0])
-    with np.errstate(over="ignore", invalid="ignore"):
-        for d in range(m.shape[1]):
-            acc = acc + m[:, d] * m[:, d]
-    return np.sqrt(acc)
-
-
-# Norm band for the vectorized screen: inside it the pairwise norm
-# product can neither underflow to 0.0 (which try_divide turns into
-# NULL = no hit) nor overflow to inf (which turns the cosine into
-# 0/NaN) — outside it a row is handled by the exact scalar emulation.
-_NORM_LO = 1e-150
-_NORM_HI = 1e150
-
-# Driver-collect guard for the Arrow screen's bench side (r13): the
-# operator's contract is a SMALL benchmark suite; past this bound the
-# collect fails fast instead of OOMing the driver.
-_MAX_BENCH_ROWS = 200_000
-
-
-def _spark_pair_hit(tv, bv, cutoff: float) -> bool:
-    """Bit-exact emulation of one EXISTS element for degenerate pairs:
-    ``round(try_divide(dot(t, b), norm(t) * norm(b)), r) >= threshold``
-    under Spark semantics — left-to-right double folds, try_divide
-    NULL only on an exactly-zero divisor (NULL = no hit), round(x, r)
-    passing NaN/±inf through unchanged, and Spark's nan-safe comparison
-    ordering NaN ABOVE every value (so a NaN cosine IS a hit)."""
-    import math
-
-    dot = 0.0
-    sa = 0.0
-    sb = 0.0
-    for x, y in zip(tv.tolist(), bv.tolist()):
-        dot = dot + x * y
-        sa = sa + x * x
-        sb = sb + y * y
-    div = math.sqrt(sa) * math.sqrt(sb)
-    if div == 0.0:
-        return False
-    cos = dot / div
-    if math.isnan(cos):
-        return True
-    if math.isinf(cos):
-        return cos > 0
-    return cos >= cutoff
-
-
-def _semantic_decontamination_arrow(
-    train: DataFrame,
-    bench: DataFrame,
-    vec_col: str,
-    threshold: float,
-    round_to: int,
-) -> DataFrame:
-    """Vectorized exact screen: bench is collected to the driver (small
-    by the operator's contract — the JVM form already folded it into one
-    broadcast row) and shipped to ``mapInArrow`` tasks that drop each
-    train batch's contaminated rows with one normalized matrix product.
-
-    Exactness: see the dispatch comment in
-    :func:`semantic_decontamination`. Rows that can never pair with a
-    non-NULL cosine are settled structurally: a NULL train vector, a
-    NULL array element on either side, or a length with no bench group
-    folds to a NULL dot through ``zip_with`` (never a hit), so bench
-    vectors are grouped BY LENGTH and each train row is screened only
-    against its own length group. Within a group, the GEMM screen
-    covers only CLEAN×CLEAN pairs (all-finite values, norm inside
-    ``(_NORM_LO, _NORM_HI)`` so the norm product cannot underflow to
-    try_divide's NULL or overflow to a NaN cosine); every pair with a
-    degenerate side is decided by :func:`_spark_pair_hit`, the
-    bit-exact scalar emulation of the JVM element — including Spark's
-    nan-safe ordering that makes a NaN cosine a HIT.
-    """
-    import numpy as np
-
-    from impresso_ta.operators.arrowkit import ge_round_cutoff
-
-    cutoff = ge_round_cutoff(threshold, round_to)
-    eps = 1e-9  # >> the ~1e-14 GEMM-vs-sequential fp divergence bound
-
-    # r13 guard: the bench side is collected to the driver (small by
-    # the operator's contract — the JVM form folds it into ONE broadcast
-    # row, which would hit the 8 GB relation cap; an unguarded collect
-    # would OOM the driver with no actionable error first).
-    bench_rows = bench.select(vec_col).collect()
-    if len(bench_rows) > _MAX_BENCH_ROWS:
-        raise ValueError(
-            "semantic_decontamination collects the benchmark side to "
-            f"the driver: got more than {_MAX_BENCH_ROWS} rows. A "
-            "benchmark suite is contractually small; for a huge screen "
-            "set use semantic_decontamination_lsh (bucketed scale "
-            "route) instead."
-        )
-
-    by_len: dict[int, list] = {}
-    for r in bench_rows:
-        v = r[0]
-        # NULL vectors / NULL elements / empty vectors: dot folds to
-        # NULL against every train row — can never hit, drop here
-        if v is not None and len(v) > 0 and not any(x is None for x in v):
-            by_len.setdefault(len(v), []).append(v)
-    groups: dict[int, tuple] = {}
-    for length, vecs in by_len.items():
-        b64 = np.asarray(vecs, dtype=np.float64)
-        bn = _seq_sq_norms(b64)
-        clean = (
-            np.isfinite(b64).all(axis=1)
-            & (bn > _NORM_LO)
-            & (bn < _NORM_HI)
-        )
-        cb, cn = b64[clean], bn[clean]
-        groups[length] = (
-            cb,
-            cn,
-            # pre-normalized transpose for the fast screen
-            (cb / cn[:, None]).T if cb.shape[0] else None,
-            list(b64[~clean]),  # degenerate bench rows, exact path
-        )
-    schema = train.schema
-    vec_idx = schema.names.index(vec_col)
-
-    def screen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            keep = np.ones(n, dtype=bool)
-            if groups:
-                vl = batch.column(vec_idx).to_pylist()
-                by_len_rows: dict[int, list[int]] = {}
-                for i, v in enumerate(vl):
-                    if (
-                        v is not None
-                        and len(v) in groups
-                        and not any(x is None for x in v)
-                    ):
-                        by_len_rows.setdefault(len(v), []).append(i)
-                for length, rows in by_len_rows.items():
-                    cb, cn, cbT, bdirty = groups[length]
-                    t64 = np.asarray(
-                        [vl[i] for i in rows], dtype=np.float64
-                    )
-                    tn = _seq_sq_norms(t64)
-                    tclean = (
-                        np.isfinite(t64).all(axis=1)
-                        & (tn > _NORM_LO)
-                        & (tn < _NORM_HI)
-                    )
-                    if cbT is not None and tclean.any():
-                        gi = np.nonzero(tclean)[0]
-                        tnn = t64[gi] / tn[gi, None]
-                        m = (tnn @ cbT).max(axis=1)
-                        for j, mi in zip(gi, m):
-                            if mi >= cutoff + eps:
-                                keep[rows[j]] = False
-                            elif not (mi < cutoff - eps):
-                                # boundary band: exact FP-order
-                                # recompute of this row's pairs (the
-                                # fold below IS the JVM dot, bit for
-                                # bit; the norm band keeps the divisor
-                                # finite and nonzero)
-                                acc = np.zeros(cb.shape[0])
-                                tv = t64[j]
-                                for d in range(length):
-                                    acc = acc + tv[d] * cb[:, d]
-                                cos = acc / (tn[j] * cn)
-                                if bool(np.any(cos >= cutoff)):
-                                    keep[rows[j]] = False
-                    if bdirty or not tclean.all():
-                        cblist = list(cb)
-                        for jj, i in enumerate(rows):
-                            if not keep[i]:
-                                continue
-                            tv = t64[jj]
-                            cands = (
-                                bdirty
-                                if tclean[jj]
-                                else cblist + bdirty
-                            )
-                            for bv in cands:
-                                if _spark_pair_hit(tv, bv, cutoff):
-                                    keep[i] = False
-                                    break
-            if keep.all():
-                yield batch
-            else:
-                yield batch.filter(pa.array(keep))
-
-    return train.mapInArrow(screen, schema=schema)
-
-
-def semantic_decontamination_lsh(
-    train: DataFrame,
-    bench: DataFrame,
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-    round_to: int = 4,
-    n_bits: int = 4,
-    dims: int = 64,
-    n_probes: int = 2,
-) -> DataFrame:
-    """LSH-bucketed decontamination — the large-benchmark path.
-
-    Both sides are assigned the SAME deterministic hyperplane cells the
-    SemDeDup scale path uses (``dedup.hyperplane_cells``, md5-derived
-    planes — engine-portable). The benchmark is exploded into its
-    primary cell plus the ``n_probes - 1`` cells reached by flipping
-    its lowest-|margin| sign bits (the multiprobe-LSH boundary fix, Lv
-    et al. 2007), grouped per cell, and folded into ONE broadcast row
-    holding a cell → [(vector, norm), …] map. Each train row then
-    computes its own cell (row-local, no shuffle) and evaluates the
-    EXISTS over only that cell's slice — per-row cost drops from
-    |bench| to |bench ∩ cell| ≈ |bench| · n_probes / 2^n_bits dot
-    products, and nothing corpus-sized is joined or shuffled (same
-    zero-exchange shape as the broadcast form).
-
-    Approximation contract: one-sided. A contaminated train row whose
-    every matching benchmark vector lands in other cells is KEPT (miss
-    rate per pair ≈ (angle/π)·n_bits, shrunk by multiprobe); a clean
-    row is never dropped — survivors are always a superset of the
-    exact form's (property-tested). Single-bit flips reach at most
-    ``n_bits + 1`` cells, so useful ``n_probes`` is 1..n_bits+1;
-    ``n_probes >= 2**n_bits`` switches to full fan-out (every cell)
-    and reproduces the exact result (plumbing-tested).
-    """
-    from impresso_ta.operators.dedup import hyperplane_cells, hyperplane_dots
-
-    cell = hyperplane_cells(F.col(vec_col), n_bits, dims, round_to)
-    if n_probes >= (1 << n_bits):
-        # full fan-out: every bench vector in every cell — identical to
-        # the exact broadcast form (single-bit flips alone can only
-        # reach n_bits + 1 cells, so this is a distinct mode)
-        probe_cells = F.sequence(
-            F.lit(0).cast("long"), F.lit((1 << n_bits) - 1).cast("long")
-        )
-    elif n_probes <= 1:
-        probe_cells = F.array(cell)
-    else:
-        margins = F.array_sort(
-            F.transform(
-                hyperplane_dots(F.col(vec_col), n_bits, dims),
-                lambda d, i: F.struct(
-                    F.abs(F.round(d, round_to)).alias("m"), i.alias("j")
-                ),
-            )
-        )
-        flips = F.slice(margins, 1, n_probes - 1)
-        probe_cells = F.array_union(
-            F.array(cell),
-            F.transform(
-                flips,
-                lambda s: cell.bitwiseXOR(
-                    (F.lit(2.0) ** s["j"]).cast("long")
-                ),
-            ),
-        )
-    per_cell = (
-        bench.select(
-            F.explode(probe_cells).alias("_cell"),
-            F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("n"),
-        )
-        .groupBy("_cell")
-        .agg(F.collect_list(F.struct("v", "n")).alias("_arr"))
-    )
-    bmap = per_cell.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("_cell", "_arr"))
-        ).alias("_bmap")
-    )
-    slice_ = F.col("_bmap")[hyperplane_cells(
-        F.col(vec_col), n_bits, dims, round_to
-    )]
-    hit = F.exists(
-        slice_,
-        lambda b: F.round(
-            F.try_divide(
-                dot(F.col(vec_col), b["v"]), F.col("_tnorm") * b["n"]
-            ),
-            round_to,
-        )
-        >= threshold,
-    )
-    return (
-        train.withColumn("_tnorm", norm(F.col(vec_col)))
-        .crossJoin(F.broadcast(bmap))
-        .filter(~F.coalesce(hit, F.lit(False)))
-        .drop("_bmap", "_tnorm")
-    )
-
-
 def _pin_parallelism(df: DataFrame, *keys: str) -> DataFrame:
     """Explicit-count repartition on ``keys`` — the narrow-row CPU-dense
     escape hatch from the session's size-based AQE coalescing
@@ -2007,8 +1597,7 @@ def ann_topk_auto(
     n_tables: int = 2,
 ) -> DataFrame:
     """Top-k cosine neighbors with the index tier picked from corpus
-    size — the similarity-search twin of ``dedup.semantic_dedup_auto``'s
-    three-tier routing, generalizing the reference's staged
+    size, generalizing the reference's staged
     candidate-filter search (SURVEY X11, ref: fedgaz/classes.py:242-345)
     to "exact when affordable, cheapest index that still recalls when
     not":
@@ -2027,7 +1616,7 @@ def ann_topk_auto(
 
     ``n`` / ``dims`` are optional sizing hints: pass them for uncached
     corpus-scale inputs to skip the count()/first() driver actions the
-    router otherwise runs (same contract as ``semantic_dedup_auto``).
+    router otherwise runs.
     ``strategy`` forces a tier ("brute" | "ivf" | "lsh"); every tier
     returns the same (query_id, neighbor_id, cosine, rank) schema with
     identical scoring expressions, so forced-tier results are

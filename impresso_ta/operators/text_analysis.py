@@ -114,8 +114,8 @@ def hashed_doc_vectors(
     2009): each word maps to bucket md5(word) % dim, bucket values are
     L2-normalized term counts. The ML-free bridge from raw text to the
     embedding operators — the output plugs straight into ``cosine_topk``
-    / ``lsh_bucketed_topk`` / ``semantic_dedup`` for text-to-text
-    similarity without a model.
+    / ``lsh_bucketed_topk`` for text-to-text similarity without a
+    model.
 
     Shape: explode → (doc, bucket) count with map-side combine (uniform
     md5 key), then one doc-keyed aggregate assembles the dense array

@@ -1,5 +1,6 @@
-"""Query catalog: one entry per SURVEY §2 operator family, each with a
-Spark implementation and (where SQL-expressible) a DuckDB oracle.
+"""Query catalog: the package's dedup, similarity, text-analysis and
+corpus-preparation operators, each entry with a Spark implementation and
+a DuckDB oracle.
 
 Contract (driver harness): every entry is ``(spark, sf_dir) -> DataFrame``
 whose column names/types match the oracle SQL exactly — every computed
@@ -291,115 +292,6 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     return similarity.hard_negatives(
         corpus=emb, queries=emb.filter(F.col("vec_id") % 100 == 0), k=3
-    )
-
-
-@q(
-    "retrieval_mmr_rerank",
-    """
-    WITH q AS (SELECT vec_id, embedding FROM embeddings
-               WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cosine
-        FROM q, embeddings c
-    ),
-    cand AS (
-        SELECT query_id, neighbor_id,
-               CAST(round(cosine * 10000) AS BIGINT) AS rel_s
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-              ) AS rn FROM scored)
-        WHERE rn <= 10
-    ),
-    sims AS (
-        SELECT c1.query_id, c1.neighbor_id AS a, c2.neighbor_id AS b,
-               CAST(round(round(
-                   list_sum(list_transform(list_zip(e1.embedding, e2.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(e1.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(e2.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) * 10000) AS BIGINT) AS sim_s
-        FROM cand c1
-        JOIN cand c2 ON c1.query_id = c2.query_id
-                    AND c1.neighbor_id <> c2.neighbor_id
-        JOIN embeddings e1 ON e1.vec_id = c1.neighbor_id
-        JOIN embeddings e2 ON e2.vec_id = c2.neighbor_id
-    ),
-    s1 AS (
-        SELECT query_id, neighbor_id, 50 * rel_s AS sc
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY query_id
-                  ORDER BY 50 * rel_s DESC, neighbor_id ASC
-              ) AS rn FROM cand) WHERE rn = 1
-    ),
-    sc2 AS (
-        SELECT c.query_id, c.neighbor_id,
-               50 * c.rel_s - 50 * s.sim_s AS sc
-        FROM cand c
-        JOIN s1 ON c.query_id = s1.query_id
-               AND c.neighbor_id <> s1.neighbor_id
-        JOIN sims s ON s.query_id = c.query_id
-                   AND s.a = c.neighbor_id AND s.b = s1.neighbor_id
-    ),
-    s2 AS (
-        SELECT query_id, neighbor_id, sc
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY query_id ORDER BY sc DESC, neighbor_id ASC
-              ) AS rn FROM sc2) WHERE rn = 1
-    ),
-    sc3 AS (
-        SELECT c.query_id, c.neighbor_id,
-               50 * c.rel_s - 50 * greatest(sa.sim_s, sb.sim_s) AS sc
-        FROM cand c
-        JOIN s1 ON c.query_id = s1.query_id
-               AND c.neighbor_id <> s1.neighbor_id
-        JOIN s2 ON c.query_id = s2.query_id
-               AND c.neighbor_id <> s2.neighbor_id
-        JOIN sims sa ON sa.query_id = c.query_id
-                    AND sa.a = c.neighbor_id AND sa.b = s1.neighbor_id
-        JOIN sims sb ON sb.query_id = c.query_id
-                    AND sb.a = c.neighbor_id AND sb.b = s2.neighbor_id
-    ),
-    s3 AS (
-        SELECT query_id, neighbor_id, sc
-        FROM (SELECT *, row_number() OVER (
-                  PARTITION BY query_id ORDER BY sc DESC, neighbor_id ASC
-              ) AS rn FROM sc3) WHERE rn = 1
-    )
-    SELECT query_id, neighbor_id, CAST(1 AS INT) AS pos,
-           sc AS mmr_score_scaled FROM s1
-    UNION ALL
-    SELECT query_id, neighbor_id, CAST(2 AS INT), sc FROM s2
-    UNION ALL
-    SELECT query_id, neighbor_id, CAST(3 AS INT), sc FROM s3
-    """,
-    "Maximal Marginal Relevance reranking (Carbonell & Goldstein "
-    "1998): per query, greedily select k of the top-n candidates "
-    "maximizing lam*relevance - (1-lam)*max-sim-to-selected — the "
-    "serve-time diversity pass. Greedy selection is sequential in k "
-    "(no SQL window expresses it), so this is the designed "
-    "Pandas-cogroup case: ALL float work (relevance, pairwise sims) "
-    "stays JVM-side as 1e4-scaled BIGINTs; Python only compares "
-    "integers over <=n_candidates rows per query — bit-identical "
-    "across engines. Oracle: the same greedy recurrence unrolled as "
-    "chained CTEs for k=3.",
-)
-def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.retrieval import mmr_rerank
-
-    emb = t(spark, sf_dir, "embeddings")
-    return mmr_rerank(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        n_candidates=10,
-        k=3,
-        lam_pct=50,
     )
 
 
@@ -1700,9 +1592,13 @@ def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample(d, "lang", 20)
 
 
-_CLUSTERS_ORACLE = (
+# Components of the J >= 0.7 pair graph as (node, min-id component).
+# ``pairs`` is MATERIALIZED because ``edges`` reads it twice: inlined,
+# DuckDB computes the shingle-pair Jaccard SQL once per reference, and
+# that (not the recursion) is most of these oracles' time.
+_COMPONENTS_CTES = (
     """
-    WITH RECURSIVE pairs AS ("""
+    WITH RECURSIVE pairs AS MATERIALIZED ("""
     + _JACCARD_ORACLE.format(thr=0.7)
     + """),
     edges AS (
@@ -1716,7 +1612,12 @@ _CLUSTERS_ORACLE = (
         UNION
         SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
     ),
-    comp AS (SELECT node, min(label) AS component FROM reach GROUP BY node)
+    comp AS (SELECT node, min(label) AS component FROM reach GROUP BY node)"""
+)
+
+_CLUSTERS_ORACLE = (
+    _COMPONENTS_CTES
+    + """
     SELECT node AS doc_id, component,
            (count(*) OVER (PARTITION BY component))::BIGINT AS cluster_size,
            node = component AS is_rep
@@ -1886,107 +1787,9 @@ def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "text_pii_scan",
-    r"""
-    WITH injected AS (
-        SELECT doc_id,
-               text
-               || CASE WHEN doc_id % 3 = 0
-                       THEN ' Reach user' || doc_id::VARCHAR || '@example.com now.'
-                       ELSE '' END
-               || CASE WHEN doc_id % 4 = 0
-                       THEN ' Call +41 21 '
-                            || lpad(((doc_id * 7) % 1000)::VARCHAR, 3, '0') || ' '
-                            || lpad(((doc_id * 13) % 100)::VARCHAR, 2, '0') || ' '
-                            || lpad(((doc_id * 17) % 100)::VARCHAR, 2, '0') || '.'
-                       ELSE '' END
-               || CASE WHEN doc_id % 5 = 0
-                       THEN ' Host 192.168.' || (doc_id % 256)::VARCHAR || '.'
-                            || ((doc_id * 3) % 256)::VARCHAR || ' up.'
-                       ELSE '' END AS text
-        FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_email,
-           len(regexp_extract_all(text,
-               '\+\d{2} \d{2} \d{3} \d{2} \d{2}'))::BIGINT AS n_phone,
-           len(regexp_extract_all(text,
-               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ipv4,
-           (len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-            + len(regexp_extract_all(text, '\+\d{2} \d{2} \d{3} \d{2} \d{2}'))
-            + len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
-            > 0) AS has_pii,
-           md5(regexp_replace(regexp_replace(regexp_replace(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-               '\+\d{2} \d{2} \d{3} \d{2} \d{2}', '[PHONE]', 'g'),
-               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g')) AS redacted_fp
-    FROM injected
-    """,
-    "PII scan: deterministic doc_id-derived injection (emails id%3, "
-    "phones id%4, IPv4 id%5), regex category counts, has_pii flag, and "
-    "md5 of the category-token-redacted text — one codegen'd scan, no "
-    "Python in the hot path.",
-)
-def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.pii import inject_pii, pii_scan
-
-    return pii_scan(inject_pii(t(spark, sf_dir, "documents")))
-
-
-@q(
-    "retrieval_bm25_topk",
-    """
-    WITH per AS (
-        SELECT doc_id, len(w)::BIGINT AS dl,
-               len(list_filter(w, x -> x = 'dup'))::BIGINT AS tf_0,
-               len(list_filter(w, x -> x = 'query'))::BIGINT AS tf_1,
-               len(list_filter(w, x -> x = 'scan'))::BIGINT AS tf_2
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
-              FROM documents)
-    ),
-    stats AS (
-        SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-               sum(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df_0,
-               sum(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df_1,
-               sum(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df_2
-        FROM per
-    )
-    SELECT doc_id, dl,
-           round(
-               ln((n - df_0 + 0.5) / (df_0 + 0.5) + 1) * tf_0 * 2.2
-                   / (tf_0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-             + ln((n - df_1 + 0.5) / (df_1 + 0.5) + 1) * tf_1 * 2.2
-                   / (tf_1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-             + ln((n - df_2 + 0.5) / (df_2 + 0.5) + 1) * tf_2 * 2.2
-                   / (tf_2 + 1.2 * (0.25 + 0.75 * dl / avgdl)),
-           4) AS bm25
-    FROM per CROSS JOIN stats
-    WHERE tf_0 + tf_1 + tf_2 > 0
-    ORDER BY bm25 DESC, doc_id ASC LIMIT 10
-    """,
-    "BM25 ranked retrieval for terms (dup, query, scan): per-doc tf/dl "
-    "as array projections (no explode, no corpus shuffle), one-row "
-    "stats aggregate broadcast back, TakeOrdered top-k.",
-)
-def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.retrieval import bm25_topk
-
-    return bm25_topk(
-        t(spark, sf_dir, "documents"), terms=["dup", "query", "scan"], k=10
-    )
-
-
-@q(
     "dedup_survivor_stats",
-    _CLUSTERS_ORACLE.replace(
-        """
-    SELECT node AS doc_id, component,
-           (count(*) OVER (PARTITION BY component))::BIGINT AS cluster_size,
-           node = component AS is_rep
-    FROM comp
-    """,
-        """,
+    _COMPONENTS_CTES
+    + """,
     drops AS (SELECT node FROM comp WHERE node <> component)
     SELECT source, count(*)::BIGINT AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars,
@@ -1994,7 +1797,6 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents WHERE doc_id NOT IN (SELECT node FROM drops)
     GROUP BY source
     """,
-    ),
     "End-to-end dedup pass: Jaccard pairs -> connected components -> "
     "drop non-representatives -> per-source survivor stats. Corpus "
     "anti-joined once on the id key (AQE picks broadcast when the drop "
@@ -2149,47 +1951,6 @@ def text_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.bigram_lm_scores(t(spark, sf_dir, "documents"))
-
-
-_SEMANTIC_COS = _cos_sql("a.embedding", "b.embedding")
-
-@q(
-    "dedup_semantic",
-    f"""
-    WITH seeds AS (
-        SELECT vec_id AS cell, embedding AS sv FROM embeddings WHERE vec_id < 8
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell FROM (
-            SELECT e.vec_id, e.embedding, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_cos_sql('e.embedding', 's.sv')} DESC,
-                                s.cell ASC
-                   ) AS rk
-            FROM embeddings e CROSS JOIN seeds s
-        ) WHERE rk = 1
-    )
-    SELECT a.vec_id, CAST(a.cell AS INT) AS cell,
-           NOT EXISTS (
-               SELECT 1 FROM assigned b
-               WHERE b.cell = a.cell AND b.vec_id < a.vec_id
-                 AND {_SEMANTIC_COS} >= 0.37
-           ) AS keep
-    FROM assigned a
-    """,
-    "SemDeDup (Abbas et al. 2023): cluster-scoped embedding near-dup "
-    "removal — zero-shuffle centroid assignment, within-cell pair "
-    "equi-join (τ=0.37 demo threshold; candidate volume Σ|cell|², never "
-    "corpus²).",
-)
-def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "embeddings")
-    seed_rows = (
-        e.select("vec_id", "embedding").orderBy("vec_id").limit(8).collect()
-    )
-    seeds = [(int(r["vec_id"]), list(r["embedding"])) for r in seed_rows]
-    return dedup.semantic_dedup(e, seeds, threshold=0.37)
 
 
 @q(
@@ -2544,101 +2305,11 @@ def text_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "Feature-hashed bag-of-words document vectors (hashing trick, "
     "L2-normalized, dim=64): the ML-free text→embedding bridge whose "
-    "output plugs into cosine_topk / LSH / SemDeDup. Uniform md5 bucket "
+    "output plugs into cosine_topk / LSH. Uniform md5 bucket "
     "key, map-side combine, one doc-keyed assembly aggregate.",
 )
 def text_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.hashed_doc_vectors(t(spark, sf_dir, "documents"))
-
-
-def _hybrid_oracle() -> str:
-    from impresso_ta.operators.retrieval import hashed_query_vector
-
-    qv = hashed_query_vector(["dup", "query", "scan"], 64)
-    qlit = "[" + ", ".join(repr(x) for x in qv) + "]"
-    cos = (
-        "round(list_sum(list_transform(list_zip(vector, {q}), "
-        "x -> x[1]::DOUBLE * x[2]::DOUBLE)) / "
-        "(sqrt(list_sum(list_transform(vector, v -> v::DOUBLE * v::DOUBLE)))"
-        " * sqrt(list_sum(list_transform({q}, v -> v::DOUBLE * v::DOUBLE)))"
-        "), 4)"
-    ).format(q=qlit)
-    return rf"""
-    WITH per AS (
-        SELECT doc_id, len(w)::BIGINT AS dl,
-               len(list_filter(w, x -> x = 'dup'))::BIGINT AS tf_0,
-               len(list_filter(w, x -> x = 'query'))::BIGINT AS tf_1,
-               len(list_filter(w, x -> x = 'scan'))::BIGINT AS tf_2
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w
-              FROM documents)
-    ),
-    stats AS (
-        SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-               sum(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df_0,
-               sum(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df_1,
-               sum(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df_2
-        FROM per
-    ),
-    sparse AS (
-        SELECT doc_id,
-               round(
-                   ln((n - df_0 + 0.5) / (df_0 + 0.5) + 1) * tf_0 * 2.2
-                       / (tf_0 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-                 + ln((n - df_1 + 0.5) / (df_1 + 0.5) + 1) * tf_1 * 2.2
-                       / (tf_1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
-                 + ln((n - df_2 + 0.5) / (df_2 + 0.5) + 1) * tf_2 * 2.2
-                       / (tf_2 + 1.2 * (0.25 + 0.75 * dl / avgdl)),
-               4) AS bm25
-        FROM per CROSS JOIN stats
-        WHERE tf_0 + tf_1 + tf_2 > 0
-        ORDER BY bm25 DESC, doc_id ASC LIMIT 20
-    ),
-    cw AS (SELECT doc_id,
-                  unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-           FROM documents WHERE doc_id IN (SELECT doc_id FROM sparse)),
-    bc AS (SELECT doc_id,
-                  ('0x' || substr(md5(word), 1, 12))::BIGINT % 64 AS bucket,
-                  count(*) AS c
-           FROM cw GROUP BY 1, 2),
-    nn AS (SELECT doc_id, sqrt(sum(c * c)) AS nrm FROM bc GROUP BY 1),
-    grid AS (SELECT doc_id, i AS bucket
-             FROM (SELECT DISTINCT doc_id FROM bc), unnest(range(0, 64)) AS t(i)),
-    filled AS (SELECT g.doc_id, g.bucket, coalesce(c, 0) AS c
-               FROM grid g LEFT JOIN bc USING (doc_id, bucket)),
-    vecs AS (SELECT doc_id,
-                    list(round(c::DOUBLE / nrm, 6) ORDER BY bucket) AS vector
-             FROM filled JOIN nn USING (doc_id) GROUP BY doc_id),
-    dense AS (SELECT doc_id, {cos} AS cosine FROM vecs),
-    ranked AS (
-        SELECT s.doc_id, s.bm25, d.cosine,
-               row_number() OVER (ORDER BY s.bm25 DESC, s.doc_id ASC) AS rs,
-               row_number() OVER (ORDER BY d.cosine DESC, s.doc_id ASC) AS rd
-        FROM sparse s JOIN dense d USING (doc_id)
-    )
-    SELECT doc_id, bm25, cosine,
-           round(1.0 / (60 + rs) + 1.0 / (60 + rd), 9) AS rrf
-    FROM ranked ORDER BY rrf DESC, doc_id ASC LIMIT 10
-    """
-
-
-@q(
-    "retrieval_hybrid_topk",
-    _hybrid_oracle(),
-    "Hybrid search: BM25 candidate generation (corpus never shuffled) "
-    "re-ranked by dense cosine over feature-hashed vectors computed "
-    "ONLY for the candidates, fused with reciprocal-rank fusion — "
-    "integer-rank deterministic, no weight tuning. Everything after "
-    "candidate generation touches k_sparse rows.",
-)
-def retrieval_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.retrieval import hybrid_topk
-
-    return hybrid_topk(
-        t(spark, sf_dir, "documents"),
-        terms=["dup", "query", "scan"],
-        k_sparse=20,
-        k_final=10,
-    )
 
 
 def _bpe_iter_cte(i: int) -> str:
@@ -2954,76 +2625,6 @@ def corpus_prepare_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @q(
-    "dedup_semantic_lsh",
-    f"""
-    WITH wts AS (
-        SELECT k, d,
-               ((('0x' || substr(md5(k::VARCHAR || '_' || d::VARCHAR), 1, 6))::BIGINT
-                 % 2001) - 1000) / 1000.0 AS w
-        FROM generate_series(0, 3) AS gk(k), generate_series(0, 63) AS gd(d)
-    ),
-    dots AS (
-        SELECT e.vec_id, w.k,
-               round(sum(e.embedding[w.d + 1]::DOUBLE * w.w), 4) AS dot
-        FROM embeddings e CROSS JOIN wts w
-        GROUP BY 1, 2
-    ),
-    assigned AS (
-        SELECT e.vec_id, e.embedding, c.cell
-        FROM embeddings e JOIN (
-            SELECT vec_id,
-                   CAST(sum(CASE WHEN dot >= 0
-                                 THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT)
-                   AS cell
-            FROM dots GROUP BY 1
-        ) c USING (vec_id)
-    )
-    SELECT a.vec_id, a.cell,
-           NOT EXISTS (
-               SELECT 1 FROM assigned b
-               WHERE b.cell = a.cell AND b.vec_id < a.vec_id
-                 AND {_SEMANTIC_COS} >= 0.37
-           ) AS keep
-    FROM assigned a
-    """,
-    "SemDeDup over hyperplane-LSH cells — the 100 TB assignment path: "
-    "cell id = 4 md5-derived hyperplane sign bits (row-local, zero "
-    "shuffle, n·bits·dims work), so cell COUNT grows exponentially in "
-    "bits while assignment cost grows linearly — doubling the corpus "
-    "adds one bit, unlike Voronoi assignment's n·nlist dot products "
-    "(O(n²/cell_size) when nlist tracks n). Within-cell drop pass "
-    "identical to dedup_semantic (τ=0.37 demo threshold).",
-)
-def dedup_semantic_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.semantic_dedup_lsh(
-        t(spark, sf_dir, "embeddings"), n_bits=4, threshold=0.37
-    )
-
-
-@q(
-    "embedding_gramian",
-    """
-    SELECT i, j,
-           round(sum(e.embedding[i]::DOUBLE * e.embedding[j]::DOUBLE), 4) AS g
-    FROM read_parquet_embeddings_placeholder e,
-         generate_series(1, 64) AS s1(i), generate_series(1, 64) AS s2(j)
-    GROUP BY 1, 2
-    """.replace("read_parquet_embeddings_placeholder", "embeddings"),
-    "Distributed Gramian X^T X (the RowMatrix.computeGramian shape): "
-    "each Arrow batch contributes one dims x dims numpy partial; only "
-    "those fixed-size partials shuffle — reduce volume is "
-    "n_batches·dims², independent of corpus row count, one corpus "
-    "scan. The PCA/whitening front-end for ANN indexing.",
-)
-def embedding_gramian(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.linalg import gramian
-
-    return gramian(t(spark, sf_dir, "embeddings")).select(
-        "i", "j", F.round(F.col("g"), 4).alias("g")
-    )
-
-
-@q(
     "layout_zorder_key",
     """
     SELECT o_orderkey,
@@ -3056,183 +2657,6 @@ def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_orderkey",
         zorder_key([F.col("o_custkey"), F.col("dd")], bits=16).alias("zkey"),
-    )
-
-
-_QUANT_DEQ_CTES = """
-    qstats AS (
-        SELECT d, min(e.embedding[d]::DOUBLE) AS lo,
-               max(e.embedding[d]::DOUBLE) AS hi
-        FROM embeddings e, generate_series(1, 64) AS s(d)
-        GROUP BY 1
-    ),
-    sarr AS (
-        SELECT list(lo ORDER BY d) AS los, list(hi ORDER BY d) AS his
-        FROM qstats
-    ),
-    deq AS (
-        SELECT e.vec_id,
-               list_transform(
-                   list_zip(e.embedding, s.los, s.his),
-                   x -> x[2] + coalesce(
-                       least(greatest(round(
-                           (x[1]::DOUBLE - x[2]) / nullif(x[3] - x[2], 0)
-                           * 255), 0), 255), 0)
-                       * (x[3] - x[2]) / 255
-               ) AS dv
-        FROM embeddings e CROSS JOIN sarr s
-    )"""
-
-
-@q(
-    "embedding_quantize_error",
-    f"""
-    WITH {_QUANT_DEQ_CTES.lstrip()},
-    errs AS (
-        SELECT e.vec_id, s.d,
-               abs(e.embedding[s.d]::DOUBLE - dq.dv[s.d]) AS err
-        FROM embeddings e
-        JOIN deq dq USING (vec_id), generate_series(1, 64) AS s(d)
-    )
-    SELECT e.d, round(q.lo, 6) AS lo, round(q.hi, 6) AS hi,
-           round(avg(e.err), 6) AS mean_abs_err
-    FROM errs e JOIN qstats q USING (d)
-    GROUP BY e.d, q.lo, q.hi
-    """,
-    "Scalar int8 quantization of the embedding store (4x smaller than "
-    "float32 before ANN indexing): per-dim min/max in ONE map-side-"
-    "combined pass (2·dims aggregates, constant-size collect), codes "
-    "as zero-shuffle literal expressions; oracled per-dimension "
-    "reconstruction error — the bound is (hi-lo)/510 per coordinate.",
-)
-def embedding_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.linalg import quantize_stats
-
-    e = t(spark, sf_dir, "embeddings")
-    stats = quantize_stats(e)
-    # r12 (guide §7.3): the original form built the full 64-code array
-    # (quantize_embeddings) + 64-term dequantize array + zip_with err
-    # lambda — a 64-wide nested expression tree whose py4j construction
-    # and Catalyst analysis cost ~10 s at the driver while the actual
-    # execution was 1.5 s. This form posexplodes the embedding FIRST
-    # and quantizes/dequantizes each element with a handful of scalar
-    # expressions over 64-element literal arrays: same arithmetic, same
-    # op order, bit-identical per-dim means (A/B-verified at sf1), tiny
-    # plan. The per-element algebra mirrors linalg.quantize_embeddings /
-    # dequantize_expr exactly (incl. the hi==lo -> code 0 branch).
-    # Fixed-64-dim assumption (ADVICE r12): posexplode emits one row
-    # per PRESENT element, so an embedding shorter than 64 dims yields
-    # no rows for its missing positions, where the old zip_with form
-    # emitted null-mean rows. Identical on the well-formed 64-dim
-    # catalog data (A/B + oracle verified); a corpus with ragged
-    # embeddings would need the zip_with form back.
-    los = F.array(*[F.lit(float(lo)) for lo, _ in stats])
-    his = F.array(*[F.lit(float(hi)) for _, hi in stats])
-    rngs = F.array(*[F.lit(hi - lo) for lo, hi in stats])
-    steps = F.array(*[F.lit((hi - lo) / 255) for lo, hi in stats])
-    idx = F.col("pos") + 1
-    lo_e = F.element_at(los, idx)
-    a_d = F.col("a").cast("double")
-    scaled = F.round((a_d - lo_e) / F.element_at(rngs, idx) * 255, 0)
-    code = F.when(
-        F.element_at(rngs, idx) == 0.0, F.lit(0).cast("smallint")
-    ).otherwise(
-        F.least(F.greatest(scaled, F.lit(0.0)), F.lit(255.0)).cast(
-            "smallint"
-        )
-    )
-    deq = lo_e + code.cast("double") * F.element_at(steps, idx)
-    return (
-        e.select(F.posexplode(F.col("embedding")).alias("pos", "a"))
-        .select("pos", F.abs(a_d - deq).alias("err"))
-        .groupBy("pos")
-        .agg(F.round(F.avg("err"), 6).alias("mean_abs_err"))
-        .select(
-            (F.col("pos") + 1).alias("d"),
-            F.round(F.element_at(los, F.col("pos") + 1), 6).alias("lo"),
-            F.round(F.element_at(his, F.col("pos") + 1), 6).alias("hi"),
-            "mean_abs_err",
-        )
-    )
-
-
-@q(
-    "embedding_quantize_recall",
-    f"""
-    WITH {_QUANT_DEQ_CTES.lstrip()},
-    {_ann_truth_cte().lstrip()},
-    approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_cos_sql('q.dv', 'c.dv')} DESC,
-                                c.vec_id ASC
-                   ) AS rk
-            FROM deq q CROSS JOIN deq c
-            WHERE q.vec_id % 97 = 0
-        ) WHERE rk <= 3
-    )
-    SELECT (SELECT count(*) FROM truth)::BIGINT AS n_truth,
-           count(t.query_id)::BIGINT AS n_hits,
-           round(count(t.query_id)::DOUBLE
-                 / (SELECT count(*) FROM truth), 4) AS recall
-    FROM approx a LEFT JOIN truth t USING (query_id, neighbor_id)
-    """,
-    "Measured recall@3 of int8-quantized cosine search vs float32 "
-    "ground truth (%97 query set) — the accuracy side of the 4x "
-    "storage cut, as an oracled number (expected ≈1.0: 1/510-per-dim "
-    "reconstruction error rarely reorders top-3 on these embeddings).",
-)
-def embedding_quantize_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.linalg import (
-        dequantize_expr,
-        quantize_embeddings,
-        quantize_stats,
-    )
-
-    e = t(spark, sf_dir, "embeddings")
-    stats = quantize_stats(e)
-    deq = quantize_embeddings(e, stats=stats).select(
-        "vec_id", dequantize_expr(F.col("codes"), stats).alias("embedding")
-    )
-    truth = similarity.cosine_topk(
-        e, e.filter(F.col("vec_id") % 97 == 0), k=3
-    ).select("query_id", "neighbor_id")
-    approx = similarity.cosine_topk(
-        deq, deq.filter(F.col("vec_id") % 97 == 0), k=3
-    ).select("query_id", "neighbor_id")
-    truth_n = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    return (
-        approx.join(truth, ["query_id", "neighbor_id"], "left_semi")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-        .crossJoin(F.broadcast(truth_n))
-        .select(
-            "n_truth",
-            "n_hits",
-            F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-        )
-    )
-
-
-@q(
-    "dedup_semantic_lsh_auto",
-    REGISTRY["dedup_semantic_lsh"].oracle,
-    "Corpus-sized LSH SemDeDup: n_bits = ceil(log2(n / 32)) grows with "
-    "the corpus so cell size stays ~constant and pair volume stays "
-    "linear — the scale contract the fixed-granularity demos violate "
-    "(fixed nlist=8 Voronoi measured 16.7x, fixed 4-bit LSH 55x at 10x "
-    "data; this variant is the benched one). The oracle SQL pins 4 "
-    "bits because that IS the auto sizing at the sf0.01 check scale "
-    "(ceil(log2(500/32)) = 4) — same convention as dedup_semantic's "
-    "nlist=8 seed CTE.",
-)
-def dedup_semantic_lsh_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.semantic_dedup_auto(
-        t(spark, sf_dir, "embeddings"),
-        target_cell_size=32,
-        threshold=0.37,
-        strategy="lsh",
     )
 
 
@@ -3277,157 +2701,6 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.8,
     )
     return survivors.select("doc_id", "lang")
-
-
-@q(
-    "dedup_semantic_lsh_recall",
-    f"""
-    WITH wts AS (
-        SELECT k, d,
-               ((('0x' || substr(md5(k::VARCHAR || '_' || d::VARCHAR), 1, 6))::BIGINT
-                 % 2001) - 1000) / 1000.0 AS w
-        FROM generate_series(0, 3) AS gk(k), generate_series(0, 63) AS gd(d)
-    ),
-    dots AS (
-        SELECT e.vec_id, w.k,
-               round(sum(e.embedding[w.d + 1]::DOUBLE * w.w), 4) AS dot
-        FROM embeddings e CROSS JOIN wts w
-        GROUP BY 1, 2
-    ),
-    cells AS (
-        SELECT vec_id,
-               CAST(sum(CASE WHEN dot >= 0
-                             THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT)
-               AS cell
-        FROM dots GROUP BY 1
-    ),
-    margins AS (
-        SELECT vec_id, k AS flip_k FROM (
-            SELECT vec_id, k,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY abs(dot) ASC, k ASC
-                   ) AS rk
-            FROM dots
-        ) WHERE rk = 1
-    ),
-    probed AS (
-        SELECT vec_id, cell FROM cells
-        UNION
-        SELECT c.vec_id, xor(c.cell, (1::BIGINT << m.flip_k)) AS cell
-        FROM cells c JOIN margins m USING (vec_id)
-    ),
-    truth AS (
-        SELECT a.vec_id AS ia, b.vec_id AS ib
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE {_SEMANTIC_COS} >= 0.37
-    ),
-    hit1 AS (
-        SELECT t.ia, t.ib FROM truth t
-        JOIN cells ca ON ca.vec_id = t.ia
-        JOIN cells cb ON cb.vec_id = t.ib AND cb.cell = ca.cell
-    ),
-    hit2 AS (
-        SELECT DISTINCT t.ia, t.ib FROM truth t
-        JOIN probed pa ON pa.vec_id = t.ia
-        JOIN cells cb ON cb.vec_id = t.ib AND cb.cell = pa.cell
-        UNION
-        SELECT DISTINCT t.ia, t.ib FROM truth t
-        JOIN probed pb ON pb.vec_id = t.ib
-        JOIN cells ca ON ca.vec_id = t.ia AND ca.cell = pb.cell
-    )
-    SELECT probes, n_truth, n_caught,
-           round(n_caught::DOUBLE / n_truth, 4) AS recall
-    FROM (
-        SELECT 1 AS probes,
-               (SELECT count(*) FROM truth)::BIGINT AS n_truth,
-               (SELECT count(*) FROM hit1)::BIGINT AS n_caught
-        UNION ALL
-        SELECT 2,
-               (SELECT count(*) FROM truth)::BIGINT,
-               (SELECT count(*) FROM (SELECT DISTINCT ia, ib FROM hit2))::BIGINT
-    )
-    """,
-    "Measured near-dup PAIR recall of the LSH cells vs the full "
-    "pairwise ground truth (cos ≥ 0.37, 4 bits) at probes ∈ {{1, 2}} — "
-    "the accuracy/cost curve of the boundary-flip multiprobe, as an "
-    "oracled number (recall must not decrease with probes; each added "
-    "probe costs ≤ 1 extra candidate set).",
-)
-def dedup_semantic_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.dedup import hyperplane_cells, hyperplane_dots
-    from impresso_ta.operators.similarity import cosine
-
-    e = t(spark, sf_dir, "embeddings")
-    n_bits, dims, tau = 4, 64, 0.37
-    cells = e.select(
-        "vec_id",
-        hyperplane_cells(F.col("embedding"), n_bits, dims).alias("cell"),
-    )
-    # lowest-|margin| bit per vector (ties → lowest k), as in multiprobe
-    margins = F.array_sort(
-        F.transform(
-            hyperplane_dots(F.col("embedding"), n_bits, dims),
-            lambda d, i: F.struct(
-                F.abs(F.round(d, 4)).alias("m"), i.alias("j")
-            ),
-        )
-    )
-    probed = (
-        e.join(cells, "vec_id")
-        .select(
-            "vec_id",
-            F.explode(
-                F.array_union(
-                    F.array(F.col("cell")),
-                    F.array(
-                        F.col("cell").bitwiseXOR(
-                            (F.lit(2.0) ** margins[0]["j"]).cast("long")
-                        )
-                    ),
-                )
-            ).alias("cell"),
-        )
-    )
-    a = e.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    b = e.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
-    truth = (
-        a.crossJoin(b)
-        .filter(F.col("ia") < F.col("ib"))
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 4) >= tau)
-        .select("ia", "ib")
-        .persist()
-    )
-    ca = cells.select(F.col("vec_id").alias("ia"), F.col("cell").alias("cell_a"))
-    cb = cells.select(F.col("vec_id").alias("ib"), F.col("cell").alias("cell_b"))
-    hit1 = (
-        truth.join(ca, "ia").join(cb, "ib")
-        .filter(F.col("cell_a") == F.col("cell_b"))
-        .select("ia", "ib")
-    )
-    pa = probed.select(F.col("vec_id").alias("ia"), F.col("cell").alias("pc"))
-    pb = probed.select(F.col("vec_id").alias("ib"), F.col("cell").alias("pc"))
-    hit2 = (
-        truth.join(pa, "ia").join(cb, "ib")
-        .filter(F.col("pc") == F.col("cell_b"))
-        .select("ia", "ib")
-        .unionByName(
-            truth.join(pb, "ib").join(ca, "ia")
-            .filter(F.col("pc") == F.col("cell_a"))
-            .select("ia", "ib")
-        )
-        .distinct()
-    )
-    n_truth = truth.count()
-
-    def row(probes: int, hits: DataFrame) -> DataFrame:
-        return hits.agg(F.count("*").cast("long").alias("n_caught")).select(
-            F.lit(probes).alias("probes"),
-            F.lit(n_truth).cast("long").alias("n_truth"),
-            "n_caught",
-            F.round(F.col("n_caught") / F.lit(n_truth), 4).alias("recall"),
-        )
-
-    return row(1, hit1).unionByName(row(2, hit2))
 
 
 def _minhash_survivors_oracle() -> str:
@@ -3507,22 +2780,8 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 _PREPARE_DEDUP_AUTO_ORACLE = (
-    """
-    WITH RECURSIVE pairs AS ("""
-    + _JACCARD_ORACLE.format(thr=0.7)
-    + """),
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION
-        SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT a AS node FROM edges),
-    reach(node, label) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    ),
-    comp AS (SELECT node, min(label) AS component FROM reach GROUP BY node),
+    _COMPONENTS_CTES
+    + """,
     drops AS (SELECT node AS doc_id FROM comp WHERE node <> component)
     SELECT d.doc_id, d.lang, d.n_chars FROM documents d
     WHERE d.doc_id NOT IN (SELECT doc_id FROM drops)
@@ -3608,8 +2867,7 @@ def corpus_prepare_dedup_survivors(
         FROM scored
     ) WHERE rank <= 3
     """,
-    "ANN with the index tier auto-picked from corpus size (the "
-    "similarity twin of semantic_dedup_auto's router): brute-force "
+    "ANN with the index tier auto-picked from corpus size: brute-force "
     "below 100k vectors, IVF with corpus-sized nlist to the measured "
     "~1e7 Voronoi ceiling, multiprobe hyperplane LSH beyond. At oracle "
     "sf the router picks brute — the forced ivf/lsh tiers are "
@@ -4134,140 +3392,6 @@ def corpus_prepare_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         domain_col="source",
     )
     return res.docs.select("source", "doc_id")
-
-
-@q(
-    "corpus_semantic_decontamination",
-    f"""
-    WITH bench AS (
-        SELECT vec_id, embedding FROM embeddings WHERE vec_id % 23 = 0
-    ),
-    train AS (SELECT * FROM embeddings WHERE vec_id % 23 <> 0),
-    hits AS (
-        SELECT DISTINCT t.vec_id
-        FROM train t JOIN bench b
-          ON {_cos_sql('t.embedding', 'b.embedding')} >= 0.35
-    )
-    SELECT t.vec_id, t.label FROM train t
-    LEFT JOIN hits h ON t.vec_id = h.vec_id
-    WHERE h.vec_id IS NULL
-    """,
-    "Embedding-space benchmark decontamination: drop every training "
-    "vector whose cosine to ANY benchmark vector reaches 0.35 — the "
-    "semantic complement of the shingle screen (catches paraphrased/"
-    "translated leakage with zero exact n-gram overlap). Spark shape: "
-    "benchmark collapsed to ONE broadcast row of (vector, norm) "
-    "structs, then a row-local EXISTS per train row (train-side norm "
-    "hoisted) — no shuffle, no pair materialization; the oracle "
-    "materializes the all-pairs join the operator avoids.",
-)
-def corpus_semantic_decontamination(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from impresso_ta.operators.similarity import semantic_decontamination
-
-    e = t(spark, sf_dir, "embeddings")
-    bench = e.filter(F.col("vec_id") % 23 == 0)
-    train = e.filter(F.col("vec_id") % 23 != 0)
-    # lsh_bench_threshold=None pins the EXACT screen: this query's oracle
-    # is the all-pairs form, and exactness must not silently flip to the
-    # one-sided LSH superset when a bigger sf pushes bench past the
-    # default auto-route threshold (round-8 review)
-    return semantic_decontamination(
-        train, bench, threshold=0.35, lsh_bench_threshold=None
-    ).select("vec_id", "label")
-
-
-_DECON_WTS_SQL = """
-    wts AS (
-        SELECT k, d,
-               ((('0x' || substr(md5(k::VARCHAR || '_' || d::VARCHAR), 1, 6))::BIGINT
-                 % 2001) - 1000) / 1000.0 AS w
-        FROM generate_series(0, 3) AS gk(k), generate_series(0, 63) AS gd(d)
-    )"""
-
-
-@q(
-    "corpus_semantic_decon_lsh",
-    f"""
-    WITH bench AS (
-        SELECT vec_id, embedding FROM embeddings WHERE vec_id % 23 = 0
-    ),
-    train AS (SELECT * FROM embeddings WHERE vec_id % 23 <> 0),
-    {_DECON_WTS_SQL},
-    bdots AS (
-        SELECT b.vec_id, w.k,
-               round(sum(b.embedding[w.d + 1]::DOUBLE * w.w), 4) AS dot
-        FROM bench b CROSS JOIN wts w GROUP BY 1, 2
-    ),
-    bcells AS (
-        SELECT vec_id,
-               CAST(sum(CASE WHEN dot >= 0
-                             THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT)
-               AS cell
-        FROM bdots GROUP BY 1
-    ),
-    bflips AS (
-        SELECT vec_id, k AS flip_k FROM (
-            SELECT vec_id, k,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY abs(dot) ASC, k ASC
-                   ) AS rk
-            FROM bdots
-        ) WHERE rk = 1
-    ),
-    bprobed AS (
-        SELECT vec_id, cell FROM bcells
-        UNION
-        SELECT c.vec_id, xor(c.cell, (1::BIGINT << f.flip_k)) AS cell
-        FROM bcells c JOIN bflips f USING (vec_id)
-    ),
-    tdots AS (
-        SELECT t.vec_id, w.k,
-               round(sum(t.embedding[w.d + 1]::DOUBLE * w.w), 4) AS dot
-        FROM train t CROSS JOIN wts w GROUP BY 1, 2
-    ),
-    tcells AS (
-        SELECT vec_id,
-               CAST(sum(CASE WHEN dot >= 0
-                             THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT)
-               AS cell
-        FROM tdots GROUP BY 1
-    ),
-    hits AS (
-        SELECT DISTINCT t.vec_id
-        FROM train t
-        JOIN tcells tc ON tc.vec_id = t.vec_id
-        JOIN bprobed bp ON bp.cell = tc.cell
-        JOIN bench b ON b.vec_id = bp.vec_id
-        WHERE {_cos_sql('t.embedding', 'b.embedding')} >= 0.35
-    )
-    SELECT t.vec_id, t.label FROM train t
-    LEFT JOIN hits h ON t.vec_id = h.vec_id
-    WHERE h.vec_id IS NULL
-    """,
-    "LSH-bucketed semantic decontamination — the LARGE-benchmark path "
-    "semantic_decontamination auto-routes to above 25k bench rows "
-    "(below that, bench×train row-local dot products are flat; a "
-    "corpus-sized 'benchmark' made them a measured silent quadratic — "
-    "1.59 s sf0.1 → 23.55 s sf1). Both sides take the SemDeDup "
-    "hyperplane cells; the bench side multiprobes its lowest-margin "
-    "bit flip, folds into ONE broadcast cell→[(vec,norm)] map, and "
-    "each train row scores only its own cell's slice — per-row cost "
-    "|bench|·n_probes/2^n_bits instead of |bench|, still zero corpus "
-    "shuffle. One-sided approximation (never drops a clean row); the "
-    "oracle replays cells, margins, probe union and the cell-equi hit "
-    "join exactly.",
-)
-def corpus_semantic_decon_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.similarity import semantic_decontamination_lsh
-
-    e = t(spark, sf_dir, "embeddings")
-    bench = e.filter(F.col("vec_id") % 23 == 0)
-    train = e.filter(F.col("vec_id") % 23 != 0)
-    return semantic_decontamination_lsh(
-        train, bench, threshold=0.35, n_bits=4, dims=64, n_probes=2
-    ).select("vec_id", "label")
 
 
 def _dsir_cte(

@@ -5,6 +5,7 @@ from impresso_ta.sources.discovery import (  # noqa: F401
     date_filter,
     detect_issues,
     incremental_filter,
+    walk_issues,
 )
 from impresso_ta.sources.readers import read_issues, read_pages  # noqa: F401
 from impresso_ta.sources.sinks import (  # noqa: F401

@@ -31,7 +31,16 @@ def detect_issues(
     fmt: str,
     default_edition: str = "a",
 ) -> DataFrame:
-    """Walk ``base/{alias}/{yyyy}/{mm}/{dd}[/{ed}]`` → discovery DataFrame.
+    """Walk ``base/{alias}/{yyyy}/{mm}/{dd}[/{ed}]`` → discovery DataFrame
+    (the rows of :func:`walk_issues`)."""
+    return spark.createDataFrame(
+        walk_issues(base_dir, fmt, default_edition), DISCOVERY_SCHEMA
+    )
+
+
+def walk_issues(base_dir: str, fmt: str, default_edition: str = "a") -> list[tuple]:
+    """The discovery rows ``(alias, date, edition, path, format)`` of
+    ``base/{alias}/{yyyy}/{mm}/{dd}[/{ed}]``, listed on the driver.
 
     Directories without an edition level get ``default_edition`` (the
     reference does the same, ref: detect.py:175-189). Listing order is
@@ -66,7 +75,7 @@ def detect_issues(
                         (alias, _date(yyyy, mm, dd), default_edition, root, fmt)
                     )
                     dirs.clear()
-    return spark.createDataFrame(rows, DISCOVERY_SCHEMA)
+    return rows
 
 
 def detect_issues_onb(

@@ -1,4 +1,4 @@
-"""C4 filters, corpus-wide line dedup, bigram-LM scoring, semantic dedup:
+"""C4 filters, corpus-wide line dedup, bigram-LM scoring, text normalization:
 hand-checkable invariants on tiny inputs + plan-shape assertions."""
 
 import hashlib
@@ -6,7 +6,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from impresso_ta.operators.dedup import line_dedup, semantic_dedup
+from impresso_ta.operators.dedup import line_dedup
 from impresso_ta.operators.text_analysis import bigram_lm_scores, c4_filters
 
 
@@ -73,25 +73,6 @@ def test_bigram_lm_prefers_frequent_bigrams(spark):
     # hand-check doc 9: vocabulary V=8 (x,y,q,r,s,t,u,v); each of its 5
     # bigrams has c2=1, left-context c1=1 → nll = -ln(2/(1+8))
     assert out[9] == round(-math.log(2.0 / 9.0), 4)
-
-
-def test_semantic_dedup_drops_higher_id_twin(spark):
-    e1 = [1.0, 0.0, 0.0]
-    e2 = [0.0, 1.0, 0.0]
-    rows = [
-        (0, e1),
-        (1, e2),
-        (5, e1),  # exact twin of 0, same cell → dropped
-        (7, [0.8, 0.6, 0.0]),  # cell 0 (cos 0.8 vs 0.6), cos 0.8 < τ → kept
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    seeds = [(0, e1), (1, e2)]
-    out = {
-        r["vec_id"]: r for r in semantic_dedup(emb, seeds, threshold=0.99).collect()
-    }
-    assert out[0]["keep"] and out[1]["keep"]
-    assert not out[5]["keep"] and out[5]["cell"] == 0
-    assert out[7]["keep"] and out[7]["cell"] == 0
 
 
 def test_hashed_doc_vectors_unit_norm_and_similarity(spark):
@@ -201,185 +182,6 @@ def test_language_consistency_flags_code_switching(spark):
     assert out[1]["majority_lang"] in ("en", "fr")
 
 
-def test_semantic_dedup_auto_scales_nlist(spark):
-    from impresso_ta.operators.dedup import semantic_dedup_auto
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    n = emb.count()
-    out = semantic_dedup_auto(emb, target_cell_size=10, threshold=0.99)
-    rows = out.collect()
-    assert len(rows) == n
-    # nlist = ceil(n/10) distinct seed cells → max observed cell well
-    # below the whole corpus; every vec assigned
-    cells = {}
-    for r in rows:
-        cells[r["cell"]] = cells.get(r["cell"], 0) + 1
-    assert len(cells) > 1
-    assert max(cells.values()) < n
-    # at tau=0.99 with random vectors nothing drops
-    assert all(r["keep"] for r in rows)
-
-
-def test_semantic_dedup_auto_distributed_matches_collect(spark):
-    """Parity at nlist > LITERAL_MAX_NLIST: the distributed seed path
-    (DataFrame centroid relation, no driver-Python materialization)
-    must match the collect-to-literal path row for row."""
-    from impresso_ta.operators.dedup import semantic_dedup_auto
-    from impresso_ta.operators.similarity import LITERAL_MAX_NLIST
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    n = emb.count()
-    cell = 2  # nlist = ceil(n/2) >> LITERAL_MAX_NLIST
-    assert n / cell > LITERAL_MAX_NLIST
-    kw = dict(target_cell_size=cell, threshold=0.9)
-    got = sorted(
-        tuple(r)
-        for r in semantic_dedup_auto(emb, strategy="distributed", **kw).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in semantic_dedup_auto(emb, strategy="collect", **kw).collect()
-    )
-    assert got == want
-    # auto picks the distributed path at this nlist
-    auto = sorted(
-        tuple(r) for r in semantic_dedup_auto(emb, **kw).collect()
-    )
-    assert auto == want
-
-
-def test_semantic_dedup_auto_hints_skip_sizing_actions(spark, monkeypatch):
-    """n/dims hints must suppress the router's count()/first() driver
-    actions (full scans on an uncached 100TB input) and produce the
-    identical result."""
-    from impresso_ta.operators.dedup import semantic_dedup_auto
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    n = emb.count()
-    kw = dict(target_cell_size=10, threshold=0.99)
-    want = sorted(tuple(r) for r in semantic_dedup_auto(emb, **kw).collect())
-
-    from pyspark.sql import DataFrame
-
-    def _boom(self, *a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("sizing action ran despite n/dims hints")
-
-    monkeypatch.setattr(DataFrame, "count", _boom)
-    monkeypatch.setattr(DataFrame, "first", _boom)
-    hinted = semantic_dedup_auto(emb, n=n, dims=64, **kw)
-    monkeypatch.undo()
-    assert sorted(tuple(r) for r in hinted.collect()) == want
-
-
-def test_semantic_dedup_lsh_twins_always_caught(spark):
-    """Identical vectors produce identical sign bits at ANY n_bits, so
-    exact twins can never be split across LSH cells — the higher id is
-    dropped just as in the Voronoi variant."""
-    from impresso_ta.operators.dedup import semantic_dedup_lsh
-
-    base = [(i % 7) / 7.0 - 0.4 for i in range(64)]
-    other = [((i * 3) % 11) / 11.0 - 0.5 for i in range(64)]
-    rows = [(0, base), (3, other), (9, list(base))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for bits in (1, 4, 8):
-        out = {
-            r["vec_id"]: r
-            for r in semantic_dedup_lsh(
-                emb, n_bits=bits, threshold=0.99
-            ).collect()
-        }
-        assert out[0]["keep"]
-        assert not out[9]["keep"], f"twin survived at n_bits={bits}"
-        assert out[0]["cell"] == out[9]["cell"]
-        assert 0 <= out[0]["cell"] < (1 << bits)
-
-
-def test_hyperplane_cells_deterministic_and_match_hashlib(spark):
-    """Cell ids are a pure function of the vector and the md5-derived
-    hyperplanes — recompute one vector's cell in plain Python and
-    compare (guards the engine-portable weight formula the DuckDB
-    oracle mirrors)."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from impresso_ta.operators.dedup import hyperplane_cells
-
-    vec = [((i * 5) % 13) / 13.0 - 0.45 for i in range(64)]
-    emb = spark.createDataFrame(
-        [(1, vec)], "vec_id long, embedding array<float>"
-    )
-    got = emb.select(
-        hyperplane_cells(F.col("embedding"), n_bits=6, dims=64).alias("c")
-    ).collect()[0]["c"]
-
-    expected = 0
-    import numpy as np
-
-    v32 = np.array(vec, dtype=np.float32)  # Spark stores float32
-    for k in range(6):
-        w = [
-            (int(hashlib.md5(f"{k}_{d}".encode()).hexdigest()[:6], 16) % 2001
-             - 1000) / 1000.0
-            for d in range(64)
-        ]
-        dot = sum(float(v32[d]) * w[d] for d in range(64))
-        if round(dot, 4) >= 0:
-            expected += 1 << k
-    assert got == expected
-
-
-def test_semantic_dedup_auto_lsh_strategy(spark):
-    """strategy='lsh' sizes n_bits from the corpus (⌈log2 n/cell⌉) and
-    still drops exact twins; cells bounded by 2^bits."""
-    from impresso_ta.operators.dedup import semantic_dedup_auto
-
-    base = [((i * 3) % 17) / 17.0 - 0.4 for i in range(8)]
-    rows = [(i, [x + i * 0.01 for x in base]) for i in range(40)]
-    rows.append((99, list(rows[0][1])))  # exact twin of id 0
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {
-        r["vec_id"]: r
-        for r in semantic_dedup_auto(
-            emb, target_cell_size=10, threshold=0.999, strategy="lsh"
-        ).collect()
-    }
-    # n=41, cell=10 → nlist=5 → n_bits=3 → cells < 8
-    assert all(0 <= r["cell"] < 8 for r in out.values())
-    assert out[0]["keep"] and not out[99]["keep"]
-
-
-def test_semantic_dedup_auto_routes_past_broadcast_budget(spark):
-    """'auto' must not feed a Voronoi centroid relation bigger than the
-    broadcast budget to a broadcast join (VERDICT r3 #3): with the
-    budget forced below nlist*dims*8 the auto path takes the row-local
-    LSH-cell route and is bit-identical to an explicit strategy='lsh'
-    run at the same (corpus-derived) sizing."""
-    from impresso_ta.operators.dedup import semantic_dedup_auto
-
-    base = [((i * 5) % 13) / 13.0 - 0.3 for i in range(8)]
-    rows = [(i, [x + i * 0.02 for x in base]) for i in range(70)]
-    rows.append((200, list(rows[3][1])))  # exact twin of id 3
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(target_cell_size=1, threshold=0.999)
-    # nlist = 71 > LITERAL_MAX_NLIST (64) so the collect tier is out;
-    # dims=8 → relation = 71*8*8 B; a 1 B budget forces the LSH tier
-    via_auto = sorted(
-        tuple(r)
-        for r in semantic_dedup_auto(
-            emb, strategy="auto", broadcast_budget_bytes=1, **kw
-        ).collect()
-    )
-    via_lsh = sorted(
-        tuple(r)
-        for r in semantic_dedup_auto(emb, strategy="lsh", **kw).collect()
-    )
-    assert via_auto == via_lsh
-    got = {r[0]: r for r in via_auto}
-    assert not got[200][-1]  # exact twin of a smaller id never survives
-    assert any(r[-1] for r in via_auto)  # and the pass is not drop-all
-
-
 def test_incremental_minhash_dedup_drops_only_near_dups(spark):
     """New docs near-duplicating an EXISTING doc are dropped; new docs
     that only near-duplicate each OTHER both survive (incremental gate
@@ -411,60 +213,3 @@ def test_incremental_minhash_dedup_drops_only_near_dups(spark):
     assert kept == {3, 5, 7}
 
 
-def test_semantic_dedup_lsh_multiprobe_catches_boundary_pair(spark):
-    """A near-dup pair split by ONE near-boundary hyperplane is missed
-    single-probe but caught with n_probes=2; probed drops dominate
-    unprobed drops on the same input."""
-    import hashlib
-
-    import numpy as np
-
-    from impresso_ta.operators.dedup import semantic_dedup_lsh
-
-    dims, bits = 16, 3
-    w = np.array(
-        [
-            [
-                (int(hashlib.md5(f"{k}_{d}".encode()).hexdigest()[:6], 16)
-                 % 2001 - 1000) / 1000.0
-                for d in range(dims)
-            ]
-            for k in range(bits)
-        ]
-    )
-    rng = np.array([((i * 5) % 13) / 13.0 - 0.45 for i in range(dims)])
-    base = rng / np.linalg.norm(rng)
-    # push base very close to hyperplane 0's boundary, clearly off 1&2
-    d0 = base @ w[0]
-    base = base - (d0 - 1e-3) * w[0] / (w[0] @ w[0])
-    # twin: reflect across hyperplane 0 only → adjacent cell, cosine≈1
-    twin = base - 2 * (base @ w[0]) * w[0] / (w[0] @ w[0])
-    cos = float(base @ twin / (np.linalg.norm(base) * np.linalg.norm(twin)))
-    assert cos > 0.99
-    filler = [
-        (10 + i, [float(x) for x in (rng * (0.3 + 0.1 * i)) + i * 0.05])
-        for i in range(4)
-    ]
-    emb = spark.createDataFrame(
-        [(0, [float(x) for x in base]), (1, [float(x) for x in twin])]
-        + filler,
-        "vec_id long, embedding array<float>",
-    )
-    kw = dict(n_bits=bits, threshold=0.99, dims=dims)
-    single = {
-        r["vec_id"]: r for r in semantic_dedup_lsh(emb, **kw).collect()
-    }
-    probed = {
-        r["vec_id"]: r
-        for r in semantic_dedup_lsh(emb, n_probes=2, **kw).collect()
-    }
-    # the pair straddles hyperplane 0 → different cells → single misses
-    assert single[0]["cell"] != single[1]["cell"]
-    assert single[1]["keep"]
-    # multiprobe flips the low-margin bit and re-unites the pair
-    assert not probed[1]["keep"]
-    assert probed[0]["keep"]
-    # dominance: probed drop set contains the unprobed drop set
-    dropped_single = {k for k, r in single.items() if not r["keep"]}
-    dropped_probed = {k for k, r in probed.items() if not r["keep"]}
-    assert dropped_single <= dropped_probed

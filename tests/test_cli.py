@@ -8,13 +8,14 @@ from pathlib import Path
 
 import pytest
 
+from tests.test_importer_ina import ina_tree  # noqa: F401 (fixture)
 from tests.test_importer_mets_alto import ALTO_PAGE, METS
 
 REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
-def _make_corpus(base):
-    for d in ("02", "03"):
+def _make_corpus(base, days=("02", "03")):
+    for d in days:
         issue_dir = base / "GAZ" / "1900" / "01" / d / "a"
         (issue_dir / "text").mkdir(parents=True)
         (issue_dir / "issue-mets.xml").write_text(METS)
@@ -151,6 +152,11 @@ def _lines(spark, path):
     return spark.read.text(str(path)).count()
 
 
+def _rows(spark, path):
+    """A store's text lines with their partition values, sorted."""
+    return sorted(map(tuple, spark.read.text(str(path)).collect()))
+
+
 def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
     corpus = tmp_path / "corpus"
     _make_tree_with_rejected_page(corpus)
@@ -231,13 +237,29 @@ def test_cli_incremental_store_errors(spark, tmp_path, monkeypatch):
     corpus = tmp_path / "corpus"
     _make_corpus(corpus)
     store = tmp_path / "store"
-    argv = [
+    common = [
         "import", "--input-dir", str(corpus), "--format", "mets_alto",
-        "--output-dir", str(store), "--incremental",
+        "--ts", "2024-01-01T00:00:00Z", "--output-dir",
     ]
+    argv = common + [str(store), "--incremental"]
     # a missing store is an empty one: every issue is imported
     _call(spark, "cmd_import", argv)
     assert _lines(spark, store / "issues") == 2
+
+    # an unchanged tree imports nothing and keeps every stored row
+    _call(spark, "cmd_import", argv)
+    assert _lines(spark, store / "issues") == 2
+    assert _lines(spark, store / "pages") == 2
+
+    # a grown tree adds its new issue: the store then equals one full
+    # import of that tree
+    _make_corpus(corpus, days=("04",))
+    _call(spark, "cmd_import", argv)
+    full = tmp_path / "full"
+    _call(spark, "cmd_import", common + [str(full)])
+    assert _lines(spark, store / "issues") == 3
+    for out in ("issues", "pages", "manifest"):
+        assert _rows(spark, store / out) == _rows(spark, full / out), out
 
     # any other failure to read the store raises, instead of silently
     # re-importing everything
@@ -249,6 +271,27 @@ def test_cli_incremental_store_errors(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sources, "incremental_filter", fail)
     with pytest.raises(RuntimeError, match="store unreadable"):
         _call(spark, "cmd_import", argv)
+
+
+def test_import_that_discovers_nothing_exits_2(spark, tmp_path, ina_tree, capsys):
+    """An input tree the walker finds no issue in is an error, not an
+    empty store; deciding it runs no Spark job."""
+    from impresso_ta import cli
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for tree, fmt in ((str(empty), "mets_alto"), (ina_tree, "ina_asr")):
+        out = tmp_path / f"out-{fmt}"
+        args = cli._build_parser().parse_args([
+            "import", "--input-dir", tree, "--format", fmt,
+            "--output-dir", str(out),
+        ])
+        codes = []
+        assert _jobs(spark, lambda: codes.append(cli.cmd_import(args, spark))) == 0
+        assert codes == [2]
+        err = capsys.readouterr().err
+        assert f"--input-dir {tree}" in err and f"--format {fmt}" in err
+        assert not out.exists()
 
 
 @pytest.mark.parametrize(

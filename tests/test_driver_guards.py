@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from impresso_ta.operators import similarity
 from impresso_ta.operators.cosine_arrow import brute_scored_arrow
 
 
@@ -20,18 +19,6 @@ def test_brute_scored_arrow_query_guard(spark):
         brute_scored_arrow(emb, emb, max_query_rows=3)
     # under the bound: plan builds fine (no action needed)
     brute_scored_arrow(emb, emb, max_query_rows=100)
-
-
-def test_semantic_decontamination_bench_guard(spark, monkeypatch):
-    emb = spark.range(10).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0), F.lit(2.0)).alias("embedding"),
-    )
-    monkeypatch.setattr(similarity, "_MAX_BENCH_ROWS", 3)
-    with pytest.raises(ValueError, match="semantic_decontamination_lsh"):
-        similarity._semantic_decontamination_arrow(
-            emb, emb, vec_col="embedding", threshold=0.9, round_to=4
-        )
 
 
 def test_warm_python_workers_runs(spark):
