@@ -3,8 +3,8 @@
 A from-scratch re-expression of the capability surface of
 impresso/impresso-text-acquisition (an OCR/ASR ETL pipeline built on Dask
 bags) as an idiomatic Spark DataFrame engine, plus the LLM-data-pipeline
-operators (dedup, similarity search, text analysis) required for
-large-scale corpus preparation. ``cli`` runs the three batch jobs:
+operators (dedup, text analysis) required for large-scale corpus
+preparation. ``cli`` runs the three batch jobs:
 ``import``, ``rebuild`` and ``corpus``.
 
 Layout
@@ -12,8 +12,8 @@ Layout
 - ``schemas``    fixed StructTypes for the canonical data model
                  (ref: importers/classes.py, rebuilders/helpers.py)
 - ``sources``    discovery (detect) + canonical readers + partitioned sinks
-- ``operators``  row validation, dedup, similarity search, text analysis
-                 and corpus preparation (``pipeline.prepare_corpus``, the
+- ``operators``  row validation, dedup, text analysis and corpus
+                 preparation (``pipeline.prepare_corpus``, the
                  ``corpus`` job)
 - ``functions``  scalar column functions (ids, coords, iiif, whitespace)
 - ``rebuild``    canonical → rebuilt ("solr") / passim document assembly

@@ -2,7 +2,7 @@
 (Sennrich et al. 2016), the step that turns a prepared corpus into the
 vocabulary its trainer tokenizes with.
 
-Scale shape (the MLlib-KMeans pattern, like ``similarity.ivf_refine``):
+Scale shape (the MLlib-KMeans pattern):
 the corpus is aggregated ONCE into a (word, count) vocabulary — the only
 corpus-sized stage, map-side combined on the uniform word key. Every
 merge iteration then runs on the vocabulary frame (tiny — thousands of

@@ -187,7 +187,8 @@ def bloom_filter_build(
     driver then assembles the dense word array: m/64 longs, i.e. the
     filter itself (m=2³³ → 128 MB, the practical broadcast ceiling).
     """
-    assert m_bits % 64 == 0, "m_bits must be a multiple of 64"
+    if m_bits % 64 != 0:
+        raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
     tsh = spread_small_input(train).select(
         F.explode(word_shingles(F.col(text_col), k)).alias("shingle")
     )

@@ -126,11 +126,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(_word_grams(F.split(F.trim(text), r"\s+"), k))
 
 
-def shingle_hash(shingle: Column) -> Column:
-    """Stable 31-bit shingle hash from md5 (engine-portable)."""
-    return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long") % _MERSENNE
-
-
 def shingle_hash48(shingle: Column) -> Column:
     """48-bit md5-prefix hash — the join/identity key for shingles.
 

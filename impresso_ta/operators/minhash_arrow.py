@@ -113,7 +113,11 @@ def minhash_signatures_arrow(
     from impresso_ta.operators.partitioning import spread_small_input
 
     # int64-overflow guard for the affine transform (see module doc)
-    assert (2 * num_perm - 1) * ((1 << 48) - 1) + _MERSENNE < (1 << 63)
+    if not (2 * num_perm - 1) * ((1 << 48) - 1) + _MERSENNE < (1 << 63):
+        raise ValueError(
+            f"num_perm={num_perm} overflows the int64 affine hash "
+            "(a*h + b with 48-bit h); use num_perm <= 16384"
+        )
 
     out_schema = _sig_schema(num_perm, with_sets)
     arrow_schema = to_arrow_schema(out_schema)

@@ -112,10 +112,8 @@ def hashed_doc_vectors(
 ) -> DataFrame:
     """Feature-hashed bag-of-words document vectors (Weinberger et al.
     2009): each word maps to bucket md5(word) % dim, bucket values are
-    L2-normalized term counts. The ML-free bridge from raw text to the
-    embedding operators — the output plugs straight into ``cosine_topk``
-    / ``lsh_bucketed_topk`` for text-to-text similarity without a
-    model.
+    L2-normalized term counts: an ML-free embedding of raw text, where
+    exact duplicates get identical vectors.
 
     Shape: explode → (doc, bucket) count with map-side combine (uniform
     md5 key), then one doc-keyed aggregate assembles the dense array
@@ -511,15 +509,11 @@ _LM_AUTO_ARROW_MIN_BYTES = 2 * 1024 * 1024
 
 def _lm_engine_auto(docs: DataFrame) -> str:
     """Route the bigram-LM gram engine by the docs frame's OPTIMIZER
-    SIZE ESTIMATE (plan stats — free, no job); same pattern as
-    ``similarity._brute_engine_auto``."""
-    try:
-        est = int(
-            str(docs._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes())
-        )
-    except Exception:
-        return "arrow"
+    SIZE ESTIMATE (plan stats — free, no job). A failed stats read
+    raises rather than silently picking an engine."""
+    est = int(
+        str(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
     thr = int(
         docs.sparkSession.conf.get(
             "spark.impresso_ta.lm.arrowMinBytes",

@@ -1,4 +1,4 @@
-"""Query catalog: the package's dedup, similarity, text-analysis and
+"""Query catalog: the package's dedup, text-analysis and
 corpus-preparation operators, each entry with a Spark implementation and
 a DuckDB oracle.
 
@@ -9,9 +9,8 @@ rounded so engine-order-of-summation differences can't flip the value
 hash, and counts are cast to the same width.
 
 Every entry runs ``impresso_ta`` code: a package operator applied to the
-synthetic tables under ``sf_dir`` (mostly ``documents`` and
-``embeddings``), checked against an independent DuckDB formulation of the
-same semantics. ``tools/preflight.py --static`` rejects an entry that
+synthetic tables under ``sf_dir`` (mostly ``documents``), checked
+against an independent DuckDB formulation of the same semantics. ``tools/preflight.py --static`` rejects an entry that
 calls no package code, since its oracle match would test only Spark.
 Engine-native operators (rebuild, importers) are additionally exercised
 on canonical fixtures in tests/.
@@ -26,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from impresso_ta.operators import dedup, similarity, text_analysis
+from impresso_ta.operators import dedup, text_analysis
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -62,7 +61,7 @@ def q(name: str, oracle: str | None, doc: str = ""):
 
 
 # =====================================================================
-# LLM-corpus operators: dedup / similarity / text analysis
+# LLM-corpus operators: dedup / text analysis
 # =====================================================================
 
 @q(
@@ -222,288 +221,6 @@ _SIMHASH_ORACLE = (
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash16(t(spark, sf_dir, "documents"))
-
-
-@q(
-    "similarity_topk_cosine",
-    """
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 5),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cosine
-        FROM q, c
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-        SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-        ) AS INT) AS rank
-        FROM scored
-    ) WHERE rank <= 3
-    """,
-    "Brute-force cosine top-k (broadcast queries, JVM-side dot products)",
-)
-def similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(
-        corpus=emb.filter(F.col("vec_id") >= 5),
-        queries=emb.filter(F.col("vec_id") < 5),
-        k=3,
-    )
-
-
-@q(
-    "similarity_hard_negatives",
-    """
-    WITH q AS (SELECT vec_id, embedding, label FROM embeddings
-               WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cosine
-        FROM q, embeddings c
-        WHERE c.label <> q.label AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-        SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-        ) AS INT) AS rank
-        FROM scored
-    ) WHERE rank <= 3
-    """,
-    "Hard-negative mining for contrastive / metric training: per query "
-    "vector the top-k most similar corpus vectors with a DIFFERENT "
-    "label — the close-but-wrong examples a contrastive loss learns "
-    "most from. Plan = cosine_topk with the label-inequality fused "
-    "into the broadcast cross join: queries broadcast, corpus scanned "
-    "once with zero shuffle, per-query top-k window. Same rounding / "
-    "id tie-break discipline as the other similarity oracles.",
-)
-def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.hard_negatives(
-        corpus=emb, queries=emb.filter(F.col("vec_id") % 100 == 0), k=3
-    )
-
-
-@q(
-    "similarity_hard_negatives_ivf",
-    """
-    WITH q AS (SELECT vec_id, embedding, label FROM embeddings
-               WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cosine
-        FROM q, embeddings c
-        WHERE c.label <> q.label AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-        SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-        ) AS INT) AS rank
-        FROM scored
-    ) WHERE rank <= 3
-    """,
-    "The SCALE path for hard-negative mining: candidates from each "
-    "anchor's probed IVF cells only — candidate volume ~corpus·nprobe/"
-    "nlist, the only corpus-sized operation is the cell equi-join "
-    "(the brute broadcast cross join is |corpus|x|anchors| and dies "
-    "when every corpus row is an anchor). Registered at FULL probe "
-    "(nprobe=nlist), which is exhaustive by construction — so the "
-    "brute form's SQL IS the oracle; pruning behavior is pinned by "
-    "the subset test, mirroring ivf_topk's contract.",
-)
-def similarity_hard_negatives_ivf(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.hard_negatives_ivf(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        nlist=8,
-        nprobe=8,
-        k=3,
-    )
-
-
-@q(
-    "similarity_training_triplets",
-    """
-    WITH q AS (SELECT vec_id, embedding, label FROM embeddings
-               WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.vec_id AS anchor_id, c.vec_id AS cand_id,
-               c.label = q.label AS same,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cos
-        FROM q, embeddings c
-        WHERE c.vec_id <> q.vec_id
-    ),
-    ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY anchor_id, same ORDER BY cos DESC, cand_id ASC
-        ) AS rk FROM scored
-    ),
-    pos AS (SELECT anchor_id, cand_id AS positive_id, cos AS pos_cos
-            FROM ranked WHERE same AND rk <= 2),
-    neg AS (SELECT anchor_id, cand_id AS negative_id, cos AS neg_cos
-            FROM ranked WHERE NOT same AND rk <= 2)
-    SELECT pos.anchor_id, positive_id, negative_id, pos_cos, neg_cos,
-           round(pos_cos - neg_cos, 4) AS margin
-    FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
-    """,
-    "Triplet assembly for metric learning: per anchor the k_pos "
-    "nearest SAME-label positives crossed with the k_neg nearest "
-    "DIFFERENT-label hard negatives, with margin = pos_cos - neg_cos "
-    "so a trainer keeps only violating triplets. ONE broadcast cross "
-    "join scores all pairs; both ranked sides carve out of it by a "
-    "(anchor, same-label) window — the corpus is scanned once, not "
-    "twice; the per-anchor positivesxnegatives cross is an equi-join.",
-)
-def similarity_training_triplets(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.training_triplets(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        k_pos=2,
-        k_neg=2,
-    )
-
-
-@q(
-    "similarity_semihard_triplets",
-    """
-    WITH q AS (SELECT vec_id, embedding, label FROM embeddings
-               WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.vec_id AS anchor_id, c.vec_id AS cand_id,
-               c.label = q.label AS same,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cos
-        FROM q, embeddings c
-        WHERE c.vec_id <> q.vec_id
-    ),
-    ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY anchor_id, same ORDER BY cos DESC, cand_id ASC
-        ) AS rk FROM scored
-    ),
-    pos AS (SELECT anchor_id, cand_id AS positive_id, cos AS pos_cos
-            FROM ranked WHERE same AND rk <= 2),
-    negs AS (SELECT anchor_id, cand_id AS negative_id, cos AS neg_cos
-             FROM ranked WHERE NOT same)
-    SELECT anchor_id, positive_id, negative_id, pos_cos, neg_cos,
-           round(pos_cos - neg_cos, 4) AS margin
-    FROM (
-        SELECT pos.anchor_id, positive_id, negative_id, pos_cos, neg_cos,
-               row_number() OVER (
-                   PARTITION BY pos.anchor_id, positive_id
-                   ORDER BY neg_cos DESC, negative_id ASC
-               ) AS srk
-        FROM pos JOIN negs ON pos.anchor_id = negs.anchor_id
-        WHERE neg_cos < pos_cos
-    ) WHERE srk <= 2
-    """,
-    "SEMI-HARD triplet selection (FaceNet, Schroff et al. 2015): per "
-    "(anchor, positive), the k_neg hardest negatives that are still "
-    "EASIER than the positive (neg_cos < pos_cos) — the band that "
-    "trains a metric without collapsing it; margin > 0 by "
-    "construction. Ranked per (anchor, positive) AFTER the "
-    "easier-than-positive filter (the global top-k_neg window cannot "
-    "be reused: all of its survivors may be harder than the positive "
-    "while semi-hard candidates rank below them). Pairs with no "
-    "semi-hard negative yield no row — callers union the default "
-    "hardest mode as the fallback.",
-)
-def similarity_semihard_triplets(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.training_triplets(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        k_pos=2,
-        k_neg=2,
-        semi_hard=True,
-    )
-
-
-@q(
-    "similarity_training_triplets_ivf",
-    """
-    WITH q AS (SELECT vec_id, embedding, label FROM embeddings
-               WHERE vec_id % 100 = 0),
-    scored AS (
-        SELECT q.vec_id AS anchor_id, c.vec_id AS cand_id,
-               c.label = q.label AS same,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cos
-        FROM q, embeddings c
-        WHERE c.vec_id <> q.vec_id
-    ),
-    ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY anchor_id, same ORDER BY cos DESC, cand_id ASC
-        ) AS rk FROM scored
-    ),
-    pos AS (SELECT anchor_id, cand_id AS positive_id, cos AS pos_cos
-            FROM ranked WHERE same AND rk <= 2),
-    neg AS (SELECT anchor_id, cand_id AS negative_id, cos AS neg_cos
-            FROM ranked WHERE NOT same AND rk <= 2)
-    SELECT pos.anchor_id, positive_id, negative_id, pos_cos, neg_cos,
-           round(pos_cos - neg_cos, 4) AS margin
-    FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
-    """,
-    "The SCALE path for triplet mining (r10): positives AND negatives "
-    "both drawn from each anchor's probed IVF cells — ONE cell "
-    "equi-join feeds both (anchor, same-label) windows, mirroring how "
-    "the brute form carves both sides from one scored cross join; "
-    "candidate volume ~corpus·nprobe/nlist where the brute form is "
-    "|corpus|x|anchors|. Registered at FULL probe (nprobe=nlist), "
-    "exhaustive by construction — the brute form's SQL IS the oracle; "
-    "pruning is pinned by the subset test, the hard_negatives_ivf "
-    "contract applied to triplets.",
-)
-def similarity_training_triplets_ivf(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.training_triplets_ivf(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        nlist=8,
-        nprobe=8,
-        k_pos=2,
-        k_neg=2,
-    )
 
 
 @q(
@@ -738,541 +455,6 @@ def x7_rescale_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(
             F.transform(rescaled, lambda x: x.cast("string")), ","
         ).alias("rescaled"),
-    )
-
-
-@q(
-    "dedup_embedding_cosine",
-    """
-    SELECT vec_a, vec_b, cosine FROM (
-        SELECT vec_a, vec_b, cosine,
-               CAST(row_number() OVER (ORDER BY cosine DESC, vec_a ASC, vec_b ASC)
-                    AS INT) AS rk
-        FROM (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   round(
-                       list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                           x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                       / (sqrt(list_sum(list_transform(a.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                        * sqrt(list_sum(list_transform(b.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-                   4) AS cosine
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        )
-    ) WHERE rk <= 20
-    """,
-    "Embedding-cosine near-dup: top-20 most similar pairs (all-pairs join)",
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.similarity import cosine
-
-    e = t(spark, sf_dir, "embeddings")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
-    )
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b")).select(
-        "vec_a",
-        "vec_b",
-        F.round(cosine(F.col("ea"), F.col("eb")), 4).alias("cosine"),
-    )
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_a"), F.asc("vec_b"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 20)
-        .select("vec_a", "vec_b", "cosine")
-    )
-
-
-def _lsh_planes(n_planes: int = 4, dims: int = 64) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes shared by the Spark impl
-    and the generated oracle SQL (Weyl-sequence coefficients)."""
-    planes = []
-    for i in range(n_planes):
-        planes.append(
-            [
-                round(((i * dims + j) * 2654435761 % 1000) / 500.0 - 1.0, 6)
-                for j in range(dims)
-            ]
-        )
-    return planes
-
-
-def _lsh_bucket_sql() -> str:
-    terms = []
-    for i, plane in enumerate(_lsh_planes()):
-        lits = ", ".join(str(v) for v in plane)
-        terms.append(
-            f"(CASE WHEN list_sum(list_transform(list_zip(embedding::DOUBLE[], "
-            f"[{lits}]::DOUBLE[]), x -> x[1] * x[2])) >= 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-        )
-    return (
-        "SELECT CAST(" + " + ".join(terms) + " AS INT) AS bucket, "
-        "count(*) AS n_vecs, min(vec_id) AS min_vec "
-        "FROM embeddings GROUP BY 1"
-    )
-
-
-@q(
-    "similarity_lsh_buckets",
-    _lsh_bucket_sql(),
-    "Random-hyperplane LSH bucketing (the ANN scale path: candidates ∝ corpus/2^planes)",
-)
-def similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.similarity import hyperplane_bucket
-
-    e = t(spark, sf_dir, "embeddings")
-    return (
-        e.select(
-            "vec_id",
-            hyperplane_bucket(F.col("embedding"), _lsh_planes()).alias("bucket"),
-        )
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_vecs"), F.min("vec_id").alias("min_vec"))
-    )
-
-
-def _cos_sql(a: str, b: str) -> str:
-    """DuckDB cosine(a, b) rounded to 4 — mirror of similarity.cosine."""
-    def sq(v: str) -> str:
-        return f"sqrt(list_sum(list_transform({v}, v -> v::DOUBLE * v::DOUBLE)))"
-
-    return (
-        f"round(list_sum(list_transform(list_zip({a}, {b}), "
-        f"x -> x[1]::DOUBLE * x[2]::DOUBLE)) / ({sq(a)} * {sq(b)}), 4)"
-    )
-
-
-_IVF_SQL = f"""
-    WITH seeds AS (
-        SELECT vec_id AS cell, embedding AS sv FROM embeddings WHERE vec_id < 8
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell FROM (
-            SELECT e.vec_id, e.embedding, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_cos_sql('e.embedding', 's.sv')} DESC, s.cell ASC
-                   ) AS rk
-            FROM embeddings e CROSS JOIN seeds s
-        ) WHERE rk = 1
-    ),
-    probes AS (
-        SELECT query_id, qv, cell FROM (
-            SELECT q.vec_id AS query_id, q.embedding AS qv, s.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_cos_sql('q.embedding', 's.sv')} DESC, s.cell ASC
-                   ) AS rk
-            FROM embeddings q CROSS JOIN seeds s WHERE q.vec_id % 97 = 0
-        ) WHERE rk <= 2
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rk AS INT) AS rnk FROM (
-        SELECT p.query_id, a.vec_id AS neighbor_id,
-               {_cos_sql('p.qv', 'a.embedding')} AS cosine,
-               row_number() OVER (
-                   PARTITION BY p.query_id
-                   ORDER BY {_cos_sql('p.qv', 'a.embedding')} DESC, a.vec_id ASC
-               ) AS rk
-        FROM probes p JOIN assigned a USING (cell)
-    ) WHERE rk <= 3
-"""
-
-
-@q(
-    "similarity_ivf_topk",
-    _IVF_SQL,
-    "IVF approximate nearest neighbors: corpus Voronoi-partitioned over "
-    "nlist=8 seed centroids (zero-shuffle literal argmax), queries probe "
-    "nprobe=2 cells — candidate volume ∝ corpus·nprobe/nlist",
-)
-def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    return similarity.ivf_topk(e, qs, nlist=8, nprobe=2, k=3).withColumnRenamed(
-        "rank", "rnk"
-    )
-
-
-@q(
-    "similarity_ivf_indexed_topk",
-    _IVF_SQL,
-    "ivf_topk over a PERSISTED index: the (id, vec, cell) assignment "
-    "is built ONCE at ingest (ivf_assign), written partitionBy(cell), "
-    "and every query run probes it without re-assigning the corpus — "
-    "with a cell-partitioned store the probe join reaches the scan as "
-    "DYNAMIC PARTITION PRUNING (plan-tested in "
-    "test_ivf_topk_indexed_parity_and_partition_pruning), so only "
-    "nprobe/nlist of the bytes are READ. Incremental crawls append "
-    "new batches assigned with the same frozen centroids. Same oracle as similarity_ivf_topk: identical "
-    "centroids and probes give bit-identical results by construction.",
-)
-def similarity_ivf_indexed_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    seeds = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.orderBy("vec_id").limit(8).collect()
-    ]
-    index = similarity.ivf_assign(e, seeds)
-    return similarity.ivf_topk_indexed(
-        index, qs, seeds, nprobe=2, k=3
-    ).withColumnRenamed("rank", "rnk")
-
-
-def _ann_truth_cte() -> str:
-    """Brute-force top-3 ground truth for the %97 query set over the
-    whole embeddings table — shared by both recall oracles."""
-    return f"""
-    truth AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_cos_sql('q.embedding', 'c.embedding')} DESC,
-                                c.vec_id ASC
-                   ) AS rk
-            FROM embeddings q CROSS JOIN embeddings c
-            WHERE q.vec_id % 97 = 0
-        ) WHERE rk <= 3
-    )"""
-
-
-def _ivf_recall_sql() -> str:
-    approx_parts = []
-    for p in (1, 2, 4):
-        approx_parts.append(
-            f"""
-        SELECT {p} AS nprobe, query_id, neighbor_id FROM (
-            SELECT pr.query_id, a.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY pr.query_id
-                       ORDER BY {_cos_sql('pr.qv', 'a.embedding')} DESC,
-                                a.vec_id ASC
-                   ) AS rk
-            FROM (SELECT query_id, qv, cell FROM probes
-                  WHERE probe_rank <= {p}) pr
-            JOIN assigned a USING (cell)
-        ) WHERE rk <= 3"""
-        )
-    approx = " UNION ALL ".join(approx_parts)
-    return f"""
-    WITH seeds AS (
-        SELECT vec_id AS cell, embedding AS sv FROM embeddings WHERE vec_id < 8
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell FROM (
-            SELECT e.vec_id, e.embedding, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_cos_sql('e.embedding', 's.sv')} DESC, s.cell ASC
-                   ) AS rk
-            FROM embeddings e CROSS JOIN seeds s
-        ) WHERE rk = 1
-    ),
-    probes AS (
-        SELECT query_id, qv, cell, rk AS probe_rank FROM (
-            SELECT q.vec_id AS query_id, q.embedding AS qv, s.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_cos_sql('q.embedding', 's.sv')} DESC, s.cell ASC
-                   ) AS rk
-            FROM embeddings q CROSS JOIN seeds s WHERE q.vec_id % 97 = 0
-        ) WHERE rk <= 4
-    ),
-    {_ann_truth_cte().lstrip()},
-    approx AS ({approx})
-    SELECT nprobe, n_truth, n_hits,
-           round(n_hits::DOUBLE / n_truth, 4) AS recall
-    FROM (
-        SELECT a.nprobe,
-               (SELECT count(*) FROM truth)::BIGINT AS n_truth,
-               count(t.query_id)::BIGINT AS n_hits
-        FROM approx a
-        LEFT JOIN truth t USING (query_id, neighbor_id)
-        GROUP BY a.nprobe
-    )
-    """
-
-
-@q(
-    "similarity_ivf_recall",
-    _ivf_recall_sql(),
-    "Measured recall@3 of IVF ANN vs brute-force ground truth at "
-    "nprobe ∈ {1,2,4} — the accuracy/cost curve of the approximate "
-    "path, as an oracled number (target: recall rises monotonically "
-    "with nprobe, 1.0 when every probed cell set covers the true "
-    "neighbors; ~0.6-0.9 at nprobe=1 on the synthetic embeddings)",
-)
-def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    truth = similarity.cosine_topk(e, qs, k=3).select(
-        "query_id", "neighbor_id"
-    )
-    truth_n = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    parts = []
-    for p in (1, 2, 4):
-        approx = similarity.ivf_topk(e, qs, nlist=8, nprobe=p, k=3)
-        parts.append(
-            approx.join(truth, ["query_id", "neighbor_id"], "left_semi")
-            .agg(F.count("*").cast("long").alias("n_hits"))
-            .select(F.lit(p).alias("nprobe"), "n_hits")
-        )
-    res = parts[0]
-    for x in parts[1:]:
-        res = res.unionByName(x)
-    return res.crossJoin(F.broadcast(truth_n)).select(
-        "nprobe",
-        "n_truth",
-        "n_hits",
-        F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-    )
-
-
-def _lsh_plane_sets(
-    n_tables: int = 3, n_planes: int = 4, dims: int = 64
-) -> list[list[list[float]]]:
-    """Deterministic per-table hyperplane sets (Weyl-sequence
-    coefficients continuing ``_lsh_planes`` — table 0 IS _lsh_planes()).
-    Delegates to the operator's own generator so the oracle SQL and the
-    engine can never drift apart."""
-    return similarity.deterministic_plane_sets(n_tables, n_planes, dims)
-
-
-def _lsh_recall_sql() -> str:
-    def bucket_expr(col: str, planes: list[list[float]]) -> str:
-        terms = []
-        for i, plane in enumerate(planes):
-            lits = ", ".join(str(v) for v in plane)
-            terms.append(
-                f"(CASE WHEN list_sum(list_transform(list_zip({col}::DOUBLE[], "
-                f"[{lits}]::DOUBLE[]), x -> x[1] * x[2])) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        return "CAST(" + " + ".join(terms) + " AS INT)"
-
-    plane_sets = _lsh_plane_sets(3)
-    bucket_cols = ", ".join(
-        f"{bucket_expr('embedding', planes)} AS b{i}"
-        for i, planes in enumerate(plane_sets)
-    )
-    approx_parts = []
-    for nt in (1, 2, 3):
-        cand_union = " UNION ALL ".join(
-            f"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-            f"q.embedding AS qv, c.embedding AS cv "
-            f"FROM b q JOIN b c ON q.b{ti} = c.b{ti} "
-            f"WHERE q.vec_id % 97 = 0"
-            for ti in range(nt)
-        )
-        approx_parts.append(
-            f"""
-        SELECT {nt} AS n_tables, query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY {_cos_sql('qv', 'cv')} DESC, neighbor_id ASC
-                   ) AS rk
-            FROM (SELECT DISTINCT query_id, neighbor_id, qv, cv
-                  FROM ({cand_union}))
-        ) WHERE rk <= 3"""
-        )
-    approx = " UNION ALL ".join(approx_parts)
-    return f"""
-    WITH b AS (SELECT vec_id, embedding, {bucket_cols} FROM embeddings),
-    {_ann_truth_cte().lstrip()},
-    approx AS ({approx})
-    SELECT n_tables, n_truth, n_hits,
-           round(n_hits::DOUBLE / n_truth, 4) AS recall
-    FROM (
-        SELECT a.n_tables,
-               (SELECT count(*) FROM truth)::BIGINT AS n_truth,
-               count(t.query_id)::BIGINT AS n_hits
-        FROM approx a
-        LEFT JOIN truth t USING (query_id, neighbor_id)
-        GROUP BY a.n_tables
-    )
-    """
-
-
-@q(
-    "similarity_lsh_recall",
-    _lsh_recall_sql(),
-    "Measured recall@3 of multi-probe hyperplane LSH vs brute-force "
-    "ground truth at 1-3 probe tables — recall compounds as "
-    "1-Π(1-rᵢ) per added table while the corpus is scanned once "
-    "(target: monotone non-decreasing in n_tables)",
-)
-def similarity_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "embeddings")
-    qs = e.filter(F.col("vec_id") % 97 == 0)
-    truth = similarity.cosine_topk(e, qs, k=3).select(
-        "query_id", "neighbor_id"
-    )
-    truth_n = truth.agg(F.count("*").cast("long").alias("n_truth"))
-    plane_sets = _lsh_plane_sets(3)
-    parts = []
-    for nt in (1, 2, 3):
-        approx = similarity.multiprobe_lsh_topk(
-            e, qs, plane_sets[:nt], k=3
-        )
-        parts.append(
-            approx.join(truth, ["query_id", "neighbor_id"], "left_semi")
-            .agg(F.count("*").cast("long").alias("n_hits"))
-            .select(F.lit(nt).alias("n_tables"), "n_hits")
-        )
-    res = parts[0]
-    for x in parts[1:]:
-        res = res.unionByName(x)
-    return res.crossJoin(F.broadcast(truth_n)).select(
-        "n_tables",
-        "n_truth",
-        "n_hits",
-        F.round(F.col("n_hits") / F.col("n_truth"), 4).alias("recall"),
-    )
-
-
-def _hard_negatives_lsh_sql() -> str:
-    def bucket_expr(col: str, planes: list[list[float]]) -> str:
-        terms = []
-        for i, plane in enumerate(planes):
-            lits = ", ".join(str(v) for v in plane)
-            terms.append(
-                f"(CASE WHEN list_sum(list_transform(list_zip({col}::DOUBLE[], "
-                f"[{lits}]::DOUBLE[]), x -> x[1] * x[2])) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        return "CAST(" + " + ".join(terms) + " AS INT)"
-
-    plane_sets = _lsh_plane_sets(2)
-    bucket_cols = ", ".join(
-        f"{bucket_expr('embedding', planes)} AS b{i}"
-        for i, planes in enumerate(plane_sets)
-    )
-    cand_union = " UNION ALL ".join(
-        f"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-        f"q.embedding AS qv, c.embedding AS cv "
-        f"FROM b q JOIN b c ON q.b{ti} = c.b{ti} "
-        f"WHERE q.vec_id % 100 = 0 "
-        f"AND c.label <> q.label AND c.vec_id <> q.vec_id"
-        for ti in range(len(plane_sets))
-    )
-    return f"""
-    WITH b AS (SELECT vec_id, embedding, label, {bucket_cols}
-               FROM embeddings)
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-        SELECT query_id, neighbor_id,
-               round({_cos_sql('qv', 'cv')}, 4) AS cosine,
-               CAST(row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY round({_cos_sql('qv', 'cv')}, 4) DESC,
-                            neighbor_id ASC
-               ) AS INT) AS rank
-        FROM (SELECT DISTINCT query_id, neighbor_id, qv, cv
-              FROM ({cand_union}))
-    ) WHERE rank <= 3
-    """
-
-
-@q(
-    "similarity_hard_negatives_lsh",
-    _hard_negatives_lsh_sql(),
-    "The beyond-IVF mining scale path (r10): hard negatives from "
-    "multi-probe hyperplane-LSH buckets — bucket assignment is "
-    "ROW-LOCAL in n*bits*dims (no Theta(n*nlist) centroid scoring, "
-    "the piece that dominated hard_negatives_ivf's measured 100x "
-    "tier), label-inequality and self-exclusion fused into every "
-    "bucket join, candidates deduped across tables before ONE scoring "
-    "pass. Plane sets are the deterministic Weyl coefficients shared "
-    "with the LSH recall oracle, so this DuckDB twin is EXACT, not a "
-    "recall bound.",
-)
-def similarity_hard_negatives_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.hard_negatives_lsh(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        plane_sets=_lsh_plane_sets(2),
-        k=3,
-    )
-
-
-def _training_triplets_lsh_sql() -> str:
-    def bucket_expr(col: str, planes: list[list[float]]) -> str:
-        terms = []
-        for i, plane in enumerate(planes):
-            lits = ", ".join(str(v) for v in plane)
-            terms.append(
-                f"(CASE WHEN list_sum(list_transform(list_zip({col}::DOUBLE[], "
-                f"[{lits}]::DOUBLE[]), x -> x[1] * x[2])) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        return "CAST(" + " + ".join(terms) + " AS INT)"
-
-    plane_sets = _lsh_plane_sets(2)
-    bucket_cols = ", ".join(
-        f"{bucket_expr('embedding', planes)} AS b{i}"
-        for i, planes in enumerate(plane_sets)
-    )
-    # NO label predicate in the candidate join: both label sides feed
-    # the carve (positives AND negatives) — only self-pairs are excluded
-    cand_union = " UNION ALL ".join(
-        f"SELECT q.vec_id AS anchor_id, c.vec_id AS cand_id, "
-        f"c.label = q.label AS same, "
-        f"round({_cos_sql('q.embedding', 'c.embedding')}, 4) AS cos "
-        f"FROM b q JOIN b c ON q.b{ti} = c.b{ti} "
-        f"WHERE q.vec_id % 100 = 0 AND c.vec_id <> q.vec_id"
-        for ti in range(len(plane_sets))
-    )
-    return f"""
-    WITH b AS (SELECT vec_id, embedding, label, {bucket_cols}
-               FROM embeddings),
-    scored AS (SELECT DISTINCT anchor_id, cand_id, same, cos
-               FROM ({cand_union})),
-    ranked AS (
-        SELECT *, row_number() OVER (
-            PARTITION BY anchor_id, same ORDER BY cos DESC, cand_id ASC
-        ) AS rk FROM scored
-    ),
-    pos AS (SELECT anchor_id, cand_id AS positive_id, cos AS pos_cos
-            FROM ranked WHERE same AND rk <= 2),
-    neg AS (SELECT anchor_id, cand_id AS negative_id, cos AS neg_cos
-            FROM ranked WHERE NOT same AND rk <= 2)
-    SELECT pos.anchor_id, positive_id, negative_id, pos_cos, neg_cos,
-           round(pos_cos - neg_cos, 4) AS margin
-    FROM pos JOIN neg ON pos.anchor_id = neg.anchor_id
-    """
-
-
-@q(
-    "similarity_training_triplets_lsh",
-    _training_triplets_lsh_sql(),
-    "The beyond-IVF triplet mining route (r11) — family symmetry with "
-    "hard_negatives_lsh: candidates for BOTH carve sides come from "
-    "multi-probe hyperplane-LSH buckets (row-local assignment in "
-    "n*bits*dims — no Theta(n*nlist) Voronoi scoring, the term the "
-    "committed mining curve shows dominating the IVF route at 100x), "
-    "self-pairs excluded but NO label predicate in the bucket join "
-    "(both label sides are candidates), (_same, cosine) computed "
-    "inside the join projection so the cross-table dedup shuffles "
-    "~25-byte rows, then the shared one-pass carve. Weyl plane sets "
-    "shared with the recall oracle make this DuckDB twin EXACT.",
-)
-def similarity_training_triplets_lsh(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.training_triplets_lsh(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") % 100 == 0),
-        plane_sets=_lsh_plane_sets(2),
-        k_pos=2,
-        k_neg=2,
     )
 
 
@@ -1735,55 +917,6 @@ def corpus_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from impresso_ta.operators.corpus import vocabulary
 
     return vocabulary(t(spark, sf_dir, "documents"), top_k=50)
-
-
-@q(
-    "similarity_knn_classify",
-    """
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-    c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 10),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cosine
-        FROM q, c
-    ),
-    topk AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-            ) AS rn FROM scored
-        ) WHERE rn <= 5
-    ),
-    votes AS (
-        SELECT query_id, label, count(*)::BIGINT AS n_votes,
-               round(sum(cosine), 4) AS sim_sum
-        FROM topk GROUP BY 1, 2
-    )
-    SELECT query_id, label AS pred_label, n_votes, sim_sum
-    FROM (SELECT *, row_number() OVER (
-              PARTITION BY query_id
-              ORDER BY n_votes DESC, sim_sum DESC, label ASC) AS r
-          FROM votes)
-    WHERE r = 1
-    """,
-    "kNN label assignment (k=5 cosine majority vote, labeled corpus "
-    "scanned once with labels riding the scan; broadcast queries; total "
-    "tie-break votes/sim/label).",
-)
-def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.similarity import knn_classify
-
-    emb = t(spark, sf_dir, "embeddings")
-    return knn_classify(
-        emb.filter(F.col("vec_id") >= 10),
-        emb.filter(F.col("vec_id") < 10).drop("label"),
-        k=5,
-    )
 
 
 @q(
@@ -2304,9 +1437,8 @@ def text_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM filled JOIN n USING (doc_id) GROUP BY doc_id
     """,
     "Feature-hashed bag-of-words document vectors (hashing trick, "
-    "L2-normalized, dim=64): the ML-free text→embedding bridge whose "
-    "output plugs into cosine_topk / LSH. Uniform md5 bucket "
-    "key, map-side combine, one doc-keyed assembly aggregate.",
+    "L2-normalized, dim=64): an ML-free text embedding. Uniform md5 "
+    "bucket key, map-side combine, one doc-keyed assembly aggregate.",
 )
 def text_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.hashed_doc_vectors(t(spark, sf_dir, "documents"))
@@ -2843,43 +1975,6 @@ def corpus_prepare_dedup_survivors(
         temperature_alpha=None,
     )
     return res.docs.select("doc_id", "lang", "n_chars")
-
-
-@q(
-    "similarity_ann_auto",
-    """
-    WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 5),
-    scored AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(
-                   list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                       x -> x[1]::DOUBLE * x[2]::DOUBLE))
-                   / (sqrt(list_sum(list_transform(q.embedding, v -> v::DOUBLE * v::DOUBLE)))
-                    * sqrt(list_sum(list_transform(c.embedding, v -> v::DOUBLE * v::DOUBLE)))),
-               4) AS cosine
-        FROM q, c
-    )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-        SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-        ) AS INT) AS rank
-        FROM scored
-    ) WHERE rank <= 3
-    """,
-    "ANN with the index tier auto-picked from corpus size: brute-force "
-    "below 100k vectors, IVF with corpus-sized nlist to the measured "
-    "~1e7 Voronoi ceiling, multiprobe hyperplane LSH beyond. At oracle "
-    "sf the router picks brute — the forced ivf/lsh tiers are "
-    "parity-tested against the direct operators in pytest.",
-)
-def similarity_ann_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    return similarity.ann_topk_auto(
-        corpus=emb.filter(F.col("vec_id") >= 5),
-        queries=emb.filter(F.col("vec_id") < 5),
-        k=3,
-    )
 
 
 # The reference's own shipped canonical sample (12 issues / 726 CIs

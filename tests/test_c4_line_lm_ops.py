@@ -76,7 +76,6 @@ def test_bigram_lm_prefers_frequent_bigrams(spark):
 
 
 def test_hashed_doc_vectors_unit_norm_and_similarity(spark):
-    from impresso_ta.operators.similarity import cosine_topk
     from impresso_ta.operators.text_analysis import hashed_doc_vectors
 
     docs = spark.createDataFrame(
@@ -93,19 +92,6 @@ def test_hashed_doc_vectors_unit_norm_and_similarity(spark):
     for v in rows.values():
         assert abs(sum(x * x for x in v) - 1.0) < 1e-4  # unit norm
     assert rows[0] == rows[1] != rows[2]
-
-    # composition: nearest neighbor of doc 0 (excluding itself) is its dup
-    top = cosine_topk(
-        vecs.withColumnRenamed("doc_id", "vec_id").withColumnRenamed(
-            "vector", "embedding"
-        ),
-        vecs.filter("doc_id = 0")
-        .withColumnRenamed("doc_id", "vec_id")
-        .withColumnRenamed("vector", "embedding"),
-        k=2,
-    ).collect()
-    ranked = sorted(top, key=lambda r: r["rank"])
-    assert ranked[0]["neighbor_id"] in (0, 1) and ranked[1]["neighbor_id"] in (0, 1)
 
 
 def test_normalize_text_rules(spark):

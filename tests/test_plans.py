@@ -9,7 +9,6 @@ advertise "zero shuffle" actually having zero exchanges.
 from pyspark.sql import functions as F
 
 from impresso_ta.operators.dedup import minhash_signatures
-from impresso_ta.operators.similarity import cosine_topk, ivf_assign
 
 SF = "/root/testdata/sf0.001"
 
@@ -43,62 +42,6 @@ def test_minhash_signatures_map_side_combine(spark):
     plan = _plan(sigs)
     assert "partial_min" in plan
     assert _shuffles(sigs) == 1
-
-
-def test_ivf_assign_is_shuffle_free(spark):
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    seeds = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.orderBy("vec_id").limit(4).collect()
-    ]
-    assert _shuffles(ivf_assign(e, seeds)) == 0
-
-
-def test_ivf_assign_broadcast_strategy_is_shuffle_free(spark):
-    """The broadcast-relation centroid form must keep the corpus
-    unshuffled too: the one-row centroid table arrives via
-    BroadcastExchange, never a ShuffleExchange of the corpus."""
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    seeds = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in e.orderBy("vec_id").limit(4).collect()
-    ]
-    assigned = ivf_assign(e, seeds, strategy="broadcast")
-    plan = _plan(assigned)
-    assert "BroadcastExchange" in plan
-    assert _shuffles(assigned) == 0
-
-
-def test_cosine_topk_corpus_never_shuffled_by_join(spark):
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs = e.filter(F.col("vec_id") % 53 == 0)
-    # r12 arrow engine: the queries ride the Arrow task closure — no
-    # join at all; the only shuffle is the final tiny window
-    topk = cosine_topk(e, qs, k=3, engine="arrow")
-    plan = _plan(topk)
-    assert "MapInArrow" in plan
-    assert "Join" not in plan
-    assert _shuffles(topk) == 1
-    # the r11 JVM form's contract still holds on the expr engine:
-    # query side broadcasts, corpus never join-shuffled
-    expr = cosine_topk(e, qs, k=3, engine="expr")
-    assert "BroadcastExchange" in _plan(expr)
-    assert _shuffles(expr) == 1
-
-
-def test_cosine_topk_auto_routes_by_corpus_size(spark):
-    # r13: the default engine routes by the corpus' optimizer size
-    # estimate — tiny test corpus → expr; with the threshold conf
-    # lowered to 1 byte the same call routes to arrow.
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs = e.filter(F.col("vec_id") % 53 == 0)
-    assert "BroadcastExchange" in _plan(cosine_topk(e, qs, k=3))
-    key = "spark.impresso_ta.brute.arrowMinBytes"
-    spark.conf.set(key, "1")
-    try:
-        assert "MapInArrow" in _plan(cosine_topk(e, qs, k=3))
-    finally:
-        spark.conf.unset(key)
 
 
 def test_c4_filters_zero_shuffle(spark):

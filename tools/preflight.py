@@ -76,7 +76,7 @@ def spark_only_entries(
 ) -> list[str]:
     """``@q`` entries whose function body references no name bound to
     an ``impresso_ta`` import — neither a module-level one (``dedup``,
-    ``similarity``, ``text_analysis``) nor a function-local
+    ``text_analysis``) nor a function-local
     ``from impresso_ta... import``. Such an entry rebuilds its operator
     from raw ``F.`` expressions, so agreeing with DuckDB says nothing
     about this package."""
