@@ -4,7 +4,7 @@ on the real embeddings table, plus hand-built tie-break cases."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from impresso_ta.operators.similarity import knn_classify
+from impresso_ta.operators.knn import knn_classify
 
 SF = "/root/testdata/sf0.001"
 
