@@ -599,6 +599,10 @@ def main(argv: list[str] | None = None) -> int:
             )
         if args.quality_model and not (0.0 <= args.quality_threshold <= 1.0):
             parser.error("--quality-threshold must be in [0, 1]")
+    if args.command == "rebuild" and args.audio and args.fmt == "passim":
+        # audio CIs list records, not pages: every passim document would
+        # come out empty
+        parser.error("--fmt passim is print-only; --audio needs --fmt solr")
     from impresso_ta.session import get_spark
 
     spark = get_spark(app_name=f"impresso_ta-{args.command}")

@@ -235,154 +235,6 @@ def _split_combined(combined: DataFrame) -> "ImportResult":
     return ImportResult(issues_df, pages_df, records_df, errors_df, combined)
 
 
-def _import_files_udtf(ts: Optional[str]):
-    """Like :func:`_import_udtf`, but each row carries the issue's file
-    BYTES (``files`` = array<struct<relpath,content>>): the task
-    materializes them onto executor-local scratch (the same disk Spark
-    spills to), runs the unchanged plugin against that directory, and
-    cleans up — no shared/POSIX mount needed anywhere."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-        import shutil
-        import tempfile
-
-        # ONE scratch parent per task, a subdir per issue, ONE rmtree at
-        # the end: the per-issue mkdtemp+rmtree variant measured 2x the
-        # materialization cost at the import scale probe
-        parent = tempfile.mkdtemp(prefix="impresso_import_")
-        try:
-            seq = 0
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples(index=False):
-                    date_str = _date_str(row)
-                    seq += 1
-                    tmpdir = os.path.join(parent, str(seq))
-                    try:
-                        try:
-                            for f in row.files:
-                                rp = f["relpath"]
-                                if rp.startswith(("/", "..")) or "/../" in rp:
-                                    raise ValueError(f"unsafe relpath {rp!r}")
-                                dest = os.path.join(tmpdir, rp)
-                                os.makedirs(
-                                    os.path.dirname(dest), exist_ok=True
-                                )
-                                with open(dest, "wb") as fh:
-                                    fh.write(f["content"])
-                        except Exception as exc:  # noqa: BLE001
-                            out.append(
-                                _error_row(
-                                    f"{row.alias}-{date_str}-{row.edition}",
-                                    exc,
-                                )
-                            )
-                            continue
-                        out.append(
-                            _parse_one(
-                                row.format, row.alias, date_str, row.edition,
-                                tmpdir, ts,
-                            )
-                        )
-                    finally:
-                        # scratch is bounded by ONE issue, not the task's
-                        # whole partition: a 100 TB run must never
-                        # accumulate its partition's bytes on local disk
-                        shutil.rmtree(tmpdir, ignore_errors=True)
-                yield pd.DataFrame(out, columns=IMPORT_COLUMNS)
-        finally:
-            shutil.rmtree(parent, ignore_errors=True)
-
-    return fn
-
-
-def import_issues_distributed(
-    spark,
-    base_uri: str,
-    fmt: str,
-    ts: Optional[str] = None,
-    default_edition: str = "a",
-) -> "ImportResult":
-    """Object-store twin of discover+:func:`import_issues` in one pass:
-    a ``binaryFile`` listing under ``base_uri`` flows each issue's file
-    BYTES through Spark (grouped per ``{alias}/{yyyy}/{mm}/{dd}[/{ed}]``
-    issue directory), so nothing ever re-``open()``s a path executor-side
-    — on ``s3a://``/``gs://`` stores the POSIX form would silently turn
-    every issue into an error row (the S9 lesson; VERDICT r7).
-
-    Edition semantics match the walker (``detect_issues`` parity): a date
-    level with single-letter edition dirs yields only those editions;
-    files directly under such a date dir are ignored; an editionless date
-    dir is one issue under ``default_edition``.
-
-    Cost shape at 100 TB: ONE listing job, ONE shuffle keyed by issue
-    (an issue is a few MB of XML — collect_list per issue is bounded by
-    issue size, never corpus size), then the same single UDTF pass as
-    :func:`import_issues`. Plugins are unchanged: each task materializes
-    its issues onto executor-local scratch one at a time.
-
-    Formats whose sidecars live OUTSIDE the issue dir (INA's base-level
-    ``ina_metadata.json``) need their dedicated detect + ``import_issues``
-    instead — this twin covers self-contained issue dirs.
-    """
-    from impresso_ta.sources.discovery import (
-        _normalize_base,
-        assert_listing_matched,
-        issue_listing_parts,
-    )
-
-    base = _normalize_base(base_uri)
-    listing = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(base)
-    )
-    # walker parity: once a date level has ANY edition dir, files sitting
-    # directly under the date dir belong to no issue. The election runs
-    # on a BYTES-FREE second listing (content pruned — a listing is
-    # paths + sizes, cheap at any corpus size) and joins back as a
-    # broadcast, so the byte rows never cross a window sort — their only
-    # exchange is the per-issue groupBy (plan-tested). Both sides share
-    # ONE path grammar (issue_listing_parts) with discovery's
-    # detect_issues_distributed, so detect and import cannot disagree.
-    paths_only = issue_listing_parts(listing.select("path"), base)
-    assert_listing_matched(listing.select("path"), paths_only, base_uri)
-    election = (
-        paths_only.filter((F.col("alias") != "") & F.col("date").isNotNull())
-        .groupBy("alias", "yyyy", "mm", "dd")
-        .agg(
-            (F.max(F.col("ed").isNotNull().cast("int")) == 1).alias("_any_ed")
-        )
-    )
-    parts = issue_listing_parts(listing.select("path", "content"), base)
-    parts = parts.filter(
-        (F.col("alias") != "") & F.col("date").isNotNull()
-    )
-    parts = parts.join(
-        F.broadcast(election), ["alias", "yyyy", "mm", "dd"], "inner"
-    ).filter(F.col("ed").isNotNull() | ~F.col("_any_ed"))
-    grouped = (
-        parts.groupBy("alias", "yyyy", "mm", "dd", "ed", "date")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("relpath", "content"))
-            ).alias("files")
-        )
-        .select(
-            "alias",
-            "date",
-            F.coalesce("ed", F.lit(default_edition)).alias("edition"),
-            F.lit(fmt).alias("format"),
-            "files",
-        )
-    )
-    combined = grouped.mapInPandas(
-        _import_files_udtf(ts), schema=IMPORT_ROW_SCHEMA
-    )
-    return _split_combined(combined)
-
-
 class ImportResult:
     """Named result: .issues, .pages, .records, .errors. Also unpacks as
     ``issues, pages, errors = import_issues(...)`` for print-only corpora
@@ -401,10 +253,6 @@ class ImportResult:
 
     def __iter__(self):
         return iter((self.issues, self.pages, self.errors))
-
-
-def empty_errors_df(spark) -> DataFrame:
-    return spark.createDataFrame([], ERROR_SCHEMA)
 
 
 def read_bytes_with_retries(

@@ -81,8 +81,8 @@ def compaction_plan(
     the driver pays per-file listing memory).
 
     Input: a file listing (path + size + partition columns) — e.g.
-    from a `binaryFile` scan with content PRUNED, the same
-    listing-only trick `detect_issues_distributed` uses. Output: one
+    from a `binaryFile` scan with the content column PRUNED, so no
+    file byte is read. Output: one
     row per partition with the merge decision, all integer
     arithmetic (engine-exact):
 

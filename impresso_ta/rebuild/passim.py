@@ -1,9 +1,11 @@
 """Canonical → passim-document pipeline (ref: rebuilders/helpers.py:262-311
 ``rebuild_for_passim`` + paper_rebuilders.py:233-269).
 
-Same cogroup shape as the solr pipeline; only the per-CI assembly differs
-(every token becomes a region with start/length/xywh coords, lines end with
-``\\n``, hyphenated parts are kept verbatim).
+Runs the solr pipeline's one rebuild plan (``solr._rebuild_issues``);
+only the per-CI assembly differs (every token becomes a region with
+start/length/xywh coords, lines end with ``\\n``, hyphenated parts are
+kept verbatim). Passim documents are print-only: an audio record has no
+pages.
 """
 
 from __future__ import annotations
@@ -11,16 +13,11 @@ from __future__ import annotations
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from impresso_ta.schemas import PASSIM_SCHEMA, TYPE_MAPPINGS
 from impresso_ta.rebuild.text import rebuild_text_passim
-from impresso_ta.rebuild.solr import (
-    _find_support,
-    json_rebuild_input,
-    support_issue_id,
-)
+from impresso_ta.rebuild.solr import _find_support, _rebuild_issues
 
 PASSIM_WITH_ERRORS_SCHEMA = StructType(
     PASSIM_SCHEMA.fields
@@ -29,8 +26,6 @@ PASSIM_WITH_ERRORS_SCHEMA = StructType(
         StructField("error", StringType(), True),
     ]
 )
-
-_FIELD_NAMES = [f.name for f in PASSIM_WITH_ERRORS_SCHEMA.fields]
 
 
 def rebuild_issue_passim(
@@ -100,55 +95,22 @@ def rebuild_issue_passim(
             }
 
 
-def _batch_fn(arrow_schema):
-    """JSON-transport UDTF body — see solr.json_rebuild_input for why the
-    input crosses the boundary as text rather than nested Arrow structs."""
-    import json
-
-    import pyarrow as pa
-
-    def fn(batches):
-        for batch in batches:
-            out: list[dict] = []
-            for js in batch.column(0).to_pylist():
-                issue = json.loads(js)
-                supports = issue.pop("_supports", None) or []
-                for doc in rebuild_issue_passim(issue, supports):
-                    out.append({k: doc.get(k) for k in _FIELD_NAMES})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return fn
-
-
 def rebuild_issues_passim(
     issues_df: DataFrame, supports_df: DataFrame
 ) -> DataFrame:
-    """Passim rebuild: supports grouped per issue + batch-level UDTF (same
-    plan shape as the solr pipeline)."""
-    _USED = {"id", "cc", "r"}
-    support_cols = [
-        F.col(f.name) for f in supports_df.schema.fields if f.name in _USED
-    ]
-    keyed = supports_df.withColumn(
-        "issue_id", support_issue_id(F.col("id"))
-    )
-    # explicit keyed repartition: same single shuffle, but exempt from
-    # AQE byte-based coalescing, which under-parallelizes the per-row
-    # compute-heavy assembly UDTF (see rebuild_issues_solr)
-    grouped = (
-        keyed.repartition(
-            int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-            "issue_id",
+    """Passim rebuild: :func:`rebuild_issue_passim` per issue, through
+    the solr pipeline's one rebuild plan. ``supports_df`` must be a page
+    store: audio records carry no ``r`` regions, and their CIs no ``pp``,
+    so every document would come out empty."""
+    if "r" not in supports_df.columns:
+        raise ValueError(
+            "passim documents are print-only: the supports have no page "
+            f"regions column 'r' (columns: {supports_df.columns})"
         )
-        .groupBy("issue_id")
-        .agg(F.collect_list(F.struct(*support_cols)).alias("_supports"))
-    )
-    joined = issues_df.join(
-        grouped, issues_df["id"] == grouped["issue_id"], "left"
-    ).drop("issue_id")
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return json_rebuild_input(joined).mapInArrow(
-        _batch_fn(to_arrow_schema(PASSIM_WITH_ERRORS_SCHEMA)),
-        schema=PASSIM_WITH_ERRORS_SCHEMA,
+    return _rebuild_issues(
+        issues_df,
+        supports_df,
+        rebuild_issue_passim,
+        PASSIM_WITH_ERRORS_SCHEMA,
+        ("id", "cc", "r"),
     )

@@ -2,16 +2,16 @@
 
 Replaces the reference's driver-side loop + Dask bag pipeline
 (ref: rebuilders/rebuilder.py:155-292 ``filter_and_process_cis`` /
-``rebuild_issues``) with ONE distributed job:
+``rebuild_issues``) with ONE distributed plan, which the passim format
+(rebuild/passim.py) shares:
 
-    issues ⨝ supports (cogrouped by issue id, one shuffle)
-        → per-issue UDTF: rejoin CIs (J3/J4) + assemble fulltext (W3/W4)
+    issues ⨝ supports (grouped by issue id, one pinned shuffle)
+        → per-issue assembly in one batch-level ``mapInArrow`` pass:
+          rejoin CIs (J3/J4) + assemble fulltext (W3/W4)
         → rebuilt rows with errors-as-data columns (F5/S15)
 
-Scale posture: issues are independent units of a few MB each — the cogroup
-key (issue id) is high-cardinality and unskewed, so this is one even
-shuffle of the pages table; at 100 TB both sides can additionally be
-bucketed by issue id at write time to make the cogroup shuffle-free.
+Issues are independent units of a few MB each: the grouping key (issue
+id) is high-cardinality, so this is one even shuffle of the pages table.
 All CI-level joins the reference hand-rolls in Python dict scans
 (ref: paper_rebuilders.py:285-313 page lookup + pOf region filter) happen
 inside the task against a single issue's data.
@@ -20,7 +20,8 @@ inside the task against a single issue's data.
 from __future__ import annotations
 
 import datetime
-from typing import Any, Iterable, Optional
+import functools
+from typing import Any, Callable, Iterable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -107,15 +108,18 @@ def _base_solr_ci(
     return solr_ci, mapped_type, lang
 
 
-def _reconstruct_iiif_link(ci: dict) -> Optional[str]:
-    """Image-CI IIIF link (ref: helpers.py:441-485). Python twin of
-    functions/iiif.py for use inside the UDTF."""
-    import posixpath
+# ref: rebuilders/helpers.py:29-34
+IIIF_ENDPOINT_BASE_2_SUFFIX = {
+    "https://ub-sipi.ub.unibas.ch/impresso": "max/0/default.jpg",
+    "https://scriptorium.bcu-lausanne.ch/api": "300,/0/default.jpg",
+}
+DEFAULT_IMG_SUFFIX = "full/0/default.jpg"
 
-    from impresso_ta.functions.iiif import (
-        DEFAULT_IMG_SUFFIX,
-        IIIF_ENDPOINT_BASE_2_SUFFIX,
-    )
+
+def _reconstruct_iiif_link(ci: dict) -> Optional[str]:
+    """Image-CI IIIF link (ref: helpers.py:417-485): the image area of
+    the CI's coordinates under its IIIF endpoint's suffix."""
+    import posixpath
 
     m = ci.get("m") or {}
     iiif = m.get("iiif_link") or ci.get("iiif_link")
@@ -279,35 +283,68 @@ def rebuild_issue_cis(
             }
 
 
-_FIELD_NAMES = [f.name for f in REBUILT_WITH_ERRORS_SCHEMA.fields]
+def _rebuild_issues(
+    issues_df: DataFrame,
+    supports_df: DataFrame,
+    assemble: Callable[[dict, list[dict]], Iterable[dict]],
+    schema: StructType,
+    support_fields: Iterable[str],
+) -> DataFrame:
+    """The one rebuild plan of both formats: supports grouped per issue
+    (one shuffle), joined to issues, then ONE batch-level ``mapInArrow``
+    pass that runs ``assemble(issue, supports)`` on every issue.
 
-
-def json_rebuild_input(joined: DataFrame) -> DataFrame:
-    """Collapse the issue+supports row to ONE JSON string column.
-
-    The UDTF input crosses the JVM→Python boundary as text, not as nested
-    Arrow structs: ``to_json`` runs inside whole-stage codegen and
-    ``json.loads`` is a C parser, while ``RecordBatch.to_pylist()`` on the
-    deeply-nested token tree walks it value-by-value in Python — measured
-    6× slower at sf0.1 (6.0s vs 1.0s for 5k issues, single-threaded).
-    ``to_json`` also drops null fields, which matches the canonical JSON
-    convention rebuild/text.py already assumes (absent == None) and
-    shrinks the transferred bytes.
-    """
-    return joined.select(F.to_json(F.struct(*joined.columns)).alias("js"))
-
-
-def _rebuild_udtf(ts: Optional[str], arrow_schema, default_language: Optional[str] = None):
-    """Batch-level mapInArrow function over JSON-encoded issues with
-    attached supports (see ``json_rebuild_input``).
-
-    One Python roundtrip per Arrow batch (~thousands of issues), not per
-    issue — the per-key applyInPandas cogroup was measured ~3× slower on
-    small-issue corpora (each key pays a full pandas/Arrow cycle).
+    ``support_fields`` names the support columns the assembly reads;
+    only those ride the shuffle. ``assemble`` yields one dict per output
+    row, with the ``schema`` fields it knows set.
     """
     import json
 
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = set(support_fields)
+    support_cols = [
+        F.col(f.name) for f in supports_df.schema.fields if f.name in fields
+    ]
+    # Pin the grouping exchange with an explicit keyed repartition: the
+    # groupBy reuses it (ClusteredDistribution(issue_id) is satisfied —
+    # ONE shuffle either way), but a user-specified partition count is
+    # exempt from AQE partition coalescing. AQE sizes partitions by
+    # shuffle BYTES, and the assembly's cost is per-ROW compute
+    # (token-tree assembly), so byte-sized coalescing can serialize it:
+    # on the zipfian sf1 profile (1024 issues, ~50 docs each) AQE
+    # collapsed the join output to ONE task — 34.8 s vs 11.2 s with the
+    # exchange pinned. collect_list has no byte-reducing map-side
+    # combine, so nothing is lost by aggregating after the exchange.
+    keyed = supports_df.withColumn(
+        "issue_id", F.regexp_replace(F.col("id"), "-[pr][0-9]{4}$", "")
+    )
+    keyed = keyed.repartition(
+        int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        "issue_id",
+    )
+    grouped = keyed.groupBy("issue_id").agg(
+        F.collect_list(F.struct(*support_cols)).alias("_supports")
+    )
+    joined = issues_df.join(
+        grouped, issues_df["id"] == grouped["issue_id"], "left"
+    ).drop("issue_id")
+
+    # The input crosses the JVM→Python boundary as ONE JSON string per
+    # issue, not as nested Arrow structs: ``to_json`` runs inside
+    # whole-stage codegen and ``json.loads`` is a C parser, while
+    # ``RecordBatch.to_pylist()`` on the deeply-nested token tree walks it
+    # value-by-value in Python — measured 6× slower at sf0.1 (6.0 s vs
+    # 1.0 s for 5k issues, single-threaded). ``to_json`` also drops null
+    # fields, which matches the canonical JSON convention rebuild/text.py
+    # assumes (absent == None) and shrinks the transferred bytes.
+    #
+    # One Python round trip per Arrow batch (~thousands of issues), not
+    # per issue: the per-key applyInPandas cogroup measured ~3× slower on
+    # small-issue corpora (each key pays a full pandas/Arrow cycle).
+    names = schema.fieldNames()
+    arrow_schema = to_arrow_schema(schema)
 
     def fn(batches):
         for batch in batches:
@@ -315,18 +352,13 @@ def _rebuild_udtf(ts: Optional[str], arrow_schema, default_language: Optional[st
             for js in batch.column(0).to_pylist():
                 issue = json.loads(js)
                 supports = issue.pop("_supports", None) or []
-                for ci in rebuild_issue_cis(
-                    issue, supports, ts=ts, default_language=default_language
-                ):
-                    out.append({k: ci.get(k) for k in _FIELD_NAMES})
+                for row in assemble(issue, supports):
+                    out.append({k: row.get(k) for k in names})
             yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
 
-    return fn
-
-
-def support_issue_id(id_col):
-    """Derive the issue id from a support id (``...-a-p0004`` → ``...-a``)."""
-    return F.regexp_replace(id_col, "-[pr][0-9]{4}$", "")
+    return joined.select(
+        F.to_json(F.struct(*joined.columns)).alias("js")
+    ).mapInArrow(fn, schema=schema)
 
 
 def rebuild_issues_solr(
@@ -335,270 +367,24 @@ def rebuild_issues_solr(
     ts: Optional[str] = None,
     default_language: Optional[str] = None,
 ) -> DataFrame:
-    """Rebuild all CIs: supports grouped per issue (J2, one shuffle),
-    joined to issues (co-partitioned on the same key), then ONE
-    batch-level UDTF pass.
+    """Rebuild all CIs: :func:`rebuild_issue_cis` per issue, through the
+    one rebuild plan (:func:`_rebuild_issues`).
 
     ``issues_df`` rows follow ISSUE_SCHEMA; ``supports_df`` rows follow
     PAGE_SCHEMA or AUDIO_RECORD_SCHEMA. Returns REBUILT_WITH_ERRORS_SCHEMA;
     split problem rows with ``split_errors``.
     """
-    # Only the fields the assembly actually reads ride the shuffle —
-    # cdt/ts/st/sm/iiif/notes etc. are dead weight in the grouped join
-    # (the r/s token trees dominate, but header pruning still trims the
-    # per-row payload and, at 100 TB, the scan itself via column pruning).
-    _USED = {"id", "cc", "r", "stt", "dur", "s"}
-    support_cols = [
-        F.col(f.name)
-        for f in supports_df.schema.fields
-        if f.name in _USED
-    ]
-    # A store that already carries issue_id (e.g. written bucketed by it,
-    # see sinks.write_pages_bucketed) keeps its bucketing through the
-    # groupBy — the shuffle disappears. Otherwise derive the key.
-    if "issue_id" in supports_df.columns:
-        # bucketed-store path: the existing layout (possibly bucketed by
-        # issue_id) satisfies the groupBy — adding a repartition here
-        # would reintroduce the shuffle the bucketing removed (tested)
-        keyed = supports_df
-    else:
-        # Pin the grouping exchange with an explicit keyed repartition:
-        # the groupBy reuses it (ClusteredDistribution(issue_id) is
-        # satisfied — ONE shuffle either way), but a user-specified
-        # partition count is exempt from AQE partition coalescing. AQE
-        # sizes partitions by shuffle BYTES, and the downstream assembly
-        # UDTF's cost is per-ROW compute (token-tree JSON assembly), so
-        # byte-sized coalescing can serialize it: on the zipfian sf1
-        # profile (1024 issues, ~50 docs each) AQE collapsed the join
-        # output to ONE task — 34.8 s vs 11.2 s with the exchange pinned.
-        # collect_list has no byte-reducing map-side combine, so nothing
-        # is lost by aggregating after the exchange.
-        keyed = supports_df.withColumn(
-            "issue_id", support_issue_id(F.col("id"))
-        )
-        keyed = keyed.repartition(
-            int(
-                keyed.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            ),
-            "issue_id",
-        )
-    grouped_supports = keyed.groupBy("issue_id").agg(
-        F.collect_list(F.struct(*support_cols)).alias("_supports")
-    )
-    joined = issues_df.join(
-        grouped_supports,
-        issues_df["id"] == grouped_supports["issue_id"],
-        "left",
-    ).drop("issue_id")
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return json_rebuild_input(joined).mapInArrow(
-        _rebuild_udtf(
-            ts,
-            to_arrow_schema(REBUILT_WITH_ERRORS_SCHEMA),
-            default_language=default_language,
+    return _rebuild_issues(
+        issues_df,
+        supports_df,
+        functools.partial(
+            rebuild_issue_cis, ts=ts, default_language=default_language
         ),
-        schema=REBUILT_WITH_ERRORS_SCHEMA,
+        REBUILT_WITH_ERRORS_SCHEMA,
+        # an audio record's sections are ``s``; cdt/ts/st/sm/iiif/notes
+        # are dead weight in the grouping
+        ("id", "cc", "r", "stt", "dur", "s"),
     )
-
-
-def rebuild_issues_solr_ci(
-    issues_df: DataFrame,
-    supports_df: DataFrame,
-    ts: Optional[str] = None,
-    default_language: Optional[str] = None,
-) -> DataFrame:
-    """CI-level twin of :func:`rebuild_issues_solr` — identical output,
-    assembly keyed by CONTENT ITEM instead of issue.
-
-    The issue-level plan's unit of work is one issue: a zipfian corpus
-    where one national daily's issue holds thousands of pages serializes
-    that issue's whole assembly into one task (measured tail 6x median
-    on the sf1 zipfian profile). But the assembly only ever reads, per
-    CI, the regions whose ``pOf`` names that CI on the pages in its
-    ``pp`` list — so the atomic unit is really the CI:
-
-    - region rows (the wide payload) shuffle ONCE keyed by
-      (issue_id, pOf) — each region goes to exactly one CI, zero
-      duplication, and the groupBy reuses the pinned partitioning;
-    - page presence/metadata (id, cc, stt, dur — a few narrow columns)
-      joins CI↔page pairs separately, so missing-page errors and the
-      cc consensus see exactly the pages the issue-level path sees;
-    - the Python assembly is byte-identical: each output row runs
-      :func:`rebuild_issue_cis` on a single-CI issue whose supports
-      carry only that CI's regions — the in-task ``pOf`` filter then
-      keeps everything (idempotent).
-
-    Group size becomes regions-per-CI — bounded by article length,
-    never by issue fatness — which is what makes the tail flat at any
-    corpus skew. Use this form when the alias/issue-size distribution
-    is heavy-tailed; the issue-level form remains the default for its
-    bucketed-store shuffle-free path.
-    """
-    n_parts = int(
-        issues_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    support_fields = {f.name for f in supports_df.schema.fields}
-    is_audio_store = "s" in support_fields and "r" not in support_fields
-
-    # --- one row per CI, issue header attached (narrow) ---------------
-    header = [
-        c for c in ("id", "st", "sm", "rp", "rc") if c in issues_df.columns
-    ]
-    cis = issues_df.select(
-        *[F.col(c).alias(f"_iss_{c}") for c in header],
-        F.explode("i").alias("_ci"),
-    ).withColumn("_ci_id", F.col("_ci.m.id"))
-    # sm / pp / rr are optional in the canonical schema (the issue-level
-    # twin reads them as dict keys that may be absent) — guard on
-    # column/field presence so a print-only store without `sm`, or a CI
-    # struct carrying only one of pp/rr, still plans (mirrors the
-    # `if c in issues_df.columns` header guard above).
-    if "sm" in issues_df.columns:
-        prefix = F.when(F.col("_iss_sm") == "audio", F.lit("r")).otherwise(
-            F.lit("p")
-        )
-    else:
-        prefix = F.lit("p")
-    ci_m_fields = {
-        f.name
-        for f in issues_df.schema["i"].dataType.elementType["m"].dataType.fields
-    }
-    no_sources = [
-        F.col(f"_ci.m.{c}") for c in ("pp", "rr") if c in ci_m_fields
-    ]
-    nos = F.array_sort(
-        F.array_distinct(F.coalesce(*no_sources, F.array()))
-    )
-    markers = F.transform(
-        nos,
-        lambda no: F.concat(
-            prefix, F.lpad(no.cast("string"), 4, "0")
-        ),
-    )
-    cis = cis.withColumn("_markers", markers)
-
-    # --- page/record presence + narrow metadata per (CI, marker) ------
-    meta_cols = [
-        F.col(c)
-        for c in ("id", "cc", "stt", "dur")
-        if c in support_fields
-    ]
-    page_meta = supports_df.select(
-        support_issue_id(F.col("id")).alias("_sup_issue"),
-        F.regexp_extract(F.col("id"), "([pr][0-9]{4})$", 1).alias(
-            "_sup_marker"
-        ),
-        F.struct(*meta_cols).alias("_pm"),
-    )
-    pairs = cis.select(
-        F.col("_iss_id"), F.col("_ci_id"), F.explode("_markers").alias("_mk")
-    )
-    found = (
-        pairs.join(
-            page_meta,
-            (pairs["_iss_id"] == page_meta["_sup_issue"])
-            & (pairs["_mk"] == page_meta["_sup_marker"]),
-        )
-        .groupBy("_iss_id", "_ci_id")
-        .agg(
-            F.collect_list(F.struct(F.col("_mk"), F.col("_pm"))).alias(
-                "_found"
-            )
-        )
-    )
-
-    # --- the wide payload: region (or audio-section) rows keyed by the
-    #     CI that owns them; ONE pinned exchange, reused by the groupBy
-    payload_col, pof = ("s", "s") if is_audio_store else ("r", "r")
-    regs = (
-        supports_df.select(
-            support_issue_id(F.col("id")).alias("_r_issue"),
-            F.regexp_extract(F.col("id"), "([pr][0-9]{4})$", 1).alias(
-                "_r_marker"
-            ),
-            # posexplode: region order within a page is SEMANTIC — the
-            # assembly concatenates a CI's regions in file order, and
-            # collect_list after a shuffle guarantees no order; the UDTF
-            # re-sorts by (marker, pos)
-            F.posexplode(payload_col).alias("_r_pos", "_reg"),
-        )
-        .withColumn("_r_pof", F.col("_reg.pOf"))
-        .repartition(n_parts, "_r_issue", "_r_pof")
-        .groupBy("_r_issue", "_r_pof")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("_r_marker"), F.col("_r_pos"), F.col("_reg"))
-            ).alias("_regs")
-        )
-    )
-
-    assembled = cis.join(
-        found, on=["_iss_id", "_ci_id"], how="left"
-    ).join(
-        regs,
-        (F.col("_iss_id") == F.col("_r_issue"))
-        & (F.col("_ci_id") == F.col("_r_pof")),
-        "left",
-    ).drop("_r_issue", "_r_pof", "_markers")
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return json_rebuild_input(assembled).mapInArrow(
-        _rebuild_ci_udtf(
-            ts,
-            to_arrow_schema(REBUILT_WITH_ERRORS_SCHEMA),
-            header,
-            "s" if is_audio_store else "r",
-            default_language=default_language,
-        ),
-        schema=REBUILT_WITH_ERRORS_SCHEMA,
-    )
-
-
-def _rebuild_ci_udtf(
-    ts: Optional[str],
-    arrow_schema,
-    header: list[str],
-    payload_field: str,
-    default_language: Optional[str] = None,
-):
-    """Batch UDTF over single-CI rows (see rebuild_issues_solr_ci):
-    reconstructs a one-CI issue dict + its pruned supports and delegates
-    to the SAME ``rebuild_issue_cis`` the issue-level path runs."""
-    import json
-
-    import pyarrow as pa
-
-    def fn(batches):
-        for batch in batches:
-            out: list[dict] = []
-            for js in batch.column(0).to_pylist():
-                row = json.loads(js)
-                issue = {
-                    h: row.get(f"_iss_{h}") for h in header
-                }
-                issue["i"] = [row.get("_ci") or {}]
-                by_marker: dict[str, list] = {}
-                for entry in sorted(
-                    row.get("_regs") or [],
-                    key=lambda e: (e["_r_marker"], e["_r_pos"]),
-                ):
-                    by_marker.setdefault(entry["_r_marker"], []).append(
-                        entry["_reg"]
-                    )
-                supports = []
-                for f_entry in row.get("_found") or []:
-                    pm = dict(f_entry.get("_pm") or {})
-                    pm[payload_field] = by_marker.get(f_entry["_mk"], [])
-                    supports.append(pm)
-                for ci in rebuild_issue_cis(
-                    issue, supports, ts=ts, default_language=default_language
-                ):
-                    out.append({k: ci.get(k) for k in _FIELD_NAMES})
-            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
-
-    return fn
 
 
 def split_errors(rebuilt_df: DataFrame) -> tuple[DataFrame, DataFrame]:

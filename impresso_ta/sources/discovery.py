@@ -5,9 +5,8 @@ The reference walks ``base/{alias}/{yyyy}/{mm}/{dd}[/{ed}]`` on the driver
 (ref: importers/detect.py:127-217). Here the walk is also driver-side (a
 directory listing is tiny relative to the data — millions of rows at
 most), but the result is a DataFrame immediately so every downstream step
-is distributed; on object stores, swap the walker for a
-``spark.read.format("binaryFile")`` listing + ``regexp_extract`` of the
-same path pattern without touching anything else.
+is distributed. The importers open each issue's files by path, so the
+tree must be on a filesystem every executor can read.
 """
 
 from __future__ import annotations
@@ -118,158 +117,6 @@ def detect_issues_onb(
         spark.createDataFrame(
             page_rows, "path string, page_id string, file string"
         ),
-    )
-
-
-def _strip_scheme(uri: str) -> str:
-    """``file:/a/b`` / ``s3a://bucket/a/b`` → ``/a/b`` / ``/a/b`` (the
-    path part, authority dropped) — so a base the user passes and the
-    scheme-qualified paths a binaryFile listing returns can be compared."""
-    m = re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", uri)
-    return uri[m.end() :] if m else uri
-
-
-def _normalize_base(base_uri: str) -> str:
-    """Scheme-less bases are resolved driver-side (symlinks, ``..``,
-    relative paths) so the prefix regex matches the CANONICAL paths a
-    binaryFile listing returns — a non-normalized base would otherwise
-    match nothing and silently yield zero issues. Scheme-qualified URIs
-    pass through (nothing to resolve locally)."""
-    base = base_uri.rstrip("/")
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", base):
-        return base
-    return os.path.realpath(base)
-
-
-# one source of truth for the {alias}/{yyyy}/{mm}/{dd}[/{ed}] grammar —
-# shared by detect_issues_distributed and import_issues_distributed so
-# the two can never disagree on which files belong to which issue.
-# Date parts are 1-4/1-2/1-2 digits (the walker accepts any all-digit
-# dirs, e.g. unpadded 986/1/1); validity is checked via make_date.
-_ISSUE_PATH_GROUPS = r"/([^/]+)/(\d{1,4})/(\d{1,2})/(\d{1,2})/(?:([a-z])/)?(.+)$"
-
-
-def issue_listing_parts(listing: DataFrame, base_uri: str) -> DataFrame:
-    """binaryFile listing rows → (alias, yyyy, mm, dd, ed, relpath, date
-    [+ content if selected upstream]) with the issue-path grammar applied
-    relative to the normalized base. ``ed`` is null for editionless date
-    dirs; non-conforming paths get alias='' (caller filters). yyyy/mm/dd
-    keep their ORIGINAL spellings so paths can be reconstructed exactly;
-    ``date`` is make_date-validated (null = impossible date, caller
-    decides)."""
-    base_path = _strip_scheme(_normalize_base(base_uri))
-    pat = "^" + re.escape(base_path) + _ISSUE_PATH_GROUPS
-    rel = F.regexp_replace(
-        "path", r"^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", ""
-    )
-    cols = [
-        F.regexp_extract(rel, pat, 1).alias("alias"),
-        F.regexp_extract(rel, pat, 2).alias("yyyy"),
-        F.regexp_extract(rel, pat, 3).alias("mm"),
-        F.regexp_extract(rel, pat, 4).alias("dd"),
-        F.nullif(F.regexp_extract(rel, pat, 5), F.lit("")).alias("ed"),
-        F.regexp_extract(rel, pat, 6).alias("relpath"),
-    ]
-    if "content" in listing.columns:
-        cols.append(F.col("content"))
-    out = listing.select(*cols)
-    return out.withColumn(
-        "date",
-        F.make_date(
-            F.col("yyyy").cast("int"),
-            F.col("mm").cast("int"),
-            F.col("dd").cast("int"),
-        ),
-    )
-
-
-def assert_listing_matched(
-    listing: DataFrame, parts: DataFrame, base_uri: str
-) -> None:
-    """Loud-fail guard against the silent-empty failure mode: a NON-empty
-    listing in which not a single file matches the issue-path grammar is
-    a mis-specified base (wrong root, unexpected layout), not an empty
-    corpus — raise instead of 'succeeding' with zero issues. Both counts
-    run on bytes-free projections (content pruned)."""
-    n_matched = parts.filter(F.col("alias") != "").limit(1).count()
-    if n_matched:
-        return
-    n_files = listing.select("path").limit(1).count()
-    if n_files:
-        raise ValueError(
-            f"listing under {base_uri!r} contains files but NONE match the "
-            "{alias}/{yyyy}/{mm}/{dd}[/{ed}] issue layout — wrong base dir "
-            "or unexpected tree structure (a truly empty corpus would have "
-            "no files at all)"
-        )
-
-
-def detect_issues_distributed(
-    spark: SparkSession,
-    base_uri: str,
-    fmt: str,
-    default_edition: str = "a",
-) -> DataFrame:
-    """Object-store twin of :func:`detect_issues` — the swap the walker
-    docstring promises: a ``binaryFile`` listing (content column never
-    selected, so no byte is read — same pruning contract as the S9 PDF
-    listing) + ``regexp_extract`` of the ``{alias}/{yyyy}/{mm}/{dd}
-    [/{ed}]`` pattern, entirely distributed. On ``s3a://``/``gs://``
-    this is the only form that works at all (no POSIX walk) and at
-    100 TB the listing itself parallelizes instead of serializing on
-    the driver.
-
-    Parity with the POSIX walker (tested): one row per issue dir; when
-    a date level has single-letter edition dirs only those are yielded
-    (files sitting directly under the date dir are ignored, as the
-    walker's ``dirs.clear()`` does); otherwise the date dir itself is
-    the issue with ``default_edition``. Paths are returned under the
-    caller's ``base_uri`` spelling so downstream readers keep the
-    caller's scheme.
-    """
-    base = _normalize_base(base_uri)
-    listing = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(base)
-        .select("path")  # content pruned — listing only
-    )
-    parts = issue_listing_parts(listing, base)
-    assert_listing_matched(listing, parts, base_uri)
-    parts = parts.filter(
-        (F.col("alias") != "") & F.col("date").isNotNull()
-    )
-    # one row per issue dir; a date level that has ANY edition dir
-    # yields only its editions (walker parity: dirs.clear() skips files
-    # directly under the date dir once editions exist)
-    by_date = parts.groupBy("alias", "yyyy", "mm", "dd", "date").agg(
-        # collect_list drops nulls: editionless rows contribute nothing
-        F.array_sort(F.array_distinct(F.collect_list("ed"))).alias("eds")
-    )
-    exploded = by_date.select(
-        "alias",
-        "yyyy",
-        "mm",
-        "dd",
-        "date",
-        F.explode(
-            F.when(F.size("eds") > 0, F.col("eds")).otherwise(
-                F.array(F.lit(None).cast("string"))
-            )
-        ).alias("ed"),
-    )
-    return exploded.select(
-        F.col("alias"),
-        F.col("date"),
-        F.coalesce("ed", F.lit(default_edition)).alias("edition"),
-        F.concat(
-            F.lit(base + "/"),
-            F.concat_ws("/", "alias", "yyyy", "mm", "dd"),
-            F.when(F.col("ed").isNotNull(), F.concat(F.lit("/"), "ed")).otherwise(
-                F.lit("")
-            ),
-        ).alias("path"),
-        F.lit(fmt).alias("format"),
     )
 
 

@@ -57,35 +57,6 @@ def write_pages(
         writer.parquet(out_dir)
 
 
-def write_pages_bucketed(
-    pages_df: DataFrame,
-    table: str,
-    buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """100 TB path: persist the pages store BUCKETED BY the issue id.
-
-    The rebuild's only shuffle is the group-supports-by-issue step; a
-    store bucketed on ``issue_id`` makes that groupBy (and the subsequent
-    join, when issues are bucketed the same way) shuffle-free — Spark
-    reads each bucket as one partition already keyed correctly. The
-    reference hand-approximated this with per-issue files (core.py:
-    530-573); bucketing gives the same locality without the
-    millions-of-tiny-files problem.
-    """
-    from pyspark.sql import functions as F
-
-    df = pages_df.withColumn(
-        "issue_id", F.regexp_replace(F.col("id"), "-[pr][0-9]{4}$", "")
-    )
-    (
-        df.write.mode(mode)
-        .bucketBy(buckets, "issue_id")
-        .sortBy("issue_id")
-        .saveAsTable(table)
-    )
-
-
 def write_rebuilt(
     rebuilt_df: DataFrame, out_dir: str, fmt: str = "json", mode: str = "overwrite"
 ) -> None:

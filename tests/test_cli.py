@@ -378,6 +378,25 @@ def test_corpus_flag_contracts_fail_before_any_session(
     assert message in capsys.readouterr().err
 
 
+def test_audio_passim_rebuild_fails_before_any_session(monkeypatch, capsys):
+    """`rebuild --audio --fmt passim` would write empty passim documents
+    (audio CIs have records, not pages) and exit 0; it exits 2 before a
+    session starts."""
+    from impresso_ta import cli, session
+
+    def no_session(*a, **k):
+        raise AssertionError("an audio passim rebuild reached get_spark")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main([
+            "rebuild", "--issues", "in", "--supports", "recs",
+            "--output-dir", "out", "--audio", "--fmt", "passim",
+        ])
+    assert exc.value.code == 2
+    assert "--fmt passim" in capsys.readouterr().err
+
+
 def test_specs_parse_to_dicts():
     from impresso_ta import cli
 

@@ -80,43 +80,22 @@ def test_rebuild_group_exchange_is_pinned_against_coalescing(spark):
     AQE may not byte-coalesce it below the configured parallelism — the
     compute-heavy assembly UDTF's parallelism rides this exchange
     (PLANS §8: unpinned, the zipfian profile serialized into one 35 s
-    task)."""
+    task). Both formats run the same plan, so both are checked."""
     from impresso_ta.plans.synthetic import synthetic_canonical_corpus
-    from impresso_ta.rebuild import rebuild_issues_solr
+    from impresso_ta.rebuild import rebuild_issues_passim, rebuild_issues_solr
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     issues_df, pages_df = synthetic_canonical_corpus(docs)
-    plan = _plan(rebuild_issues_solr(issues_df, pages_df))
-    assert "REPARTITION_BY_NUM" in plan
-    # one hash exchange for the grouping+join side of the supports — the
-    # issues side adds its own; no third exchange may appear between the
-    # pinned repartition and the collect_list aggregate
-    assert plan.count("Exchange hashpartitioning") <= 2
-
-
-def test_ci_level_regs_exchange_pinned_and_reused(spark):
-    """CI-level rebuild: the wide region payload shuffles ONCE — the
-    pinned repartition on (issue, pOf) must be the only exchange between
-    the supports scan and the collect_list aggregate (the groupBy reuses
-    the user partitioning), and it must be REPARTITION_BY_NUM so AQE
-    cannot coalesce under the assembly."""
-    from impresso_ta.plans.synthetic import synthetic_canonical_corpus
-    from impresso_ta.rebuild.solr import rebuild_issues_solr_ci
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    issues_df, pages_df = synthetic_canonical_corpus(docs)
-    plan = _plan(rebuild_issues_solr_ci(issues_df, pages_df))
-    assert "REPARTITION_BY_NUM" in plan
-    # the aggregate over (_r_issue, _r_pof) must sit directly on the
-    # pinned exchange: no hashpartitioning(_r_issue, _r_pof) exchange
-    # other than the explicit repartition itself
-    import re
-
-    regs_exchanges = [
-        m for m in re.findall(r"Exchange hashpartitioning\([^)]*_r_pof[^)]*\)[^\n]*", plan)
-    ]
-    assert len(regs_exchanges) == 1, regs_exchanges
-    assert "REPARTITION_BY_NUM" in regs_exchanges[0]
+    for rebuilt in (
+        rebuild_issues_solr(issues_df, pages_df),
+        rebuild_issues_passim(issues_df, pages_df),
+    ):
+        plan = _plan(rebuilt)
+        assert "REPARTITION_BY_NUM" in plan
+        # one hash exchange for the grouping+join side of the supports —
+        # the issues side adds its own; no third exchange may appear
+        # between the pinned repartition and the collect_list aggregate
+        assert plan.count("Exchange hashpartitioning") <= 2
 
 
 def test_lr_pipeline_stage_adds_no_shuffle(spark):

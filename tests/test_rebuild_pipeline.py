@@ -3,6 +3,8 @@
 Covers SURVEY J2/J3/J4 (issue⋈pages rejoin, pOf region filter), W3 (offsets),
 F5/S15 (errors-as-data) and the audio path."""
 
+import os
+
 import pytest
 from impresso_ta.rebuild.solr import (
     rebuild_issues_solr,
@@ -66,6 +68,51 @@ def test_missing_page_flags_problem(spark):
     assert len(err) == 1 and "p0007" in err[0]["error"]
     # problem CI excluded from rebuilt output but present in error channel
     assert len(ok_ids) == 3
+
+
+def test_store_without_sm_and_rr(spark):
+    """sm and rr are optional in the canonical schema: a print-only store
+    lacking the `sm` column, whose CI structs carry only `pp`, rebuilds
+    every CI with the same text as the full store."""
+    from pyspark.sql import functions as F
+
+    iss, pages = simple_issue_and_pages()
+    issues_df = spark.createDataFrame([iss], ISSUE_SCHEMA)
+    reduced = issues_df.drop("sm").withColumn(
+        "i",
+        F.transform(
+            "i", lambda ci: ci.withField("m", ci["m"].dropFields("rr"))
+        ),
+    )
+    pages_df = spark.createDataFrame(pages, PAGE_SCHEMA)
+
+    def texts(df):
+        out = rebuild_issues_solr(df, pages_df, ts="2024-01-01T00:00:00Z")
+        return {r["id"]: (r["ft"], r["has_problem"]) for r in out.collect()}
+
+    rows = texts(reduced)
+    assert rows == texts(issues_df) and len(rows) == 3
+    assert rows["GDL-1900-01-02-a-i0001"][0].startswith("Bonjour")
+    assert not any(problem for _, problem in rows.values())
+
+
+def test_zipfian_store_rebuilds_every_ci_once(spark, sf_dir):
+    """Zipfian issue sizes (a few hot issues hold most pages): every
+    document's CI comes out exactly once, with no problem row."""
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
+    from impresso_ta.plans.synthetic import synthetic_canonical_corpus
+    from tools.skewed_docs import zipfian_documents
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    skewed = zipfian_documents(docs, n_issues=16)  # hot groups at tiny sf
+    issues_df, pages_df = synthetic_canonical_corpus(skewed)
+    rows = rebuild_issues_solr(issues_df, pages_df).select(
+        "id", "has_problem"
+    ).collect()
+    assert len(rows) == len({r["id"] for r in rows}) == docs.count()
+    assert not any(r["has_problem"] for r in rows)
 
 
 def test_audio_rebuild(spark):
@@ -136,3 +183,14 @@ def test_passim(spark):
     assert [p["seq"] for p in art["pages"]] == [1, 2]
     total = sum(r["length"] for p in art["pages"] for r in p["regions"])
     assert total == len(art["text"])
+
+
+def test_passim_refuses_audio_records(spark):
+    """Passim documents are print-only: audio records have no page
+    regions, so their documents would come out empty with no problem
+    flagged. The rebuild refuses them instead."""
+    iss, recs = audio_issue_and_record()
+    issues_df = spark.createDataFrame([iss], ISSUE_SCHEMA)
+    recs_df = spark.createDataFrame(recs, AUDIO_RECORD_SCHEMA)
+    with pytest.raises(ValueError, match="print-only"):
+        rebuild_issues_passim(issues_df, recs_df)
