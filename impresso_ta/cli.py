@@ -426,6 +426,7 @@ def cmd_import(args, spark) -> int:
 
 
 def cmd_rebuild(args, spark) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from impresso_ta.rebuild import rebuild_issues_passim, rebuild_issues_solr
@@ -455,24 +456,32 @@ def cmd_rebuild(args, spark) -> int:
             issues, supports, ts=args.ts, default_language=args.default_language
         )
     else:
-        out = rebuild_issues_passim(issues, supports)
+        out = rebuild_issues_passim(
+            issues, supports, default_language=args.default_language
+        )
     ok, errors = split_errors(out)
     if args.languages:
         ok = ok.filter(F.col("lg").isin(args.languages.split(",")))
-    # the ok write, the error write and the count all read the one
-    # assembly: cached, the read, shuffle and Python assembly run once
+    # the ok write and the error write both read the one assembly:
+    # cached, the read, shuffle and Python assembly run once; the ok
+    # write counts its own rows
+    written = Observation("rebuilt")
     out.persist()
     try:
-        write_rebuilt(ok, f"{args.output_dir}/rebuilt", fmt=args.store_format)
+        write_rebuilt(
+            ok.observe(written, F.count(F.lit(1)).alias("n")),
+            f"{args.output_dir}/rebuilt",
+            fmt=args.store_format,
+        )
         write_errors(errors, f"{args.output_dir}/errors")
-        n_ok = ok.count()
     finally:
         out.unpersist()
-    print(f"rebuilt {n_ok} content items")
+    print(f"rebuilt {written.get['n']} content items")
     return 0
 
 
 def cmd_corpus(args, spark) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from impresso_ta.operators.pipeline import prepare_corpus
@@ -560,7 +569,10 @@ def cmd_corpus(args, spark) -> int:
             out_docs = deterministic_split(
                 out_docs, args.split, id_col=args.id_col
             )
-        out_docs.write.mode("overwrite").parquet(f"{args.output_dir}/corpus")
+        written = Observation("corpus")
+        out_docs.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(f"{args.output_dir}/corpus")
     finally:
         res.unpersist()
     for stage, n_in, n_out in res.stats:
@@ -574,8 +586,10 @@ def cmd_corpus(args, spark) -> int:
             n_shards=args.shards,
             id_col=args.id_col,
         )
-    n = spark.read.parquet(f"{args.output_dir}/corpus").count()
-    print(f"prepared corpus: {n} documents -> {args.output_dir}/corpus")
+    print(
+        f"prepared corpus: {written.get['n']} documents -> "
+        f"{args.output_dir}/corpus"
+    )
     return 0
 
 

@@ -9,8 +9,8 @@ into the standard LLM-corpus dedup suite):
   Jaccard — never materializes the full pair cross-product, only pairs
   that share ≥1 shingle; the heavy join is an equi-join Catalyst can
   shuffle-hash/sort-merge, and the shingle stream is salted naturally by
-  shingle hash. At 100 TB add a document-frequency cap (drop shingles in
-  >X% of docs) to bound the hot keys — exposed as ``max_shingle_df``.
+  shingle hash. Each shingle row carries its document's set size, so the
+  pair count needs no second pass over the corpus.
 - MinHash-LSH: k permutations via affine re-hashes of one 32-bit shingle
   hash, banded signature → candidates join on (band, band-hash) — the
   classic b·r tradeoff; candidates verified with exact Jaccard so false
@@ -139,18 +139,12 @@ def shingle_hash48(shingle: Column) -> Column:
     return F.conv(F.substring(F.md5(shingle), 1, 12), 16, 10).cast("long")
 
 
-def _explode_shingles(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
-    )
-
-
 def _explode_shingle_hashes(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    return _explode_shingles(
-        spread_small_input(docs), id_col, text_col, k
+    return spread_small_input(docs).select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
     ).select("doc_id", shingle_hash48(F.col("shingle")).alias("h"))
 
 
@@ -160,64 +154,43 @@ def jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.7,
-    max_shingle_df: int | None = None,
-    cache_shingles: bool = False,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs (a < b, jaccard ≥ threshold).
 
-    Join-on-shingle plan: |candidate rows| = Σ_shingle df² — bounded by
-    ``max_shingle_df`` at corpus scale (drop stop-shingles, standard
-    practice; None keeps all, exact semantics for the oracle check).
-    The exploded shingle frame feeds three subplans (both join sides +
-    sizes). Since the explode produces only (long, long) rows, RECOMPUTING
-    it per consumer now beats persist (measured: 2.1s vs 2.8s warm at
-    sf0.1 — cache materialization costs more than three re-scans), so
-    ``cache_shingles`` defaults to False. At 100 TB, where re-scanning
-    the corpus 3× is the dominant cost, write the shingle frame to an
-    explicit materialized table (or pass cache_shingles=True for
-    MEMORY_AND_DISK persist) instead.
+    Join-on-shingle plan: |candidate rows| = Σ_shingle df². Every
+    exploded row carries its document's set size ``n`` (the size of the
+    distinct shingle array it came from), so the self-join's per-pair
+    count groups on ``(doc_a, doc_b, n_a, n_b)`` and the Jaccard follows
+    without a per-document size aggregate or a join back to it: the plan
+    has two exchanges, the self-join on ``h`` and the pair aggregate.
     All post-explode plumbing rides the 48-bit hash (``shingle_hash48``),
     never the string.
     """
-    sh = _explode_shingle_hashes(docs, id_col, text_col, k)
-    if cache_shingles:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("h")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("h")
-        )
-        sh = sh.join(rare, "h")
-    # O(|docs|) rows, joined twice downstream: both joins read the one
-    # aggregate exchange (exchange reuse). Not persisted: a persist here
-    # would outlive the returned lazy frame with no handle to release
-    # it; a caller that reads the pairs more than once persists them
-    # (prepare_corpus does)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-
+    sets = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        word_shingles(F.col(text_col), k).alias("_s"),
+    )
+    # explode_outer: for a plain explode of a column, Catalyst infers
+    # size(_s) > 0 and pushes it below the projection, building each
+    # document's shingles three times. The outer form's extra row for a
+    # null text has a null hash, which never joins.
+    sh = sets.select(
+        "doc_id",
+        F.size("_s").alias("n"),
+        F.explode_outer("_s").alias("shingle"),
+    ).select("doc_id", "n", shingle_hash48(F.col("shingle")).alias("h"))
     a = sh.alias("a")
     b = sh.alias("b")
-    common = (
+    return (
         a.join(b, "h")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n").alias("n_a"),
+            F.col("b.n").alias("n_b"),
         )
         .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        common.join(sizes.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("n_shingles", "n_a")
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "n_shingles", "n_b"
-            ),
-            "doc_b",
-        )
         .select(
             "doc_a",
             "doc_b",
@@ -263,7 +236,6 @@ def _minhash_parts(
     k: int,
     num_perm: int,
     bands: int,
-    cache_shingles: bool = False,
     engine: str = "expr",
     with_sets: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -280,9 +252,7 @@ def _minhash_parts(
     7.3-20.1 s vs split 4.2-8.7 s at sf0.1, equal at sf1) —
     ``minhash_lsh_pairs`` collects its verify arrays in its own
     groupBy over a recomputed shingle frame instead (the (long, long)
-    explode is cheaper to recompute than the shared exchange, the same
-    persist-vs-recompute trade the jaccard_pairs docstring
-    documents).
+    explode is cheaper to recompute than the shared exchange).
 
     ``engine="arrow"`` (r12, guide §4.2) computes the signature frame —
     and, with ``with_sets=True``, the verify ``hs`` arrays in the SAME
@@ -292,12 +262,7 @@ def _minhash_parts(
     exchange disappear from the plan entirely; only the band-join
     shuffles remain. The returned shingle frame is the unchanged lazy
     expression form — consumers that never evaluate it (all arrow-mode
-    callers) pay nothing for it.
-
-    ``cache_shingles`` only affects ``engine="expr"``: the arrow path
-    never evaluates the returned shingle frame, so the flag is a no-op
-    there by construction (ADVICE r12 — documented rather than warned;
-    callers combining both get the arrow plan they asked for)."""
+    callers) pay nothing for it."""
     rows = num_perm // bands
     sh = _explode_shingle_hashes(docs, id_col, text_col, k)
     if engine == "arrow":
@@ -309,14 +274,6 @@ def _minhash_parts(
             docs, id_col, text_col, k, num_perm, with_sets=with_sets
         ).persist()
     else:
-        if cache_shingles:
-            from pyspark import StorageLevel
-
-            # optional: one explode+md5 pass feeds signatures, both
-            # verify-join sides and the size aggregation. Off by default —
-            # the (long, long) explode is cheaper to recompute than to
-            # materialize at bench scale; see jaccard_pairs docstring.
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
         aggs = []
         for i in range(num_perm):
             a = 2 * i + 1
@@ -357,7 +314,6 @@ def minhash_lsh_pairs(
     num_perm: int = 24,
     bands: int = 8,
     threshold: float = 0.8,
-    cache_shingles: bool = False,
     max_bucket_size: int | None = None,
     guard_bucket_size: int | None = 50_000,
     engine: str = "arrow",
@@ -404,7 +360,6 @@ def minhash_lsh_pairs(
         k,
         num_perm,
         bands,
-        cache_shingles,
         engine=engine,
         with_sets=(engine == "arrow"),
     )
@@ -1041,6 +996,51 @@ def word_spans(text: Column, span_words: int = 10) -> Column:
     )
 
 
+def line_dedup_kept(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    span_words: int = 10,
+) -> DataFrame:
+    """The first-occurrence core of :func:`line_dedup`: one row
+    ``(doc_id, n_kept, kept_text)`` per document that keeps at least one
+    span, ``kept_text`` being its kept spans in position order joined by
+    single spaces. A document all of whose spans occur earlier in the
+    corpus has no row.
+
+    Scale shape: spans are keyed by their 48-bit md5-prefix hash, and
+    the global first occurrence is
+    ``groupBy(h).agg(min(struct(doc_id, pos, span)))`` — the winning
+    struct carries the span itself, so the documents are rebuilt by one
+    ``groupBy(first.doc_id)`` over those winners, with no join back to
+    the exploded spans. Map-side partial aggregation collapses even a
+    boilerplate span that occurs in half the corpus to one row per map
+    task, so hot spans never pile onto one reducer (a window over h
+    would). Two exchanges, never all-pairs.
+    """
+    spans = docs.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.posexplode(word_spans(F.col(text_col), span_words)).alias(
+            "pos", "span"
+        ),
+    )
+    firsts = spans.groupBy(shingle_hash48(F.col("span")).alias("h")).agg(
+        F.min(F.struct("doc_id", "pos", "span")).alias("first")
+    )
+    return firsts.groupBy(F.col("first.doc_id").alias("doc_id")).agg(
+        F.count("*").cast("long").alias("n_kept"),
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("first.pos", "first.span"))
+                ),
+                lambda s: s["span"],
+            ),
+            " ",
+        ).alias("kept_text"),
+    )
+
+
 def line_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1052,64 +1052,31 @@ def line_dedup(
     only the first occurrence of every duplicated line", applied to
     ``span_words``-word segments (see :func:`word_spans`).
 
-    Returns one row per document: total span count, surviving span count,
-    and the md5 fingerprint of the reconstructed (deduplicated) text
-    (plus the reconstructed text itself when ``with_text`` — the form the
-    corpus-preparation pipeline substitutes back into the document).
+    Returns one row per document with a non-null text: total span count,
+    surviving span count, and the md5 fingerprint of the reconstructed
+    (deduplicated) text (plus the reconstructed text itself when
+    ``with_text``). A document that keeps no span has ``n_kept`` 0 and
+    the fingerprint of the empty string.
 
-    Scale shape: spans travel as 48-bit md5-prefix longs; the global
-    first-occurrence per span is ``groupBy(h).agg(min(struct(doc, pos)))``
-    — map-side partial aggregation collapses even a boilerplate span that
-    occurs in half the corpus to one row per map task, so hot spans never
-    pile onto one reducer (a window over h would). The join back on h is
-    AQE-skew-splittable; the only doc-keyed shuffle is the final rebuild
-    aggregate. Never all-pairs, no window over a skewed key.
+    The kept spans come from :func:`line_dedup_kept`, the same core the
+    corpus pipeline runs; the span count is row-local, and a left join
+    of it onto the core adds the documents that keep nothing.
     """
-    spans = spread_small_input(docs).select(
+    kept = line_dedup_kept(docs, id_col, text_col, span_words)
+    counts = docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("doc_id"),
-        F.posexplode(word_spans(F.col(text_col), span_words)).alias(
-            "pos", "span"
-        ),
-    )
-    hashed = spans.select(
-        "doc_id", "pos", "span", shingle_hash48(F.col("span")).alias("h")
-    )
-    firsts = hashed.groupBy("h").agg(
-        F.min(F.struct("doc_id", "pos")).alias("first")
-    )
-    marked = hashed.join(firsts, "h").select(
-        "doc_id",
-        "pos",
-        "span",
-        (
-            (F.col("doc_id") == F.col("first.doc_id"))
-            & (F.col("pos") == F.col("first.pos"))
-        ).alias("is_first"),
-    )
-    kept_text = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("is_first"), F.struct("pos", "span"))
-                )
-            ),
-            lambda s: s["span"],
-        ),
-        " ",
-    )
-    agg_cols = [
-        F.count("*").cast("long").alias("n_spans"),
-        F.sum(F.when(F.col("is_first"), 1).otherwise(0))
+        F.size(word_spans(F.col(text_col), span_words))
         .cast("long")
-        .alias("n_kept"),
-        F.md5(kept_text).alias("kept_fp"),
-    ]
-    if with_text:
-        agg_cols.append(kept_text.alias("kept_text"))
-    out_cols = ["doc_id", "n_spans", "n_kept", "kept_fp"] + (
-        ["kept_text"] if with_text else []
+        .alias("n_spans"),
     )
-    return marked.groupBy("doc_id").agg(*agg_cols).select(*out_cols)
+    kept_text = F.coalesce(F.col("kept_text"), F.lit(""))
+    return counts.join(kept, "doc_id", "left").select(
+        "doc_id",
+        "n_spans",
+        F.coalesce(F.col("n_kept"), F.lit(0).cast("long")).alias("n_kept"),
+        F.md5(kept_text).alias("kept_fp"),
+        *([kept_text.alias("kept_text")] if with_text else []),
+    )
 
 
 def jaccard_prefix_pairs(
@@ -1133,9 +1100,9 @@ def jaccard_prefix_pairs(
     prefix shingle under any consistent global order. Candidate volume
     is Σ_shingle df_prefix² over RARE shingles only, so a boilerplate
     shingle shared by 10⁵ docs contributes nothing unless it is rare
-    enough to sit in someone's prefix — the hot-shingle blowup that
-    forces ``jaccard_pairs``' ``max_shingle_df`` cap (which trades
-    exactness) simply doesn't arise; this form stays EXACT at scale.
+    enough to sit in someone's prefix — the hot-shingle blowup of
+    :func:`jaccard_pairs`' join (Σ_shingle df² candidate rows) simply
+    doesn't arise; this form stays EXACT at scale.
 
     The prefix bound is computed for ``threshold - 0.001`` in exact
     integer arithmetic, so pairs admitted by the oracle's round(j,4)

@@ -280,18 +280,17 @@ def prepare_corpus(
             cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
             cached.append(cur)
     if line_spans:
-        rebuilt = _dedup.line_dedup(
-            cur, id_col, text_col, span_words=line_spans, with_text=True
+        # the first-occurrence core only has rows for documents that keep
+        # a span, so the inner join also drops the emptied documents
+        kept = _dedup.line_dedup_kept(
+            cur, id_col, text_col, span_words=line_spans
         )
-        replaced = (
-            cur.drop(text_col)
-            .join(
-                rebuilt.filter(F.col("n_kept") > 0).select(
-                    F.col("doc_id").alias(id_col),
-                    F.col("kept_text").alias(text_col),
-                ),
-                id_col,
-            )
+        replaced = cur.drop(text_col).join(
+            kept.select(
+                F.col("doc_id").alias(id_col),
+                F.col("kept_text").alias(text_col),
+            ),
+            id_col,
         )
         cur = step("line_dedup", cur, replaced)
         if doc_dedup or benchmark is not None or substring_dedup:
@@ -398,9 +397,12 @@ def prepare_corpus(
             # that no candidate machinery can absorb — the measured
             # failure mode on clone-heavy corpora — and the collapse is
             # provably output-identical (see collapse_exact_reps).
+            # Persisted: the pair collect and the survivors' anti-join
+            # both read the reps.
             reps = _dedup.collapse_exact_reps(
                 cur, id_col=id_col, text_col=text_col
-            )
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            cached.append(reps)
             pairs = _dedup.jaccard_pairs(
                 reps,
                 id_col=id_col,

@@ -10,7 +10,8 @@ pages.
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+import functools
+from typing import Any, Iterable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
@@ -29,9 +30,13 @@ PASSIM_WITH_ERRORS_SCHEMA = StructType(
 
 
 def rebuild_issue_passim(
-    issue: dict, supports: list[dict]
+    issue: dict, supports: list[dict], default_language: Optional[str] = None
 ) -> Iterable[dict]:
-    """Passim documents for one (print) issue's content items."""
+    """Passim documents for one (print) issue's content items.
+
+    ``default_language`` stands in for a CI without ``lg``, as in
+    :func:`impresso_ta.rebuild.solr.rebuild_issue_cis`: without a
+    language the whitespace rules glue the tokens together."""
     supports = sorted(supports, key=lambda d: d.get("id") or "")
     issue_id = issue.get("id") or ""
     id_parts = issue_id.split("-")
@@ -43,13 +48,16 @@ def rebuild_issue_passim(
         try:
             tp = m.get("tp")
             mapped_type = TYPE_MAPPINGS.get(tp, tp)
+            lang = m.get("lg")
+            if lang is None:
+                lang = default_language
             doc: dict[str, Any] = {
                 "series": alias,
                 "date": date_str,
                 "id": ci_id,
                 "cc": None,
                 "tp": mapped_type,
-                "lg": m.get("lg"),
+                "lg": lang,
                 "title": m.get("t"),
                 "pages": [],
             }
@@ -67,7 +75,7 @@ def rebuild_issue_passim(
                     r for r in (page.get("r") or []) if r.get("pOf") == ci_id
                 ]
                 fulltext, out_regions = rebuild_text_passim(
-                    regions, m.get("lg"), fulltext or None
+                    regions, lang, fulltext or None
                 )
                 doc["pages"].append(
                     {
@@ -96,7 +104,9 @@ def rebuild_issue_passim(
 
 
 def rebuild_issues_passim(
-    issues_df: DataFrame, supports_df: DataFrame
+    issues_df: DataFrame,
+    supports_df: DataFrame,
+    default_language: Optional[str] = None,
 ) -> DataFrame:
     """Passim rebuild: :func:`rebuild_issue_passim` per issue, through
     the solr pipeline's one rebuild plan. ``supports_df`` must be a page
@@ -110,7 +120,9 @@ def rebuild_issues_passim(
     return _rebuild_issues(
         issues_df,
         supports_df,
-        rebuild_issue_passim,
+        functools.partial(
+            rebuild_issue_passim, default_language=default_language
+        ),
         PASSIM_WITH_ERRORS_SCHEMA,
         ("id", "cc", "r"),
     )

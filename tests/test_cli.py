@@ -75,6 +75,40 @@ def test_cli_import_then_rebuild(tmp_path):
     assert "rebuilt 2 content items" in r2.stdout
 
 
+def test_passim_rebuild_takes_default_language(spark, tmp_path, capsys):
+    """``rebuild --fmt passim --default-language`` fills a CI's missing
+    language, as the solr rebuild does, so its tokens are spaced by
+    that language's rules instead of glued; a CI with a language keeps
+    it."""
+    import json as _json
+
+    from impresso_ta.schemas import ISSUE_SCHEMA, PAGE_SCHEMA
+    from impresso_ta.sources import write_issues, write_pages
+    from tests.fixtures import simple_issue_and_pages
+
+    iss, pages = simple_issue_and_pages()
+    for ci in iss["i"]:
+        ci["m"]["lg"] = None
+    iss["i"][1]["m"]["lg"] = "de"
+    store = tmp_path / "store"
+    write_issues(spark.createDataFrame([iss], ISSUE_SCHEMA), str(store / "issues"))
+    write_pages(spark.createDataFrame(pages, PAGE_SCHEMA), str(store / "pages"))
+    out = tmp_path / "passim"
+    _call(spark, "cmd_rebuild", [
+        "rebuild", "--issues", str(store / "issues"),
+        "--supports", str(store / "pages"), "--output-dir", str(out),
+        "--fmt", "passim", "--default-language", "fr",
+    ])
+    lines = spark.read.text(str(out / "rebuilt")).collect()
+    rows = {d["id"]: d for d in (_json.loads(r.value) for r in lines)}
+    art = rows["GDL-1900-01-02-a-i0001"]
+    assert art["lg"] == "fr"
+    # 'Bonjourlemonde,\nsuitearti-\narticlefin.\n' without the default
+    assert art["text"] == "Bonjour le monde,\nsuite arti-\narticle fin.\n"
+    assert rows["GDL-1900-01-02-a-i0002"]["lg"] == "de"
+    assert f"rebuilt {len(rows)} content items" in capsys.readouterr().out
+
+
 def test_rebuild_config_filter_batches(spark):
     from impresso_ta.schemas import ISSUE_SCHEMA
     from impresso_ta.sources.discovery import rebuild_config_filter
@@ -157,7 +191,9 @@ def _rows(spark, path):
     return sorted(map(tuple, spark.read.text(str(path)).collect()))
 
 
-def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
+def test_cli_jobs_cache_once_and_release(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
     corpus = tmp_path / "corpus"
     _make_tree_with_rejected_page(corpus)
     store = tmp_path / "store"
@@ -184,12 +220,14 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
         assert _cached(spark) <= before
         # 10 jobs per format before the assembly was cached, when the
         # read, shuffle and Python assembly re-ran for the ok write, the
-        # error write and the count
-        assert jobs <= 7, f"{fmt}: {jobs} Spark jobs for one rebuild"
+        # error write and the count; 7 while a count() after the writes
+        # gave the printed total, which the ok write now observes
+        assert jobs <= 5, f"{fmt}: {jobs} Spark jobs for one rebuild"
         n_ok = _lines(spark, out / "rebuilt")
         n_err = _lines(spark, out / "errors")
         assert n_ok > 0 and n_err > 0
         assert n_ok + n_err == N_CIS
+        assert f"rebuilt {n_ok} content items" in capsys.readouterr().out
 
     docs = f"{sf_dir}/documents.parquet"
     jobs = _call(spark, "cmd_corpus", [
@@ -197,9 +235,13 @@ def test_cli_jobs_cache_once_and_release(spark, sf_dir, tmp_path, monkeypatch):
     ])
     assert _cached(spark) <= before
     # 50 jobs while doc dedup ran its components as Spark rounds, each a
-    # checkpoint and a count, and the post-filter spread ran a shuffle job
-    assert jobs <= 31, f"{jobs} Spark jobs for one corpus run"
-    assert spark.read.parquet(str(tmp_path / "prepared" / "corpus")).count()
+    # checkpoint and a count, and the post-filter spread ran a shuffle job;
+    # 31 while the Jaccard pairs and line dedup joined back to their own
+    # aggregates, the pair and survivor passes each recomputed the exact
+    # reps and the corpus was re-read to count it
+    assert jobs <= 18, f"{jobs} Spark jobs for one corpus run"
+    n = spark.read.parquet(str(tmp_path / "prepared" / "corpus")).count()
+    assert n and f"prepared corpus: {n} documents" in capsys.readouterr().out
     # the pipeline fills its caches before the corpus write, which fails
     # here because the output directory lies below a regular file
     blocker = tmp_path / "blocker"

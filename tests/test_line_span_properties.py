@@ -1,11 +1,12 @@
 """Property tests: word_spans chunking matches the naive reference on
-arbitrary word lists, and line_dedup invariants hold on random corpora."""
+arbitrary word lists, line_dedup invariants hold on random corpora, and
+the corpus pipeline's line-dedup core agrees with line_dedup."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from impresso_ta.operators.dedup import line_dedup, word_spans
+from impresso_ta.operators.dedup import line_dedup, line_dedup_kept, word_spans
 
 _WORD = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")),
@@ -54,6 +55,45 @@ def test_line_dedup_invariants(spark, corpus, k):
         assert out[i]["n_kept"] == len(kept)
     # corpus-level conservation: total kept == number of distinct spans
     assert sum(r["n_kept"] for r in out.values()) == len(seen)
+
+
+@given(
+    corpus=st.lists(
+        st.lists(st.sampled_from("abcd"), min_size=1, max_size=24),
+        min_size=1,
+        max_size=8,
+    ),
+    k=st.integers(1, 4),
+)
+@settings(max_examples=15, deadline=None)
+def test_line_dedup_core_matches_line_dedup(spark, corpus, k):
+    """The pipeline's core (documents that keep a span, with their kept
+    text) is line_dedup(with_text=True) without its zero-kept rows, and
+    both match the first-occurrence reference. A four-word vocabulary
+    makes repeated spans, and emptied documents, common."""
+    rows = [(i, " ".join(words)) for i, words in enumerate(corpus)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    core = {
+        (r["doc_id"], r["n_kept"], r["kept_text"])
+        for r in line_dedup_kept(docs, span_words=k).collect()
+    }
+    full = {
+        (r["doc_id"], r["n_kept"], r["kept_text"])
+        for r in line_dedup(docs, span_words=k, with_text=True)
+        .filter(F.col("n_kept") > 0)
+        .collect()
+    }
+    seen: set[str] = set()
+    ref = set()
+    for i, words in enumerate(corpus):
+        kept = []
+        for s in _ref_spans(words, k):
+            if s not in seen:
+                seen.add(s)
+                kept.append(s)
+        if kept:
+            ref.add((i, len(kept), " ".join(kept)))
+    assert core == full == ref
 
 
 def test_line_dedup_correct_under_extreme_span_skew(spark):

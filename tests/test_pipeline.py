@@ -281,6 +281,46 @@ def test_pipeline_spreads_single_row_group_input_once(spark):
     assert raw.index(exchange) < raw.index("FileScan parquet")
 
 
+def test_spread_small_input_starts_no_job_on_shuffled_plan(spark):
+    """Counting the partitions of a shuffled AQE plan runs its shuffle
+    stages; a persisted one also fills its cache. The spread returns
+    such a frame unchanged without starting a Spark job."""
+    import time
+
+    from impresso_ta.operators.partitioning import spread_small_input
+
+    df = (
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .groupBy((F.col("doc_id") % 3).alias("k"))
+        .count()
+        .persist()
+    )
+    sc = spark.sparkContext
+    group = f"spread-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        spread = spread_small_input(df)
+    finally:
+        sc.setJobGroup(None, None)
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        df.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert spread is df
+
+
+def test_spread_small_input_widens_single_row_group_scan(spark):
+    import pyarrow.parquet as pq
+
+    from impresso_ta.operators.partitioning import spread_small_input
+
+    path = f"{SF}/documents.parquet"
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    scan = spark.read.parquet(path).select("doc_id", "text")
+    assert scan.rdd.getNumPartitions() == 1
+    n = spark.sparkContext.defaultParallelism
+    assert spread_small_input(scan).rdd.getNumPartitions() == n
+
+
 def test_pipeline_deterministic(spark):
     d = _docs(spark)
     a = sorted(r["doc_id"] for r in prepare_corpus(d).docs.collect())
