@@ -20,10 +20,11 @@ several Spark jobs. An import parses every issue once: its one parse
 frame is cached, and the issues, pages, records, errors and manifest
 writes and the console echo all read it. With ``--validate`` the value-
 level rules run inside that parse, so rejected rows reach the error
-write without a second pass over the outputs. A rebuild assembles every
-issue once: its assembly output is cached, and the rebuilt write, the
-error write and the printed count all read it. Both caches are released
-when the command returns or fails.
+write without a second pass over the outputs. A rebuild parses each
+page line once and assembles every issue once: its assembly output is
+cached, and the rebuilt write, the error write and the printed count
+all read it. Both caches are released when the command returns or
+fails.
 """
 
 from __future__ import annotations
@@ -505,13 +506,15 @@ def cmd_corpus(args, spark) -> int:
                 f"--id-col {args.id_col!r} has {dtypes[args.id_col]} values "
                 "that do not cast to BIGINT; supply an integer id column"
             )
+    dedup_counts = None
     if args.dedup_against:
         from impresso_ta.operators.dedup import incremental_minhash_dedup
 
         existing = spark.read.parquet(args.dedup_against)
-        before = docs.count()
+        # counted by the corpus job itself, which runs the dedup once
+        dedup_counts = (Observation("dedup_in"), Observation("dedup_out"))
         docs = incremental_minhash_dedup(
-            docs,
+            docs.observe(dedup_counts[0], F.count(F.lit(1)).alias("n")),
             existing,
             id_col=args.id_col,
             text_col=args.text_col,
@@ -520,8 +523,7 @@ def cmd_corpus(args, spark) -> int:
                 if args.jaccard_threshold is None
                 else args.jaccard_threshold
             ),
-        )
-        print(f"incremental_dedup: {before} -> {docs.count()}")
+        ).observe(dedup_counts[1], F.count(F.lit(1)).alias("n"))
     bench = spark.read.parquet(args.benchmark) if args.benchmark else None
     res = prepare_corpus(
         docs,
@@ -575,6 +577,9 @@ def cmd_corpus(args, spark) -> int:
         ).parquet(f"{args.output_dir}/corpus")
     finally:
         res.unpersist()
+    if dedup_counts:
+        before, after = (o.get["n"] for o in dedup_counts)
+        print(f"incremental_dedup: {before} -> {after}")
     for stage, n_in, n_out in res.stats:
         print(f"{stage}: {n_in} -> {n_out}")
     if args.shards:

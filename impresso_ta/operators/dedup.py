@@ -142,10 +142,15 @@ def shingle_hash48(shingle: Column) -> Column:
 def _explode_shingle_hashes(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
+    # hashed inside the array, before the explode: the isnotnull(h) a
+    # join on h infers then filters the exploded column instead of
+    # re-running md5 below it
     return spread_small_input(docs).select(
         F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
-    ).select("doc_id", shingle_hash48(F.col("shingle")).alias("h"))
+        F.explode(
+            F.transform(word_shingles(F.col(text_col), k), shingle_hash48)
+        ).alias("h"),
+    )
 
 
 def jaccard_pairs(
@@ -173,12 +178,14 @@ def jaccard_pairs(
     # explode_outer: for a plain explode of a column, Catalyst infers
     # size(_s) > 0 and pushes it below the projection, building each
     # document's shingles three times. The outer form's extra row for a
-    # null text has a null hash, which never joins.
+    # null text has a null hash, which never joins. The hash runs inside
+    # the array, before the explode: the join's inferred isnotnull(h)
+    # then filters the exploded column instead of re-running md5.
     sh = sets.select(
         "doc_id",
         F.size("_s").alias("n"),
-        F.explode_outer("_s").alias("shingle"),
-    ).select("doc_id", "n", shingle_hash48(F.col("shingle")).alias("h"))
+        F.explode_outer(F.transform("_s", shingle_hash48)).alias("h"),
+    )
     a = sh.alias("a")
     b = sh.alias("b")
     return (

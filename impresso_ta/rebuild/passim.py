@@ -110,12 +110,14 @@ def rebuild_issues_passim(
 ) -> DataFrame:
     """Passim rebuild: :func:`rebuild_issue_passim` per issue, through
     the solr pipeline's one rebuild plan. ``supports_df`` must be a page
-    store: audio records carry no ``r`` regions, and their CIs no ``pp``,
-    so every document would come out empty."""
-    if "r" not in supports_df.columns:
+    store (``read_pages``: JSON text or typed pages): audio records carry
+    no ``r`` regions, and their CIs no ``pp``, so every document would
+    come out empty."""
+    if "r" not in supports_df.columns and "js" not in supports_df.columns:
         raise ValueError(
-            "passim documents are print-only: the supports have no page "
-            f"regions column 'r' (columns: {supports_df.columns})"
+            "passim documents are print-only: the supports are neither "
+            "page JSON text ('js') nor have a page regions column 'r' "
+            f"(columns: {supports_df.columns})"
         )
     return _rebuild_issues(
         issues_df,

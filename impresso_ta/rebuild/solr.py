@@ -53,13 +53,10 @@ def _find_support(supports: list[dict], marker: str) -> Optional[dict]:
 def _consensus_cc(docs: list[dict]) -> Optional[bool]:
     """cc = mean(support.cc) == 1.0; None when any cc missing (ref:
     paper_rebuilders.py:315-319)."""
-    try:
-        ccs = [bool(d["cc"]) for d in docs]
-        if not ccs:
-            return None
-        return sum(ccs) / len(ccs) == 1.0
-    except (KeyError, TypeError):
+    ccs = [d.get("cc") for d in docs]
+    if not ccs or any(cc is None for cc in ccs):
         return None
+    return all(ccs)
 
 
 def _base_solr_ci(
@@ -283,6 +280,28 @@ def rebuild_issue_cis(
             }
 
 
+def _flatten_legacy_lines(page: dict) -> dict:
+    """Flatten the legacy BNF line nesting found in the reference's own
+    shipped canonical outputs (data/out/canonical_out/pages/*.bz2 for
+    excelsior/lafronde/marieclaire/oeuvre): paragraphs there store
+    ``l = [[line, notes], ...]`` — the (line, notes) tuples an older
+    exporter wrote verbatim instead of zipping them apart (the current
+    reference code does the unzip, bnf/parsers.py:52-62, so only legacy
+    files carry it; the reference's own rebuilder crashes on them).
+    Dict entries pass through untouched, so normal pages are unchanged."""
+    for reg in page.get("r") or []:
+        for para in reg.get("p") or []:
+            entries = para.get("l") or []
+            if any(isinstance(e, list) for e in entries):
+                para["l"] = [
+                    x
+                    for e in entries
+                    for x in (e if isinstance(e, list) else [e])
+                    if isinstance(x, dict)
+                ]
+    return page
+
+
 def _rebuild_issues(
     issues_df: DataFrame,
     supports_df: DataFrame,
@@ -294,19 +313,27 @@ def _rebuild_issues(
     (one shuffle), joined to issues, then ONE batch-level ``mapInArrow``
     pass that runs ``assemble(issue, supports)`` on every issue.
 
-    ``support_fields`` names the support columns the assembly reads;
-    only those ride the shuffle. ``assemble`` yields one dict per output
-    row, with the ``schema`` fields it knows set.
+    Each support rides the shuffle as one JSON string: a page frame
+    from a jsonl store (``id``, ``js``; see ``read_pages``) as its raw
+    line, a typed frame (parquet pages, audio records) as
+    ``to_json`` of the ``support_fields`` the assembly reads.
+    ``assemble`` yields one dict per output row, with the ``schema``
+    fields it knows set.
     """
     import json
 
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    fields = set(support_fields)
-    support_cols = [
-        F.col(f.name) for f in supports_df.schema.fields if f.name in fields
-    ]
+    if "js" in supports_df.columns:
+        support_js = F.col("js")
+    else:
+        fields = set(support_fields)
+        support_js = F.to_json(
+            F.struct(
+                *[f.name for f in supports_df.schema.fields if f.name in fields]
+            )
+        )
     # Pin the grouping exchange with an explicit keyed repartition: the
     # groupBy reuses it (ClusteredDistribution(issue_id) is satisfied —
     # ONE shuffle either way), but a user-specified partition count is
@@ -317,28 +344,29 @@ def _rebuild_issues(
     # collapsed the join output to ONE task — 34.8 s vs 11.2 s with the
     # exchange pinned. collect_list has no byte-reducing map-side
     # combine, so nothing is lost by aggregating after the exchange.
-    keyed = supports_df.withColumn(
-        "issue_id", F.regexp_replace(F.col("id"), "-[pr][0-9]{4}$", "")
+    keyed = supports_df.select(
+        F.regexp_replace(F.col("id"), "-[pr][0-9]{4}$", "").alias("issue_id"),
+        support_js.alias("js"),
     )
     keyed = keyed.repartition(
         int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         "issue_id",
     )
     grouped = keyed.groupBy("issue_id").agg(
-        F.collect_list(F.struct(*support_cols)).alias("_supports")
+        F.collect_list("js").alias("_supports")
     )
     joined = issues_df.join(
         grouped, issues_df["id"] == grouped["issue_id"], "left"
-    ).drop("issue_id")
+    )
 
-    # The input crosses the JVM→Python boundary as ONE JSON string per
-    # issue, not as nested Arrow structs: ``to_json`` runs inside
-    # whole-stage codegen and ``json.loads`` is a C parser, while
+    # The input crosses the JVM→Python boundary as JSON text: one issue
+    # JSON string plus the list of its supports' JSON strings, each
+    # parsed once here, not as nested Arrow structs: ``to_json`` runs
+    # inside whole-stage codegen and ``json.loads`` is a C parser, while
     # ``RecordBatch.to_pylist()`` on the deeply-nested token tree walks it
     # value-by-value in Python — measured 6× slower at sf0.1 (6.0 s vs
     # 1.0 s for 5k issues, single-threaded). ``to_json`` also drops null
-    # fields, which matches the canonical JSON convention rebuild/text.py
-    # assumes (absent == None) and shrinks the transferred bytes.
+    # fields; rebuild/text.py reads absent and null alike (``.get``).
     #
     # One Python round trip per Arrow batch (~thousands of issues), not
     # per issue: the per-key applyInPandas cogroup measured ~3× slower on
@@ -349,15 +377,20 @@ def _rebuild_issues(
     def fn(batches):
         for batch in batches:
             out: list[dict] = []
-            for js in batch.column(0).to_pylist():
-                issue = json.loads(js)
-                supports = issue.pop("_supports", None) or []
+            for issue_js, supports_js in zip(
+                batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            ):
+                issue = json.loads(issue_js)
+                supports = [
+                    _flatten_legacy_lines(json.loads(js))
+                    for js in supports_js or []
+                ]
                 for row in assemble(issue, supports):
                     out.append({k: row.get(k) for k in names})
             yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
 
     return joined.select(
-        F.to_json(F.struct(*joined.columns)).alias("js")
+        F.to_json(F.struct(*issues_df.columns)).alias("issue"), "_supports"
     ).mapInArrow(fn, schema=schema)
 
 
@@ -371,7 +404,8 @@ def rebuild_issues_solr(
     one rebuild plan (:func:`_rebuild_issues`).
 
     ``issues_df`` rows follow ISSUE_SCHEMA; ``supports_df`` rows follow
-    PAGE_SCHEMA or AUDIO_RECORD_SCHEMA. Returns REBUILT_WITH_ERRORS_SCHEMA;
+    PAGE_SCHEMA or AUDIO_RECORD_SCHEMA, or are the page JSON lines of
+    ``read_pages`` (``id``, ``js``). Returns REBUILT_WITH_ERRORS_SCHEMA;
     split problem rows with ``split_errors``.
     """
     return _rebuild_issues(

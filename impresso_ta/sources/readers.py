@@ -10,11 +10,15 @@ join in the rebuild pipeline.
 Both jsonl(.bz2) — the reference's packaging — and parquet are supported;
 parquet is the engine-internal format (columnar pruning at 100 TB),
 jsonl.bz2 the interchange/parity format (bz2 is splittable on read).
+Issues and audio records are read with their fixed schemas in either
+format; jsonl pages stay JSON text (``id``, ``js``) until the rebuild
+assembly parses each line once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from impresso_ta.schemas import AUDIO_RECORD_SCHEMA, ISSUE_SCHEMA, PAGE_SCHEMA
 
@@ -44,91 +48,24 @@ def read_issues(spark: SparkSession, path: str) -> DataFrame:
     return _read(spark, path, ISSUE_SCHEMA)
 
 
-def _normalize_legacy_page_lines(js: str) -> str:
-    """Flatten the legacy BNF line nesting found in the reference's own
-    shipped canonical outputs (data/out/canonical_out/pages/*.bz2 for
-    excelsior/lafronde/marieclaire/oeuvre): paragraphs there store
-    ``l = [[line, notes], ...]`` — the (line, notes) tuples an older
-    exporter wrote verbatim instead of zipping them apart (the current
-    reference code does the unzip, bnf/parsers.py:52-62, so only legacy
-    files carry it; the reference's own rebuilder crashes on them).
-    Dict entries pass through untouched, so normal files round-trip."""
-    import json
-
-    doc = json.loads(js)
-    changed = False
-    for reg in doc.get("r") or []:
-        for para in reg.get("p") or []:
-            entries = para.get("l") or []
-            if any(isinstance(e, list) for e in entries):
-                changed = True
-                para["l"] = [
-                    x
-                    for e in entries
-                    for x in (e if isinstance(e, list) else [e])
-                    if isinstance(x, dict)
-                ]
-    return json.dumps(doc) if changed else js
-
-
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Canonical pages. The jsonl path runs a lenient pre-parse that
-    repairs the legacy BNF line nesting (see
-    ``_normalize_legacy_page_lines``) before the strict-schema parse;
-    the parquet path is engine-internal and always well-formed."""
+    """Canonical pages. A parquet store reads typed (PAGE_SCHEMA). A
+    jsonl(.bz2) store is read as text: one row per page line, ``id``
+    (the line's top-level ``id``) and ``js`` (the raw line). The rebuild
+    parses each line once, in its assembly, and repairs the legacy BNF
+    line nesting there; a line that is not JSON has a null ``id`` and
+    joins no issue."""
     if _is_parquet_store(path):
         return _read(spark, path, PAGE_SCHEMA)
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    raw = spark.read.text(path)
-
-    def fix(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"value": [_normalize_legacy_page_lines(v) for v in pdf["value"]]}
-            )
-
-    fixed = raw.mapInPandas(fix, schema="value string")
-    return fixed.select(
-        F.from_json(F.col("value"), PAGE_SCHEMA).alias("d")
-    ).select("d.*")
+    # json_tuple, not get_json_object: as a generator it stays below the
+    # isnotnull(id) that the rebuild join infers, which would otherwise
+    # be pushed down as a second parse of every line
+    return spark.read.text(path).select(
+        F.json_tuple("value", "id").alias("id"),
+        F.col("value").alias("js"),
+    )
 
 
 def read_audio_records(spark: SparkSession, path: str) -> DataFrame:
     return _read(spark, path, AUDIO_RECORD_SCHEMA)
 
-
-def register_tables(
-    spark: SparkSession,
-    issues_path: str | None = None,
-    pages_path: str | None = None,
-    rebuilt_path: str | None = None,
-    prefix: str = "",
-) -> list[str]:
-    """Expose the canonical stores as SQL temp views so users can
-    ``spark.sql(...)`` over them (the reference has no query surface at
-    all — consumers re-parse jsonl by hand).
-
-    Returns the list of view names registered. Partition columns of the
-    (alias, year)-partitioned stores participate in pruning: a
-    ``WHERE alias = 'GDL' AND year = 1900`` reaches the file listing.
-    """
-    registered = []
-    for name, path, reader in (
-        ("issues", issues_path, read_issues),
-        ("pages", pages_path, read_pages),
-        ("rebuilt", rebuilt_path, None),
-    ):
-        if path is None:
-            continue
-        df = (
-            spark.read.parquet(path)
-            if reader is None
-            else reader(spark, path)
-        )
-        view = f"{prefix}{name}"
-        df.createOrReplaceTempView(view)
-        registered.append(view)
-    return registered

@@ -109,6 +109,43 @@ def test_passim_rebuild_takes_default_language(spark, tmp_path, capsys):
     assert f"rebuilt {len(rows)} content items" in capsys.readouterr().out
 
 
+def test_rebuild_survives_non_json_page_line(spark, tmp_path, capsys):
+    """A page line that is not JSON (truncated, or plain text) joins no
+    issue: the CIs that list its page become ``Page ... not found``
+    problem rows, and the command still exits 0."""
+    import bz2
+    import json as _json
+
+    from impresso_ta import cli
+    from impresso_ta.schemas import ISSUE_SCHEMA
+    from impresso_ta.sources import write_issues
+    from tests.fixtures import simple_issue_and_pages
+
+    iss, (p1, p2) = simple_issue_and_pages()
+    store = tmp_path / "store"
+    write_issues(spark.createDataFrame([iss], ISSUE_SCHEMA), str(store / "issues"))
+    (store / "pages").mkdir()
+    lines = [_json.dumps(p1), _json.dumps(p2)[:-40], "not json at all"]
+    (store / "pages" / "GDL-1900-pages.jsonl.bz2").write_bytes(
+        bz2.compress(("\n".join(lines) + "\n").encode())
+    )
+    for fmt in ("solr", "passim"):
+        out = tmp_path / fmt
+        args = cli._build_parser().parse_args([
+            "rebuild", "--issues", str(store / "issues"),
+            "--supports", str(store / "pages"), "--output-dir", str(out),
+            "--fmt", fmt,
+        ])
+        assert cli.cmd_rebuild(args, spark) == 0
+        errors = [r.value for r in spark.read.text(str(out / "errors")).collect()]
+        assert errors == [
+            "GDL-1900-01-02-a-i0001: Page p0002 not found for item "
+            "GDL-1900-01-02-a-i0001"
+        ]
+        assert _lines(spark, out / "rebuilt") == 2
+        assert "rebuilt 2 content items" in capsys.readouterr().out
+
+
 def test_rebuild_config_filter_batches(spark):
     from impresso_ta.schemas import ISSUE_SCHEMA
     from impresso_ta.sources.discovery import rebuild_config_filter

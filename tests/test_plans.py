@@ -44,6 +44,25 @@ def test_minhash_signatures_map_side_combine(spark):
     assert _shuffles(sigs) == 1
 
 
+def test_shingle_md5_runs_once_per_exploded_row(spark):
+    """The shingle hash is computed inside the array, before the
+    explode: the join's inferred ``isnotnull(h)`` then filters the
+    exploded column. Hashing after the explode made Catalyst push that
+    filter below the projection, so every shingle was hashed twice."""
+    from impresso_ta.operators.dedup import (
+        _explode_shingle_hashes,
+        jaccard_pairs,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    # one md5 per join side: the self-join on h, and a document
+    # frequency joined back to the shingle stream (4 when hashed twice)
+    assert _plan(jaccard_pairs(docs)).count("md5(") == 2
+    sh = _explode_shingle_hashes(docs, "doc_id", "text", 3)
+    dfreq = sh.groupBy("h").count()
+    assert _plan(sh.join(dfreq, "h")).count("md5(") == 2
+
+
 def test_c4_filters_zero_shuffle(spark):
     from impresso_ta.operators.text_analysis import c4_filters
 
@@ -171,3 +190,55 @@ def test_cdc_ops_single_window_exchange(spark):
     )
     assert _shuffles(latest_snapshot(log, ["k"], ["seq"], op_col="op")) == 1
     assert _shuffles(scd2_history(log, ["k"], ["seq"])) == 1
+
+
+def test_cli_rebuild_over_jsonl_pages_parses_each_page_once(
+    spark, tmp_path, monkeypatch
+):
+    """A CLI rebuild over a jsonl page store carries each page line as
+    text to the assembly: no Python pre-pass over the lines, no JVM
+    JSON parse of them, and the assembly's ``mapInArrow`` is the one
+    Python pass. The grouping exchange stays pinned."""
+    import re
+
+    import impresso_ta.sources as sources
+    from impresso_ta import cli
+    from impresso_ta.schemas import ISSUE_SCHEMA, PAGE_SCHEMA
+    from tests.fixtures import simple_issue_and_pages
+
+    iss, pages = simple_issue_and_pages()
+    store = tmp_path / "store"
+    sources.write_issues(
+        spark.createDataFrame([iss], ISSUE_SCHEMA), str(store / "issues")
+    )
+    sources.write_pages(
+        spark.createDataFrame(pages, PAGE_SCHEMA), str(store / "pages")
+    )
+    plans = []
+    write_rebuilt = sources.write_rebuilt
+
+    def capture(df, *args, **kwargs):
+        plans.append(_plan(df))
+        write_rebuilt(df, *args, **kwargs)
+
+    monkeypatch.setattr(sources, "write_rebuilt", capture)
+    for fmt in ("solr", "passim"):
+        args = cli._build_parser().parse_args([
+            "rebuild", "--issues", str(store / "issues"),
+            "--supports", str(store / "pages"),
+            "--output-dir", str(tmp_path / fmt), "--fmt", fmt,
+        ])
+        assert cli.cmd_rebuild(args, spark) == 0
+    assert len(plans) == 2
+    for plan in plans:
+        assert "FileScan text" in plan
+        assert "MapInPandas" not in plan
+        assert "from_json" not in plan and "JsonToStructs" not in plan
+        python_passes = re.findall(
+            r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython"
+            r"|FlatMap\w*InPandas|AggregateInPandas|WindowInPandas",
+            plan,
+        )
+        assert python_passes == ["MapInArrow"]
+        assert "REPARTITION_BY_NUM" in plan
+        assert plan.count("Exchange hashpartitioning") <= 2

@@ -4,8 +4,8 @@ SWA-family titles) — real data, including two format quirks:
 
 - legacy BNF line nesting (l = [[line, notes], ...], written by an older
   exporter before bnf/parsers.py:52-62 unzipped the tuples): repaired by
-  the reader (readers._normalize_legacy_page_lines); the reference's own
-  current rebuilder would crash on these files.
+  the rebuild assembly (rebuild.solr._flatten_legacy_lines); the
+  reference's own current rebuilder would crash on these files.
 - FAL/FAM regions carry pOf = PAGE id, not CI id: the reference's
   rebuilder (paper_rebuilders.py:311) matches pOf == ci id, so those CIs
   rebuild with empty text there too — we assert the same (parity, not a

@@ -1,50 +1,28 @@
-"""SQL surface over the canonical store: registered views are queryable
-and (alias, year) partition filters prune the scan."""
+"""Canonical jsonl page stores read as JSON text: the legacy BNF line
+nesting is repaired where the rebuild parses each page."""
+
+import json
 
 from impresso_ta.schemas import ISSUE_SCHEMA
-from impresso_ta.sources.readers import register_tables
-from impresso_ta.sources.sinks import write_issues
 from tests.fixtures import content_item, issue
-
-
-def test_register_and_query_with_partition_pruning(spark, tmp_path):
-    issues = [
-        issue("GDL-1900-01-02-a", [content_item("GDL-1900-01-02-a-i0001", pp=[1])],
-              pp=["GDL-1900-01-02-a-p0001"]),
-        issue("IMP-1901-05-06-a", [content_item("IMP-1901-05-06-a-i0001", pp=[1])],
-              pp=["IMP-1901-05-06-a-p0001"]),
-    ]
-    df = spark.createDataFrame(issues, ISSUE_SCHEMA)
-    store = str(tmp_path / "issues_store")
-    write_issues(df, store, fmt="parquet")
-
-    views = register_tables(spark, issues_path=store)
-    assert views == ["issues"]
-
-    out = spark.sql(
-        "SELECT id FROM issues WHERE alias = 'GDL' AND year = 1900"
-    )
-    assert [r["id"] for r in out.collect()] == ["GDL-1900-01-02-a"]
-
-    # partition filters reach the scan: no row-level filter on alias/year
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "alias" in plan.split("PartitionFilters")[1][:200]
 
 
 def test_legacy_bnf_line_nesting_repaired(spark, tmp_path):
     """Pages whose paragraphs store l = [[line, notes], ...] (the legacy
     BNF exporter shape found in the reference's shipped canonical
-    outputs) parse into the strict schema with their tokens intact."""
-    import json
+    outputs) rebuild with their tokens intact, in both formats."""
+    from impresso_ta.rebuild import rebuild_issues_passim, rebuild_issues_solr
+    from impresso_ta.sources.readers import read_pages
 
+    iid = "XXX-1900-01-02-a"
+    ci_id = f"{iid}-i0001"
     legacy_page = {
-        "id": "XXX-1900-01-02-a-p0001",
+        "id": f"{iid}-p0001",
         "cc": True,
         "r": [
             {
                 "c": [0, 0, 10, 10],
-                "pOf": "XXX-1900-01-02-a-i0001",
+                "pOf": ci_id,
                 "p": [
                     {
                         "c": [0, 0, 10, 10],
@@ -61,11 +39,17 @@ def test_legacy_bnf_line_nesting_repaired(spark, tmp_path):
     }
     path = tmp_path / "pages.jsonl"
     path.write_text(json.dumps(legacy_page) + "\n")
+    pages = read_pages(spark, str(path))
+    issues = spark.createDataFrame(
+        [issue(iid, [content_item(ci_id, pp=[1], lg="en")], pp=[f"{iid}-p0001"])],
+        ISSUE_SCHEMA,
+    )
 
-    from impresso_ta.sources.readers import read_pages
+    (solr,) = rebuild_issues_solr(issues, pages).collect()
+    assert not solr["has_problem"], solr["error"]
+    assert "Hello world" in solr["ft"]
+    assert solr["lb"] == [5, 11]  # one line break per repaired line
 
-    rows = read_pages(spark, str(path)).collect()
-    assert len(rows) == 1
-    lines = rows[0]["r"][0]["p"][0]["l"]
-    assert len(lines) == 2
-    assert [t["tx"] for ln in lines for t in ln["t"]] == ["Hello", "world"]
+    (passim,) = rebuild_issues_passim(issues, pages).collect()
+    assert not passim["has_problem"], passim["error"]
+    assert passim["text"] == "Hello\nworld\n"
