@@ -507,6 +507,7 @@ def cmd_corpus(args, spark) -> int:
                 "that do not cast to BIGINT; supply an integer id column"
             )
     dedup_counts = None
+    dedup_cached: list = []
     if args.dedup_against:
         from impresso_ta.operators.dedup import incremental_minhash_dedup
 
@@ -523,6 +524,7 @@ def cmd_corpus(args, spark) -> int:
                 if args.jaccard_threshold is None
                 else args.jaccard_threshold
             ),
+            cached=dedup_cached,
         ).observe(dedup_counts[1], F.count(F.lit(1)).alias("n"))
     bench = spark.read.parquet(args.benchmark) if args.benchmark else None
     res = prepare_corpus(
@@ -559,6 +561,7 @@ def cmd_corpus(args, spark) -> int:
         domain_col=args.domain_col,
         collect_stats=args.stats,
     )
+    res.cached += dedup_cached
     # the parquet sink is the last consumer of the pipeline's persist
     # boundaries; release executor storage before the (re-read) shard
     # pass, and also when the write fails, so a long-lived session
@@ -622,7 +625,7 @@ def main(argv: list[str] | None = None) -> int:
         # audio CIs list records, not pages: every passim document would
         # come out empty
         parser.error("--fmt passim is print-only; --audio needs --fmt solr")
-    from impresso_ta.session import get_spark
+    from impresso_ta.session import get_spark, stop_spark
 
     spark = get_spark(app_name=f"impresso_ta-{args.command}")
     try:
@@ -632,7 +635,8 @@ def main(argv: list[str] | None = None) -> int:
             return cmd_corpus(args, spark)
         return cmd_rebuild(args, spark)
     finally:
-        spark.stop()
+        # no driver JVM outlives the command
+        stop_spark(spark)
 
 
 if __name__ == "__main__":

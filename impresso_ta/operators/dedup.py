@@ -556,6 +556,7 @@ def incremental_minhash_dedup(
     bands: int = 8,
     threshold: float = 0.8,
     engine: str = "arrow",
+    cached: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Dedupe an incoming batch against the already-ingested corpus:
     returns the NEW docs with no existing near-dup (exact Jaccard ≥
@@ -569,6 +570,10 @@ def incremental_minhash_dedup(
     side is re-derived from text on each call. Extends the reference's
     incremental import anti-join (F3/J1, ref
     generic_importer.py:240-249) from exact-id skip to near-dup skip.
+
+    Both signature frames are persisted; ``cached``, when given, receives
+    them, for a caller that keeps the session to unpersist once it has
+    consumed the result.
     """
     arrow = engine == "arrow"
     sh_n, sigs_n, band_n = _minhash_parts(
@@ -579,6 +584,8 @@ def incremental_minhash_dedup(
         existing_docs, id_col, text_col, k, num_perm, bands,
         engine=engine, with_sets=arrow,
     )
+    if cached is not None:
+        cached += [sigs_n, sigs_e]
     candidates = (
         band_n.select(F.col("doc_id").alias("new_id"), "band", "bh")
         .join(

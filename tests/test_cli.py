@@ -279,6 +279,17 @@ def test_cli_jobs_cache_once_and_release(
     assert jobs <= 18, f"{jobs} Spark jobs for one corpus run"
     n = spark.read.parquet(str(tmp_path / "prepared" / "corpus")).count()
     assert n and f"prepared corpus: {n} documents" in capsys.readouterr().out
+    # --dedup-against persists both sides' MinHash signatures
+    d = spark.read.parquet(docs)
+    for name, parity in (("existing", 0), ("incoming", 1)):
+        d.filter(f"doc_id % 2 = {parity}").write.parquet(str(tmp_path / name))
+    _call(spark, "cmd_corpus", [
+        "corpus", "--input", str(tmp_path / "incoming"),
+        "--output-dir", str(tmp_path / "deduped"),
+        "--dedup-against", str(tmp_path / "existing"),
+    ])
+    assert _cached(spark) <= before
+    assert "incremental_dedup: " in capsys.readouterr().out
     # the pipeline fills its caches before the corpus write, which fails
     # here because the output directory lies below a regular file
     blocker = tmp_path / "blocker"
