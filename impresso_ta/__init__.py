@@ -15,7 +15,7 @@ Layout
 - ``operators``  row validation, dedup, text analysis and corpus
                  preparation (``pipeline.prepare_corpus``, the
                  ``corpus`` job)
-- ``functions``  scalar column functions (ids, coords, whitespace)
+- ``functions``  scalar column functions (ids, whitespace)
 - ``rebuild``    canonical → rebuilt ("solr") / passim document assembly
 - ``importers``  format plugins (bytes → canonical rows) as mapInPandas UDTFs
 - ``cli``        the ``import`` / ``rebuild`` / ``corpus`` commands

@@ -1,4 +1,4 @@
-"""Scalar column functions: ids, coords, whitespace/tokenization."""
+"""Scalar column functions: ids, whitespace/tokenization."""
 
 from impresso_ta.functions.ids import (  # noqa: F401
     issue_id_col,

@@ -1,7 +1,8 @@
 """Canonical ID minting/parsing as pure column expressions (SURVEY X4/X5).
 
 Canonical templates (ref: docs/architecture.rst; impresso_essentials
-``canonical_path`` used at core.py:264-276):
+``canonical_path`` used at core.py:264-276); issue, page and CI ids are
+minted here, all four are parsed by ``parse_canonical_id``:
 - issue  ``{alias}-{yyyy}-{mm}-{dd}-{edition}``
 - page   ``{issue_id}-p{nnnn}``
 - record ``{issue_id}-r{nnnn}``
@@ -27,11 +28,6 @@ def issue_id_col(alias: Column, date: Column, edition: Column) -> Column:
 def page_id_col(issue_id: Column, page_no: Column) -> Column:
     """Mint ``{issue}-p0004`` (ref: importers/classes.py:94)."""
     return F.format_string("%s-p%04d", issue_id, page_no)
-
-
-def record_id_col(issue_id: Column, record_no: Column) -> Column:
-    """Mint ``{issue}-r0001`` (ref: importers/classes.py:152)."""
-    return F.format_string("%s-r%04d", issue_id, record_no)
 
 
 def ci_id_col(issue_id: Column, ci_no: Column) -> Column:
@@ -68,12 +64,3 @@ def parse_canonical_id(id_col: Column) -> Column:
         edition.alias("edition"),
         support.alias("support"),
     )
-
-
-def issue_id_of(id_col: Column) -> Column:
-    """Strip the trailing support/CI component: ``...-a-i0048`` → ``...-a``.
-
-    Mirrors ``"-".join(id.split("-")[:-1])`` (ref: paper_rebuilders.py:194).
-    """
-    parts = F.split(id_col, "-")
-    return F.array_join(F.slice(parts, 1, F.size(parts) - 1), "-")

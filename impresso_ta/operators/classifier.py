@@ -204,7 +204,7 @@ def lr_hashed_train(
     action (a count over the ≤dim-row model) materializes the training
     at the end so every intermediate persist can be released before
     returning — a long-lived session never accumulates feature-frame
-    cache from repeated training runs (the BPE train loop's pattern).
+    cache from repeated training runs.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")

@@ -659,8 +659,6 @@ def filter_keep_arrow(
     text_col: str = "text",
     c4: bool = True,
     gopher: bool = True,
-    c4_kwargs: dict | None = None,
-    gopher_kwargs: dict | None = None,
 ) -> DataFrame:
     """Pass-through corpus filter: drop rows failing the C4 and/or
     Gopher ``keep`` predicates, all columns preserved — the pipeline's
@@ -669,29 +667,15 @@ def filter_keep_arrow(
 
     Survivor set is bit-identical to
     ``docs.filter(c4_signals(text)['keep'])
-         .filter(repetition_signals(text)['keep'])``
-    (parity-tested). NULL keep (NULL text) drops the row, matching
-    ``Filter``'s three-valued logic.
+         .filter(repetition_signals(text)['keep'])`` at their default
+    thresholds (parity-tested). NULL keep (NULL text) drops the row,
+    matching ``Filter``'s three-valued logic.
     """
     import pyarrow as pa
 
     from impresso_ta.operators.text_analysis import C4_BLACKLIST
 
-    ck = c4_kwargs or {}
-    gk = gopher_kwargs or {}
-    c4_args = (
-        ck.get("min_words", 20),
-        ck.get("max_words", 100_000),
-        ck.get("min_mean_word_len", 3.0),
-        ck.get("max_mean_word_len", 10.0),
-        ck.get("min_alpha_frac", 0.8),
-        tuple(ck.get("blacklist", C4_BLACKLIST)),
-    )
-    g_args = (
-        gk.get("top_word_max", 0.15),
-        gk.get("dup_2gram_max", 0.10),
-        gk.get("dup_3gram_max", 0.05),
-    )
+    bl = tuple(C4_BLACKLIST)
     idx = docs.columns.index(text_col)
     schema = docs.schema
 
@@ -706,9 +690,11 @@ def filter_keep_arrow(
             for text in texts:
                 ok = text is not None
                 if ok and c4:
-                    ok = bool(_c4_signals_py(text, *c4_args)[4])
+                    ok = bool(
+                        _c4_signals_py(text, 20, 100_000, 3.0, 10.0, 0.8, bl)[4]
+                    )
                 if ok and gopher:
-                    ok = bool(_rep_signals_py(text, *g_args)[3])
+                    ok = bool(_rep_signals_py(text, 0.15, 0.10, 0.05)[3])
                 mask.append(ok)
             yield batch.filter(pa.array(mask, type=pa.bool_()))
 

@@ -391,71 +391,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 # =====================================================================
-# Additional inventory coverage (X6/X7 coordinates, embedding ops)
+# Shuffle skew: salted aggregation
 # =====================================================================
-
-
-@q(
-    "x6_coords_roundtrip",
-    """
-    SELECT p_partkey,
-           array_to_string([p_size, p_size * 2, p_size + 10, p_size + 20], ',')
-               AS xywh,
-           array_to_string([p_size, p_size * 2, p_size + p_size + 10,
-                            p_size * 2 + p_size + 20], ',') AS corners
-    FROM part WHERE p_partkey % 10 = 0
-    """,
-    "xywh↔corner conversion (SURVEY X6; ref utils.py:256-285)",
-)
-def x6_coords_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.functions.coords import xywh_to_corners
-
-    p = t(spark, sf_dir, "part").filter(F.col("p_partkey") % 10 == 0)
-    xywh = F.array(
-        F.col("p_size"),
-        F.col("p_size") * 2,
-        F.col("p_size") + 10,
-        F.col("p_size") + 20,
-    )
-    corners = xywh_to_corners(xywh)
-    as_str = lambda c: F.array_join(  # noqa: E731
-        F.transform(c, lambda x: x.cast("string")), ","
-    )
-    return p.select(
-        "p_partkey",
-        as_str(xywh).alias("xywh"),
-        as_str(corners).alias("corners"),
-    )
-
-
-@q(
-    "x7_rescale_coords",
-    """
-    SELECT p_partkey,
-           array_to_string(list_transform(
-               [p_size, p_size * 2, p_size + 10, p_size + 20],
-               v -> CAST(round(v * 300.0 / 254.0) AS INT)), ',') AS rescaled
-    FROM part WHERE p_partkey % 10 = 0
-    """,
-    "Resolution-based coordinate rescale (SURVEY X7; ref lux/helpers.py:12-37)",
-)
-def x7_rescale_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.functions.coords import rescale_coords
-
-    p = t(spark, sf_dir, "part").filter(F.col("p_partkey") % 10 == 0)
-    xywh = F.array(
-        F.col("p_size"),
-        F.col("p_size") * 2,
-        F.col("p_size") + 10,
-        F.col("p_size") + 20,
-    )
-    rescaled = rescale_coords(xywh, F.lit(300.0 / 254.0))
-    return p.select(
-        "p_partkey",
-        F.array_join(
-            F.transform(rescaled, lambda x: x.cast("string")), ","
-        ).alias("rescaled"),
-    )
 
 
 @q(
@@ -1444,127 +1381,6 @@ def text_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_analysis.hashed_doc_vectors(t(spark, sf_dir, "documents"))
 
 
-def _bpe_iter_cte(i: int) -> str:
-    prev = f"v{i-1}"
-    return f"""
-    p{i} AS (
-        SELECT s[i] AS lhs, s[i+1] AS rhs, sum(cnt) AS pair_cnt
-        FROM (SELECT cnt, string_split(trim(seq), '  ') AS s FROM {prev}),
-             unnest(range(1, greatest(len(s)-1, 0) + 1)) AS t(i)
-        GROUP BY 1, 2
-    ),
-    b{i} AS (SELECT lhs, rhs, pair_cnt FROM p{i}
-             ORDER BY pair_cnt DESC, lhs ASC, rhs ASC LIMIT 1),
-    v{i} AS (SELECT word, cnt,
-                    replace(seq, ' ' || lhs || '  ' || rhs || ' ',
-                                 ' ' || lhs || rhs || ' ') AS seq
-             FROM {prev} CROSS JOIN b{i})"""
-
-
-_BPE_ORACLE = (
-    r"""
-    WITH wc AS (
-        SELECT word, count(*) AS cnt
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-              FROM documents)
-        GROUP BY 1
-    ),
-    v0 AS (
-        SELECT word, cnt,
-               '  ' || array_to_string([substring(word, i, 1)
-                                        for i in range(1, len(word) + 1)],
-                                       '  ')
-                   || '  </w>  ' AS seq
-        FROM wc
-    ),"""
-    + ",".join(_bpe_iter_cte(i) for i in (1, 2, 3))
-    + """
-    SELECT * FROM (
-        SELECT 1 AS rank, lhs, rhs, pair_cnt::BIGINT AS pair_cnt FROM b1
-        UNION ALL SELECT 2, lhs, rhs, pair_cnt::BIGINT FROM b2
-        UNION ALL SELECT 3, lhs, rhs, pair_cnt::BIGINT FROM b3
-    ) ORDER BY rank
-    """
-)
-
-
-@q(
-    "corpus_bpe_merges",
-    _BPE_ORACLE,
-    "Distributed BPE merge induction (Sennrich et al. 2016, tokenizer "
-    "training): ONE corpus-sized word-count aggregate, then every merge "
-    "iteration is vocabulary-sized with a single-row argmax collect "
-    "(the MLlib-KMeans pattern). Merge application is a delimiter-safe "
-    "literal replace — identical non-overlapping semantics in Spark, "
-    "DuckDB (3-iteration unrolled oracle) and the sequential reference "
-    "implementation the unit tests compare against.",
-)
-def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.bpe import bpe_merge_table
-
-    return bpe_merge_table(t(spark, sf_dir, "documents"), n_merges=3)
-
-
-_BPE_ENCODE_ORACLE = (
-    r"""
-    WITH wc AS (
-        SELECT word, count(*) AS cnt
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS word
-              FROM documents)
-        GROUP BY 1
-    ),
-    v0 AS (
-        SELECT word, cnt,
-               '  ' || array_to_string([substring(word, i, 1)
-                                        for i in range(1, len(word) + 1)],
-                                       '  ')
-                   || '  </w>  ' AS seq
-        FROM wc
-    ),"""
-    + ",".join(_bpe_iter_cte(i) for i in (1, 2, 3))
-    + r"""
-    , dw AS (
-        SELECT doc_id, i,
-               regexp_split_to_array(trim(text), '\s+')[i] AS word
-        FROM documents,
-             unnest(range(1, len(regexp_split_to_array(trim(text), '\s+')) + 1)) AS t(i)
-    )
-    SELECT d.doc_id,
-           string_agg(trim(v3.seq), '  ' ORDER BY d.i) AS token_str,
-           sum(len(string_split(trim(v3.seq), '  ')))::BIGINT AS n_tokens
-    FROM dw d JOIN v3 ON d.word = v3.word
-    GROUP BY d.doc_id
-    """
-)
-
-
-@q(
-    "corpus_bpe_encode",
-    _BPE_ENCODE_ORACLE,
-    "Distributed BPE ENCODING with the learned merge list (the apply "
-    "half of the tokenizer story — corpus_bpe_merges is the train "
-    "half): per-word symbol sequences re-derived by the same "
-    "delimiter-safe literal replace chain, flattened in document word "
-    "order. Spark shape: the merge chain compiles to a fixed "
-    "whole-stage-codegen replace pipeline — encoding is ONE scan, zero "
-    "shuffles, no vocabulary join (the merge list is a literal); the "
-    "oracle instead encodes the vocabulary once (v3) and joins words "
-    "back — both paths must produce identical token streams, which is "
-    "exactly the non-overlapping-replace semantics contract.",
-)
-def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.bpe import bpe_encode, bpe_train
-
-    d = t(spark, sf_dir, "documents")
-    merges, vocab = bpe_train(d, n_merges=3)
-    vocab.unpersist()
-    return bpe_encode(d, merges).select(
-        "doc_id",
-        F.array_join("tokens", "  ").alias("token_str"),
-        "n_tokens",
-    )
-
-
 @q(
     "corpus_token_budget_select",
     r"""
@@ -1753,42 +1569,6 @@ def corpus_prepare_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+")))
         .cast("long")
         .alias("total_words"),
-    )
-
-
-@q(
-    "layout_zorder_key",
-    """
-    SELECT o_orderkey,
-           CAST(sum((((o_custkey >> b) & 1) << (2 * b))
-                    + (((dd >> b) & 1) << (2 * b + 1))) AS BIGINT) AS zkey
-    FROM (
-        SELECT o_orderkey, o_custkey,
-               date_diff('day', TIMESTAMP '1995-01-01', o_orderdate) AS dd
-        FROM orders
-    ), generate_series(0, 15) AS s(b)
-    GROUP BY o_orderkey
-    """,
-    "Z-order (Morton) layout key over (custkey, order-day) — the "
-    "Delta/Iceberg OPTIMIZE ZORDER primitive for multi-dimension "
-    "parquet data skipping: pure row-local bit-interleave in "
-    "whole-stage codegen, zero shuffle; writing sorted by this key "
-    "bounds per-row-group min/max spread of BOTH columns so selective "
-    "filters on either prune row groups at scan time.",
-)
-def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.layout import zorder_key
-
-    o = t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_custkey"),
-        F.datediff(
-            F.col("o_orderdate"), F.lit("1995-01-01").cast("timestamp")
-        ).alias("dd"),
-    )
-    return o.select(
-        "o_orderkey",
-        zorder_key([F.col("o_custkey"), F.col("dd")], bits=16).alias("zkey"),
     )
 
 
@@ -2976,49 +2756,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Lake maintenance + shuffle diagnostics (operators/layout.py, skew.py)
+# Key-skew profiling, weighted sampling and column profiling
 # =====================================================================
-
-@q(
-    "layout_compaction_plan",
-    """
-    SELECT lang, source, n_files, total_bytes, n_small_files,
-           target_files,
-           CASE WHEN n_files - target_files > 0
-                THEN n_files - target_files ELSE 0 END AS files_to_merge,
-           (n_files - target_files > 0 AND n_small_files > 0)
-               AS needs_compaction
-    FROM (
-        SELECT lang, source,
-               count(*) AS n_files,
-               sum(CAST(n_chars AS BIGINT)) AS total_bytes,
-               sum(CASE WHEN n_chars * 100 < 4000 * 50 THEN 1 ELSE 0 END)
-                   AS n_small_files,
-               greatest(1, (sum(CAST(n_chars AS BIGINT)) + 4000 - 1) // 4000)
-                   AS target_files
-        FROM documents GROUP BY lang, source
-    )
-    """,
-    "Small-file compaction planner (lake maintenance at 100 TB: "
-    "streaming sinks emit KB files; scans pay per-file open cost). One "
-    "map-side-combined groupBy over a content-PRUNED listing — "
-    "metadata-sized work; integer ceil (n + t - 1) div t so the plan "
-    "is engine-exact. Documents stand in for the file listing "
-    "(doc_id=path, n_chars=bytes, lang/source=partition).",
-)
-def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.layout import compaction_plan
-
-    listing = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("path"),
-        F.col("n_chars").cast("long").alias("bytes"),
-        "lang",
-        "source",
-    )
-    return compaction_plan(
-        listing, ["lang", "source"], size_col="bytes", target_bytes=4000
-    )
-
 
 @q(
     "a17_key_skew_profile",
@@ -3080,87 +2819,6 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# =====================================================================
-# CDC materialization (operators/cdc.py): latest-wins snapshot + SCD2
-# =====================================================================
-
-@q(
-    "cdc_latest_snapshot",
-    """
-    SELECT user_id, last_event_id, last_type, round(last_value, 4) AS last_value
-    FROM (
-        SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-               value AS last_value,
-               row_number() OVER (
-                   PARTITION BY user_id
-                   ORDER BY epoch_us(ts) DESC, event_id DESC
-               ) AS rk
-        FROM events
-    ) WHERE rk = 1 AND last_type <> 'error'
-    """,
-    "Latest-wins snapshot from an append-only change log (Delta MERGE "
-    "replayed): highest-(ts, event_id) row per key wins, keys whose "
-    "winning row is a tombstone ('error' here) drop out. ONE window "
-    "shuffle on the key; version ties broken by the log sequence "
-    "number, never arrival order, so the snapshot is engine/"
-    "partitioning-immune. (Oracle orders by epoch_us — events carry "
-    "nanosecond timestamps, Spark reads micros; both engines must rank "
-    "on the same truncation.)",
-)
-def cdc_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.cdc import latest_snapshot
-
-    ev = t(spark, sf_dir, "events")
-    return latest_snapshot(
-        ev,
-        keys=["user_id"],
-        version_cols=["ts", "event_id"],
-        op_col="event_type",
-        delete_value="error",
-    ).select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.col("event_type").alias("last_type"),
-        F.round("value", 4).alias("last_value"),
-    )
-
-
-@q(
-    "cdc_scd2_history",
-    """
-    SELECT user_id, event_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-           strftime(next_ts, '%Y-%m-%d %H:%M:%S') AS valid_to,
-           (next_ts IS NULL) AS is_current
-    FROM (
-        SELECT user_id, event_id, ts,
-               lead(ts) OVER (
-                   PARTITION BY user_id
-                   ORDER BY epoch_us(ts) ASC, event_id ASC
-               ) AS next_ts
-        FROM events WHERE user_id % 10 = 0
-    )
-    """,
-    "SCD2 history from the change log: every version gets "
-    "[valid_from, valid_to) via ONE lead window per key (null "
-    "valid_to = is_current) — point-in-time joins then run through "
-    "the existing range-join operator. Same epoch_us ordering contract "
-    "as the snapshot twin.",
-)
-def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.cdc import scd2_history
-
-    ev = t(spark, sf_dir, "events").where(F.col("user_id") % 10 == 0)
-    hist = scd2_history(ev, keys=["user_id"], version_cols=["ts", "event_id"])
-    return hist.select(
-        "user_id",
-        "event_id",
-        F.date_format("valid_from", "yyyy-MM-dd HH:mm:ss").alias("valid_from"),
-        F.date_format("valid_to", "yyyy-MM-dd HH:mm:ss").alias("valid_to"),
-        "is_current",
-    )
-
-
 @q(
     "table_profile_columns",
     """
@@ -3195,44 +2853,3 @@ def table_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     return profile_columns(docs, ["doc_id", "lang", "source", "n_chars"])
-
-
-@q(
-    "events_debounce",
-    """
-    SELECT event_id, user_id, event_type,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-    FROM (
-        SELECT event_id, user_id, event_type, ts,
-               lag(epoch_us(ts)) OVER (
-                   PARTITION BY user_id, event_type
-                   ORDER BY epoch_us(ts) ASC, event_id ASC
-               ) AS prev_us
-        FROM events
-    )
-    WHERE prev_us IS NULL OR epoch_us(ts) - prev_us > CAST(3600 AS BIGINT) * 1000000
-    """,
-    "Debounce (drop rapid-fire repeats): keep a row only if it arrives "
-    "more than the gap after its immediate predecessor per (user, "
-    "type) — the stateless one-window batch primitive (chained "
-    "suppression against the last KEPT row is running state). Ties "
-    "broken by event_id; epoch_us "
-    "ordering contract as in the CDC ops.",
-)
-def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from impresso_ta.operators.windows import debounce
-
-    ev = t(spark, sf_dir, "events")
-    kept = debounce(
-        ev,
-        keys=["user_id", "event_type"],
-        ts_col="ts",
-        min_gap_seconds=3600,
-        tie_cols=["event_id"],
-    )
-    return kept.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-    )

@@ -344,8 +344,14 @@ def _rebuild_issues(
     # collapsed the join output to ONE task — 34.8 s vs 11.2 s with the
     # exchange pinned. collect_list has no byte-reducing map-side
     # combine, so nothing is lost by aggregating after the exchange.
-    keyed = supports_df.select(
-        F.regexp_replace(F.col("id"), "-[pr][0-9]{4}$", "").alias("issue_id"),
+    # A null-id support (a jsonl line that is not JSON) joins no issue,
+    # so it is dropped here. The non-nullable key then gives the left
+    # join no ``isnotnull(issue_id)`` to infer and push below this
+    # projection as a second run of the regex.
+    keyed = supports_df.filter(F.col("id").isNotNull()).select(
+        F.coalesce(
+            F.regexp_replace(F.col("id"), "-[pr][0-9]{4}$", ""), F.lit("")
+        ).alias("issue_id"),
         support_js.alias("js"),
     )
     keyed = keyed.repartition(

@@ -58,8 +58,8 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     if _is_parquet_store(path):
         return _read(spark, path, PAGE_SCHEMA)
     # json_tuple, not get_json_object: as a generator it stays below the
-    # isnotnull(id) that the rebuild join infers, which would otherwise
-    # be pushed down as a second parse of every line
+    # rebuild's isnotnull(id) filter, which would otherwise be pushed
+    # down as a second parse of every line
     return spark.read.text(path).select(
         F.json_tuple("value", "id").alias("id"),
         F.col("value").alias("js"),

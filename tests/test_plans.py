@@ -117,6 +117,29 @@ def test_rebuild_group_exchange_is_pinned_against_coalescing(spark):
         assert plan.count("Exchange hashpartitioning") <= 2
 
 
+def test_rebuild_derives_issue_key_once(spark, tmp_path):
+    """The supports' issue key is a regex over the page id. The left
+    join's inferred ``isnotnull`` on that key must not push a second
+    copy of the regex below the projection: over a jsonl page store
+    (nullable ``id``) the key is computed once per support row, in
+    both formats."""
+    import impresso_ta.sources as sources
+    from impresso_ta.rebuild import rebuild_issues_passim, rebuild_issues_solr
+    from impresso_ta.schemas import ISSUE_SCHEMA, PAGE_SCHEMA
+    from tests.fixtures import simple_issue_and_pages
+
+    iss, pages = simple_issue_and_pages()
+    store = str(tmp_path / "pages")
+    sources.write_pages(spark.createDataFrame(pages, PAGE_SCHEMA), store)
+    issues_df = spark.createDataFrame([iss], ISSUE_SCHEMA)
+    pages_df = sources.read_pages(spark, store)
+    for rebuilt in (
+        rebuild_issues_solr(issues_df, pages_df),
+        rebuild_issues_passim(issues_df, pages_df),
+    ):
+        assert _plan(rebuilt).count("regexp_replace(") == 1
+
+
 def test_lr_pipeline_stage_adds_no_shuffle(spark):
     """The prepare_corpus quality stage scores row-locally: the
     ≤dim-row model folds into a one-row map broadcast, so the quality
@@ -155,20 +178,6 @@ def test_dsir_bigram_stream_adds_no_exchange(spark):
     assert _shuffles(bi) == _shuffles(uni)
 
 
-def test_compaction_plan_single_aggregate_exchange(spark):
-    from impresso_ta.operators.layout import compaction_plan
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("path"),
-        F.col("n_chars").cast("long").alias("bytes"),
-        "lang",
-        "source",
-    )
-    plan_df = compaction_plan(docs, ["lang", "source"], target_bytes=4000)
-    assert _shuffles(plan_df) == 1  # one groupBy; decisions are row-local
-    assert "partial" in _plan(plan_df).lower()  # map-side combine
-
-
 def test_profile_key_skew_never_shuffles_raw_rows(spark):
     from impresso_ta.operators.skew import profile_key_skew
 
@@ -180,16 +189,6 @@ def test_profile_key_skew_never_shuffles_raw_rows(spark):
     assert "TakeOrderedAndProject" in plan
     for read_schema in plan.split("ReadSchema:")[1:]:
         assert read_schema.splitlines()[0].strip() == "struct<user_id:bigint>"
-
-
-def test_cdc_ops_single_window_exchange(spark):
-    from impresso_ta.operators.cdc import latest_snapshot, scd2_history
-
-    log = spark.createDataFrame(
-        [(1, 1, "upsert")], "k long, seq long, op string"
-    )
-    assert _shuffles(latest_snapshot(log, ["k"], ["seq"], op_col="op")) == 1
-    assert _shuffles(scd2_history(log, ["k"], ["seq"])) == 1
 
 
 def test_cli_rebuild_over_jsonl_pages_parses_each_page_once(

@@ -161,17 +161,6 @@ def test_dsir_weights_parity(spark, docs, ngram):
     assert ra == rb
 
 
-def test_bpe_encode_parity(spark, docs):
-    from impresso_ta.operators.bpe import bpe_encode
-
-    merges = [("h", "e", 9), ("t", "he", 7), ("o", "</w>", 5)]
-    expr = bpe_encode(docs, merges, engine="expr")
-    arrow = bpe_encode(docs, merges, engine="arrow")
-    ra = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in expr.collect()}
-    rb = {r["doc_id"]: (r["tokens"], r["n_tokens"]) for r in arrow.collect()}
-    assert ra == rb
-
-
 def test_spark_round4_matches_spark(spark):
     vals = [
         0.15, 0.05, 3.0, 10.0, 0.8, 0.12345, 0.123449999, 0.99995,

@@ -1,14 +1,10 @@
-"""Value-level schema validation (ref utils.py:71-89) and reading-order
-assignment (ref utils.py:139-158)."""
-
-from pyspark.sql import functions as F
+"""Value-level schema validation (ref utils.py:71-89)."""
 
 from impresso_ta.operators.validate import (
     split_valid,
     validate_issues,
     validate_pages,
 )
-from impresso_ta.operators.windows import assign_reading_order
 from impresso_ta.schemas import ISSUE_SCHEMA, PAGE_SCHEMA
 from tests.fixtures import content_item, issue, line, page, para, region, token
 
@@ -67,26 +63,3 @@ def test_validate_pages_coord_arity(spark):
     rows = {r["id"]: r["_violations"] for r in df.collect()}
     assert rows["GDL-1900-01-02-a-p0001"] == []
     assert rows["GDL-1900-01-02-a-p0002"] == ["token_coord_arity"]
-
-
-def test_assign_reading_order(spark):
-    iid = "GDL-1900-01-02-a"
-    # CIs deliberately out of page order: i0002 on page 1, i0001 on page 3
-    iss = issue(
-        iid,
-        [
-            content_item(f"{iid}-i0001", pp=[3], ro=None),
-            content_item(f"{iid}-i0002", pp=[1], ro=None),
-            content_item(f"{iid}-i0003", pp=[1], ro=None),
-        ],
-        pp=[f"{iid}-p0001"],
-    )
-    df = assign_reading_order(spark.createDataFrame([iss], ISSUE_SCHEMA))
-    cis = df.select(F.explode("i").alias("ci")).select(
-        "ci.m.id", "ci.m.ro"
-    ).collect()
-    ro = {r["id"]: r["ro"] for r in cis}
-    # page 1 first (i0002 before i0003 by CI number), page 3 last
-    assert ro[f"{iid}-i0002"] == 1
-    assert ro[f"{iid}-i0003"] == 2
-    assert ro[f"{iid}-i0001"] == 3

@@ -26,7 +26,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "supplier part orders lineitem events documents".split()
+TABLES = "supplier part lineitem events documents".split()
 
 
 def normalize(v) -> str:
